@@ -16,7 +16,7 @@ Job kinds:
   ``max_events_per_sec`` / ``max_bytes_per_sec``); optional
   ``"target_bucket_rows"`` / ``"max_buckets"`` turn on adaptive
   bucket-count evolution (the engine rebuckets the table as it grows);
-  optional ``"merge_strategy"`` (spj default | mor | shuffle),
+  optional ``"merge_strategy"`` (spj default | mor),
   ``"hash_fn"`` (murmur3 default = exchange-aligned one-shuffle
   epochs; xxhash64 = historical layout) and ``"aligned_exchange"``
   (null = auto by table hash) pick the epoch's physical plan
@@ -434,7 +434,7 @@ def main(argv: list[str] | None = None) -> int:
                         if p.get("filters")
                         else None,
                         condition=p.get("where"),
-                        strategy=p.get("strategy", "shuffle"),
+                        strategy=p.get("strategy", "spj"),
                     )
                 })
             elif kind == "update_where":
@@ -445,7 +445,7 @@ def main(argv: list[str] | None = None) -> int:
                         if p.get("filters")
                         else None,
                         condition=p.get("where"),
-                        strategy=p.get("strategy", "shuffle"),
+                        strategy=p.get("strategy", "spj"),
                     )
                 })
             elif kind == "vacuum":

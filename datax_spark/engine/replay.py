@@ -17,8 +17,10 @@ as a micro-batch loop):
     4. vectorized transforms — Arrow pandas-UDF content transforms on
        the winning images only (never per-row Python; north_star
        requirement), computed lazily exactly once inside the merge
-    5. MERGE              — bucket-pruned copy-on-write merge into the
-       lake table (lake.merge_into), additive schema evolution
+    5. MERGE              — per-bucket storage-partitioned merge into
+       the lake table (lake.merge_into: copy-on-write "spj" or
+       merge-on-read "mor"), fused with steps 3-4 into one Spark job;
+       additive schema evolution
     6. two-phase commit   — atomic manifest swap carrying the epoch
        watermark (lake.LakeTable.commit)
     7. lineage metrics    — per-(epoch,bucket) offsets/rows/bytes/
@@ -39,14 +41,14 @@ import os
 import re
 import time
 from collections.abc import Callable, Sequence
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datax_spark.engine.metrics import write_epoch_metrics
-from datax_spark.lake.merge import merge_into
+from datax_spark.lake.merge import check_strategy, merge_into
 from datax_spark.lake.table import LakeTable
 from datax_spark.operators.dedup import STAT_COLS, lww_dedup_stats
 
@@ -156,34 +158,22 @@ class ReplayConfig:
     # Arrow-vectorized content transforms, applied post-dedup to the
     # winning event images: each fn takes and returns a DataFrame.
     transforms: tuple[Callable[[DataFrame], DataFrame], ...] = ()
-    # Dirty-data policy (ErrorRecordChecker.java:18-82 analog): events
-    # with NULL in any key or order column cannot be keyed or ordered —
-    # they are quarantined under <metrics_root>/../quarantine/epoch=N,
-    # counted in EpochResult.n_dirty, and the epoch FAILS (before any
-    # table write) when count > dirty_record_limit (None = unlimited).
-    # Merge physical strategy. "spj" (default): storage-partitioned
-    # merge — only the epoch batch shuffles; each bucket task reads its
-    # own current files directly (no Exchange that scales with TABLE
-    # size), and the unsalted path fuses dedup+transforms+merge+lineage
-    # into ONE Spark job (see lake.merge.spj_merge_frame). Measured:
-    # 323k vs 278k ev/s at 16M events/128 buckets, 2.1x at 4M/3-epoch,
-    # 1.8x on 10 small epochs — identical sha256-verified state.
-    # "shuffle": anti-join + re-bucketed CoW write, Catalyst/AQE own
-    # skew and memory — the fallback when one bucket's batch+current
-    # rows could exceed task memory (then raise num_buckets instead).
-    # Both plans support the cross-batch order guard (the streaming
-    # sink's stale-batch protection).
-    # "spj_staged": diagnostic — the spj merge but with the two-job
-    # staged structure (persisted dedup + separate lineage collect),
-    # kept so fused-vs-staged can be A/B-measured in one noise window.
-    # "mor": merge-on-read — each epoch APPENDS one delta file per
-    # touched bucket (tombstones for deletes) and never reads or
-    # rewrites the current table: write cost O(batch) instead of
-    # O(touched buckets), the Iceberg v2 equality-delete shape. Reads
-    # pay a bucket-local LWW merge until compaction folds deltas down;
-    # set compact_every to bound that read amplification. The strategy
-    # for write-rate-bound ingest whose epochs are much smaller than
-    # the key space they touch.
+    # Merge physical plan, one per table mode (lake/merge.py); either
+    # way an epoch fuses dedup+transforms+merge+lineage into ONE Spark
+    # job. "spj" (default, copy-on-write): storage-partitioned merge —
+    # only the epoch batch shuffles; each bucket task reads its own
+    # current state directly, so no Exchange scales with TABLE size
+    # (see lake.merge.spj_merge_frame). Memory per task is one bucket;
+    # raise num_buckets (or set target_bucket_rows) when a bucket
+    # outgrows task memory. "mor": merge-on-read — each epoch APPENDS
+    # one delta file per touched bucket (tombstones for deletes) and
+    # never reads or rewrites the current table: write cost O(batch)
+    # instead of O(touched buckets), the Iceberg v2 equality-delete
+    # shape. Reads pay a bucket-local LWW merge until compaction folds
+    # deltas down; set compact_every to bound that read amplification.
+    # The strategy for write-rate-bound ingest whose epochs are much
+    # smaller than the key space they touch. Any other value raises
+    # ValueError here, at construction.
     merge_strategy: str = "spj"
     # With merge_strategy="mor": fold pending deltas into fresh base
     # files (LakeTable.compact) after every N committed epochs — the
@@ -193,6 +183,11 @@ class ReplayConfig:
     # so a crash between commit and compaction is harmless: the next
     # run simply compacts later.
     compact_every: int | None = None
+    # Dirty-data policy (ErrorRecordChecker.java:18-82 analog): events
+    # with NULL in any key or order column cannot be keyed or ordered —
+    # they are quarantined under <metrics_root>/../quarantine/epoch=N,
+    # counted in EpochResult.n_dirty, and the epoch FAILS (before any
+    # table write) when count > dirty_record_limit (None = unlimited).
     dirty_record_limit: int | None = None
     # Percentage limit (errorLimit.percentage): the epoch fails when
     # n_dirty / n_total exceeds this fraction, checked per epoch (the
@@ -323,6 +318,7 @@ class ReplayConfig:
     aligned_exchange: bool | None = None
 
     def __post_init__(self) -> None:
+        check_strategy(self.merge_strategy)
         if self.dirty_pct_limit is not None and not (
             0.0 <= self.dirty_pct_limit <= 1.0
         ):
@@ -390,6 +386,29 @@ def maybe_rebucket(table: "LakeTable", cfg: "ReplayConfig") -> int | None:
         return None
     table.rebucket(nb)
     return nb
+
+
+def _lineage_rows(slot: int, pending, apply_ms: float) -> list[dict]:
+    """Per-(slot, bucket) lineage metrics rows from the merge's fused
+    per-bucket stats. Callers write them BEFORE the commit point, so a
+    crash after commit leaves no metrics hole (write_epoch_metrics
+    overwrites, so a pre-commit crash replays them cleanly)."""
+    after = pending.stats.bucket_rows_after
+    return [
+        {
+            "epoch": slot,
+            "bucket": b,
+            "n_events": li["n_events"],
+            "n_deletes": li["n_deletes"],
+            "min_lsn": li["min_lsn"],
+            "max_lsn": li["max_lsn"],
+            "bytes_in": li["bytes_in"],
+            "n_keys_after_dedup": li["n_keys"],
+            "rows_after_merge": after.get(b, 0),
+            "apply_ms": apply_ms,
+        }
+        for b, li in sorted(pending.bucket_stats.items())
+    ]
 
 
 @dataclass
@@ -616,82 +635,23 @@ class ReplayEngine:
 
         ev = snapshot_df.withColumn(cfg.op_col, F.lit("I"))
         table = self._ensure_table(ev)
-        m = table.manifest()
         ph: dict[str, float] = {}
-
-        dirty_pred = None
-        for c in (*cfg.keys, *cfg.order_cols):
-            p = F.col(c).isNull()
-            dirty_pred = p if dirty_pred is None else (dirty_pred | p)
-        obs = Observation("dirty_bootstrap")
-        ev_obs = ev.observe(
-            obs,
-            F.sum(dirty_pred.cast("long")).alias("n_dirty"),
-            F.count(F.lit(1)).alias("n_total"),
-        )
-        ev_clean = ev_obs.filter(~dirty_pred)
-
-        deduped = lww_dedup_stats(
-            ev_clean,
-            keys=list(cfg.keys),
-            order_cols=list(cfg.order_cols),
-            op_col=cfg.op_col,
-            delete_op=cfg.delete_op,
-            lsn_col=cfg.lsn_col,
-            content_col="content" if "content" in ev.columns else None,
-            salt_buckets=cfg.salt_buckets,
-        )
-        fused = cfg.merge_strategy in ("spj", "mor")
-        if not fused:
-            # the shuffle merge carries no fused lineage; the stat
-            # counters must not reach the table's schema
-            deduped = deduped.drop(*STAT_COLS)
-        for fn in cfg.transforms:
-            deduped = fn(deduped)
-
-        aligned = cfg.aligned_exchange
-        if aligned is None:
-            aligned = fused and m.hash_fn == "murmur3"
+        dirty_pred, obs, ev_obs, ev_clean = self._dirty_split(ev, "dirty_bootstrap")
+        deduped = self._dedup(ev_clean)
         tp = time.monotonic()
-        if aligned and fused:
-            with aligned_shuffle_confs(self.spark, m.num_buckets):
-                pending = merge_into(
-                    table, deduped, op_col=cfg.op_col, delete_op=cfg.delete_op,
-                    strategy=cfg.merge_strategy, stat_cols=STAT_COLS,
-                    aligned=True,
-                )
-        else:
-            pending = merge_into(
-                table, deduped, op_col=cfg.op_col, delete_op=cfg.delete_op,
-                strategy=cfg.merge_strategy,
-                stat_cols=STAT_COLS if fused else None,
-            )
+        pending = self._merge(
+            table, deduped, cfg.merge_strategy,
+            aligned=self._aligned(table.manifest()),
+        )
         ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
-        n_dirty = self._resolve_dirty(
+        n_dirty, _ = self._resolve_dirty(
             "bootstrap", obs, ev, ev_obs, dirty_pred, ph
         )
         if "after_write" in failpoints:
             raise ReplayCrash("after_write")
 
-        bs = pending.bucket_stats or {}
-        apply_ms = (time.monotonic() - t0) * 1000.0
-        rows = []
-        for b in sorted(set(bs) | set(pending.stats.bucket_rows_after)):
-            li = bs.get(b, {})
-            rows.append(
-                {
-                    "epoch": -1,  # lineage slot for the initial load
-                    "bucket": b,
-                    "n_events": li.get("n_events", 0),
-                    "n_deletes": li.get("n_deletes", 0),
-                    "min_lsn": li.get("min_lsn"),
-                    "max_lsn": li.get("max_lsn"),
-                    "bytes_in": li.get("bytes_in", 0),
-                    "n_keys_after_dedup": li.get("n_keys", 0),
-                    "rows_after_merge": pending.stats.bucket_rows_after.get(b, 0),
-                    "apply_ms": apply_ms,
-                }
-            )
+        # lineage slot -1 is the initial load
+        rows = _lineage_rows(-1, pending, (time.monotonic() - t0) * 1000.0)
         write_epoch_metrics(self.metrics_root, -1, rows)
         tp = time.monotonic()
         version = audit_gated_commit(
@@ -710,9 +670,7 @@ class ReplayEngine:
         return BootstrapResult(
             skipped=False,
             bootstrap_lsn=wlsn,
-            # fused lineage when available; the shuffle strategy has no
-            # per-bucket counters, so fall back to the merged row count
-            n_rows=sum(r["n_events"] for r in rows) or pending.stats.rows_after,
+            n_rows=sum(r["n_events"] for r in rows),
             n_dirty=n_dirty,
             rows_after=pending.stats.rows_after,
             version=version,
@@ -828,19 +786,7 @@ class ReplayEngine:
         slot = -(2 + len(applied))  # metrics slot; -1 = full snapshot
         label = f"chunk-{chunk_id}"
         ph: dict[str, float] = {}
-
-        # --- dirty split (same policy as epochs/bootstrap) ---
-        dirty_pred = None
-        for c in (*cfg.keys, *cfg.order_cols):
-            p = F.col(c).isNull()
-            dirty_pred = p if dirty_pred is None else (dirty_pred | p)
-        obs = Observation(f"dirty_{label}")
-        ev_obs = ev.observe(
-            obs,
-            F.sum(dirty_pred.cast("long")).alias("n_dirty"),
-            F.count(F.lit(1)).alias("n_total"),
-        )
-        ev_clean = ev_obs.filter(~dirty_pred)
+        dirty_pred, obs, ev_obs, ev_clean = self._dirty_split(ev, f"dirty_{label}")
 
         # --- DBLog window suppression: drop chunk keys touched by any
         # APPLIED event with lsn > low watermark. Epoch pruning is
@@ -876,106 +822,41 @@ class ReplayEngine:
             ev_clean = ev_clean.join(win_keys, on=list(cfg.keys), how="left_anti")
         ph["window_prune"] = (time.monotonic() - tp) * 1000
 
-        # --- dedup (+ per-key lineage stats riding the same agg) ---
-        stats_df = lww_dedup_stats(
-            ev_clean,
-            keys=list(cfg.keys),
-            order_cols=list(cfg.order_cols),
-            op_col=cfg.op_col,
-            delete_op=cfg.delete_op,
-            lsn_col=cfg.lsn_col,
-            content_col="content" if "content" in ev.columns else None,
-            salt_buckets=cfg.salt_buckets,
-        ).persist()
-        deduped = stats_df.drop(*STAT_COLS)
-        for fn in cfg.transforms:
-            deduped = fn(deduped)
-        try:
-            from datax_spark.lake.table import bucket_expr_for
+        # --- fused dedup + order-guarded merge. Always the spj plan,
+        # whatever the table mode: the guard needs the current rows'
+        # order, which only a CoW merge reads (on a MoR table the spj
+        # task resolves a delta-bearing bucket's state first). Never
+        # aligned: the window anti-join may own the last exchange ---
+        deduped = self._dedup(ev_clean)
+        tp = time.monotonic()
+        pending = self._merge(
+            table, deduped, "spj", order_cols=list(cfg.order_cols)
+        )
+        ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
+        n_dirty, n_total = self._resolve_dirty(
+            label, obs, ev, ev_obs, dirty_pred, ph
+        )
+        if "after_dedup" in failpoints:
+            raise ReplayCrash("after_dedup")
+        if "after_write" in failpoints:
+            raise ReplayCrash("after_write")
 
-            # honor a bucket_cols layout (subset routing) when present;
-            # otherwise route on cfg.keys (== the table's key_cols)
-            bucket = bucket_expr_for(
-                m, key_cols=list(m.bucket_cols) or list(cfg.keys)
-            )
-            tp = time.monotonic()
-            lineage = {
-                r["bucket"]: r.asDict()
-                for r in stats_df.groupBy(bucket.alias("bucket"))
-                .agg(
-                    F.count(F.lit(1)).alias("n_keys"),
-                    F.sum(STAT_COLS[0]).alias("n_events"),
-                    F.sum(STAT_COLS[1]).alias("n_deletes"),
-                    F.min(STAT_COLS[2]).alias("min_lsn"),
-                    F.max(STAT_COLS[3]).alias("max_lsn"),
-                    F.sum(STAT_COLS[4]).alias("bytes_in"),
-                )
-                .collect()
-            }
-            ph["dedup"] = (time.monotonic() - tp) * 1000
-            n_dirty = self._resolve_dirty(label, obs, ev, ev_obs, dirty_pred, ph)
-            try:
-                n_total = int((obs.get or {}).get("n_total") or 0)
-            except Exception:
-                n_total = ev.count()
-            if "after_dedup" in failpoints:
-                raise ReplayCrash("after_dedup")
-
-            # --- order-guarded merge: spj when the layout allows (the
-            # current side never shuffles), shuffle when MoR deltas are
-            # pending (the spj tasks read raw base files only) ---
-            strat = "spj" if cfg.merge_strategy in ("spj", "mor", "spj_staged") else "shuffle"
-            if strat == "spj" and m.delta_files:
-                strat = "shuffle"
-            tp = time.monotonic()
-            pending = merge_into(
-                table,
-                deduped,
-                op_col=cfg.op_col,
-                delete_op=cfg.delete_op,
-                order_cols=list(cfg.order_cols),
-                affected_buckets=sorted(lineage) if strat == "shuffle" else None,
-                strategy=strat,
-            )
-            ph["merge_write"] = (time.monotonic() - tp) * 1000
-            if "after_write" in failpoints:
-                raise ReplayCrash("after_write")
-
-            apply_ms = (time.monotonic() - t0) * 1000.0
-            rows = []
-            for b in sorted(set(lineage) | set(pending.stats.bucket_rows_after)):
-                li = lineage.get(b, {})
-                rows.append(
-                    {
-                        "epoch": slot,
-                        "bucket": b,
-                        "n_events": li.get("n_events", 0),
-                        "n_deletes": li.get("n_deletes", 0),
-                        "min_lsn": li.get("min_lsn"),
-                        "max_lsn": li.get("max_lsn"),
-                        "bytes_in": li.get("bytes_in", 0),
-                        "n_keys_after_dedup": li.get("n_keys", 0),
-                        "rows_after_merge": pending.stats.bucket_rows_after.get(b, 0),
-                        "apply_ms": apply_ms,
-                    }
-                )
-            write_epoch_metrics(self.metrics_root, slot, rows)
-            tp = time.monotonic()
-            version = audit_gated_commit(
-                table, pending, slot,
-                {
-                    "last_epoch": m.last_epoch,  # chunk commits never move the tail
-                    "bootstrap_chunks": applied + [chunk_id],
-                },
-                cfg.audit_fn, failpoints,
-            )
-            ph["commit"] = (time.monotonic() - tp) * 1000
-            if "after_commit" in failpoints:
-                raise ReplayCrash("after_commit")
-            n_applied = sum(r["n_events"] for r in rows)
-        finally:
-            stats_df.unpersist()
-        rebucketed = maybe_rebucket(table, cfg)
+        rows = _lineage_rows(slot, pending, (time.monotonic() - t0) * 1000.0)
+        write_epoch_metrics(self.metrics_root, slot, rows)
+        tp = time.monotonic()
+        version = audit_gated_commit(
+            table, pending, slot,
+            {
+                "last_epoch": m.last_epoch,  # chunk commits never move the tail
+                "bootstrap_chunks": applied + [chunk_id],
+            },
+            cfg.audit_fn, failpoints,
+        )
+        ph["commit"] = (time.monotonic() - tp) * 1000
+        if "after_commit" in failpoints:
+            raise ReplayCrash("after_commit")
+        n_applied = sum(r["n_events"] for r in rows)
+        maybe_rebucket(table, cfg)
         self._refresh_views(table)
         return ChunkResult(
             chunk_id=chunk_id,
@@ -1021,12 +902,98 @@ class ReplayEngine:
             self._refresh_views(self.table())
         return results
 
-    def _resolve_dirty(self, epoch, obs, ev, ev_obs, dirty_pred, ph) -> int:
+    def _dirty_split(self, ev: DataFrame, name: str):
+        """Split events on the dirty predicate: NULL in any key/order
+        column means the event cannot be keyed or ordered. The
+        dirty/total counts ride the merge job via an Observation (no
+        extra scan); ``_resolve_dirty`` reads them afterwards. Returns
+        ``(dirty_pred, obs, ev_obs, ev_clean)``."""
+        cfg = self.config
+        dirty_pred = None
+        for c in (*cfg.keys, *cfg.order_cols):
+            p = F.col(c).isNull()
+            dirty_pred = p if dirty_pred is None else (dirty_pred | p)
+        obs = Observation(name)
+        ev_obs = ev.observe(
+            obs,
+            F.sum(dirty_pred.cast("long")).alias("n_dirty"),
+            F.count(F.lit(1)).alias("n_total"),
+        )
+        return dirty_pred, obs, ev_obs, ev_obs.filter(~dirty_pred)
+
+    def _dedup(self, ev_clean: DataFrame) -> DataFrame:
+        """LWW dedup with the per-key lineage counters riding the same
+        map-side-combined aggregation (operators.lww_dedup_stats; the
+        salted two-stage form composes exact partials), then the
+        configured transforms. Transforms see the ``__stat_*`` columns,
+        which the merge tasks aggregate afterwards; column-additive
+        transforms — the mandated Arrow withColumn form — are
+        unaffected."""
+        cfg = self.config
+        deduped = lww_dedup_stats(
+            ev_clean,
+            keys=list(cfg.keys),
+            order_cols=list(cfg.order_cols),
+            op_col=cfg.op_col,
+            delete_op=cfg.delete_op,
+            lsn_col=cfg.lsn_col,
+            content_col="content" if "content" in ev_clean.columns else None,
+            salt_buckets=cfg.salt_buckets,
+        )
+        for fn in cfg.transforms:
+            deduped = fn(deduped)
+        return deduped
+
+    def _aligned(self, m) -> bool:
+        """``ReplayConfig.aligned_exchange``, with None = on exactly
+        when the table's layout allows (murmur3 buckets)."""
+        if self.config.aligned_exchange is None:
+            return m.hash_fn == "murmur3"
+        return self.config.aligned_exchange
+
+    def _merge(
+        self,
+        table: LakeTable,
+        deduped: DataFrame,
+        strategy: str,
+        order_cols: list[str] | None = None,
+        aligned: bool = False,
+    ):
+        """The one fused ``merge_into`` call of an epoch, bootstrap or
+        chunk: dedup, transforms, merge and per-bucket lineage run as
+        ONE Spark job. ``aligned`` makes it a ONE-shuffle job: the
+        dedup agg's exchange, pinned to num_buckets partitions, IS the
+        bucket routing, so the merge adds no exchange at all
+        (mapInPandas over the agg output, asserted executor-side). The
+        conf pins must be live when merge_into's action runs, hence the
+        context."""
+        cfg = self.config
+        pins = (
+            aligned_shuffle_confs(self.spark, table.manifest().num_buckets)
+            if aligned
+            else nullcontext()
+        )
+        with pins:
+            return merge_into(
+                table,
+                deduped,
+                op_col=cfg.op_col,
+                delete_op=cfg.delete_op,
+                order_cols=order_cols,
+                strategy=strategy,
+                stat_cols=STAT_COLS,
+                aligned=aligned,
+            )
+
+    def _resolve_dirty(
+        self, epoch, obs, ev, ev_obs, dirty_pred, ph
+    ) -> tuple[int, int]:
         """Read the dirty/total counts off the epoch job's Observation,
         quarantine dirty rows, and enforce the error limits
         (ErrorRecordChecker.java:18-82 parity: record limit, when
         configured, is the only check). Raises DirtyDataError before
-        the COMMIT point — nothing the epoch wrote is visible yet."""
+        the COMMIT point — nothing the epoch wrote is visible yet.
+        Returns ``(n_dirty, n_total)``."""
         cfg = self.config
         try:
             got = obs.get or {}
@@ -1071,7 +1038,7 @@ class ReplayEngine:
                 f"exceeds percentage limit {cfg.dirty_pct_limit} "
                 f"(quarantined under {self.quarantine_root()})"
             )
-        return n_dirty
+        return n_dirty, n_total
 
     def _commit_epoch(
         self, table: LakeTable, pending, epoch: int, n_dirty: int,
@@ -1081,136 +1048,6 @@ class ReplayEngine:
             table, pending, epoch,
             {"last_epoch": epoch, "n_dirty": n_dirty},
             self.config.audit_fn, failpoints,
-        )
-
-    def _apply_epoch_fused_spj(
-        self, epoch, table, ev, ev_obs, ev_clean, obs, dirty_pred, t0, ph,
-        failpoints,
-    ) -> EpochResult:
-        """ONE-Spark-job epoch for the storage-partitioned merge path:
-
-            scan -> LWW dedup + per-key stats (one shuffle, map-side
-            combined) -> Arrow transforms -> exchange by bucket ->
-            per-bucket Arrow merge WITH fused per-bucket lineage ->
-            tiny stats collect
-
-        No persist, no separate bucket-stats job, no merge pre-pass —
-        the two extra job launches the shuffle path pays (its anti-join
-        needs the affected-bucket list and the lineage needs a second
-        aggregation over the cached dedup output) cost ~1.5-2s of fixed
-        per-epoch overhead on small epochs, which caps epoch frequency
-        regardless of data size. The dirty gate runs after the job but
-        BEFORE the commit point: a failed epoch leaves only invisible
-        txn orphans (vacuum reclaims), identical crash semantics.
-
-        Transforms see the ``__stat_*`` lineage columns here (they are
-        aggregated inside the merge tasks afterwards); column-additive
-        transforms — the mandated Arrow withColumn form — are
-        unaffected."""
-        cfg = self.config
-        m = table.manifest()
-        aligned = cfg.aligned_exchange
-        if aligned is None:
-            aligned = m.hash_fn == "murmur3"  # auto: on when the layout allows
-        deduped = lww_dedup_stats(
-            ev_clean,
-            keys=list(cfg.keys),
-            order_cols=list(cfg.order_cols),
-            op_col=cfg.op_col,
-            delete_op=cfg.delete_op,
-            lsn_col=cfg.lsn_col,
-            content_col="content" if "content" in ev.columns else None,
-            salt_buckets=cfg.salt_buckets,
-        )
-        for fn in cfg.transforms:
-            deduped = fn(deduped)
-        tp = time.monotonic()
-        if aligned:
-            # ONE-shuffle epoch: the dedup agg's exchange, pinned to
-            # num_buckets partitions, IS the bucket routing — the merge
-            # below adds no exchange at all (mapInPandas over the agg
-            # output, asserted executor-side). The conf pins must be
-            # live when merge_into's action runs, hence the context.
-            with aligned_shuffle_confs(self.spark, m.num_buckets):
-                pending = merge_into(
-                    table,
-                    deduped,
-                    op_col=cfg.op_col,
-                    delete_op=cfg.delete_op,
-                    strategy=cfg.merge_strategy,
-                    stat_cols=STAT_COLS,
-                    aligned=True,
-                )
-        else:
-            pending = merge_into(
-                table,
-                deduped,
-                op_col=cfg.op_col,
-                delete_op=cfg.delete_op,
-                strategy=cfg.merge_strategy,  # "spj" or "mor" — same fused shape
-                stat_cols=STAT_COLS,
-            )
-        ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
-        n_dirty = self._resolve_dirty(epoch, obs, ev, ev_obs, dirty_pred, ph)
-        if "after_dedup" in failpoints:
-            raise ReplayCrash("after_dedup")
-        if "after_write" in failpoints:
-            raise ReplayCrash("after_write")
-
-        bs = pending.bucket_stats or {}
-        apply_ms = (time.monotonic() - t0) * 1000.0
-        rows = []
-        for b in sorted(set(bs) | set(pending.stats.bucket_rows_after)):
-            li = bs.get(b, {})
-            rows.append(
-                {
-                    "epoch": epoch,
-                    "bucket": b,
-                    "n_events": li.get("n_events", 0),
-                    "n_deletes": li.get("n_deletes", 0),
-                    "min_lsn": li.get("min_lsn"),
-                    "max_lsn": li.get("max_lsn"),
-                    "bytes_in": li.get("bytes_in", 0),
-                    "n_keys_after_dedup": li.get("n_keys", 0),
-                    "rows_after_merge": pending.stats.bucket_rows_after.get(b, 0),
-                    "apply_ms": apply_ms,
-                }
-            )
-        tp = time.monotonic()
-        write_epoch_metrics(self.metrics_root, epoch, rows)
-        ph["metrics"] = (time.monotonic() - tp) * 1000
-        tp = time.monotonic()
-        version = self._commit_epoch(table, pending, epoch, n_dirty, failpoints)
-        ph["commit"] = (time.monotonic() - tp) * 1000
-        if "after_commit" in failpoints:
-            raise ReplayCrash("after_commit")
-        if (
-            cfg.merge_strategy == "mor"
-            and cfg.compact_every
-            and (epoch + 1) % cfg.compact_every == 0
-        ):
-            tp = time.monotonic()
-            version = table.compact()
-            ph["compact"] = (time.monotonic() - tp) * 1000
-        tp = time.monotonic()
-        rebucketed = maybe_rebucket(table, cfg)
-        if rebucketed:
-            ph["rebucket"] = (time.monotonic() - tp) * 1000
-        self._refresh_views(table, ph, epoch=epoch)
-        return EpochResult(
-            epoch=epoch,
-            skipped=False,
-            n_events=sum(r["n_events"] for r in rows),
-            n_keys=sum(v.get("n_keys", 0) for v in bs.values()),
-            n_deletes=sum(r["n_deletes"] for r in rows),
-            rows_after=pending.stats.rows_after,
-            affected_buckets=len(pending.stats.affected_buckets),
-            apply_ms=apply_ms,
-            version=version,
-            phase_ms={k: round(v, 1) for k, v in ph.items()},
-            n_dirty=n_dirty,
-            bytes_in=sum(r["bytes_in"] for r in rows),
-            rebucketed_to=rebucketed,
         )
 
     def apply_epoch(self, epoch: int, failpoints: Sequence[str] = ()) -> EpochResult:
@@ -1249,157 +1086,59 @@ class ReplayEngine:
                 | F.col(cfg.lsn_col).isNull()
             )
 
-        # lineage bucket ids follow the TABLE's live bucket count, not
-        # cfg.num_buckets (which only seeds table creation): adaptive
-        # rebucketing can have grown the layout since, and the merge
-        # resolves its bucket count from the manifest the same way
-        from datax_spark.lake.table import bucket_expr_for
-
-        bucket = bucket_expr_for(
-            m0, key_cols=list(m0.bucket_cols) or list(cfg.keys)
-        )
         ph: dict[str, float] = {}
-
-        # --- dirty-data split: NULL in any key/order column means the
-        # event cannot be keyed or ordered. The count rides the dedup
-        # job via an Observation (no extra scan); quarantine rows are
-        # written (and the epoch failed) only when any exist.
-        dirty_pred = None
-        for c in (*cfg.keys, *cfg.order_cols):
-            p = F.col(c).isNull()
-            dirty_pred = p if dirty_pred is None else (dirty_pred | p)
-        obs = Observation(f"dirty_epoch_{epoch}")
-        ev_obs = ev.observe(
-            obs,
-            F.sum(dirty_pred.cast("long")).alias("n_dirty"),
-            F.count(F.lit(1)).alias("n_total"),
+        dirty_pred, obs, ev_obs, ev_clean = self._dirty_split(
+            ev, f"dirty_epoch_{epoch}"
         )
-        ev_clean = ev_obs.filter(~dirty_pred)
+        # ONE Spark job: scan -> LWW dedup + per-key stats (one
+        # shuffle, map-side combined) -> Arrow transforms -> per-bucket
+        # Arrow merge WITH fused per-bucket lineage -> tiny stats
+        # collect. The salted dedup rides it too: its stats compose
+        # exactly across the two stages, and stage 2's exchange is on
+        # the bare keys, so the aligned plan applies unchanged. The
+        # dirty gate runs after the job but BEFORE the commit point: a
+        # failed epoch leaves only invisible txn orphans (vacuum
+        # reclaims them).
+        deduped = self._dedup(ev_clean)
+        tp = time.monotonic()
+        pending = self._merge(
+            table, deduped, cfg.merge_strategy, aligned=self._aligned(m0)
+        )
+        ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
+        n_dirty, _ = self._resolve_dirty(epoch, obs, ev, ev_obs, dirty_pred, ph)
+        if "after_dedup" in failpoints:
+            raise ReplayCrash("after_dedup")
+        if "after_write" in failpoints:
+            raise ReplayCrash("after_write")
 
-        if cfg.merge_strategy in ("spj", "mor"):
-            # the fused one-job epoch covers the salted dedup too: its
-            # stats compose exactly across the two stages (sum/min/max
-            # of per-(key,salt) partials), and stage 2's exchange is on
-            # the bare keys, so the aligned plan applies unchanged
-            return self._apply_epoch_fused_spj(
-                epoch, table, ev, ev_obs, ev_clean, obs, dirty_pred, t0, ph,
-                failpoints,
-            )
-
-        # --- dedup + per-key lineage stats in ONE logical reduction ---
-        # Both the plain and the salted dedup ride the lineage counters
-        # on the aggregation itself (lww_dedup_stats: primitive aggs,
-        # map-side combined; the salted form composes exact partials
-        # across its two stages) — no separate scan of the raw events.
-        stats_df = lww_dedup_stats(
-            ev_clean,
-            keys=list(cfg.keys),
-            order_cols=list(cfg.order_cols),
-            op_col=cfg.op_col,
-            delete_op=cfg.delete_op,
-            lsn_col=cfg.lsn_col,
-            content_col="content" if "content" in ev.columns else None,
-            salt_buckets=cfg.salt_buckets,
-        ).persist()
-
-        # transforms apply lazily on top of the cached winners: the
-        # merge is their only consumer, so they run exactly once and
-        # the cache holds pre-transform rows (smaller).
-        deduped = stats_df.drop(*STAT_COLS)
-        for fn in cfg.transforms:
-            deduped = fn(deduped)
-        try:
+        apply_ms = (time.monotonic() - t0) * 1000.0
+        rows = _lineage_rows(epoch, pending, apply_ms)
+        tp = time.monotonic()
+        write_epoch_metrics(self.metrics_root, epoch, rows)
+        ph["metrics"] = (time.monotonic() - tp) * 1000
+        tp = time.monotonic()
+        version = self._commit_epoch(table, pending, epoch, n_dirty, failpoints)
+        ph["commit"] = (time.monotonic() - tp) * 1000
+        if "after_commit" in failpoints:
+            raise ReplayCrash("after_commit")
+        if (
+            cfg.merge_strategy == "mor"
+            and cfg.compact_every
+            and (epoch + 1) % cfg.compact_every == 0
+        ):
             tp = time.monotonic()
-            bucket_stats = (
-                stats_df.groupBy(bucket.alias("bucket"))
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(STAT_COLS[0]).alias("n_events"),
-                    F.sum(STAT_COLS[1]).alias("n_deletes"),
-                    F.min(STAT_COLS[2]).alias("min_lsn"),
-                    F.max(STAT_COLS[3]).alias("max_lsn"),
-                    F.sum(STAT_COLS[4]).alias("bytes_in"),
-                )
-                .collect()
-            )
-            key_counts = {r["bucket"]: r["n"] for r in bucket_stats}
-            lineage = {r["bucket"]: r.asDict() for r in bucket_stats}
-            ph["dedup"] = (time.monotonic() - tp) * 1000
-
-            n_dirty = self._resolve_dirty(epoch, obs, ev, ev_obs, dirty_pred, ph)
-            if "after_dedup" in failpoints:
-                raise ReplayCrash("after_dedup")
-
-            # --- MERGE (phase 1: data files); affected buckets are
-            # already known from key_counts — saves a discovery job ---
-            tp = time.monotonic()
-            pending = merge_into(
-                table,
-                deduped,
-                op_col=cfg.op_col,
-                delete_op=cfg.delete_op,
-                affected_buckets=sorted(key_counts),
-                # shuffle plan consumes the update frame twice (anti-join
-                # keys + upsert projection): feed the anti-join from the
-                # cached pre-transform frame so transforms run once. The
-                # spj plan consumes it exactly once (inside the per-
-                # bucket Arrow merge) and needs no such hint.
-                update_keys=stats_df if cfg.merge_strategy == "shuffle" else None,
-                strategy={"spj_staged": "spj"}.get(
-                    cfg.merge_strategy, cfg.merge_strategy
-                ),
-            )
-            ph["merge_write"] = (time.monotonic() - tp) * 1000
-            if "after_write" in failpoints:
-                raise ReplayCrash("after_write")
-
-            # --- lineage metrics, written BEFORE the commit point so a
-            # crash after commit leaves no metrics hole (the overwrite
-            # in write_epoch_metrics makes a pre-commit crash replay
-            # them cleanly) ---
-            apply_ms = (time.monotonic() - t0) * 1000.0
-            rows = []
-            for b in sorted(set(lineage) | set(pending.stats.bucket_rows_after)):
-                li = lineage.get(b, {})
-                rows.append(
-                    {
-                        "epoch": epoch,
-                        "bucket": b,
-                        "n_events": li.get("n_events", 0),
-                        "n_deletes": li.get("n_deletes", 0),
-                        "min_lsn": li.get("min_lsn"),
-                        "max_lsn": li.get("max_lsn"),
-                        "bytes_in": li.get("bytes_in", 0),
-                        "n_keys_after_dedup": key_counts.get(b, 0),
-                        "rows_after_merge": pending.stats.bucket_rows_after.get(b, 0),
-                        "apply_ms": apply_ms,
-                    }
-                )
-            tp = time.monotonic()
-            write_epoch_metrics(self.metrics_root, epoch, rows)
-            ph["metrics"] = (time.monotonic() - tp) * 1000
-
-            # --- commit (phase 2: atomic snapshot swap + epoch watermark) ---
-            tp = time.monotonic()
-            version = self._commit_epoch(
-                table, pending, epoch, n_dirty, failpoints
-            )
-            ph["commit"] = (time.monotonic() - tp) * 1000
-            if "after_commit" in failpoints:
-                raise ReplayCrash("after_commit")
-            tp = time.monotonic()
-            rebucketed = maybe_rebucket(table, cfg)
-            if rebucketed:
-                ph["rebucket"] = (time.monotonic() - tp) * 1000
-            self._refresh_views(table, ph, epoch=epoch)
-        finally:
-            stats_df.unpersist()
-
+            version = table.compact()
+            ph["compact"] = (time.monotonic() - tp) * 1000
+        tp = time.monotonic()
+        rebucketed = maybe_rebucket(table, cfg)
+        if rebucketed:
+            ph["rebucket"] = (time.monotonic() - tp) * 1000
+        self._refresh_views(table, ph, epoch=epoch)
         return EpochResult(
             epoch=epoch,
             skipped=False,
             n_events=sum(r["n_events"] for r in rows),
-            n_keys=sum(key_counts.values()),
+            n_keys=sum(r["n_keys_after_dedup"] for r in rows),
             n_deletes=sum(r["n_deletes"] for r in rows),
             rows_after=pending.stats.rows_after,
             affected_buckets=len(pending.stats.affected_buckets),

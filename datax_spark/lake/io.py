@@ -198,11 +198,15 @@ class LocalFSBackend:
         except (FileNotFoundError, ValueError):
             return  # released or mid-write; retry the acquire loop
         if holder.get("host") == socket.gethostname():
-            # positive evidence of death required: break iff pid gone
+            # positive evidence of death required: break iff pid gone.
+            # A pid <= 0 names no holder process (kill(0|-n, 0) probes
+            # a process group and would succeed forever): dead.
             try:
-                os.kill(int(holder.get("pid", -1)), 0)
-                return  # alive — never break, regardless of mtime
-            except (ProcessLookupError, ValueError):
+                pid = int(holder.get("pid", 0))
+                if pid > 0:
+                    os.kill(pid, 0)
+                    return  # alive — never break, regardless of mtime
+            except (ProcessLookupError, ValueError, TypeError):
                 pass  # dead: break now
             except PermissionError:
                 return  # alive under another uid

@@ -1,4 +1,4 @@
-"""Copy-on-write MERGE INTO for LakeTable.
+"""MERGE INTO for LakeTable.
 
 Semantics — the SQL this implements (Iceberg-style):
 
@@ -13,27 +13,20 @@ Reference analog: the RDBMS writer's last-writer-wins upsert
 ``deleteFlag`` pre-delete path (``CommonRdbmsWriter.java:322-362``),
 executed set-wise instead of row-batch-wise.
 
-Physical plans (scale notes) — three strategies, same verified output:
+Physical plans — one per table mode, same verified output:
 
-* **spj** (default for batch replay): the storage-partitioned merge.
-  The table is already bucket-hashed on its keys, so the current side
-  needs no Exchange at all — the epoch batch shuffles once (grouped
-  by bucket) and each bucket's task reads its own data files
-  executor-side, filters evicted keys with Arrow kernels, and writes
-  one new file. Optionally fuses the per-bucket lineage aggregation
-  into the same task (``stat_cols``), making a whole replay epoch one
-  Spark job. Memory per task = one bucket; ``num_buckets`` is the
-  dial. See ``spj_merge_frame``.
-* **shuffle**: bucket pruning (only affected buckets' files read and
-  rewritten: an epoch touching 5% of the key space costs 5% of the
-  table in I/O), then ONE left-anti join (survivors = current rows
-  whose key has no update) plus a union with the upsert rows — no
-  full-outer join, no window. Both sides shuffle on the key columns
-  once; AQE handles skewed key distributions and memory, which is why
-  this remains the fallback for pathological bucket sizes. Both plans
-  support the cross-batch ``order_cols`` guard. Output is
-  repartitioned by bucket and sorted within partitions; row counts
-  come from parquet footers (driver-side metadata read).
+* **spj** (copy-on-write, the default): the storage-partitioned
+  merge. The table is already bucket-hashed on its keys, so the
+  current side needs no Exchange at all — the epoch batch shuffles
+  once (grouped by bucket) and each bucket's task reads its own
+  current state executor-side, filters evicted keys with Arrow
+  kernels, and writes one new file. A bucket that carries pending
+  merge-on-read deltas is read through the MoR read kernel
+  (``bucket_state_arrow``), and the commit clears its deltas.
+  Optionally fuses the per-bucket lineage aggregation into the same
+  task (``stat_cols``), making a whole replay epoch one Spark job, and
+  supports the cross-batch ``order_cols`` guard. Memory per task =
+  one bucket; ``num_buckets`` is the dial. See ``spj_merge_frame``.
 * **mor** (merge-on-read): the epoch batch is APPENDED as one delta
   file per touched bucket (tombstone rows for deletes) and no current
   data is read or rewritten — write cost O(batch), independent of
@@ -47,12 +40,9 @@ Physical plans (scale notes) — three strategies, same verified output:
 
 from __future__ import annotations
 
-import glob
 import os
-import re
 from dataclasses import dataclass, field
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -61,13 +51,13 @@ from datax_spark.lake.table import (
     CommitConflictError,
     LakeTable,
     bucket_expr_for,
+    bucket_state_arrow,
     composite_key_array,
     conform_arrow,
 )
 from datax_spark.operators.schema_evolution import (
     SchemaEvolutionError,
     evolve_schema,
-    union_by_name,
 )
 
 
@@ -86,8 +76,8 @@ class PendingMerge:
     pointer (phase 2). A crash between the phases leaves only orphan
     files — the table state is unchanged and the epoch replays cleanly.
 
-    ``bucket_stats`` is populated by the fused spj path: per-bucket
-    lineage aggregates computed inside the merge tasks themselves.
+    ``bucket_stats`` holds one lineage row per affected bucket,
+    computed inside the merge tasks themselves (see ``_bucket_stats``).
     """
 
     table: LakeTable
@@ -198,16 +188,22 @@ class PendingMerge:
         self.base_version = cur.version
 
 
+def check_strategy(strategy: str) -> None:
+    """Raise ValueError unless ``strategy`` names a merge plan."""
+    if strategy not in ("spj", "mor"):
+        raise ValueError(
+            f"unknown merge strategy {strategy!r}: use 'spj' "
+            f"(copy-on-write) or 'mor' (merge-on-read)"
+        )
+
+
 def merge_into(
     table: LakeTable,
     updates: DataFrame,
     op_col: str = "op",
     delete_op: str = "D",
-    write_partitions: int | None = None,
     order_cols: list[str] | None = None,
-    affected_buckets: list[int] | None = None,
-    update_keys: DataFrame | None = None,
-    strategy: str = "shuffle",
+    strategy: str = "spj",
     stat_cols: tuple[str, ...] | None = None,
     aligned: bool = False,
 ) -> PendingMerge:
@@ -220,43 +216,33 @@ def merge_into(
     greater than the current table row's — the conditional-merge form
     ``WHEN MATCHED AND s.order > t.order THEN UPDATE`` that makes
     re-delivered or out-of-order micro-batches unable to regress a key
-    (used by the streaming sink; the in-order batch engine skips it
-    because its epoch watermark already enforces order).
+    (used by the streaming sink and chunked bootstrap; the in-order
+    batch engine skips it because its epoch watermark already enforces
+    order).
 
     ``strategy`` picks the physical plan:
 
-    * ``"shuffle"`` (default): anti-join + union, both sides exchange
-      on the key columns — Catalyst/AQE owns skew and memory.
-    * ``"spj"``: storage-partitioned merge — the analog of Spark's
-      storage-partitioned joins (SPARK-37375) for this table format.
-      The table is ALREADY bucket-hashed on the keys, so only the
-      (small) update side shuffles, grouped by bucket; each bucket's
-      task then reads its own current data files directly and merges
-      in Arrow — the current side never enters an Exchange and is
-      never re-written through a second shuffle. See
-      ``_spj_merge_write`` for the memory model and crash-safety.
+    * ``"spj"`` (default): storage-partitioned copy-on-write merge —
+      the analog of Spark's storage-partitioned joins (SPARK-37375)
+      for this table format. The table is ALREADY bucket-hashed on the
+      keys, so only the (small) update side shuffles, grouped by
+      bucket; each bucket's task then reads its own current state
+      directly (base files, plus pending MoR deltas when the bucket
+      has any) and merges in Arrow — the current side never enters an
+      Exchange. See ``spj_merge_frame`` for the memory model and
+      crash-safety.
     * ``"mor"``: merge-on-read delta append — writes O(batch) delta
       files with tombstones and defers the merge to read/compact time.
       See ``mor_delta_frame``.
+
+    ``stat_cols`` fuses the per-bucket lineage aggregation into the
+    merge tasks (``PendingMerge.bucket_stats``); ``aligned`` runs the
+    merge with no exchange of its own over an already bucket-aligned
+    frame (see ``_aligned_bucket_apply``).
     """
-    if update_keys is not None and order_cols:
-        # update_keys supplies the anti-join key set from the
-        # pre-transform frame, but the order guard filters `upd` — a
-        # stale update's key would still evict its current row with no
-        # replacement (silent data loss). No caller needs both: the
-        # guard exists for out-of-order delivery, where the key set
-        # must come from the post-guard frame anyway.
-        raise ValueError(
-            "update_keys cannot be combined with order_cols: the "
-            "anti-join key set would include keys whose update the "
-            "order guard rejects"
-        )
-    if stat_cols and strategy not in ("spj", "mor"):
-        raise ValueError("stat_cols (fused lineage) requires strategy='spj' or 'mor'")
+    check_strategy(strategy)
     m = table.manifest()
     if aligned:
-        if strategy not in ("spj", "mor"):
-            raise ValueError("aligned merges require strategy='spj' or 'mor'")
         if m.hash_fn != "murmur3":
             raise ValueError(
                 f"aligned merges need a murmur3-bucketed table (the "
@@ -273,121 +259,47 @@ def merge_into(
                 f"buckets on subset {list(m.bucket_cols)} of keys "
                 f"{list(m.key_cols)}. Pass aligned=False."
             )
-    keys = m.key_cols
+    if strategy == "mor" and order_cols:
+        # the cross-batch guard needs the CURRENT row's order tuple,
+        # i.e. a read of the base — which is exactly what MoR's
+        # O(batch) write refuses to pay. Out-of-order delivery needs
+        # the spj guard; the batch engine's epoch watermark already
+        # serializes epochs, so MoR epochs are in-order.
+        raise ValueError(
+            "order_cols (cross-batch LWW guard) is not supported "
+            "with strategy='mor'; use 'spj'"
+        )
 
     incoming = updates.drop(op_col, *(stat_cols or ())).schema
     evolved = evolve_schema(
         m.schema, incoming,
         frozen_cols=set(m.key_cols) | set(m.bucket_cols or ()),
     )
-
-    bucket = bucket_expr_for(m)
-    upd = updates.withColumn("__b", bucket)
-
+    upd = updates.withColumn("__b", bucket_expr_for(m))
+    txn = table.new_txn_dir()
+    # affected buckets come back with the write result itself (one
+    # stats row per bucket group) — no pre-pass needed
     if strategy == "spj":
-        if m.delta_files:
-            # the spj tasks read raw BASE files per bucket; pending MoR
-            # deltas would be silently ignored — refuse instead.
-            raise ValueError(
-                "table has pending merge-on-read deltas; run "
-                "table.compact() first or use strategy='mor'/'shuffle' "
-                "(the shuffle plan reads the merged view)"
-            )
-        # affected buckets come back with the merge result itself (one
-        # stats row per bucket group) — no pre-pass needed; the order
-        # guard runs inside the bucket task (vectorized pandas on the
-        # matched subset)
-        return _spj_merge_write(
-            table, upd, op_col, delete_op, evolved,
+        frame = spj_merge_frame(
+            table, upd, op_col, delete_op, evolved, txn,
             stat_cols=stat_cols, order_cols=order_cols, aligned=aligned,
         )
-    if strategy == "mor":
-        if order_cols:
-            # the cross-batch guard needs the CURRENT row's order tuple,
-            # i.e. a read of the base — which is exactly what MoR's
-            # O(batch) write refuses to pay. Out-of-order delivery needs
-            # the spj/shuffle guard; the batch engine's epoch watermark
-            # already serializes epochs, so MoR epochs are in-order.
-            raise ValueError(
-                "order_cols (cross-batch LWW guard) is not supported "
-                "with strategy='mor'; use 'spj' or 'shuffle'"
-            )
-        return _mor_delta_write(
-            table, upd, op_col, delete_op, evolved, stat_cols=stat_cols,
-            aligned=aligned,
-        )
-    if strategy != "shuffle":
-        raise ValueError(f"unknown merge strategy: {strategy}")
-
-    if affected_buckets is not None:
-        affected = sorted(affected_buckets)  # caller already knows (saves a job)
     else:
-        affected = sorted(
-            r["__b"] for r in upd.select("__b").distinct().collect()
-        )  # at most num_buckets ints — tiny driver collect
-
-    current = union_by_name(table.read(buckets=affected), evolved)
-
-    if order_cols:
-        cur_ord = current.select(
-            *keys, F.struct(*[F.col(c) for c in order_cols]).alias("__cur_ord")
+        frame = mor_delta_frame(
+            table, upd, op_col, delete_op, evolved, txn,
+            stat_cols=stat_cols, aligned=aligned,
         )
-        upd = (
-            upd.join(cur_ord, on=keys, how="left")
-            .filter(
-                F.col("__cur_ord").isNull()
-                | (F.struct(*[F.col(c) for c in order_cols]) > F.col("__cur_ord"))
-            )
-            .drop("__cur_ord")
-        )
-    # anti-join: current rows whose key received ANY event (upsert or
-    # delete) are dropped; the upsert rows below carry the new image.
-    # ``update_keys`` lets the caller supply the key set from a cheaper
-    # (e.g. cached pre-transform) frame so expensive lazy transforms on
-    # ``updates`` are not computed twice — once here and once for the
-    # upsert projection.
-    upd_keys = update_keys.select(*keys) if update_keys is not None else upd.select(*keys)
-    survivors = current.join(upd_keys, on=keys, how="left_anti")
-    upserts = union_by_name(upd.filter(F.col(op_col) != delete_op), evolved)
-
-    out_cols = [f.name for f in evolved.fields]
-    result = (
-        survivors.select(*out_cols)
-        .unionByName(upserts.select(*out_cols))
-        .withColumn("__b", bucket)
-    )
-
-    txn = table.new_txn_dir()
-    n_parts = write_partitions or max(
-        len(affected), table.spark.sparkContext.defaultParallelism
-    )
-    (
-        result.repartition(n_parts, F.col("__b"))
-        # __b leads so the partitioned write's required ordering is a
-        # satisfied prefix — otherwise the key sort is superseded by
-        # the write's own Sort(__b) and the layout is arrival order
-        .sortWithinPartitions("__b", *keys)
-        .write.mode("overwrite")
-        .partitionBy("__b")
-        .parquet(txn)
-    )
-
-    new_files: dict[int, list[str]] = {}
-    new_counts: dict[int, int] = {}
-    for d in glob.glob(os.path.join(txn, "__b=*")):
-        b = int(re.search(r"__b=(\d+)$", d).group(1))
-        files = sorted(glob.glob(os.path.join(d, "*.parquet")))
-        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        if rows:
-            new_files[b] = files
-            new_counts[b] = rows
-
-    rows_before = sum(m.row_counts.get(str(b), 0) for b in affected)
+    res = frame.collect()  # bounded: one row per affected bucket
+    affected = sorted(int(r["bucket"]) for r in res)
+    new_files = {int(r["bucket"]): [r["file"]] for r in res if r["rows"]}
+    new_counts = {int(r["bucket"]): int(r["rows"]) for r in res if r["rows"]}
     stats = MergeStats(
         affected_buckets=affected,
-        rows_before=rows_before,
+        rows_before=sum(m.row_counts.get(str(b), 0) for b in affected),
+        # for MoR this is DELTA rows appended (incl. tombstones) — the
+        # merged table size is only known at read/compact time
         rows_after=sum(new_counts.values()),
-        files_written=sum(len(v) for v in new_files.values()),
+        files_written=len(new_files),
         bucket_rows_after=dict(new_counts),
     )
     return PendingMerge(
@@ -398,6 +310,18 @@ def merge_into(
         new_row_counts=new_counts,
         schema=evolved,
         stats=stats,
+        bucket_stats={
+            int(r["bucket"]): {
+                "n_keys": int(r["n_keys"]),
+                "n_events": int(r["n_events"]),
+                "n_deletes": int(r["n_deletes"]),
+                "min_lsn": r["min_lsn"],
+                "max_lsn": r["max_lsn"],
+                "bytes_in": int(r["bytes_in"]),
+            }
+            for r in res
+        },
+        mode="cow" if strategy == "spj" else "mor",
     )
 
 
@@ -408,6 +332,28 @@ SPJ_STATS_SCHEMA = (
     "bucket int, rows long, file string, n_keys long, n_events long, "
     "n_deletes long, min_lsn long, max_lsn long, bytes_in long"
 )
+
+
+def _bucket_stats(pdf, stat_cols: tuple[str, ...] | None) -> dict:
+    """One bucket's lineage row (the non-key columns of
+    ``SPJ_STATS_SCHEMA``), computed inside the bucket task from the
+    per-key counters ``stat_cols`` (``operators.dedup.STAT_COLS``
+    order: n_events, n_deletes, min_lsn, max_lsn, bytes_in); without
+    them only the key count is known."""
+    if not stat_cols:
+        return {
+            "n_keys": len(pdf), "n_events": 0, "n_deletes": 0,
+            "min_lsn": None, "max_lsn": None, "bytes_in": 0,
+        }
+    n_events, n_deletes, min_lsn, max_lsn, bytes_in = stat_cols
+    return {
+        "n_keys": len(pdf),
+        "n_events": int(pdf[n_events].sum()),
+        "n_deletes": int(pdf[n_deletes].sum()),
+        "min_lsn": int(pdf[min_lsn].min()),
+        "max_lsn": int(pdf[max_lsn].max()),
+        "bytes_in": int(pdf[bytes_in].sum()),
+    }
 
 
 def _aligned_bucket_apply(upd: DataFrame, bucket_fn, table: LakeTable) -> DataFrame:
@@ -490,20 +436,24 @@ def spj_merge_frame(
     is the same co-location guarantee Spark's storage-partitioned
     joins (SPARK-37375) exploit on Iceberg bucket tables), filters out
     keys the batch replaces, and streams survivors + sorted upserts
-    into one new parquet file per bucket.
+    into one new parquet file per bucket. Neither the rewritten table
+    rows nor the current side ever pass through an exchange — the two
+    terms that would grow with TABLE size rather than batch size.
 
-    Versus the shuffle plan, per epoch this saves (a) the exchange of
-    the rewritten table rows (the CoW write's ``repartition(__b)``)
-    and (b) the exchange of the current side into the anti-join — the
-    two terms that grow with TABLE size rather than batch size.
+    A bucket with pending merge-on-read deltas has no single base
+    file set to stream: its current state is base ⊕ deltas, resolved
+    by ``bucket_state_arrow`` (the kernel MoR reads use) before the
+    merge, and the commit clears the bucket's deltas since the new
+    file has them baked in.
 
     Memory model: one task holds one bucket's update batch (pandas)
-    plus ONE current data file's row group at a time (Arrow streaming
-    write) — bounded by ``num_buckets``, the same dial as the CoW
-    blast radius. Crash-safety: files land under a fresh txn dir via
-    write-to-tmp + atomic rename (task retries are idempotent:
+    plus ONE current data file at a time (Arrow streaming write), or
+    for a delta-bearing bucket its whole resolved state (the MoR
+    read's bound) — bounded by ``num_buckets``, the same dial as the
+    CoW blast radius. Crash-safety: files land under a fresh txn dir
+    via write-to-tmp + atomic rename (task retries are idempotent:
     deterministic final name, last rename wins); nothing is visible
-    until the manifest swap, exactly like the shuffle path.
+    until the manifest swap.
 
     ``stat_cols`` (the per-key lineage counters ``operators.dedup.
     STAT_COLS``, in order: n_events, n_deletes, min_lsn, max_lsn,
@@ -531,6 +481,11 @@ def spj_merge_frame(
     bucket_files = {
         int(b): [os.path.join(root, p) for p in fs] for b, fs in m.files.items()
     }
+    bucket_deltas = {
+        int(b): [os.path.join(root, p) for p in fs]
+        for b, fs in m.delta_files.items()
+    }
+    resolve = list(m.resolve_order)
     evolved_pa = to_arrow_schema(evolved)
     out_cols = [f.name for f in evolved.fields]
 
@@ -543,20 +498,7 @@ def spj_merge_frame(
         import pyarrow.parquet as _pq
 
         b = int(pdf["__b"].iloc[0])
-        if stat_cols:
-            st = {
-                "n_keys": len(pdf),
-                "n_events": int(pdf[stat_cols[0]].sum()),
-                "n_deletes": int(pdf[stat_cols[1]].sum()),
-                "min_lsn": int(pdf[stat_cols[2]].min()),
-                "max_lsn": int(pdf[stat_cols[3]].max()),
-                "bytes_in": int(pdf[stat_cols[4]].sum()),
-            }
-        else:
-            st = {
-                "n_keys": len(pdf), "n_events": 0, "n_deletes": 0,
-                "min_lsn": None, "max_lsn": None, "bytes_in": 0,
-            }
+        st = _bucket_stats(pdf, stat_cols)
 
         def composite(tbl):
             # One kernel for BOTH sides — the shared length-prefixed
@@ -597,11 +539,19 @@ def spj_merge_frame(
 
         final = _os.path.join(txn, f"b{b:05d}.parquet")
         tmp = f"{final}.{_uuid.uuid4().hex}.tmp"
+        if b in bucket_deltas:
+            current = [
+                bucket_state_arrow(
+                    bucket_files.get(b, []), bucket_deltas[b], keys, resolve,
+                    evolved_pa,
+                )
+            ]
+        else:
+            current = (_pq.read_table(f) for f in bucket_files.get(b, ()))
         writer = None
         rows = 0
         try:
-            for f in bucket_files.get(b, ()):
-                t = _pq.read_table(f)
+            for t in current:
                 if not t.num_rows:
                     continue
                 in_upd = _pc.is_in(composite(t), value_set=evicted)
@@ -676,56 +626,6 @@ def spj_merge_frame(
     )
 
 
-def _spj_merge_write(
-    table: LakeTable,
-    upd: DataFrame,
-    op_col: str,
-    delete_op: str,
-    evolved: T.StructType,
-    stat_cols: tuple[str, ...] | None = None,
-    order_cols: list[str] | None = None,
-    aligned: bool = False,
-) -> PendingMerge:
-    m = table.manifest()
-    txn = table.new_txn_dir()
-    res = spj_merge_frame(
-        table, upd, op_col, delete_op, evolved, txn,
-        stat_cols=stat_cols, order_cols=order_cols, aligned=aligned,
-    ).collect()  # bounded: one row per affected bucket
-
-    affected = sorted(int(r["bucket"]) for r in res)
-    new_files = {int(r["bucket"]): [r["file"]] for r in res if r["rows"]}
-    new_counts = {int(r["bucket"]): int(r["rows"]) for r in res if r["rows"]}
-    rows_before = sum(m.row_counts.get(str(b), 0) for b in affected)
-    stats = MergeStats(
-        affected_buckets=affected,
-        rows_before=rows_before,
-        rows_after=sum(new_counts.values()),
-        files_written=len(new_files),
-        bucket_rows_after=dict(new_counts),
-    )
-    return PendingMerge(
-        table=table,
-        base_version=m.version,
-        replaced_buckets=affected,
-        new_files=new_files,
-        new_row_counts=new_counts,
-        schema=evolved,
-        stats=stats,
-        bucket_stats={
-            int(r["bucket"]): {
-                "n_keys": int(r["n_keys"]),
-                "n_events": int(r["n_events"]),
-                "n_deletes": int(r["n_deletes"]),
-                "min_lsn": r["min_lsn"],
-                "max_lsn": r["max_lsn"],
-                "bytes_in": int(r["bytes_in"]),
-            }
-            for r in res
-        },
-    )
-
-
 def mor_delta_frame(
     table: LakeTable,
     upd: DataFrame,
@@ -741,8 +641,8 @@ def mor_delta_frame(
     become tombstone rows (``__op='D'``) — and NOTHING of the current
     table is read or rewritten. This is the Iceberg v2 equality-delete
     write shape: an epoch's write cost is O(batch), independent of
-    table size, where CoW (spj/shuffle) pays O(touched buckets of the
-    table) per epoch. Readers resolve base ⊕ deltas with bucket-local
+    table size, where CoW (spj) pays O(touched buckets of the table)
+    per epoch. Readers resolve base ⊕ deltas with bucket-local
     LWW (``LakeTable._read_merged_buckets``) until ``compact()`` folds
     the deltas into a fresh base.
 
@@ -774,20 +674,7 @@ def mor_delta_frame(
         import pyarrow.parquet as _pq
 
         b = int(pdf["__b"].iloc[0])
-        if stat_cols:
-            st = {
-                "n_keys": len(pdf),
-                "n_events": int(pdf[stat_cols[0]].sum()),
-                "n_deletes": int(pdf[stat_cols[1]].sum()),
-                "min_lsn": int(pdf[stat_cols[2]].min()),
-                "max_lsn": int(pdf[stat_cols[3]].max()),
-                "bytes_in": int(pdf[stat_cols[4]].sum()),
-            }
-        else:
-            st = {
-                "n_keys": len(pdf), "n_events": 0, "n_deletes": 0,
-                "min_lsn": None, "max_lsn": None, "bytes_in": 0,
-            }
+        st = _bucket_stats(pdf, stat_cols)
         pdf = pdf.sort_values(keys_b)
         dfp = pdf.copy()
         for c in out_cols:
@@ -820,56 +707,4 @@ def mor_delta_frame(
         upd.repartition(int(table.manifest().num_buckets), F.col("__b"))
         .groupBy("__b")
         .applyInPandas(write_bucket, schema=SPJ_STATS_SCHEMA)
-    )
-
-
-def _mor_delta_write(
-    table: LakeTable,
-    upd: DataFrame,
-    op_col: str,
-    delete_op: str,
-    evolved: T.StructType,
-    stat_cols: tuple[str, ...] | None = None,
-    aligned: bool = False,
-) -> PendingMerge:
-    m = table.manifest()
-    txn = table.new_txn_dir()
-    res = mor_delta_frame(
-        table, upd, op_col, delete_op, evolved, txn, stat_cols=stat_cols,
-        aligned=aligned,
-    ).collect()  # bounded: one row per affected bucket
-
-    affected = sorted(int(r["bucket"]) for r in res)
-    new_files = {int(r["bucket"]): [r["file"]] for r in res if r["rows"]}
-    new_counts = {int(r["bucket"]): int(r["rows"]) for r in res if r["rows"]}
-    rows_before = sum(m.row_counts.get(str(b), 0) for b in affected)
-    stats = MergeStats(
-        affected_buckets=affected,
-        rows_before=rows_before,
-        # for MoR this is DELTA rows appended (incl. tombstones) — the
-        # merged table size is only known at read/compact time
-        rows_after=sum(new_counts.values()),
-        files_written=len(new_files),
-        bucket_rows_after=dict(new_counts),
-    )
-    return PendingMerge(
-        table=table,
-        base_version=m.version,
-        replaced_buckets=affected,
-        new_files=new_files,
-        new_row_counts=new_counts,
-        schema=evolved,
-        stats=stats,
-        bucket_stats={
-            int(r["bucket"]): {
-                "n_keys": int(r["n_keys"]),
-                "n_events": int(r["n_events"]),
-                "n_deletes": int(r["n_deletes"]),
-                "min_lsn": r["min_lsn"],
-                "max_lsn": r["max_lsn"],
-                "bytes_in": int(r["bytes_in"]),
-            }
-            for r in res
-        },
-        mode="mor",
     )

@@ -2144,7 +2144,7 @@ class LakeTable:
         self,
         filters: list[tuple] | None = None,
         condition=None,
-        strategy: str = "shuffle",
+        strategy: str = "spj",
     ) -> int:
         """Row-level predicate delete (the Iceberg/Delta ``DELETE FROM
         ... WHERE`` surface; retention sweeps, GDPR erasure). The
@@ -2164,15 +2164,17 @@ class LakeTable:
         (full scan of every bucket's data, no pruning — the predicate
         is opaque). Exactly one of the two.
 
-        ``strategy``: ``"shuffle"`` (CoW rewrite of affected buckets,
-        default) or ``"mor"`` — O(matched keys) tombstone deltas, the
+        ``strategy``: ``"spj"`` (CoW rewrite of affected buckets,
+        default; a bucket's pending MoR deltas are folded into its
+        rewrite) or ``"mor"`` — O(matched keys) tombstone deltas, the
         right shape when a TTL sweep touches most buckets of a huge
         table and the rewrite should be deferred to compaction.
 
         Returns the number of rows deleted (0 = no commit made).
         """
-        from datax_spark.lake.merge import merge_into
+        from datax_spark.lake.merge import check_strategy, merge_into
 
+        check_strategy(strategy)
         if (filters is None) == (condition is None):
             raise ValueError("pass exactly one of filters= or condition=")
         m = self.manifest()
@@ -2220,7 +2222,7 @@ class LakeTable:
         assignments: dict[str, object],
         filters: list[tuple] | None = None,
         condition=None,
-        strategy: str = "shuffle",
+        strategy: str = "spj",
     ) -> int:
         """Row-level predicate update (the Iceberg/Delta ``UPDATE ...
         SET ... WHERE`` surface), the sibling of :meth:`delete_where`
@@ -2244,8 +2246,9 @@ class LakeTable:
         """
         from pyspark.sql import Column
 
-        from datax_spark.lake.merge import merge_into
+        from datax_spark.lake.merge import check_strategy, merge_into
 
+        check_strategy(strategy)
         if (filters is None) == (condition is None):
             raise ValueError("pass exactly one of filters= or condition=")
         m = self.manifest()

@@ -392,7 +392,7 @@ def write_sink(df: DataFrame, name: str, parameter: dict) -> dict:
             op_col = "__op"
         pending = merge_into(
             table, df, op_col=op_col, delete_op=p.get("delete_op", "D"),
-            strategy=p.get("mergeStrategy", "shuffle"),
+            strategy=p.get("mergeStrategy", "spj"),
         )
         version = pending.commit(summary=p.get("summary"))
         return {"rows_after": pending.stats.rows_after, "version": version}

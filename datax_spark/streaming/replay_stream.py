@@ -22,7 +22,7 @@ emit op-typed events → checkpoint each boundary):
   the guard makes the second apply a no-op or an identical commit.
 
 Ordering note: within one micro-batch, LWW picks max (commit, lsn)
-per key. ACROSS batches, the CoW plans (spj/shuffle) order-guard
+per key. ACROSS batches, the CoW plan (spj) order-guards
 upserts against the current table row (``order_cols`` in
 ``merge_into``), so a late batch carrying older images cannot regress
 a key; a delete followed by an EARLIER update arriving in a later
@@ -139,7 +139,7 @@ class StreamReplay:
                 (F.col(cfg.lsn_col) > F.lit(int(wlsn)))
                 | F.col(cfg.lsn_col).isNull()
             )
-        strategy = {"spj_staged": "spj"}.get(cfg.merge_strategy, cfg.merge_strategy)
+        strategy = cfg.merge_strategy
         summary: dict = {"last_epoch": batch_id}
         if self.delete_order_check:
             ord_struct = F.struct(*[F.col(c) for c in cfg.order_cols])

@@ -210,7 +210,7 @@ def test_hash_fn_manifest_roundtrip_and_rebucket(spark, tmp_path):
         num_buckets=4,
         hash_fn="murmur3",
     )
-    pend = merge_into(t, df.withColumn("op", F.lit("U")), strategy="shuffle")
+    pend = merge_into(t, df.withColumn("op", F.lit("U")))
     pend.commit()
     t2 = LakeTable.load(spark, str(tmp_path / "t_rt"))
     assert t2.manifest().hash_fn == "murmur3"

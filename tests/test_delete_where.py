@@ -186,6 +186,41 @@ def test_delete_where_mor_on_resolve_order_table(spark, tmp_path):
     assert _keys(t) == [("r1", "b"), ("r2", "d"), ("r3", "e")]
 
 
+def test_delete_and_update_where_on_delta_bearing_table(spark, tmp_path):
+    """The default (spj) strategy on a MoR table with pending deltas:
+    matches come from the merged read, each touched bucket is
+    rewritten from its merged state, and its deltas are cleared."""
+    t = _mk(spark, tmp_path / "t")
+    ev = T.StructType([*SCHEMA.fields, T.StructField("op", T.StringType())])
+    merge_into(
+        t,
+        spark.createDataFrame(
+            [("r1", "a", "kt", 10, "U"), ("r4", "f", "py", 11, "U"),
+             ("r3", "e", None, None, "D")],
+            ev,
+        ),
+        strategy="mor",
+    ).commit()
+
+    def n_deltas():
+        return sum(len(v) for v in t.manifest().delta_files.values())
+
+    before = n_deltas()
+    assert before
+    # r2/c lives in a base file, r4/f only in a delta; r1/a's base row
+    # said py but its delta image says kt
+    assert t.delete_where(filters=[("lang", "=", "py")]) == 2
+    assert _keys(t) == [("r1", "a"), ("r1", "b"), ("r2", "d")]
+    assert n_deltas() < before  # rewritten buckets dropped their deltas
+    assert t.update_where({"lsn": "lsn + 100"}, condition="lang = 'kt'") == 1
+    got = {(r["repo"], r["path"]): (r["lang"], r["lsn"]) for r in t.read().collect()}
+    assert got == {("r1", "a"): ("kt", 110), ("r1", "b"): ("rs", 2),
+                   ("r2", "d"): (None, 4)}
+    t.compact()
+    assert {(r["repo"], r["path"]): (r["lang"], r["lsn"])
+            for r in t.read().collect()} == got
+
+
 def test_update_where_bad_cast_fails_loudly(spark, tmp_path):
     """r3 ADVICE: an assignment whose value cannot be represented in
     the column's type fails the statement (SQL UPDATE semantics) —

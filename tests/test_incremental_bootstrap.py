@@ -120,13 +120,18 @@ def _like(spark, trunc_root):
     return spark.read.parquet(trunc_root).drop("op", "epoch")
 
 
-def _interleaved_run(spark, trunc_root, events_root, tmp_path, name, with_lsn):
-    eng = _engine(spark, trunc_root, tmp_path, name)
+def _interleaved_run(
+    spark, trunc_root, events_root, tmp_path, name, with_lsn, cfg=CFG
+):
+    eng = _engine(spark, trunc_root, tmp_path, name, cfg)
     b = eng.begin_incremental_bootstrap(_like(spark, trunc_root), T0)
     assert not b.skipped and b.rows_after == 0
 
     r2 = eng.apply_epoch(2)  # tail reaches lsn 5999
     assert r2.n_events == SPEC.events_per_epoch
+    if cfg.merge_strategy == "mor":
+        # the chunks below merge into buckets with pending deltas
+        assert eng.table().manifest().delta_files
 
     # chunk A (half the key space) captured mid-tail: its suppression
     # window (5000, 5999] is non-empty, so some rows must be superseded
@@ -162,6 +167,23 @@ def test_interleaved_chunks_equal_full_replay(
     assert eng.table().manifest().summary["bootstrap_chunks"] == [
         "chunk-a", "chunk-b",
     ]
+
+
+def test_chunks_on_mor_engine_with_pending_deltas(
+    spark, events_root, trunc_root, expected, tmp_path
+):
+    """On a merge_strategy='mor' engine the tail leaves delta files in
+    the buckets each chunk merges into. The chunk's order-guarded spj
+    merge reads those buckets' merged state (base ⊕ deltas), so the
+    final state still equals the full replay — before and after
+    compaction."""
+    eng = _interleaved_run(
+        spark, trunc_root, events_root, tmp_path, "mor", True,
+        cfg=ReplayConfig(num_buckets=16, merge_strategy="mor"),
+    )
+    assert _state(eng).equals(expected)
+    eng.table().compact()
+    assert _state(eng).equals(expected)
 
 
 def test_watermark_mode_chunks_without_lsn(

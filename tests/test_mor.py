@@ -174,8 +174,9 @@ def test_mor_time_travel_reads_delta_snapshot(spark, events_root, tmp_path):
 
 
 def test_strategy_guards(spark, tmp_path):
-    """spj refuses a delta-bearing table (it reads raw base files);
-    mor refuses order_cols (the guard needs a base read)."""
+    """mor refuses order_cols (the guard needs a base read); spj on a
+    delta-bearing table merges into the bucket's MERGED state (base ⊕
+    deltas) and its commit clears the replaced buckets' deltas."""
     import pyspark.sql.types as T
 
     schema = T.StructType(
@@ -198,18 +199,50 @@ def test_strategy_guards(spark, tmp_path):
         merge_into(t, df, strategy="mor", order_cols=["commit", "lsn"])
     merge_into(t, df, strategy="mor").commit()
     assert t.manifest().delta_files
-    with pytest.raises(ValueError, match="pending merge-on-read"):
-        merge_into(t, df, strategy="spj")
-    # shuffle on a delta-bearing table reads the merged view and its
-    # commit clears the replaced buckets' deltas
+    # r1/a lives ONLY in a delta file; r1/b joins it as a second delta
+    merge_into(
+        t,
+        spark.createDataFrame(
+            [("r1", "b", "c1", 2, "B", "U")],
+            "repo string, path string, commit string, lsn long, content string, op string",
+        ),
+        strategy="mor",
+    ).commit()
     df2 = spark.createDataFrame(
-        [("r1", "a", "c2", 2, "A2", "U")],
+        [("r1", "a", "c2", 3, "A2", "U"), ("r2", "z", "c2", 4, "Z", "U")],
         "repo string, path string, commit string, lsn long, content string, op string",
     )
-    merge_into(t, df2, strategy="shuffle").commit()
+    pm = merge_into(t, df2, strategy="spj")
+    pm.commit()
     got = {(r.repo, r.path): r.content for r in t.read().collect()}
-    assert got == {("r1", "a"): "A2"}
-    assert not t.manifest().delta_files
+    assert got == {("r1", "a"): "A2", ("r1", "b"): "B", ("r2", "z"): "Z"}
+    m = t.manifest()
+    # the merged buckets carry no deltas any more
+    assert not set(m.delta_files) & {str(b) for b in pm.replaced_buckets}
+    t.compact()
+    assert {(r.repo, r.path): r.content for r in t.read().collect()} == got
+
+
+def test_unknown_strategies_rejected(spark, tmp_path):
+    """Only 'spj' and 'mor' exist: the engine config refuses anything
+    else at construction (before any dedup runs), and so does every
+    merge entry point."""
+    for bad in ("shuffle", "spj_staged", "SPJ"):
+        with pytest.raises(ValueError, match="'spj'.*'mor'"):
+            ReplayConfig(merge_strategy=bad)
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"),
+        spark.createDataFrame([], "repo string, path string, lsn long").schema,
+        key_cols=["repo", "path"], num_buckets=2,
+    )
+    df = spark.createDataFrame(
+        [("r1", "a", 1, "U")], "repo string, path string, lsn long, op string"
+    )
+    with pytest.raises(ValueError, match="'spj'.*'mor'"):
+        merge_into(t, df, strategy="shuffle")
+    with pytest.raises(ValueError, match="'spj'.*'mor'"):
+        t.delete_where(condition="lsn > 0", strategy="shuffle")
+    assert t.current_version() == 0 and t.read().count() == 0
 
 
 def test_lookup_point_read(spark, tmp_path):

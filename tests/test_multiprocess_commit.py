@@ -118,6 +118,28 @@ def test_excl_lockfile_stale_break(tmp_path):
     b._excl_release(path, nonce)
 
 
+@pytest.mark.parametrize("pid", [0, -1, None])
+def test_excl_nonpositive_pid_lock_is_broken(tmp_path, pid):
+    """A same-host lockfile whose pid is zero, negative or missing
+    names no holder process: kill(pid <= 0, 0) would probe a process
+    group and succeed, pinning the lock forever. It is broken like a
+    dead holder's."""
+    import socket
+
+    root = str(tmp_path / "t")
+    os.makedirs(root)
+    b = LocalFSBackend(stale_after=3600, timeout=0.5)
+    path = b._lock_path(root)
+    holder = {"host": socket.gethostname(), "nonce": "z"}
+    if pid is not None:
+        holder["pid"] = pid
+    with open(path, "w") as fh:
+        fh.write(json.dumps(holder))
+    nonce = b._excl_acquire(path)
+    b._excl_release(path, nonce)
+    assert not os.path.exists(path)
+
+
 def test_excl_live_same_host_holder_never_broken(tmp_path):
     """A LIVE same-host holder is not broken even past stale_after —
     breaking needs positive evidence of death (pid gone), so a holder

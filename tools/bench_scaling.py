@@ -10,7 +10,7 @@ engine's efficiency can be judged against what the hardware can give.
 Results append to BENCH/scaling.json; BENCH/BASELINE.md is rewritten.
 
 Usage: python tools/bench_scaling.py [n_events] [N] [--keep] [--no-control]
-       [--strategy=spj|shuffle] [--submit] [--no-hist]
+       [--strategy=spj|mor] [--submit] [--no-hist]
        --submit launches every worker via spark-submit --py-files
        datax_spark.zip (the north rule's literal deployment form);
        --no-hist skips appending to BENCH/scaling.json (plumbing runs)
@@ -166,6 +166,16 @@ def main() -> None:
 
 
 
+def plan_label(h: dict) -> str:
+    """The merge plan a history row ran. Rows recorded before the
+    ``merge_strategy`` field existed ran the then-default shuffle
+    plan; plans other than spj and mor no longer exist."""
+    plan = h.get("merge_strategy") or "shuffle"
+    if plan.split("+")[0] not in ("spj", "mor"):
+        plan += " (removed)"
+    return plan
+
+
 def write_report(hist: list[dict]) -> None:
     best = max(hist, key=lambda h: h["scaling_efficiency"])
     n_small, n_big = best["sizes"]
@@ -175,7 +185,7 @@ def write_report(hist: list[dict]) -> None:
     control = best.get("cpu_control")
 
     hist_rows = "\n".join(
-        f"| {h['sizes'][0]}->{h['sizes'][1]} | {h.get('merge_strategy', 'shuffle')} | "
+        f"| {h['sizes'][0]}->{h['sizes'][1]} | {plan_label(h)} | "
         f"{h['n_events'] // 1_000_000}M | "
         f"{h['small']['sec']} | {h['big']['sec']} | "
         f"{h['speedup']}x | {h['scaling_efficiency']} | "
@@ -269,7 +279,7 @@ asserted across sizes. The same job deploys as
 `tools/submit_replay.sh job.json` — spark-submit --py-files with the
 package zipped, per the north_rule's deployment form.
 
-## Best result ({n_events:,} events, seed 42, merge plan: {best.get("merge_strategy", "shuffle")})
+## Best result ({n_events:,} events, seed 42, merge plan: {plan_label(best)})
 
 | cluster size | wall (s) | throughput (events/s) |
 |---|---|---|
@@ -292,14 +302,14 @@ efficiencies are only comparable against their own window's ceiling.
 
 ## Merge-plan scaling trade-off (measured, round 3)
 
-The engine ships two merge plans (`lake/merge.py`). The fused
-storage-partitioned plan (`spj`, the default) is the FASTEST at every
-cluster size — e.g. at 4M events it beats the staged/shuffle plans at
-BOTH local[1] and local[4]. Early runs timed it from a cold JVM,
-where one-time codegen/JIT (a constant that cannot parallelize) is a
-large fraction of its SHORTER wall time and drags the N->4N ratio to
-~0.70-0.75 even though per-phase timings show warm epochs scale
-3.8-4.0x. The harness now warms each fresh JVM with a mini replay
+The fused storage-partitioned plan (`spj`, the default and now the
+only copy-on-write plan in `lake/merge.py`) was the FASTEST at every
+cluster size — e.g. at 4M events it beat the since-removed staged and
+shuffle plans at BOTH local[1] and local[4]. Early runs timed it from
+a cold JVM, where one-time codegen/JIT (a constant that cannot
+parallelize) is a large fraction of its SHORTER wall time and drags
+the N->4N ratio to ~0.70-0.75 even though per-phase timings show warm
+epochs scale 3.8-4.0x. The harness now warms each fresh JVM with a mini replay
 through the same code paths (the same warm protocol bench.py has
 always used — steady-state is the deployment-relevant regime for a
 10^10-event stream), and the fused default then measures >= 0.8

@@ -18,7 +18,7 @@ Usage: python tools/bench_stream_ingest.py [n_events] [n_epochs]
            [cpus] [merge_strategy] [buckets] [batches_per_epoch]
 
 merge_strategy: mor (default; batches_per_epoch may be > 1) or
-spj/shuffle (batches_per_epoch forced to 1, mft = files per epoch —
+spj (batches_per_epoch forced to 1, mft = files per epoch —
 fail-loud if the epoch dirs have unequal file counts).
 Prints one JSON line with per-arm wall, events/s, batch count and a
 pure-CPU control.

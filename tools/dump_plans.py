@@ -192,9 +192,9 @@ def main() -> None:
         "(Arrow scan of exactly its co-located files — the same guarantee "
         "Spark's storage-partitioned joins exploit on bucket tables), so "
         "no plan node scales with TABLE size, only with batch size. "
-        "Measured vs the shuffle plan at 16M events / 128 buckets / "
-        "local[32]: 323k ev/s vs 278k ev/s (1.16x), byte-identical final "
-        "state (tools/scale_check.py ... spj).",
+        "Measured vs the since-removed shuffle plan at 16M events / 128 "
+        "buckets / local[32]: 323k ev/s vs 278k ev/s (1.16x), "
+        "byte-identical final state (tools/scale_check.py ... spj).",
         spj_plan,
         ["FlatMapGroupsInPandas", "__b"],
     ))

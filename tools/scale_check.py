@@ -41,7 +41,7 @@ def main() -> None:
     n_events = int(sys.argv[1]) if len(sys.argv) > 1 else 16_000_000
     n_epochs = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-    merge_strategy = sys.argv[4] if len(sys.argv) > 4 else "shuffle"
+    merge_strategy = sys.argv[4] if len(sys.argv) > 4 else "spj"
     start_buckets = int(sys.argv[5]) if len(sys.argv) > 5 else 128
     target_bucket_rows = (int(sys.argv[6]) or None) if len(sys.argv) > 6 else None
     hash_fn = sys.argv[7] if len(sys.argv) > 7 else "murmur3"
