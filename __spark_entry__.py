@@ -1047,7 +1047,8 @@ def _q_dx_encryption_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash document fingerprint via Arrow UDF (rows-only)."""
+    """FNV-1a document fingerprint via a column-wise numpy Arrow UDF
+    (rows-only)."""
     from datax_spark.functions.content import rolling_fingerprint
 
     docs = _docs(spark, sf_dir)
@@ -1571,8 +1572,10 @@ def _q_lang_id_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_token_count_bpeish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish regex token count via Arrow pandas UDF; oracle uses the
-    equivalent regexp_extract_all (texts are ASCII so \\w agrees)."""
+    """BPE-ish regex token count via an Arrow UDF (RE2
+    count_substring_regex with Python's Unicode \\w/\\s classes spelled
+    out as code point ranges); oracle uses the equivalent
+    regexp_extract_all (texts are ASCII so DuckDB's \\w agrees)."""
     from datax_spark.functions.content import token_count_bpeish
 
     docs = _docs(spark, sf_dir)

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "datax_spark",
@@ -61,6 +63,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    extra_conf = dict(extra_conf or {})
     if not under_submit:
         # Sizing heuristics are local-mode only: on a submitted cluster
         # the operator's --conf (or AQE) owns parallelism and memory.
@@ -69,10 +72,19 @@ def get_spark(
             .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
             .config("spark.default.parallelism", str(cores))
             .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+            # workers start from datax_spark.pyworker (no per-task
+            # re-read of pyspark.zip), so the package must be importable
+            # on the worker path whatever the caller's cwd and PYTHONPATH
+            .config("spark.python.daemon.module", "datax_spark.pyworker")
         )
+        key = "spark.executorEnv.PYTHONPATH"
+        parts = [p for p in extra_conf.get(key, "").split(os.pathsep) if p]
+        if _PACKAGE_PARENT not in parts:
+            parts.append(_PACKAGE_PARENT)
+        extra_conf[key] = os.pathsep.join(parts)
     elif explicit_shuffle:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

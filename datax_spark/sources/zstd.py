@@ -488,10 +488,12 @@ class _Decoder:
         if streams == 1:
             lits = table.decode_stream(area, regen)
         else:
+            per = (regen + 3) >> 2
+            if len(area) < 6 or regen < 3 * per:
+                raise ZstdError("corrupt 4-stream literals section")
             s1, s2, s3 = struct.unpack_from("<HHH", area, 0)
             body = area[6:]
             o1, o2, o3 = s1, s1 + s2, s1 + s2 + s3
-            per = (regen + 3) >> 2
             lits = bytearray()
             lits += table.decode_stream(body[:o1], per)
             lits += table.decode_stream(body[o1:o2], per)
@@ -618,8 +620,17 @@ class _Decoder:
         out += lits[lit_pos:]
 
 
+def _need(data: bytes, i: int, n: int) -> None:
+    """Raise unless ``data`` holds ``n`` more bytes at ``i``."""
+    if i + n > len(data):
+        raise ZstdError("truncated input")
+
+
 def decompress(data: bytes) -> bytes:
-    """Decode one-or-more concatenated zstd frames."""
+    """Decode one-or-more concatenated zstd frames. Input that ends
+    inside a frame (or holds no frame at all) raises ``ZstdError``."""
+    if not data:
+        raise ZstdError("truncated input: no frame")
     out = bytearray()
     i = 0
     while i < len(data):
@@ -627,12 +638,15 @@ def decompress(data: bytes) -> bytes:
             raise ZstdError("truncated input: no room for a frame magic")
         (magic,) = struct.unpack_from("<I", data, i)
         if (magic & 0xFFFFFFF0) == SKIPPABLE_LO:
+            _need(data, i, 8)
             (sz,) = struct.unpack_from("<I", data, i + 4)
+            _need(data, i + 8, sz)
             i += 8 + sz
             continue
         if magic != ZSTD_MAGIC:
             raise ZstdError(f"bad zstd magic 0x{magic:08x}")
         i += 4
+        _need(data, i, 1)
         fhd = data[i]
         i += 1
         fcs_flag = fhd >> 6
@@ -650,32 +664,40 @@ def decompress(data: bytes) -> bytes:
         fcs = None
         if fcs_flag == 0:
             if single:
+                _need(data, i, 1)
                 fcs = data[i]
                 i += 1
         elif fcs_flag == 1:
+            _need(data, i, 2)
             fcs = struct.unpack_from("<H", data, i)[0] + 256
             i += 2
         elif fcs_flag == 2:
+            _need(data, i, 4)
             (fcs,) = struct.unpack_from("<I", data, i)
             i += 4
         else:
+            _need(data, i, 8)
             (fcs,) = struct.unpack_from("<Q", data, i)
             i += 8
         dec = _Decoder()
         frame_out = bytearray()
         while True:
+            _need(data, i, 3)
             bh = data[i] | (data[i + 1] << 8) | (data[i + 2] << 16)
             i += 3
             last = bh & 1
             btype = (bh >> 1) & 3
             bsize = bh >> 3
             if btype == 0:  # raw
+                _need(data, i, bsize)
                 frame_out += data[i : i + bsize]
                 i += bsize
             elif btype == 1:  # RLE
+                _need(data, i, 1)
                 frame_out += bytes([data[i]]) * bsize
                 i += 1
             elif btype == 2:
+                _need(data, i, bsize)
                 dec._block(data[i : i + bsize], frame_out)
                 i += bsize
             else:
@@ -687,6 +709,7 @@ def decompress(data: bytes) -> bytes:
                 f"frame content size mismatch: header says {fcs}, "
                 f"decoded {len(frame_out)}")
         if checksum:
+            _need(data, i, 4)
             (want,) = struct.unpack_from("<I", data, i)
             i += 4
             got = xxhash64(bytes(frame_out)) & 0xFFFFFFFF

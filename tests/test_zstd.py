@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import random
 import shutil
+import struct
 import subprocess
 
 import pytest
@@ -74,6 +75,53 @@ def test_concatenated_and_skippable_frames():
     skippable = bytes.fromhex("502a4d1804000000deadbeef")
     got = decompress(bytes.fromhex(ah) + skippable + bytes.fromhex(bh))
     assert got == a + b
+
+
+def _block(btype: int, size: int, payload: bytes, last: bool) -> bytes:
+    bh = (size << 3) | (btype << 1) | int(last)
+    return bytes([bh & 0xFF, (bh >> 8) & 0xFF, bh >> 16]) + payload
+
+
+def _multi_block_frame() -> tuple[bytes, bytes]:
+    """(content, frame): a compressed block (lifted from the pinned
+    "text19" frame), a raw block and an RLE block, then the checksum."""
+    text, hexframe = _PINNED["text19"]
+    src = bytes.fromhex(hexframe)
+    compressed = src[9:-4]  # after magic, FHD, window byte, block header
+    content = text + b"raw!" + b"z" * 300
+    frame = (
+        bytes.fromhex("28b52ffd0468")  # checksum flag, window descriptor
+        + _block(2, len(compressed), compressed, last=False)
+        + _block(0, 4, b"raw!", last=False)
+        + _block(1, 300, b"z", last=True)
+        + struct.pack("<I", xxhash64(content) & 0xFFFFFFFF)
+    )
+    return content, frame
+
+
+def test_every_strict_prefix_raises():
+    content, frame = _multi_block_frame()
+    assert decompress(frame) == content
+    skippable = bytes.fromhex("502a4d1804000000deadbeef")
+    for data in (frame, skippable):
+        for n in range(len(data)):
+            with pytest.raises(ZstdError, match="truncated"):
+                decompress(data[:n])
+
+
+@pytest.mark.skipif(not HAVE_ZSTD_CLI, reason="no zstd CLI on host")
+def test_short_four_stream_literals_rejected():
+    data = bytes(random.Random(7).choices(b"abcdefgh", k=2000))
+    frame = bytearray(z(data, "--no-check"))
+    assert decompress(bytes(frame)) == data
+    lit = 9  # magic, FHD, window byte, block header
+    assert frame[lit] & 0x0F == 0x0A  # Huffman literals, 4 streams, 14-bit sizes
+    # Regenerated_Size 5 leaves the fourth stream -1 bytes
+    frame[lit] = (frame[lit] & 0x0F) | (5 << 4)
+    frame[lit + 1] = 0
+    frame[lit + 2] &= 0xFC
+    with pytest.raises(ZstdError, match="4-stream"):
+        decompress(bytes(frame))
 
 
 def test_dictionary_frames_refused():

@@ -22,6 +22,56 @@ from datax_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 
+PYTHON_TIME_NOTE = """\
+ROADMAP item 1 found the three content UDFs costing 2.5-5x more inside an
+epoch than outside it. Two mechanisms explain it; both are measured on a
+4-core host (CPython 3.11.7, Spark 4.1.2, pyarrow 16.1).
+
+*Per Python task.* Spark puts pyspark.zip, the py4j zip and the
+spark-core jar first on every worker's sys.path, and
+`pyspark.worker.main` calls `importlib.invalidate_caches()` at the start
+of every task (pyspark.zip `pyspark/worker_util.py:144`). Before CPython
+3.13 that makes each of the worker's 16 `zipimporter`s re-read its whole
+archive directory. Inside a worker, that one call took 0.18-0.26 s of CPU
+per task with the stock `pyspark.daemon`. A cProfile of
+`pyspark.worker.main` over 16 trivial `mapInArrow` tasks gave 256
+`zipimport._read_directory` calls (16 per task), 12.6 s of 13.2 s
+profiled worker time (95%, cProfile-inflated). A job of 64 trivial tasks
+on local[4] took 4.2-5.6 s. With `datax_spark.pyworker` as the daemon,
+which re-reads an archive only when its (mtime, size, inode) changed, the
+same call takes ~0.1 ms. The profile shows 0 reads and 1.0 s worker
+time, and the 64-task job takes 0.97-1.57 s. Every stage that runs
+Python pays this per task: the transforms, the per-bucket merge kernel
+and the read-side bucket kernels.
+
+*Per row.* The transforms plan as one ArrowEvalPython whose outputs are
+`normalize(content)` and UDFs over `normalize(content)`. The worker
+evaluates a chained UDF separately for each output. A call-logging probe
+counted 3.0 `normalize_trailing_ws` calls per Arrow batch with the three
+pandas UDFs, and 2.0 now that `sha256_hex` is the JVM `sha2` below.
+`normalize_trailing_ws` was also the costliest UDF, a lookahead regex in
+Python `re`. It and `token_count_bpeish` are now `arrow_udf`s over RE2
+kernels (`pc.replace_substring_regex`, `pc.count_substring_regex`),
+with no pandas round trip.
+
+*Before and after* (perfbench, 10 alternating parent/change pairs per
+workload, each side from a fresh copy; medians). bulk_backfill:
+replay 16,091 -> 31,665 events/s (+97%, 10/10 pairs), epoch commit p50
+6.22 -> 3.16 s, lookup p50 1,025 -> 514 ms, changes read p50 0.96 ->
+0.95 s, peak RSS 3,043 -> 2,844 MB. serve_mor: replay 2,362 -> 3,794
+events/s (+61%), epoch commit p50 2.40 -> 1.22 s, lookup p50 1,460 ->
+672 ms, changes read p50 1.94 -> 1.23 s, peak RSS 2,591 -> 2,572 MB.
+Layer split of one traced bulk_backfill epoch (seed 702, CPU control
+0.65/0.25 s before and 0.58/0.25 s after): transforms 2.04 -> 0.34 s,
+per-bucket merge 1.32 -> 0.44 s, dedup 0.69 -> 0.57 s, scan 0.39 ->
+0.37 s, epoch wall 4.85 -> 1.89 s.
+
+The plan below is the composition perfbench and bench.py use: one
+ArrowEvalPython with two Arrow UDFs, and sha2 in the JVM Project above
+it. `token_count_bpeish(normalize_trailing_ws(text))` is still the
+second evaluation of normalize; removing it, or running the transforms
+inside the per-bucket merge kernel, is left open."""
+
 
 def plan_of(df) -> str:
     buf = io.StringIO()
@@ -347,6 +397,26 @@ def main() -> None:
             f"{n_aj_exchanges}",
             aj_plan, ["__NEVER__"],
         ))
+
+    # 13. Content transforms as the benchmark and bench.py compose them
+    from datax_spark.functions.content import (
+        normalize_trailing_ws,
+        sha256_hex,
+        token_count_bpeish,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    ct = (
+        docs.withColumn("text", normalize_trailing_ws("text"))
+        .withColumn("text_sha256", sha256_hex("text"))
+        .withColumn("n_tokens", token_count_bpeish("text"))
+    )
+    sections.append((
+        "Where an epoch's Python time goes (functions.content)",
+        PYTHON_TIME_NOTE,
+        plan_of(ct),
+        ["ArrowEvalPython", "sha2(", "!BatchEvalPython"],
+    ))
 
     out = ["# Physical plans of the core operators\n",
            "Generated by `python tools/dump_plans.py` — the quoted plan\n"
