@@ -15,10 +15,11 @@ stream position file.
 
 Scale and exactly-once:
 
-* Incremental cost is O(changed keys), not O(table): ``changes`` full-
-  outer-joins two bucket-partitioned snapshots on the key hash and the
-  resulting merge touches only the affected buckets. A 10^10-row source
-  with a 0.1% daily churn syncs by moving ~10^7 rows.
+* Incremental cost is O(changed keys), not O(table): ``changes`` diffs
+  only the buckets the manifests prove touched, bucket by bucket with
+  no join, and the resulting merge touches only the affected buckets.
+  A 10^10-row source with a 0.1% daily churn syncs by moving ~10^7
+  rows.
 * The replica records the consumed source version in its snapshot
   summary (``replica_of_version``) and the apply is ONE atomic merge
   commit — crash anywhere and the replica is still a consistent
@@ -27,9 +28,10 @@ Scale and exactly-once:
   engine's epoch watermark.
 * If the source's consumed snapshot has been retired by
   ``expire_snapshots`` (the incremental history is gone), ``sync``
-  falls back to a REPAIR: a full-outer diff of replica-current vs
-  source-current (both bucket-partitioned on the same key hash, one
-  shuffle per side) applied as a merge — O(table) but convergent,
+  falls back to a REPAIR: the same per-bucket snapshot diff as
+  ``changes``, with replica-current as the FROM side and
+  source-current as the TO side (both share the key routing, so no
+  table data is shuffled), applied as a merge — O(table) but convergent,
   including deletes that happened in the lost window. Pin a source tag
   to the replication watermark to avoid ever needing it.
 """
@@ -62,35 +64,14 @@ def _apply(replica: LakeTable, updates: DataFrame, synced_to: int, mode: str) ->
 
 def _cross_table_diff(replica: LakeTable, source: LakeTable, to_version: int) -> DataFrame:
     """Repair diff: what must change on the replica so it equals the
-    source snapshot. Same plan shape as ``LakeTable.changes`` but the
-    FROM side is the replica — both sides are bucket-hashed on the same
-    keys, so each side exchanges once and AQE owns skew."""
-    from datax_spark.operators.schema_evolution import union_by_name
-
+    source snapshot — the table's own snapshot diff with the replica's
+    current snapshot as the FROM side, over every bucket. Raises
+    ValueError if the two tables route keys differently (``sync``
+    creates replicas with the source's routing)."""
     sm = source.manifest(to_version)
-    keys = sm.key_cols
-    payload = [f.name for f in sm.schema.fields if f.name not in keys]
-    old = union_by_name(replica.read(), sm.schema)
-    new = union_by_name(source.read(version=to_version), sm.schema)
-
-    def tag(df: DataFrame, side: str) -> DataFrame:
-        img = F.struct(*[F.col(c) for c in payload]).alias(f"__img_{side}")
-        h = F.xxhash64(
-            *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in payload]
-        ).alias(f"__h_{side}")
-        return df.select(*keys, img, h)
-
-    j = tag(old, "a").join(tag(new, "b"), on=keys, how="full_outer")
-    op = F.when(F.col("__h_b").isNull(), F.lit("D")).otherwise(F.lit("U"))
-    img = F.when(F.col("__h_b").isNull(), F.col("__img_a")).otherwise(F.col("__img_b"))
-    return (
-        j.filter(
-            F.col("__h_a").isNull()
-            | F.col("__h_b").isNull()
-            | (F.col("__h_a") != F.col("__h_b"))
-        )
-        .select(*keys, *[img.getField(c).alias(c) for c in payload], op.alias("__op"))
-    )
+    d = source._snapshot_diff(replica.root, replica.manifest(), sm, None)
+    op = F.when(F.col("_change_type") == "delete", F.lit("D")).otherwise(F.lit("U"))
+    return d.select(*sm.schema.names, op.alias("__op"))
 
 
 def sync(

@@ -372,9 +372,9 @@ def bucket_state_arrow(
     files, winner per key by max (resolve_order..., apply sequence),
     tombstoned keys dropped. Returns a ``pa.Table`` with exactly
     ``pa_schema``'s columns (alive winners only). Pure Arrow — runs
-    inside executor tasks with no Spark session, so both the MoR
-    merged read (:meth:`LakeTable._read_merged_buckets`) and the
-    streaming change-feed source share one resolution kernel.
+    inside executor tasks with no Spark session, so the MoR merged
+    read (:meth:`LakeTable._read_merged_buckets`) and the snapshot
+    diff (:func:`unit_changes_arrow`) share one resolution kernel.
 
     Base files share one consistent snapshot (a key appears in at most
     one of them), so they all take sequence 0 and (key, seq) stays
@@ -438,41 +438,61 @@ def bucket_state_arrow(
     return alive.select(pa_schema.names).combine_chunks()
 
 
+def _fingerprint_array(a):
+    """Injective, self-delimiting binary encoding of each value of an
+    Arrow array: validity + length + body ("1:3:abc"; null is "0:0:").
+    Strings and binaries contribute their raw bytes, lists and maps
+    the concatenated encodings of their elements, structs those of
+    their fields, any other type its string cast."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = a.type
+    if pa.types.is_list(t) or pa.types.is_map(t):
+        # offsets index the full (unsliced) child array
+        elems = pa.ListArray.from_arrays(a.offsets, _fingerprint_array(a.values))
+        body = pc.binary_join(elems, b"")
+    elif pa.types.is_struct(t):
+        body = pc.binary_join_element_wise(*map(_fingerprint_array, a.flatten()), b"")
+    elif pa.types.is_string(t) or pa.types.is_binary(t):
+        body = a.cast(pa.binary())
+    else:
+        body = a.cast(pa.string()).cast(pa.binary())
+    valid = a.is_valid()
+    body = pc.if_else(valid, body, b"")
+    size = pc.binary_length(body).cast(pa.string()).cast(pa.binary())
+    return pc.binary_join_element_wise(pc.if_else(valid, b"1", b"0"), size, body, b":")
+
+
 def _payload_fingerprint(tbl, payload: list[str]):
     """Injective row fingerprint over the payload columns of an Arrow
-    table, for change detection: each part encodes validity + length +
-    value ("1:3:abc"; null is "0:0:"), so NULL vs the literal NUL
-    string vs empty string all stay distinct and arbitrary value bytes
-    cannot collide across column boundaries. Same Arrow-kernel-only
+    table, for change detection: the :func:`_fingerprint_array`
+    encodings of the columns, joined. NULL vs the literal NUL string
+    vs empty string stay distinct and arbitrary value bytes cannot
+    collide across column boundaries. Same Arrow-kernel-only
     discipline as :func:`composite_key_array` (pandas elementwise
     concat strips NUL bytes)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     if not payload:
-        return pa.array([""] * tbl.num_rows, type=pa.string())
-    fp = None
-    for c in payload:
-        s = pc.cast(tbl.column(c), pa.string())
-        valid = pc.if_else(pc.is_null(s), pa.scalar("0"), pa.scalar("1"))
-        s = pc.fill_null(s, "")
-        part = pc.binary_join_element_wise(
-            valid, pc.cast(pc.binary_length(s), pa.string()), s, ":"
-        )
-        fp = part if fp is None else pc.binary_join_element_wise(fp, part, ";")
-    return fp
+        return pa.array([b""] * tbl.num_rows, type=pa.binary())
+    parts = [_fingerprint_array(tbl.column(c).combine_chunks()) for c in payload]
+    return pc.binary_join_element_wise(*parts, b";")
 
 
-def bucket_changes_arrow(old, new, keys: list[str], pa_schema, commit_version: int):
+def bucket_changes_arrow(old, new, keys, pa_schema, commit_version: int, include_preimage=False):
     """Arrow-side change rows between two LWW states of ONE bucket
     (both produced by :func:`bucket_state_arrow`, so each key appears
     at most once per side): one output row per key whose state
     differs, with ``_change_type`` in {insert, update, delete} and
     ``_commit_version`` stamped. Inserts/updates carry the new image;
-    deletes carry the old image — the same contract as the batch
-    :meth:`LakeTable.changes`, but computed with zero Spark exchange:
-    both snapshots co-locate a key in the same bucket, so the diff is
-    a local sort + run-compare, never a join.
+    deletes carry the old image; ``include_preimage`` emits an update
+    as the old image (``update_preimage``) directly followed by the
+    new one (``update_postimage``). This is the one snapshot diff
+    kernel (see :func:`unit_changes_arrow`): both snapshots co-locate
+    a key in the same bucket, so the diff is a local sort +
+    run-compare, never a join.
 
     Shape: concat(old tagged side=0, new tagged side=1), sort by
     (composite key, side); a key-run of length 1 is an insert or
@@ -506,28 +526,83 @@ def bucket_changes_arrow(old, new, keys: list[str], pa_schema, commit_version: i
     fp = t.column("__fp").chunk(0)
     false1 = pa.array([False])
     if n == 1:
-        same_prev = same_next = fp_eq_prev = false1
+        same_prev = same_next = changed_prev = changed_next = false1
     else:
+        # a key run has at most two rows (old, new), so a row's
+        # neighbour within its run is its counterpart on the other side
         eq = pc.equal(k.slice(1), k.slice(0, n - 1))
+        changed = pc.and_(eq, pc.not_equal(fp.slice(1), fp.slice(0, n - 1)))
         same_prev = pa.concat_arrays([false1, eq])
         same_next = pa.concat_arrays([eq, false1])
-        fp_eq_prev = pa.concat_arrays(
-            [false1, pc.equal(fp.slice(1), fp.slice(0, n - 1))]
-        )
+        changed_prev = pa.concat_arrays([false1, changed])
+        changed_next = pa.concat_arrays([changed, false1])
     is_new = pc.equal(t.column("__side"), pa.scalar(1, pa.int8()))
     is_old = pc.invert(is_new)
     delete = pc.and_(is_old, pc.invert(same_next))
     insert = pc.and_(is_new, pc.invert(same_prev))
-    update = pc.and_(pc.and_(is_new, same_prev), pc.invert(fp_eq_prev))
+    update = pc.and_(is_new, changed_prev)
     keep = pc.or_(delete, pc.or_(insert, update))
+    upd_label = pa.scalar("update")
+    if include_preimage:
+        pre = pc.and_(is_old, changed_next)
+        keep = pc.or_(keep, pre)
+        upd_label = pc.if_else(pre, "update_preimage", "update_postimage")
     label = pc.if_else(
-        delete, pa.scalar("delete"), pc.if_else(insert, pa.scalar("insert"), pa.scalar("update"))
+        delete, pa.scalar("delete"), pc.if_else(insert, pa.scalar("insert"), upd_label)
     )
     res = t.append_column("_change_type", label).filter(keep)
     cols = [res.column(nm) for nm in pa_schema.names]
     cols.append(res.column("_change_type"))
     cols.append(pa.array([commit_version] * res.num_rows, type=pa.int64()))
     return pa.Table.from_arrays(cols, schema=out_schema)
+
+
+def unit_files(root: str, m: "Manifest", g: int, unit: int) -> tuple[list[str], list[str]]:
+    """Absolute (base, delta) file lists of the buckets ``b`` of
+    snapshot ``m`` with ``b % g == unit``, in bucket order. For ``g``
+    dividing ``m.num_buckets``, ``pmod(h, n) % g == pmod(h, g)``: a key
+    lands in the same unit under every layout whose count ``g``
+    divides. Different buckets never share a key, so concatenated
+    delta lists keep every key's apply order."""
+    base: list[str] = []
+    deltas: list[str] = []
+    for b in range(unit, m.num_buckets, g):
+        base += [os.path.join(root, p) for p in m.files.get(str(b), [])]
+        deltas += [os.path.join(root, p) for p in m.delta_files.get(str(b), [])]
+    return base, deltas
+
+
+def unit_changes_arrow(old, new, keys, pa_schema, commit_version: int, include_preimage=False):
+    """The one snapshot diff step, run inside executor tasks by
+    :meth:`LakeTable.changes`, the replica repair and the
+    ``lake_changes`` stream: ``old`` and ``new`` are each (base files,
+    delta files, resolve_order) of one unit (:func:`unit_files`),
+    resolved with :func:`bucket_state_arrow` and diffed with
+    :func:`bucket_changes_arrow`."""
+    a = bucket_state_arrow(old[0], old[1], keys, old[2], pa_schema)
+    b = bucket_state_arrow(new[0], new[1], keys, new[2], pa_schema)
+    return bucket_changes_arrow(a, b, keys, pa_schema, commit_version, include_preimage)
+
+
+def manifest_lineage(load, start_version: int, end: "Manifest"):
+    """(parent, child) commit pairs from ``start_version`` (exclusive)
+    to ``end``, oldest first, walking ``end``'s PARENT CHAIN with
+    ``load(version)`` (so version gaps from staged WAP snapshots are
+    skipped; its FileNotFoundError for expired history propagates).
+    ``start_version`` -1 ends the walk at the first snapshot, paired
+    with None. Returns None when ``start_version`` is not an ancestor."""
+    pairs = []
+    c = end
+    while c.version != start_version:
+        if c.parent is None:
+            if start_version != -1:
+                return None
+            pairs.append((None, c))
+            break
+        p = load(c.parent)
+        pairs.append((p, c))
+        c = p
+    return pairs[::-1]
 
 
 def manifest_changed_buckets(parent: "Manifest | None", child: "Manifest") -> list[int]:
@@ -1258,16 +1333,14 @@ class LakeTable:
         the read half of the MoR contract (Iceberg v2 equality-delete
         apply, done storage-partitioned).
 
-        Physical shape: the ONLY thing that enters a Spark exchange is
-        the tiny bucket-id list; each task then reads its buckets'
-        base + delta files executor-side with Arrow and resolves LWW
-        locally (``mapInArrow``, zero pandas, so column types survive
-        bit-exactly). Per key the winner is the row with the highest
-        apply sequence (base = 0, deltas = manifest order); winners
-        whose ``__op`` is the tombstone 'D' are dropped. Memory per
-        task = one bucket's base+delta rows — the same ``num_buckets``
-        dial as the CoW blast radius, and reads never shuffle table
-        data regardless of table size.
+        Physical shape: :meth:`_map_units` over the bucket ids, each
+        task resolving LWW locally with :func:`bucket_state_arrow`.
+        Per key the winner is the row with the highest apply sequence
+        (base = 0, deltas = manifest order); winners whose ``__op`` is
+        the tombstone 'D' are dropped. Memory per task = one bucket's
+        base+delta rows — the same ``num_buckets`` dial as the CoW
+        blast radius, and reads never shuffle table data regardless of
+        table size.
 
         ``prefilter`` (key-column conjuncts only — the caller
         guarantees LWW safety) is handed to the Arrow parquet reads,
@@ -1276,33 +1349,33 @@ class LakeTable:
         """
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        root = self.root
         keys = list(m.key_cols)
         resolve = list(m.resolve_order)
-        schema = m.schema
-        pa_schema = to_arrow_schema(schema)
-        file_plan = {
-            b: (
-                [os.path.join(root, p) for p in m.files.get(str(b), [])],
-                [os.path.join(root, p) for p in m.delta_files[str(b)]],
-            )
-            for b in bucket_ids
-        }
+        pa_schema = to_arrow_schema(m.schema)
+        file_plan = {b: unit_files(self.root, m, m.num_buckets, b) for b in bucket_ids}
+        step = lambda b: bucket_state_arrow(  # noqa: E731
+            *file_plan[b], keys, resolve, pa_schema, prefilter
+        )
+        return self._map_units(bucket_ids, step, m.schema)
 
-        def merge_read(batches):
+    def _map_units(self, unit_ids: list[int], step, schema: T.StructType) -> DataFrame:
+        """Run ``step(unit_id) -> pa.Table`` once per unit id inside
+        executor tasks: the ONLY thing that enters a Spark exchange is
+        the tiny id list (repartitioned one id per task), then each
+        task reads its units' files itself (``mapInArrow``, zero
+        pandas, so column types survive bit-exactly)."""
+        if not unit_ids:
+            return self.spark.createDataFrame([], schema)
+
+        def run(batches):
             for batch in batches:
-                for b in batch.column(0).to_pylist():
-                    base, deltas = file_plan[b]
-                    alive = bucket_state_arrow(
-                        base, deltas, keys, resolve, pa_schema, prefilter
-                    )
-                    if alive.num_rows:
-                        yield from alive.to_batches()
+                for u in batch.column(0).to_pylist():
+                    res = step(u)
+                    if res.num_rows:
+                        yield from res.to_batches()
 
-        bl = self.spark.createDataFrame(
-            [(b,) for b in bucket_ids], "bucket int"
-        ).repartition(len(bucket_ids), F.col("bucket"))
-        return bl.mapInArrow(merge_read, schema=schema)
+        ul = self.spark.createDataFrame([(u,) for u in unit_ids], "unit int")
+        return ul.repartition(len(unit_ids), "unit").mapInArrow(run, schema=schema)
 
     def lookup(self, key_values: list[tuple], version: int | None = None) -> DataFrame:
         """Keyed point read: the current rows for an explicit set of
@@ -1369,12 +1442,11 @@ class LakeTable:
         update_preimage), and any sum/count decomposable aggregate of
         the table state is exactly the running signed sum of the feed.
 
-        Physical shape: both snapshots are bucket-partitioned on the
-        same key hash, so the full-outer join shuffles on the keys
-        once per side and AQE handles any skew; payload comparison is
-        one xxhash64 per side, never column-by-column Python. On a
-        real cluster with storage-partitioned joins the shuffles
-        disappear entirely (both sides share the bucket layout).
+        Physical shape: no join and no exchange of table data. Both
+        snapshots share one key hash, so each task diffs one bucket
+        with :func:`unit_changes_arrow` (the kernel the replica repair
+        and the ``lake_changes`` stream run too) and Spark shuffles
+        only the bucket-id list.
 
         Bucket-pruned from the manifests alone: data files are
         immutable, so a bucket whose base and delta file lists are
@@ -1382,73 +1454,43 @@ class LakeTable:
         diff reads only buckets the manifests prove touched. A small
         epoch's change feed over a 10^10-row table therefore costs the
         touched buckets, not the table (the same O(changed data)
-        property the merge has). Falls back to the full diff across a
-        rebucket boundary, where bucket ids aren't comparable.
+        property the merge has). Across a rebucket the diff reads every
+        bucket in ``gcd(n_from, n_to)`` tasks, each holding the buckets
+        that are congruent modulo the gcd on both sides: the engine's
+        adaptive rebucket doubles, so that is the old bucket count, but
+        a manual :meth:`rebucket` to a coprime count diffs the whole
+        table in one task.
         """
-        from datax_spark.operators.schema_evolution import union_by_name
-
         mf = self.manifest(from_version)
         m = self.manifest(to_version)
-        keys = m.key_cols
         buckets = self._changed_buckets_between(mf, m)
-        old = union_by_name(self.read(version=from_version, buckets=buckets), m.schema)
-        new = union_by_name(self.read(version=to_version, buckets=buckets), m.schema)
-        payload = [f.name for f in m.schema.fields if f.name not in keys]
+        diff = self._snapshot_diff(self.root, mf, m, buckets, include_preimage)
+        return diff.drop("_commit_version")
 
-        def tag(df: DataFrame, side: str) -> DataFrame:
-            img = F.struct(*[F.col(c) for c in payload]).alias(f"__img_{side}")
-            # xxhash64 SKIPS null inputs, so (null, x) and (x, null)
-            # would collide; stringify with a null sentinel instead so
-            # every field position contributes to the hash
-            h = F.xxhash64(
-                *[
-                    F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-                    for c in payload
-                ]
-            ).alias(f"__h_{side}")
-            return df.select(*keys, img, h)
+    def _snapshot_diff(self, old_root, mo, mn, buckets=None, include_preimage=False) -> DataFrame:
+        """The one snapshot diff: rows (``mn``'s schema + ``_change_type``
+        + ``_commit_version``) that turn snapshot ``mo`` of the table at
+        ``old_root`` into snapshot ``mn`` of this table, computed in
+        ``g = gcd(n_old, n_new)`` units (:func:`unit_files`), one
+        :func:`unit_changes_arrow` call each. ``buckets`` (equal layouts
+        only) restricts the diff to those units."""
+        import math
 
-        j = tag(old, "a").join(tag(new, "b"), on=keys, how="full_outer")
-        change = (
-            F.when(F.col("__h_a").isNull(), F.lit("insert"))
-            .when(F.col("__h_b").isNull(), F.lit("delete"))
-            .when(F.col("__h_a") != F.col("__h_b"), F.lit("update"))
-        )
-        if not include_preimage:
-            img = F.when(
-                F.col("__h_b").isNull(), F.col("__img_a")
-            ).otherwise(F.col("__img_b"))
-            return (
-                j.withColumn("_change_type", change)
-                .filter(F.col("_change_type").isNotNull())
-                .select(
-                    *keys,
-                    *[img.getField(c).alias(c) for c in payload],
-                    "_change_type",
-                )
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        routing = [(list(x.key_cols), x.hash_fn, list(x.bucket_cols)) for x in (mo, mn)]
+        if routing[0] != routing[1]:
+            raise ValueError(
+                "cannot diff snapshots that route keys differently: (key_cols, "
+                f"hash_fn, bucket_cols) {routing[0]} vs {routing[1]}"
             )
-        # two-row update form: explode each diff row into its
-        # (change_type, image) emissions — still one join, one pass
-        pair = lambda t, img_col: F.struct(  # noqa: E731
-            F.lit(t).alias("t"), F.col(img_col).alias("img")
-        )
-        emissions = (
-            F.when(change == "insert", F.array(pair("insert", "__img_b")))
-            .when(change == "delete", F.array(pair("delete", "__img_a")))
-            .when(
-                change == "update",
-                F.array(
-                    pair("update_preimage", "__img_a"),
-                    pair("update_postimage", "__img_b"),
-                ),
-            )
-        )
-        e = j.select(*keys, F.explode(emissions).alias("__e"))
-        return e.select(
-            *keys,
-            *[F.col("__e.img").getField(c).alias(c) for c in payload],
-            F.col("__e.t").alias("_change_type"),
-        )
+        g = math.gcd(mo.num_buckets, mn.num_buckets)
+        units = list(range(g)) if buckets is None else buckets
+        side = lambda root, m, u: (*unit_files(root, m, g, u), m.resolve_order)  # noqa: E731
+        plan = {u: (side(old_root, mo, u), side(self.root, mn, u)) for u in units}
+        args = (mn.key_cols, to_arrow_schema(mn.schema), mn.version, include_preimage)
+        schema = mn.schema.add("_change_type", "string").add("_commit_version", "long")
+        return self._map_units(units, lambda u: unit_changes_arrow(*plan[u], *args), schema)
 
     def _changed_buckets_between(
         self, mf: "Manifest", m: "Manifest"
@@ -1467,28 +1509,23 @@ class LakeTable:
         manifest or ``mf`` is not an ancestor of ``m``."""
         if mf.num_buckets != m.num_buckets:
             return None
+        try:
+            lineage = manifest_lineage(self.manifest, mf.version, m)
+        except FileNotFoundError:
+            lineage = None  # window history expired
+        if lineage is None:
+            return manifest_changed_buckets(mf, m)
         changed: set[int] = set()
-        c = m
-        while c.version != mf.version:
-            if c.parent is None:
-                c = None  # mf is not an ancestor: fall back
-                break
-            try:
-                p = self.manifest(c.parent)
-            except FileNotFoundError:
-                c = None  # window history expired: fall back
-                break
-            if c.operation not in ("compact", "rebucket"):
-                if p.num_buckets != m.num_buckets or c.num_buckets != m.num_buckets:
-                    # a data commit (incl. a rollback across a
-                    # rebucket) under a different bucket layout than
-                    # the endpoints: its bucket ids are incomparable
-                    return None
-                changed.update(manifest_changed_buckets(p, c))
-            c = p
-        if c is not None:
-            return sorted(changed)
-        return manifest_changed_buckets(mf, m)
+        for p, c in lineage:
+            if c.operation in ("compact", "rebucket"):
+                continue
+            if p.num_buckets != m.num_buckets or c.num_buckets != m.num_buckets:
+                # a data commit (incl. a rollback across a rebucket)
+                # under a different bucket layout than the endpoints:
+                # its bucket ids are incomparable
+                return None
+            changed.update(manifest_changed_buckets(p, c))
+        return sorted(changed)
 
     def files_df(self, version: int | None = None) -> DataFrame:
         """Files metadata table (the Iceberg ``files`` metadata-table

@@ -2,10 +2,11 @@
 
 ``spark.readStream.format("lake_changes").option("path", root)`` turns
 any LakeTable into a CDC stream — the Delta ``readChangeFeed`` /
-Iceberg incremental-scan surface, and the streaming sibling of the
-batch :meth:`LakeTable.changes`. Reference analog: otsstreamreader's
-tail of a table's tunnel (``OtsStreamReaderSlaveProxy.java``), with the
-manifest version as the stream position instead of a tunnel iterator.
+Iceberg incremental-scan surface, on the same per-bucket snapshot diff
+kernel as the batch :meth:`LakeTable.changes`. Reference analog:
+otsstreamreader's tail of a table's tunnel
+(``OtsStreamReaderSlaveProxy.java``), with the manifest version as the
+stream position instead of a tunnel iterator.
 
 Built on the PySpark Python DataSource API (public, Spark 4):
 
@@ -28,12 +29,13 @@ Built on the PySpark Python DataSource API (public, Spark 4):
   in parent and child cannot contain a changed key; only touched
   buckets become partitions. A small commit against a 10^10-row table
   streams O(commit), not O(table).
-* **Zero shuffle.** Each partition resolves the bucket's old and new
-  LWW state with :func:`bucket_state_arrow` (the same kernel the MoR
-  read uses) and diffs them with :func:`bucket_changes_arrow` — both
-  snapshots co-locate a key in the same bucket, so the diff is a local
-  Arrow sort + run-compare and the executor yields RecordBatches
-  directly; no Spark exchange anywhere in the source.
+* **Zero shuffle.** Each partition runs :func:`unit_changes_arrow`,
+  the one snapshot diff kernel ``LakeTable.changes`` also runs: it
+  resolves the bucket's old and new LWW state with
+  :func:`bucket_state_arrow` and diffs them with
+  :func:`bucket_changes_arrow` — a local Arrow sort + run-compare,
+  and the executor yields RecordBatches directly; no Spark exchange
+  anywhere in the source.
 
 Bounds, by design:
 
@@ -66,10 +68,11 @@ from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPart
 
 from datax_spark.lake.table import (
     Manifest,
-    bucket_changes_arrow,
-    bucket_state_arrow,
     load_manifest,
     manifest_changed_buckets,
+    manifest_lineage,
+    unit_changes_arrow,
+    unit_files,
 )
 
 CHANGE_COLS = [("_change_type", T.StringType()), ("_commit_version", T.LongType())]
@@ -124,17 +127,17 @@ def _resolve_version(root: str, v) -> int:
 
 
 class BucketChangeStep(InputPartition):
-    """One (commit, bucket) unit of change-feed work. ``bucket`` is
-    None for a heartbeat partition (commit touched no buckets — e.g. a
-    metadata-only rollback to an identical state)."""
+    """One (commit, bucket) unit of change-feed work: ``old`` and
+    ``new`` are the bucket's (base files, delta files, resolve_order)
+    in the parent and the commit. ``bucket`` is None for a heartbeat
+    partition (commit touched no buckets — e.g. a metadata-only
+    rollback to an identical state)."""
 
-    def __init__(self, commit_version, bucket, base_a, deltas_a, base_b, deltas_b):
+    def __init__(self, commit_version, bucket=None, old=None, new=None):
         self.commit_version = commit_version
         self.bucket = bucket
-        self.base_a = base_a
-        self.deltas_a = deltas_a
-        self.base_b = base_b
-        self.deltas_b = deltas_b
+        self.old = old
+        self.new = new
 
 
 class LakeChangesStreamReader(DataSourceStreamReader):
@@ -179,21 +182,14 @@ class LakeChangesStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         root = self._root
         start_v, end_v = int(start["version"]), int(end["version"])
-        lineage: list[tuple[Manifest | None, Manifest]] = []
-        m = _manifest_at(root, end_v)
-        while m.version != start_v:
-            if m.parent is None:
-                if start_v != -1:
-                    raise ValueError(
-                        f"offset v{start_v} is not an ancestor of v{end_v} "
-                        f"on {root} — table history was rewritten under the stream"
-                    )
-                lineage.append((None, m))
-                break
-            p = _manifest_at(root, m.parent)
-            lineage.append((p, m))
-            m = p
-        lineage.reverse()
+        lineage = manifest_lineage(
+            lambda v: _manifest_at(root, v), start_v, _manifest_at(root, end_v)
+        )
+        if lineage is None:
+            raise ValueError(
+                f"offset v{start_v} is not an ancestor of v{end_v} "
+                f"on {root} — table history was rewritten under the stream"
+            )
 
         parts: list[InputPartition] = []
         for p, c in lineage:
@@ -207,7 +203,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
                 # skips non-data commits the same way); the rebucket
                 # heartbeat is what lets a consumer ride through the
                 # engine's adaptive bucket growth without restart.
-                parts.append(BucketChangeStep(c.version, None, [], [], [], []))
+                parts.append(BucketChangeStep(c.version))
                 continue
             if p is not None and p.num_buckets != c.num_buckets:
                 raise ValueError(
@@ -217,40 +213,22 @@ class LakeChangesStreamReader(DataSourceStreamReader):
                     f"ids are not comparable across it; restart the stream "
                     f"with startingVersion>={c.version}"
                 )
-
-            def absolutize(man: Manifest | None, b: str) -> tuple[list[str], list[str]]:
-                if man is None:
-                    return [], []
-                return (
-                    [os.path.join(root, f) for f in man.files.get(b, [])],
-                    [os.path.join(root, f) for f in man.delta_files.get(b, [])],
-                )
-
-            step_parts = []
-            for b in manifest_changed_buckets(p, c):
-                base_a, deltas_a = absolutize(p, str(b))
-                base_b, deltas_b = absolutize(c, str(b))
-                step_parts.append(
-                    BucketChangeStep(c.version, b, base_a, deltas_a, base_b, deltas_b)
-                )
-            parts.extend(
-                step_parts
-                or [BucketChangeStep(c.version, None, [], [], [], [])]
+            n = c.num_buckets
+            side = lambda m, b: (  # noqa: E731
+                (*unit_files(root, m, n, b), self._resolve) if m else ([], [], [])
             )
-        return parts or [BucketChangeStep(end_v, None, [], [], [], [])]
+            changed = manifest_changed_buckets(p, c)
+            parts += [BucketChangeStep(c.version, b, side(p, b), side(c, b)) for b in changed]
+            if not changed:
+                parts.append(BucketChangeStep(c.version))
+        return parts or [BucketChangeStep(end_v)]
 
     # ---------- reading (executors) ----------
     def read(self, partition: BucketChangeStep):
         if partition.bucket is None:
             return
-        old = bucket_state_arrow(
-            partition.base_a, partition.deltas_a, self._keys, self._resolve, self._pa_schema
-        )
-        new = bucket_state_arrow(
-            partition.base_b, partition.deltas_b, self._keys, self._resolve, self._pa_schema
-        )
-        res = bucket_changes_arrow(
-            old, new, self._keys, self._pa_schema, partition.commit_version
+        res = unit_changes_arrow(
+            partition.old, partition.new, self._keys, self._pa_schema, partition.commit_version
         )
         if res.num_rows:
             yield from res.to_batches()

@@ -136,3 +136,55 @@ def test_batch_change_feed_correct_across_rebucket(spark, events_root, tmp_path)
     got = {tuple(r) for r in rebuilt.select("repo", "path", "lsn").collect()}
     want = {tuple(r) for r in t.read().select("repo", "path", "lsn").collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("n_from,n_to", [(4, 3), (8, 12), (8, 4)])
+def test_batch_change_feed_exact_across_manual_rebucket(spark, tmp_path, n_from, n_to):
+    """changes() across a manual rebucket to a coprime (4→3), a
+    non-doubling (8→12) or a halving (8→4) bucket count is exactly the
+    per-key diff of the two snapshots, in both feed forms, with
+    merge-on-read deltas pending on both sides of the window."""
+    from datax_spark.lake import LakeTable, merge_into
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"),
+        schema=spark.createDataFrame([], "k string, v long").schema,
+        key_cols=["k"], num_buckets=n_from,
+    )
+
+    def apply(rows, strategy="spj"):
+        df = spark.createDataFrame(rows, "k string, v long, op string")
+        merge_into(t, df, strategy=strategy).commit()
+
+    apply([(f"k{i}", i, "U") for i in range(60)])                        # v1
+    apply([(f"k{i}", 100 + i, "U") for i in range(0, 60, 7)], "mor")     # v2
+    t.rebucket(n_to)                                                     # v3
+    apply(
+        [(f"k{i}", 1000 + i, "U" if i % 5 else "D") for i in range(0, 80, 2)]
+        + [(f"k{i}", 100 + i, "U") for i in range(1, 60, 7)],            # v4: same value
+        "mor",
+    )
+    head = t.current_version()
+    assert t.manifest(2).delta_files and t.manifest(head).delta_files
+
+    old = {r.k: r.v for r in t.read(version=2).collect()}
+    new = {r.k: r.v for r in t.read().collect()}
+    want, want_pre = set(), set()
+    for k in old.keys() | new.keys():
+        if k not in new:
+            want.add((k, old[k], "delete"))
+        elif k not in old:
+            want.add((k, new[k], "insert"))
+        elif old[k] != new[k]:
+            want.add((k, new[k], "update"))
+            want_pre |= {(k, old[k], "update_preimage"), (k, new[k], "update_postimage")}
+    want_pre |= {w for w in want if w[2] != "update"}
+    assert any(w[2] == "update" for w in want) and any(w[2] == "delete" for w in want)
+
+    feed = [(r.k, r.v, r._change_type) for r in t.changes(2, head).collect()]
+    assert len(feed) == len(want) and set(feed) == want
+    pre = [
+        (r.k, r.v, r._change_type)
+        for r in t.changes(2, head, include_preimage=True).collect()
+    ]
+    assert len(pre) == len(want_pre) and set(pre) == want_pre

@@ -307,3 +307,32 @@ def test_compaction_commit_emits_no_changes(spark, tmp_path):
     ).commit()
     got = _drain(cdf, ck)
     assert _key_rows(got) == {("rc", "p", 30, "cc", "insert")}
+
+def test_binary_and_float_array_payloads_report_updates(spark, tmp_path):
+    """A non-UTF-8 binary column and an array<float> column: the batch
+    feed and the lake_changes stream both report an update to either."""
+    ddl = "k string, b binary, f array<float>"
+    t = LakeTable.create(
+        spark, str(tmp_path / "src"), spark.createDataFrame([], ddl).schema,
+        ["k"], num_buckets=4,
+    )
+
+    def apply(rows):
+        df = spark.createDataFrame(rows, ddl).withColumn("op", F.lit("U"))
+        merge_into(t, df).commit()
+
+    apply([("a", bytearray(b"\xff\x00"), [1.5]), ("b", bytearray(b"\x00"), [None, 2.0]),
+           ("c", bytearray(b"\xfe"), [0.5])])
+    apply([("a", bytearray(b"\xff\x01"), [1.5]), ("b", bytearray(b"\x00"), [2.0, None]),
+           ("c", bytearray(b"\xfe"), [0.5])])
+
+    def rows(rs):
+        return {(r.k, bytes(r.b), tuple(r.f), r._change_type) for r in rs}
+
+    want = {
+        ("a", b"\xff\x01", (1.5,), "update"),
+        ("b", b"\x00", (2.0, None), "update"),
+    }
+    assert rows(t.changes(1, 2).collect()) == want
+    got = _drain(stream_changes(spark, t.root, starting_version=2), str(tmp_path / "ck"))
+    assert rows(got) == want

@@ -247,19 +247,30 @@ _val_text = st.one_of(
 )
 _state = st.dictionaries(
     keys=st.tuples(_key_text, _key_text),
-    values=st.tuples(_val_text, st.one_of(st.none(), st.integers(-5, 5))),
+    values=st.tuples(
+        _val_text,
+        st.one_of(st.none(), st.integers(-5, 5)),
+        st.one_of(st.none(), st.binary(max_size=4)),
+        st.one_of(
+            st.none(),
+            st.lists(st.one_of(st.none(), st.integers(-2, 2)), max_size=3),
+        ),
+    ),
     max_size=12,
 )
 
 
-@given(old=_state, new=_state)
+@given(old=_state, new=_state, include_preimage=st.booleans())
 @settings(max_examples=200, deadline=None)
-def test_bucket_changes_arrow_matches_reference(old, new):
+def test_bucket_changes_arrow_matches_reference(old, new, include_preimage):
     """bucket_changes_arrow == the obvious per-key dict diff, for
     arbitrary key/payload bytes (incl. NUL, which pandas string concat
-    silently strips — the kernel must not), nulls, and empty sides.
-    Covers composite_key_array injectivity and the null-vs-literal
-    fingerprint encoding in one property."""
+    silently strips — the kernel must not), non-UTF-8 binary values,
+    lists with null elements, nulls, and empty sides; with
+    ``include_preimage`` an update is the old image as
+    update_preimage directly followed by the new image as
+    update_postimage. Covers composite_key_array injectivity and the
+    null-vs-literal fingerprint encoding in one property."""
     import pyarrow as pa
 
     from datax_spark.lake.table import bucket_changes_arrow
@@ -270,35 +281,40 @@ def test_bucket_changes_arrow_matches_reference(old, new):
             pa.field("k2", pa.string()),
             pa.field("v", pa.string()),
             pa.field("n", pa.int64()),
+            pa.field("b", pa.binary()),
+            pa.field("l", pa.list_(pa.int64())),
         ]
     )
+    payload = schema.names[2:]
 
     def tbl(state):
         ks = sorted(state)
-        return pa.table(
-            {
-                "k1": [k[0] for k in ks],
-                "k2": [k[1] for k in ks],
-                "v": [state[k][0] for k in ks],
-                "n": [state[k][1] for k in ks],
-            },
-            schema=schema,
-        )
+        cols = {"k1": [k[0] for k in ks], "k2": [k[1] for k in ks]}
+        for i, c in enumerate(payload):
+            cols[c] = [state[k][i] for k in ks]
+        return pa.table(cols, schema=schema)
 
     expected = {}
     for k in old.keys() - new.keys():
-        expected[k] = ("delete", *old[k])
+        expected[k] = [("delete", *old[k])]
     for k in new.keys() - old.keys():
-        expected[k] = ("insert", *new[k])
+        expected[k] = [("insert", *new[k])]
     for k in old.keys() & new.keys():
         if old[k] != new[k]:
-            expected[k] = ("update", *new[k])
+            expected[k] = (
+                [("update_preimage", *old[k]), ("update_postimage", *new[k])]
+                if include_preimage
+                else [("update", *new[k])]
+            )
 
-    res = bucket_changes_arrow(tbl(old), tbl(new), ["k1", "k2"], schema, 9)
-    got = {
-        (r["k1"], r["k2"]): (r["_change_type"], r["v"], r["n"])
-        for r in res.to_pylist()
-    }
+    res = bucket_changes_arrow(
+        tbl(old), tbl(new), ["k1", "k2"], schema, 9, include_preimage
+    )
+    got = {}
+    for r in res.to_pylist():
+        got.setdefault((r["k1"], r["k2"]), []).append(
+            (r["_change_type"], *[r[c] for c in payload])
+        )
     assert got == expected
     assert set(res.column("_commit_version").to_pylist()) <= {9}
 

@@ -91,11 +91,16 @@ def test_repair_after_source_history_expired(spark, tmp_path):
     happened inside the lost window."""
     src_root, rep_root = str(tmp_path / "src"), str(tmp_path / "rep")
     src = LakeTable.create(spark, src_root, SCHEMA, ["repo", "path"], num_buckets=4)
-    merge_into(src, _upserts(spark, [("r1", "a", 1, "x"), ("r2", "b", 2, "y")])).commit()
+    merge_into(src, _upserts(spark, [
+        ("r1", "a", 1, "x"), ("r2", "b", 2, "y"), ("r4", "n", 5, None), ("r5", "z", 6, "\x00"),
+    ])).commit()
     sync(src, rep_root)
 
+    # the lost window also swaps NULL and the literal "\x00" between two
+    # keys (same lsn), which the repair diff must carry as updates
     upd = spark.createDataFrame(
-        [("r2", "b", "D", 3, None), ("r3", "c", "U", 4, "z")],
+        [("r2", "b", "D", 3, None), ("r3", "c", "U", 4, "z"),
+         ("r4", "n", "U", 5, "\x00"), ("r5", "z", "U", 6, None)],
         "repo string, path string, op string, lsn long, content string",
     )
     merge_into(src, upd).commit()
@@ -107,6 +112,7 @@ def test_repair_after_source_history_expired(spark, tmp_path):
     assert r.mode == "repair"
     assert _state(rep) == _state(src)
     assert ("r2", "b") not in _state(rep)  # the delete in the lost window landed
+    assert _state(rep)[("r4", "n")] == (5, "\x00") and _state(rep)[("r5", "z")] == (6, None)
 
     # repair is idempotent too
     assert sync(src, rep_root).mode == "noop"

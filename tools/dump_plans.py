@@ -181,8 +181,8 @@ def main() -> None:
         ["TakeOrderedAndProject"],
     ))
 
-    # 6. Change data feed: one full-outer join on the keys, no
-    # nested-loop/cartesian anywhere
+    # 6. Change data feed: one mapInArrow over the touched bucket ids;
+    # no join and no Spark scan of table data
     from datax_spark.lake.merge import merge_into
     from datax_spark.lake.table import LakeTable
 
@@ -199,13 +199,14 @@ def main() -> None:
     cdf = ct.changes(1, 2)
     sections.append((
         "Change data feed (lake.table.LakeTable.changes)",
-        "Snapshot diff = ONE join on the key columns (full-outer via the "
-        "sort-merge path; AQE may degenerate tiny sides); payload equality "
-        "is a single xxhash64 per side computed before the join, so the "
-        "exchange carries (keys, img struct, hash) and no nested-loop or "
-        "cartesian product can appear at any size.",
+        "Snapshot diff = ONE MapInArrow over the bucket ids the manifests "
+        "prove touched: the only exchange carries that id list, and each "
+        "task resolves its bucket's LWW state on both snapshots with Arrow "
+        "and diffs them locally (bucket_changes_arrow). No join, no "
+        "cartesian product and no Spark parquet scan of table data can "
+        "appear at any size.",
         plan_of(cdf),
-        ["FullOuter", "xxhash64", "!CartesianProduct", "!BroadcastNestedLoopJoin"],
+        ["MapInArrow", "!Join", "!CartesianProduct", "!Scan parquet"],
     ))
 
     # 7. Storage-partitioned merge: exactly ONE Exchange (the epoch
