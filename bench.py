@@ -24,6 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.cpu_control import cpu_control  # noqa: E402
+
 
 def _sf_from_dir(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -75,16 +77,6 @@ def main() -> None:
     # flags any window whose trial spread exceeds 1.5x — so a
     # noise-poisoned artifact is self-evidently noise, not regression.
     trials: dict[str, list[float]] = {}
-
-    def cpu_control() -> float:
-        """Pure-CPU, codegen-only, shuffle-free job: measures what the
-        box gives RIGHT NOW, independent of any engine design choice
-        (same workload as tools/replay_once.py control mode)."""
-        t0 = time.monotonic()
-        spark.range(0, 250_000_000 * cpus, 1, cpus * 4).selectExpr(
-            "sum(cast(xxhash64(id) as double))"
-        ).collect()
-        return round(time.monotonic() - t0, 3)
 
     # best of 2: the first execution of each plan pays one-time JIT /
     # codegen / Arrow-worker startup that amortizes to nothing over a
@@ -162,7 +154,7 @@ def main() -> None:
         # number; the interleaved controls timestamp what the box could
         # give in the same window, so a slow artifact is attributable.
         replay_trials: list[float] = []
-        controls: list[float] = [cpu_control()]
+        controls: list[float] = [cpu_control(spark, 250_000_000 * cpus, cpus * 4)]
         rows_after = 0
         for trial in range(3):
             eng = ReplayEngine(
@@ -175,7 +167,7 @@ def main() -> None:
             t0 = time.monotonic()
             results = eng.run()
             replay_trials.append(round(time.monotonic() - t0, 3))
-            controls.append(cpu_control())
+            controls.append(cpu_control(spark, 250_000_000 * cpus, cpus * 4))
             rows_after = results[-1].rows_after if results else 0
         trials["cdc_replay"] = replay_trials
         replay_sec = min(replay_trials)

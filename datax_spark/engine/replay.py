@@ -32,6 +32,11 @@ and converges to the identical state (orphan data files are ignored,
 ``vacuum`` reclaims them). A crash after step 6 skips the epoch on
 replay via the watermark. ``failpoints`` injects crashes between
 phases for tests.
+
+Steps 3-7 (plus compaction and view refresh) are one core,
+``ReplayEngine._apply_events``: ``apply_epoch`` runs it after its
+gates, and the streaming sink (``streaming/replay_stream.py``) runs it
+per micro-batch with the batch id as the epoch.
 """
 
 from __future__ import annotations
@@ -98,6 +103,13 @@ class EpochAuditError(RuntimeError):
     staged snapshot was dropped and the table is unchanged."""
 
 
+class UnorderedFeedError(RuntimeError):
+    """A micro-batch carries events older than an already-applied
+    delete: a CoW merge would resurrect the deleted key (silently).
+    Deliver event-order-contiguous batches or use merge_strategy='mor'
+    (tombstone retention resolves any order at read time)."""
+
+
 def audit_gated_commit(
     table: "LakeTable",
     pending,
@@ -109,9 +121,9 @@ def audit_gated_commit(
     """Phase-2 commit of an epoch/batch, optionally write-audit-publish
     gated: stage the snapshot, run the audit on the candidate state
     while readers still see the pre-epoch table, publish on True, drop
-    and raise EpochAuditError on False. Shared by the batch replay
-    driver and the streaming foreachBatch sink. Returns the published
-    table version."""
+    and raise EpochAuditError on False. Shared by every commit path of
+    the engine: epochs and stream batches, bootstrap and chunks.
+    Returns the published table version."""
     if audit_fn is None:
         return pending.commit(summary=summary)
     wid = f"epoch-{epoch}"
@@ -362,8 +374,8 @@ def maybe_rebucket(table: "LakeTable", cfg: "ReplayConfig") -> int | None:
     per-bucket row target, rebucket to the smallest power-of-two
     multiple of the current count that gets back under target (capped
     at ``cfg.max_buckets``). Returns the new bucket count, or None if
-    no rebucket was needed. Shared by the batch epoch driver and the
-    streaming foreachBatch sink.
+    no rebucket was needed. Runs after every applied epoch or stream
+    batch, and after a bootstrap.
 
     Table size comes from the just-committed manifest's row counts —
     manifest metadata, no data read. For a MoR table the pending delta
@@ -551,16 +563,27 @@ class ReplayEngine:
     def quarantine_root(self) -> str:
         return os.path.join(os.path.dirname(self.metrics_root.rstrip("/")), "quarantine")
 
-    def _ensure_table(self, first_epoch_df: DataFrame) -> LakeTable:
+    def _ensure_table(
+        self, first_epoch_df: DataFrame, unordered: bool = False
+    ) -> LakeTable:
+        """Load the table, or create it from the first events' schema;
+        a MoR table fed ``unordered`` batches resolves reads by event
+        order (see ``_apply_events``)."""
         if LakeTable.exists(self.table_root):
             return self.table()
-        schema = first_epoch_df.drop(self.config.op_col).schema
+        cfg = self.config
+        schema = first_epoch_df.drop(cfg.op_col).schema
         return LakeTable.create(
             self.spark,
             self.table_root,
             schema=schema,
             key_cols=list(self.config.keys),
             num_buckets=self.config.num_buckets,
+            resolve_order=(
+                list(cfg.order_cols)
+                if unordered and cfg.merge_strategy == "mor"
+                else None
+            ),
             stats_cols=list(self.config.stats_cols),
             bloom_cols=list(self.config.bloom_cols),
             shard_buckets=self.config.shard_manifest_buckets,
@@ -636,7 +659,7 @@ class ReplayEngine:
         ev = snapshot_df.withColumn(cfg.op_col, F.lit("I"))
         table = self._ensure_table(ev)
         ph: dict[str, float] = {}
-        dirty_pred, obs, ev_obs, ev_clean = self._dirty_split(ev, "dirty_bootstrap")
+        gate, ev_clean = self._dirty_split(ev, "dirty_bootstrap")
         deduped = self._dedup(ev_clean)
         tp = time.monotonic()
         pending = self._merge(
@@ -644,9 +667,7 @@ class ReplayEngine:
             aligned=self._aligned(table.manifest()),
         )
         ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
-        n_dirty, _ = self._resolve_dirty(
-            "bootstrap", obs, ev, ev_obs, dirty_pred, ph
-        )
+        n_dirty = self._resolve_dirty("bootstrap", gate, ph)["n_dirty"]
         if "after_write" in failpoints:
             raise ReplayCrash("after_write")
 
@@ -786,7 +807,7 @@ class ReplayEngine:
         slot = -(2 + len(applied))  # metrics slot; -1 = full snapshot
         label = f"chunk-{chunk_id}"
         ph: dict[str, float] = {}
-        dirty_pred, obs, ev_obs, ev_clean = self._dirty_split(ev, f"dirty_{label}")
+        gate, ev_clean = self._dirty_split(ev, f"dirty_{label}")
 
         # --- DBLog window suppression: drop chunk keys touched by any
         # APPLIED event with lsn > low watermark. Epoch pruning is
@@ -833,9 +854,8 @@ class ReplayEngine:
             table, deduped, "spj", order_cols=list(cfg.order_cols)
         )
         ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
-        n_dirty, n_total = self._resolve_dirty(
-            label, obs, ev, ev_obs, dirty_pred, ph
-        )
+        got = self._resolve_dirty(label, gate, ph)
+        n_dirty, n_total = got["n_dirty"], got["n_total"]
         if "after_dedup" in failpoints:
             raise ReplayCrash("after_dedup")
         if "after_write" in failpoints:
@@ -894,32 +914,50 @@ class ReplayEngine:
                 if wait > 0:
                     r.throttle_ms = round(wait * 1000.0, 1)
                     time.sleep(wait)
-        # heal views a previous run crashed between an epoch commit
-        # and its refresh (no-op when every epoch above refreshed)
+        self._heal_views()
+        return results
+
+    def _heal_views(self) -> None:
+        """Heal views skipped by the refresh cadence or stranded by a
+        crash between a commit and its refresh (end of ``run()`` and
+        of a stream drain)."""
+        cfg = self.config
         if (cfg.materialized_views or cfg.join_views) and LakeTable.exists(
             self.table_root
         ):
             self._refresh_views(self.table())
-        return results
 
-    def _dirty_split(self, ev: DataFrame, name: str):
+    def _dirty_split(self, ev: DataFrame, name: str, order_guard: bool = False):
         """Split events on the dirty predicate: NULL in any key/order
         column means the event cannot be keyed or ordered. The
         dirty/total counts ride the merge job via an Observation (no
-        extra scan); ``_resolve_dirty`` reads them afterwards. Returns
-        ``(dirty_pred, obs, ev_obs, ev_clean)``."""
+        extra scan); ``_resolve_dirty`` reads them afterwards. With
+        ``order_guard`` the same Observation also takes the clean
+        rows' min order key (``min_ord``) and max DELETE order key
+        (``max_delete_ord``) for ``_check_feed_order``. Returns
+        ``(gate, ev_clean)``; ``gate`` is opaque, for
+        ``_resolve_dirty``."""
         cfg = self.config
         dirty_pred = None
         for c in (*cfg.keys, *cfg.order_cols):
             p = F.col(c).isNull()
             dirty_pred = p if dirty_pred is None else (dirty_pred | p)
-        obs = Observation(name)
-        ev_obs = ev.observe(
-            obs,
+        aggs = [
             F.sum(dirty_pred.cast("long")).alias("n_dirty"),
             F.count(F.lit(1)).alias("n_total"),
-        )
-        return dirty_pred, obs, ev_obs, ev_obs.filter(~dirty_pred)
+        ]
+        if order_guard:
+            clean_ord = F.when(
+                ~dirty_pred, F.struct(*[F.col(c) for c in cfg.order_cols])
+            )
+            is_del = F.col(cfg.op_col) == cfg.delete_op
+            aggs += [
+                F.min(clean_ord).alias("min_ord"),
+                F.max(F.when(is_del, clean_ord)).alias("max_delete_ord"),
+            ]
+        obs = Observation(name)
+        ev_obs = ev.observe(obs, *aggs)
+        return (ev, dirty_pred, aggs, obs, ev_obs), ev_obs.filter(~dirty_pred)
 
     def _dedup(self, ev_clean: DataFrame) -> DataFrame:
         """LWW dedup with the per-key lineage counters riding the same
@@ -968,8 +1006,15 @@ class ReplayEngine:
         conf pins must be live when merge_into's action runs, hence the
         context."""
         cfg = self.config
+        # pinned on the events' own session: Structured Streaming
+        # clones the session per query, and a micro-batch's plans
+        # compile against the clone's SQLConf — confs set on the outer
+        # session would silently not apply (measured: the agg exchange
+        # coalesced to 1 partition and the executor-side assert fired)
         pins = (
-            aligned_shuffle_confs(self.spark, table.manifest().num_buckets)
+            aligned_shuffle_confs(
+                deduped.sparkSession, table.manifest().num_buckets
+            )
             if aligned
             else nullcontext()
         )
@@ -985,35 +1030,35 @@ class ReplayEngine:
                 aligned=aligned,
             )
 
-    def _resolve_dirty(
-        self, epoch, obs, ev, ev_obs, dirty_pred, ph
-    ) -> tuple[int, int]:
+    def _resolve_dirty(self, epoch, gate, ph) -> dict:
         """Read the dirty/total counts off the epoch job's Observation,
         quarantine dirty rows, and enforce the error limits
         (ErrorRecordChecker.java:18-82 parity: record limit, when
         configured, is the only check). Raises DirtyDataError before
         the COMMIT point — nothing the epoch wrote is visible yet.
-        Returns ``(n_dirty, n_total)``."""
+        Returns the observed metrics, ``n_dirty`` and ``n_total`` as
+        ints."""
         cfg = self.config
+        ev, dirty_pred, aggs, obs, ev_obs = gate
         try:
-            got = obs.get or {}
-            n_dirty = int(got.get("n_dirty") or 0)
-            n_total = int(got.get("n_total") or 0)
+            got = dict(obs.get or {})
         except Exception:
             # degenerate plans (e.g. every row dirty) can leave the
-            # observation row unreadable; fall back to a direct count.
-            # Logged + timed so the two extra full scans are
-            # attributable in the per-epoch phase breakdown.
+            # observation row unreadable; fall back to one direct
+            # aggregation of the same metrics. Logged + timed so the
+            # extra full scan is attributable in the per-epoch phase
+            # breakdown.
             import logging
 
             logging.getLogger(__name__).warning(
                 "epoch %s: dirty-count observation unreadable; "
-                "falling back to two extra event scans", epoch,
+                "falling back to an extra event scan", epoch,
             )
             tf = time.monotonic()
-            n_dirty = ev.filter(dirty_pred).count()
-            n_total = ev.count()
+            got = ev.agg(*aggs).first().asDict()
             ph["dirty_fallback_scans"] = (time.monotonic() - tf) * 1000
+        n_dirty = got["n_dirty"] = int(got.get("n_dirty") or 0)
+        n_total = got["n_total"] = int(got.get("n_total") or 0)
         if n_dirty and cfg.quarantine:
             ev_obs.filter(dirty_pred).write.mode("overwrite").parquet(
                 os.path.join(self.quarantine_root(), f"epoch={epoch}")
@@ -1038,35 +1083,51 @@ class ReplayEngine:
                 f"exceeds percentage limit {cfg.dirty_pct_limit} "
                 f"(quarantined under {self.quarantine_root()})"
             )
-        return n_dirty, n_total
-
-    def _commit_epoch(
-        self, table: LakeTable, pending, epoch: int, n_dirty: int,
-        failpoints: Sequence[str] = (),
-    ) -> int:
-        return audit_gated_commit(
-            table, pending, epoch,
-            {"last_epoch": epoch, "n_dirty": n_dirty},
-            self.config.audit_fn, failpoints,
-        )
+        return got
 
     def apply_epoch(self, epoch: int, failpoints: Sequence[str] = ()) -> EpochResult:
-        cfg = self.config
+        """Apply ``events_root/epoch=N``: the exactly-once and
+        contiguity gates, then the epoch core (``_apply_events``)."""
         t0 = time.monotonic()
         ev = self.spark.read.parquet(os.path.join(self.events_root, f"epoch={epoch}"))
         table = self._ensure_table(ev)
 
         m0 = table.manifest()
         last = m0.last_epoch
-        wlsn = m0.summary.get("bootstrap_lsn")
         if epoch <= last:
             return EpochResult(epoch=epoch, skipped=True)  # exactly-once gate
-        if epoch != last + 1 and not (last == -1 and wlsn is not None):
+        if epoch != last + 1 and not (
+            last == -1 and m0.summary.get("bootstrap_lsn") is not None
+        ):
             # contiguity gate — EXCEPT the first epoch after a snapshot
             # bootstrap, which may start anywhere in the retained log
             # (the epochs before it expired; their effects are the
             # snapshot). From there on, contiguous as usual.
             raise ValueError(f"out-of-order epoch {epoch}; committed watermark is {last}")
+        return self._apply_events(table, m0, ev, epoch, failpoints=failpoints, t0=t0)
+
+    def _apply_events(
+        self,
+        table: LakeTable,
+        m0,
+        ev: DataFrame,
+        slot: int,
+        unordered: bool = False,
+        failpoints: Sequence[str] = (),
+        t0: float | None = None,
+    ) -> EpochResult:
+        """The epoch core of ``apply_epoch`` and the streaming sink:
+        apply ``ev`` to ``table`` (at manifest ``m0``) and commit it as
+        ``last_epoch = slot``, past the caller's exactly-once gate.
+
+        ``unordered`` says the batch order is not proven (a stream's
+        micro-batches come in file-discovery order). It turns on the
+        cross-batch guards: the CoW merge is order-guarded against the
+        current rows, MoR tables resolve reads by event order (set at
+        ``_ensure_table``), and ``_check_feed_order`` rejects a batch
+        reaching behind a delete. In-order epochs run the plain plan."""
+        cfg = self.config
+        t0 = time.monotonic() if t0 is None else t0
 
         # --- snapshot-handoff gate: a bootstrapped table already
         # reflects every event with lsn <= bootstrap_lsn (the snapshot
@@ -1080,6 +1141,7 @@ class ReplayEngine:
         # un-expired range, OTSStreamReaderChecker.java:39-58).
         # NULL-lsn rows stay: they are dirty data and must still hit
         # the quarantine accounting below.
+        wlsn = m0.summary.get("bootstrap_lsn")
         if wlsn is not None:
             ev = ev.filter(
                 (F.col(cfg.lsn_col) > F.lit(int(wlsn)))
@@ -1087,8 +1149,8 @@ class ReplayEngine:
             )
 
         ph: dict[str, float] = {}
-        dirty_pred, obs, ev_obs, ev_clean = self._dirty_split(
-            ev, f"dirty_epoch_{epoch}"
+        gate, ev_clean = self._dirty_split(
+            ev, f"dirty_epoch_{slot}", order_guard=unordered
         )
         # ONE Spark job: scan -> LWW dedup + per-key stats (one
         # shuffle, map-side combined) -> Arrow transforms -> per-bucket
@@ -1096,35 +1158,49 @@ class ReplayEngine:
         # collect. The salted dedup rides it too: its stats compose
         # exactly across the two stages, and stage 2's exchange is on
         # the bare keys, so the aligned plan applies unchanged. The
-        # dirty gate runs after the job but BEFORE the commit point: a
-        # failed epoch leaves only invisible txn orphans (vacuum
-        # reclaims them).
+        # dirty gate and the feed-order guard run after the job but
+        # BEFORE the commit point: a failed epoch leaves only invisible
+        # txn orphans (vacuum reclaims them).
         deduped = self._dedup(ev_clean)
         tp = time.monotonic()
         pending = self._merge(
-            table, deduped, cfg.merge_strategy, aligned=self._aligned(m0)
+            table, deduped, cfg.merge_strategy,
+            # the MoR plan replaces the write-time guard with the
+            # table's event-order READ resolution: stale batches land
+            # as deltas that never win
+            order_cols=(
+                list(cfg.order_cols)
+                if unordered and cfg.merge_strategy != "mor"
+                else None
+            ),
+            aligned=self._aligned(m0),
         )
         ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
-        n_dirty, _ = self._resolve_dirty(epoch, obs, ev, ev_obs, dirty_pred, ph)
+        got = self._resolve_dirty(slot, gate, ph)
+        summary = {"last_epoch": slot, "n_dirty": got["n_dirty"]}
+        if unordered:
+            self._check_feed_order(slot, m0, got, summary)
         if "after_dedup" in failpoints:
             raise ReplayCrash("after_dedup")
         if "after_write" in failpoints:
             raise ReplayCrash("after_write")
 
         apply_ms = (time.monotonic() - t0) * 1000.0
-        rows = _lineage_rows(epoch, pending, apply_ms)
+        rows = _lineage_rows(slot, pending, apply_ms)
         tp = time.monotonic()
-        write_epoch_metrics(self.metrics_root, epoch, rows)
+        write_epoch_metrics(self.metrics_root, slot, rows)
         ph["metrics"] = (time.monotonic() - tp) * 1000
         tp = time.monotonic()
-        version = self._commit_epoch(table, pending, epoch, n_dirty, failpoints)
+        version = audit_gated_commit(
+            table, pending, slot, summary, cfg.audit_fn, failpoints
+        )
         ph["commit"] = (time.monotonic() - tp) * 1000
         if "after_commit" in failpoints:
             raise ReplayCrash("after_commit")
         if (
             cfg.merge_strategy == "mor"
             and cfg.compact_every
-            and (epoch + 1) % cfg.compact_every == 0
+            and (slot + 1) % cfg.compact_every == 0
         ):
             tp = time.monotonic()
             version = table.compact()
@@ -1133,9 +1209,9 @@ class ReplayEngine:
         rebucketed = maybe_rebucket(table, cfg)
         if rebucketed:
             ph["rebucket"] = (time.monotonic() - tp) * 1000
-        self._refresh_views(table, ph, epoch=epoch)
+        self._refresh_views(table, ph, epoch=slot)
         return EpochResult(
-            epoch=epoch,
+            epoch=slot,
             skipped=False,
             n_events=sum(r["n_events"] for r in rows),
             n_keys=sum(r["n_keys_after_dedup"] for r in rows),
@@ -1145,7 +1221,37 @@ class ReplayEngine:
             apply_ms=apply_ms,
             version=version,
             phase_ms={k: round(v, 1) for k, v in ph.items()},
-            n_dirty=n_dirty,
+            n_dirty=got["n_dirty"],
             bytes_in=sum(r["bytes_in"] for r in rows),
             rebucketed_to=rebucketed,
         )
+
+    def _check_feed_order(self, slot: int, m0, got: dict, summary: dict) -> None:
+        """The delete-order guard of an unordered feed, on the clean
+        rows' order keys the epoch job observed. An event OLDER than a
+        delete that no longer shadows it — applied to a CoW table
+        (``max_delete_ord``, kept in the summary here) or folded out
+        of a MoR table by a compact/rebucket (``max_folded_delete_ord``,
+        ``LakeTable._folded_delete_ord``) — would silently resurrect
+        the key, so the batch raises UnorderedFeedError instead."""
+        mor = self.config.merge_strategy == "mor"
+        prev = m0.summary.get("max_folded_delete_ord" if mor else "max_delete_ord")
+        lo = got.get("min_ord")
+        if prev is not None and lo is not None and list(lo) < list(prev):
+            what, fix = (
+                ("a delete whose tombstone compaction already FOLDED",
+                 "Widen the compaction cadence (retention window) past the "
+                 "feed's max disorder, or deliver ordered batches")
+                if mor else
+                ("an already-applied delete",
+                 "Feed event-order-contiguous batches or use "
+                 "merge_strategy='mor'")
+            )
+            raise UnorderedFeedError(
+                f"batch {slot} carries an event at order {list(lo)}, older "
+                f"than {what} at {list(prev)}: the deleted key could "
+                f"silently resurrect. {fix}."
+            )
+        seen = [list(o) for o in (got.get("max_delete_ord"), prev) if o is not None]
+        if seen and not mor:
+            summary["max_delete_ord"] = max(seen)

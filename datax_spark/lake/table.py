@@ -1704,8 +1704,8 @@ class LakeTable:
         recorded fold. Folding a tombstone ends its retention window:
         an event OLDER than the folded delete arriving later could
         silently resurrect the key, so the fold boundary persists in
-        the summary (``max_folded_delete_ord``) for feed-order guards
-        (``StreamReplay.delete_order_check``) to check against."""
+        the summary (``max_folded_delete_ord``) for the feed-order
+        guard (``ReplayEngine._check_feed_order``) to check against."""
         prev = m.summary.get("max_folded_delete_ord")
         prev = list(prev) if prev is not None else None
         if not m.resolve_order:

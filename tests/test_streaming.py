@@ -7,6 +7,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
+from datax_spark.engine.metrics import read_metrics
 from datax_spark.engine.replay import ReplayConfig
 from datax_spark.fixtures.changelog import ChangelogSpec, events_df, write_events
 from datax_spark.oracle.apply import sequential_apply
@@ -60,6 +61,11 @@ def test_stream_replay_single_drain(spark, tmp_path):
     assert sorted(m.file_stats) == sorted(
         p for fs in m.files.values() for p in fs
     )
+    # per-batch lineage under <checkpoint_root>/metrics, one slot per
+    # applied batch, accounting for every event
+    lin = read_metrics(spark, str(tmp_path / "ckpt" / "metrics")).toPandas()
+    assert sorted(lin["epoch"].unique()) == sorted(sr.applied_batches)
+    assert int(lin["n_events"].sum()) == spec.n_events
 
 
 def test_stream_multi_batch_upserts_any_order(spark, tmp_path):
@@ -436,9 +442,12 @@ def _one_file(spark, root, rows):
 
 def test_stream_unordered_delete_feed_fails_loud(spark, tmp_path):
     """CoW stream, delete applied in batch 0, an OLDER update for the
-    same key arriving in batch 1: the merge would silently resurrect
-    the deleted key, so the sink must raise UnorderedFeedError with
-    the table unchanged (module docstring ordering note)."""
+    same key arriving in a later batch: the merge would silently
+    resurrect the deleted key, so the sink must raise
+    UnorderedFeedError with the table unchanged (module docstring
+    ordering note). A NULL-order (dirty) row neither trips the guard
+    nor hides a real trip: its order keys are observed over clean rows
+    only."""
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
@@ -449,16 +458,28 @@ def test_stream_unordered_delete_feed_fails_loud(spark, tmp_path):
         ("r", "a.py", "U", "c01", 1, "py", "v1"),
         ("r", "a.py", "D", "c05", 5, "py", None),
     ])
-    _one_file(spark, ev, [("r", "a.py", "U", "c03", 3, "py", "v3")])
 
     sr = StreamReplay(
         spark, ev, str(tmp_path / "table"), str(tmp_path / "ckpt"),
         config=CFG, max_files_per_trigger=1,
     )
+    sr.run_available_now()
+    _one_file(spark, ev, [
+        ("r", "a.py", "U", None, 2, "py", "stale"),  # dirty, older than the delete
+        ("r", "b.py", "U", "c07", 7, "py", "w1"),
+    ])
+    sr.run_available_now()
+    assert sr.applied_batches == [0, 1]
+    v1 = sr.table().current_version()
+    _one_file(spark, ev, [
+        ("r", "c.py", "U", None, 8, "py", "x1"),  # dirty
+        ("r", "a.py", "U", "c03", 3, "py", "v3"),
+    ])
     with pytest.raises(StreamingQueryException, match="resurrect"):
         sr.run_available_now()
-    # batch 0 committed (key deleted), batch 1 aborted before merging
-    assert sr.table().read().count() == 0
+    # batches 0-1 committed (a.py deleted), batch 2 aborted before commit
+    assert sr.table().current_version() == v1
+    assert {r["path"] for r in sr.table().read().collect()} == {"b.py"}
     assert sr.table().manifest().summary["max_delete_ord"] == ["c05", 5]
 
 
@@ -544,6 +565,7 @@ def test_stream_mor_fold_boundary_guard(spark, tmp_path):
     )
     with pytest.raises(StreamingQueryException, match="FOLDED"):
         sr2.run_available_now()
+    assert sr2.table().current_version() == v  # aborted before commit
     got = {(r["path"], r["lsn"]) for r in sr2.table().read().collect()}
     assert got == {("b.py", 2)}  # table unchanged; a.py not resurrected
 
@@ -561,6 +583,77 @@ def test_stream_mor_fold_boundary_guard(spark, tmp_path):
     v2 = sr2.table().rebucket(4)
     assert sr2.table().manifest().summary["max_folded_delete_ord"] == ["c05", 5]
     assert sr2.table().manifest().version == v2
+
+
+def test_stream_dirty_rows_quarantined_and_limited(spark, tmp_path):
+    """A stream batch runs the engine's dirty gate: NULL-key and
+    NULL-order events are quarantined under
+    <checkpoint_root>/quarantine/epoch=<batch id> and never reach the
+    table, and dirty_record_limit fails the batch before its commit."""
+    from dataclasses import replace
+
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    ev = str(tmp_path / "events")
+    _one_file(spark, ev, [("r", "a.py", "U", "c01", 1, "py", "v1")])
+    strict = StreamReplay(
+        spark, ev, str(tmp_path / "strict"), str(tmp_path / "ckpt_strict"),
+        config=replace(CFG, dirty_record_limit=0),
+    )
+    strict.run_available_now()
+    v0 = strict.table().current_version()
+
+    _one_file(spark, ev, [
+        ("r", None, "U", "c02", 2, "py", "x1"),  # NULL key
+        ("r", "b.py", "U", None, 3, "py", "y1"),  # NULL order
+        ("r", "c.py", "U", "c04", 4, "py", "z1"),
+    ])
+    with pytest.raises(StreamingQueryException, match="dirty records exceed"):
+        strict.run_available_now()
+    assert strict.table().current_version() == v0
+    assert {r["path"] for r in strict.table().read().collect()} == {"a.py"}
+
+    sr = StreamReplay(
+        spark, ev, str(tmp_path / "table"), str(tmp_path / "ckpt"),
+        config=CFG, max_files_per_trigger=1,
+    )
+    sr.run_available_now()
+    assert sr.applied_batches == [0, 1]
+    assert {r["path"] for r in sr.table().read().collect()} == {"a.py", "c.py"}
+    q = spark.read.parquet(str(tmp_path / "ckpt" / "quarantine" / "epoch=1"))
+    assert {(r["path"], r["commit"]) for r in q.collect()} == {
+        (None, "c02"), ("b.py", None),
+    }
+    assert sr.table().manifest().summary["n_dirty"] == 2
+
+
+def test_stream_mor_compact_every(spark, tmp_path):
+    """compact_every in the streaming sink: a MoR stream compacting
+    after every 2nd batch id leaves no pending deltas after 4 batches
+    and still matches the oracle."""
+    import time as _t
+    from dataclasses import replace
+
+    spec = ChangelogSpec(n_events=4_000, n_repos=10, paths_per_repo=40,
+                         events_per_epoch=1_000, seed=29)
+    full = events_df(spark, spec)
+    ev = str(tmp_path / "events")
+    for e in range(spec.n_epochs):  # one file per epoch, in event order
+        full.filter(F.col("epoch") == e).drop("epoch").coalesce(1).write.parquet(
+            f"{ev}/epoch={e}"
+        )
+        _t.sleep(1.05)
+    sr = StreamReplay(
+        spark, ev, str(tmp_path / "table"), str(tmp_path / "ckpt"),
+        config=replace(CFG, merge_strategy="mor", compact_every=2),
+        max_files_per_trigger=1,
+    )
+    sr.run_available_now()
+    assert sr.applied_batches == [0, 1, 2, 3]
+    m = sr.table().manifest()
+    assert not any(m.delta_files.values()) and not any(m.delta_row_counts.values())
+    _assert_matches(sr.table().read(), ev)
 
 
 def test_stream_materialized_view_follows_batches(spark, tmp_path):

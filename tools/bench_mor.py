@@ -40,6 +40,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.cpu_control import cpu_control  # noqa: E402
+
 
 def main() -> None:
     load_n = int(sys.argv[1]) if len(sys.argv) > 1 else 8_000_000
@@ -56,13 +58,6 @@ def main() -> None:
     from datax_spark.session import get_spark
 
     spark = get_spark("bench-mor", cores=cpus)
-
-    def cpu_control() -> float:
-        t0 = time.monotonic()
-        spark.range(0, 250_000_000 * cpus, 1, cpus * 4).selectExpr(
-            "sum(cast(xxhash64(id) as double))"
-        ).collect()
-        return round(time.monotonic() - t0, 3)
 
     # One event log for both plans: epoch 0 = the big load, epochs
     # 1..N = the small increments. Same keyspace throughout (the
@@ -112,7 +107,7 @@ def main() -> None:
             "count(*)"
         ).collect()
 
-        controls = [cpu_control()]
+        controls = [cpu_control(spark, 250_000_000 * cpus, cpus * 4)]
         out: dict = {
             "load_events": load_n,
             "inc_events_per_epoch": inc_n,
@@ -196,7 +191,7 @@ def main() -> None:
 
         for strategy in ("spj", "mor"):
             out["strategies"][strategy] = run(strategy)
-            controls.append(cpu_control())
+            controls.append(cpu_control(spark, 250_000_000 * cpus, cpus * 4))
 
         # verify MoR through the MERGED READ first (pre-compaction) …
         n = verify(os.path.join(root, "table_mor"))

@@ -31,6 +31,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.cpu_control import cpu_control  # noqa: E402
+
 ORACLE_SQL = """
     WITH ev AS (
       SELECT * FROM read_parquet('{events}/epoch=*/*.parquet',
@@ -72,13 +74,6 @@ def main() -> None:
 
     spark = get_spark("bench-scd2", cores=cpus)
 
-    def cpu_control() -> float:
-        t0 = time.monotonic()
-        spark.range(0, 250_000_000 * cpus, 1, cpus * 4).selectExpr(
-            "sum(cast(xxhash64(id) as double))"
-        ).collect()
-        return round(time.monotonic() - t0, 3)
-
     n_epochs = total // inc_n
     spec = ChangelogSpec(
         n_events=total, n_repos=200, paths_per_repo=400,
@@ -114,7 +109,7 @@ def main() -> None:
             "count(*)"
         ).collect()
 
-        controls = [cpu_control()]
+        controls = [cpu_control(spark, 250_000_000 * cpus, cpus * 4)]
         out: dict = {
             "total_events": total,
             "events_per_epoch": inc_n,
@@ -204,7 +199,7 @@ def main() -> None:
             else:
                 r["verify"] = digest(os.path.join(root, "table_spj"), "spj")
             out["strategies"][strategy] = r
-            controls.append(cpu_control())
+            controls.append(cpu_control(spark, 250_000_000 * cpus, cpus * 4))
 
         spj_ep = out["strategies"]["spj"]["per_epoch_sec"]
         tr_ep = out["strategies"]["tiered"]["per_epoch_sec"]

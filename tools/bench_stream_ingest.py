@@ -36,6 +36,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.cpu_control import cpu_control  # noqa: E402
+
 
 def main() -> None:
     n_events = int(sys.argv[1]) if len(sys.argv) > 1 else 8_000_000
@@ -53,13 +55,6 @@ def main() -> None:
     from datax_spark.streaming.replay_stream import StreamReplay
 
     spark = get_spark("bench-stream-ingest", cores=cpus)
-
-    def cpu_control() -> float:
-        t0 = time.monotonic()
-        spark.range(0, 100_000_000 * cpus, 1, cpus * 4).selectExpr(
-            "sum(cast(xxhash64(id) as double))"
-        ).collect()
-        return round(time.monotonic() - t0, 3)
 
     spec = ChangelogSpec(
         n_events=n_events,
@@ -84,7 +79,7 @@ def main() -> None:
             mft = max(1, max(per_epoch) // max(1, batches_per_epoch))
         else:
             # CoW requires event-order-contiguous batches (the engine's
-            # delete_order_check fails loudly otherwise): stage the log
+            # delete-order guard fails loudly otherwise): stage the log
             # as one flat dir written epoch-by-epoch — a binlog/WAL
             # tail IS offset-ordered, this models that feed. The file
             # source batches by (mod time, path); sequential writes
@@ -115,7 +110,7 @@ def main() -> None:
             ]
         )
 
-        controls = [cpu_control()]
+        controls = [cpu_control(spark, 100_000_000 * cpus, cpus * 4)]
         sr = StreamReplay(
             spark,
             stream_root,
@@ -128,7 +123,7 @@ def main() -> None:
         t0 = time.monotonic()
         sr.run_available_now()
         drain_sec = time.monotonic() - t0
-        controls.append(cpu_control())
+        controls.append(cpu_control(spark, 100_000_000 * cpus, cpus * 4))
         n_batches = len(sr.applied_batches)
 
         print(

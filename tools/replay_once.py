@@ -28,6 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datax_spark.session import get_spark  # noqa: E402
+from tools.cpu_control import cpu_control  # noqa: E402
 
 SHUFFLE_PARTITIONS = 64
 NUM_BUCKETS = 32
@@ -95,13 +96,7 @@ def main() -> None:
         cpus = int(sys.argv[2])
         spark = get_spark(f"scaling-control-{cpus}", cores=cpus, extra_conf=size_conf(cpus))
         spark.range(10_000_000).selectExpr("sum(id)").collect()
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.monotonic()
-            spark.range(0, 20_000_000_000, 1, cpus * 4).selectExpr(
-                "sum(cast(xxhash64(id) as double))"
-            ).collect()
-            best = min(best, time.monotonic() - t0)
+        best = min(cpu_control(spark, 20_000_000_000, cpus * 4) for _ in range(3))
         print(json.dumps({"mode": "control", "cpus": cpus, "sec": round(best, 2)}))
         return
 
