@@ -1616,26 +1616,19 @@ class LakeTable:
         live = {p for fl in files.values() for p in fl}
         stats = {p: s for p, s in stats.items() if p in live}
         blooms = {p: s for p, s in blooms.items() if p in live}
-        m = Manifest(
+        m = _dc_replace(
+            parent,
             version=parent.version + 1,
             parent=parent.version,
             schema_json=json.dumps((schema or parent.schema).jsonValue()),
-            num_buckets=parent.num_buckets,
-            key_cols=parent.key_cols,
             files=files,
             row_counts=counts,
             summary={**parent.summary, **(summary or {})},
             delta_files=dfiles,
             delta_row_counts=dcounts,
-            resolve_order=parent.resolve_order,
-            stats_cols=parent.stats_cols,
             file_stats=stats,
-            bloom_cols=parent.bloom_cols,
             file_blooms=blooms,
             operation=operation,
-            shard_buckets=parent.shard_buckets,
-            hash_fn=parent.hash_fn,
-            bucket_cols=parent.bucket_cols,
         )
         m._dirty_buckets = {int(b) for b in replaced_buckets} | {
             int(b) for b in new_files
@@ -1672,25 +1665,15 @@ class LakeTable:
                 dcounts[str(b)] = int(dcounts.get(str(b), 0)) + int(
                     new_delta_rows.get(b, 0)
                 )
-        m = Manifest(
+        m = _dc_replace(
+            parent,
             version=parent.version + 1,
             parent=parent.version,
             schema_json=json.dumps((schema or parent.schema).jsonValue()),
-            num_buckets=parent.num_buckets,
-            key_cols=parent.key_cols,
-            files=dict(parent.files),
-            row_counts=dict(parent.row_counts),
             summary={**parent.summary, **(summary or {})},
             delta_files=dfiles,
             delta_row_counts=dcounts,
-            resolve_order=parent.resolve_order,
-            stats_cols=parent.stats_cols,
-            file_stats=dict(parent.file_stats),
-            bloom_cols=parent.bloom_cols,
-            file_blooms=dict(parent.file_blooms),
-            shard_buckets=parent.shard_buckets,
-            hash_fn=parent.hash_fn,
-            bucket_cols=parent.bucket_cols,
+            operation="",
         )
         m._dirty_buckets = {int(b) for b in new_delta_files}
         return self._write_manifest(m, expected_parent=parent.version)
@@ -1949,12 +1932,11 @@ class LakeTable:
             built = harvest_file_blooms(all_abs, m.bloom_cols, self.spark)
             for f, b in built.items():
                 blooms[os.path.relpath(f, self.root)] = b
-        nm = Manifest(
+        nm = _dc_replace(
+            m,
             version=m.version + 1,
             parent=m.version,
-            schema_json=m.schema_json,
             num_buckets=new_num_buckets,
-            key_cols=m.key_cols,
             files=files,
             row_counts=counts,
             summary={
@@ -1969,15 +1951,11 @@ class LakeTable:
                     else {}
                 ),
             },
-            resolve_order=m.resolve_order,
-            stats_cols=m.stats_cols,
+            delta_files={},
+            delta_row_counts={},
             operation="rebucket",
             file_stats=stats,
-            bloom_cols=m.bloom_cols,
             file_blooms=blooms,
-            shard_buckets=m.shard_buckets,
-            hash_fn=m.hash_fn,
-            bucket_cols=m.bucket_cols,
         )
         return self._write_manifest(nm, expected_parent=m.version)
 
@@ -2154,26 +2132,12 @@ class LakeTable:
         cur = self.manifest()
         if t.version == cur.version:
             raise ValueError(f"table is already at snapshot v{t.version}")
-        m = Manifest(
+        m = _dc_replace(
+            t,
             version=cur.version + 1,
             parent=cur.version,
-            schema_json=t.schema_json,
-            num_buckets=t.num_buckets,
-            key_cols=t.key_cols,
-            files=dict(t.files),
-            row_counts=dict(t.row_counts),
             summary={**t.summary, "rollback_of": t.version},
             operation="rollback",
-            delta_files=dict(t.delta_files),
-            delta_row_counts=dict(t.delta_row_counts),
-            resolve_order=t.resolve_order,
-            stats_cols=t.stats_cols,
-            file_stats=dict(t.file_stats),
-            bloom_cols=t.bloom_cols,
-            file_blooms=dict(t.file_blooms),
-            shard_buckets=t.shard_buckets,
-            hash_fn=t.hash_fn,
-            bucket_cols=t.bucket_cols,
         )
         return self._write_manifest(m, expected_parent=cur.version)
 

@@ -105,7 +105,12 @@ def tsv_escape(v, ch_array: bool = True) -> str:
     if isinstance(v, _dt.datetime):
         # whole seconds for DateTime; fractional kept when present so
         # DateTime64(n) columns don't silently truncate (CH's basic
-        # date_time_input_format parses both)
+        # date_time_input_format parses both); TSV DateTime takes no
+        # offset suffix, so an aware value is refused, not mis-rendered
+        if v.utcoffset() is not None:
+            raise ValueError(
+                f"timezone-aware datetime {v!r} has no ClickHouse TSV form"
+            )
         return v.isoformat(sep=" ")
     if isinstance(v, _dt.date):
         return v.isoformat()

@@ -358,6 +358,12 @@ def mysql_literal(v, no_backslash_escapes: bool = False) -> str:
         # DATETIME(n)/TIMESTAMP(n) round-trip at full precision, like
         # the reference's PreparedStatement.setTimestamp
         # (plugin-rdbms-util CommonRdbmsWriter.java fillPreparedStatement).
+        # An offset suffix (+08:00) is rejected by MySQL before 8.0.19:
+        # refuse aware values rather than render a literal that fails.
+        if v.utcoffset() is not None:
+            raise ValueError(
+                f"timezone-aware datetime {v!r} has no MySQL DATETIME literal"
+            )
         return "'" + v.isoformat(sep=" ") + "'"
     if isinstance(v, _dt.date):
         return "'" + v.isoformat() + "'"

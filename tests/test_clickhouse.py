@@ -222,6 +222,13 @@ def test_tsv_escape_roundtrip():
             == "2024-03-01 12:30:05.123456")
 
 
+def test_tsv_escape_rejects_aware_datetime():
+    # TSV DateTime takes no offset suffix: refuse, don't render
+    aware = dt.datetime(2024, 3, 1, 12, 30, 5, tzinfo=dt.timezone.utc)
+    with pytest.raises(ValueError, match="2024"):
+        tsv_escape(aware)
+
+
 def test_type_mapping():
     assert ch_to_spark_type("Int32") == "int"
     assert ch_to_spark_type("UInt64") == "long"

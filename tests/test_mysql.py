@@ -476,6 +476,13 @@ def test_mysql_literal_escaping():
             == "'2024-01-02 03:04:05.123456'")
 
 
+def test_mysql_literal_rejects_aware_datetime():
+    # an offset suffix fails on MySQL before 8.0.19: refuse, don't render
+    aware = dt.datetime(2024, 1, 2, 3, 4, 5, tzinfo=dt.timezone(dt.timedelta(hours=8)))
+    with pytest.raises(ValueError, match="2024"):
+        mysql_literal(aware)
+
+
 def test_native_password_vector():
     # independently computable: sha1-based algorithm, fixed nonce
     import hashlib

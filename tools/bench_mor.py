@@ -15,10 +15,11 @@ that trade-off, end to end and value-verified:
   3. For MoR, the deferred costs are measured too: the bucket-local
      merged read (pre-compaction) and the final compact() that folds
      deltas into fresh base files.
-  4. VERIFY: both final tables are frame-equal (per-row sha256) to an
-     independent DuckDB LWW replay of the raw log — the MoR state is
-     checked BEFORE compaction (through the merged-read path) so the
-     fast write path cannot hide a wrong answer behind compaction.
+  4. VERIFY: both final tables are set-equal (per-row sha256) to the
+     independent DuckDB LWW oracle of tools/verify_existing.py — the
+     MoR state is checked BEFORE compaction (through the merged-read
+     path) so the fast write path cannot hide a wrong answer behind
+     compaction, and after it. Exits 1 on any mismatch.
 
 A pure-CPU control brackets the two ingest runs (this host shows
 CPU-steal bursts; same protocol as bench.py) so a distorted window is
@@ -41,6 +42,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.cpu_control import cpu_control  # noqa: E402
+from tools import verify_existing as oracle  # noqa: E402
 
 
 def main() -> None:
@@ -49,12 +51,11 @@ def main() -> None:
     n_inc = int(sys.argv[3]) if len(sys.argv) > 3 else 8
     cpus = int(sys.argv[4]) if len(sys.argv) > 4 else 32
 
-    import duckdb
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from datax_spark.engine.replay import ReplayConfig, ReplayEngine
     from datax_spark.fixtures.changelog import ChangelogSpec, events_df
+    from datax_spark.lake.table import LakeTable
     from datax_spark.session import get_spark
 
     spark = get_spark("bench-mor", cores=cpus)
@@ -149,72 +150,46 @@ def main() -> None:
                 )
             return r
 
-        # ---- independent DuckDB LWW oracle over the raw log ----
-        con = duckdb.connect()
-        want = con.execute(
-            f"""
-            WITH ev AS (
-              SELECT * FROM read_parquet(
-                  '{root}/events/epoch=*/*.parquet', union_by_name = true)
-            ),
-            w AS (
-              SELECT *, row_number() OVER (
-                  PARTITION BY repo, path ORDER BY commit DESC, lsn DESC) AS rn
-              FROM ev
-            )
-            SELECT repo, path, commit, lsn, lang,
-                   sha256(content) AS content_sha256
-            FROM w WHERE rn = 1 AND op <> 'D'
-            ORDER BY repo, path
-            """
-        ).df().reset_index(drop=True)
-
-        def verify(table_root: str) -> int:
-            from datax_spark.lake.table import LakeTable
-
-            got = (
-                LakeTable.load(spark, table_root)
-                .read()
-                .selectExpr(
-                    "repo", "path", "commit", "lsn", "lang",
-                    "sha2(content, 256) AS content_sha256",
-                )
-                .toPandas()
-                .sort_values(["repo", "path"])
-                .reset_index(drop=True)
-            )
-            got["lsn"] = got["lsn"].astype("int64")
-            w = want.copy()
-            w["lsn"] = w["lsn"].astype("int64")
-            pd.testing.assert_frame_equal(got, w, check_dtype=False)
-            return len(got)
-
         for strategy in ("spj", "mor"):
             out["strategies"][strategy] = run(strategy)
             controls.append(cpu_control(spark, 250_000_000 * cpus, cpus * 4))
 
-        # verify MoR through the MERGED READ first (pre-compaction) …
-        n = verify(os.path.join(root, "table_mor"))
-        out["strategies"]["mor"]["verified_rows_pre_compact"] = n
-        # … then compact and verify the folded base too
-        from datax_spark.lake.table import LakeTable
-
-        t = LakeTable.load(spark, os.path.join(root, "table_mor"))
+        # ---- independent DuckDB LWW oracle over the raw log: export
+        # the MoR state through the MERGED READ first (pre-compaction),
+        # so the fast write path cannot hide a wrong answer behind
+        # compaction, then the folded base, then the CoW table ----
+        hashed = os.path.join(root, "events_hashed")
+        oracle.hash_events(spark, os.path.join(root, "events"), hashed)
+        mor_root = os.path.join(root, "table_mor")
+        states = {k: os.path.join(root, f"state_{k}") for k in ("pre", "post", "spj")}
+        oracle.export_state(spark, mor_root, states["pre"])
         t0 = time.monotonic()
-        t.compact()
+        LakeTable.load(spark, mor_root).compact()
         out["strategies"]["mor"]["compact_sec"] = round(time.monotonic() - t0, 2)
-        out["strategies"]["mor"]["verified_rows_post_compact"] = verify(
-            os.path.join(root, "table_mor")
-        )
-        out["strategies"]["spj"]["verified_rows"] = verify(
-            os.path.join(root, "table_spj")
-        )
-        out["verified"] = "sha256_frame_equal_vs_duckdb_lww"
+        oracle.export_state(spark, mor_root, states["post"])
+        oracle.export_state(spark, os.path.join(root, "table_spj"), states["spj"])
+        spark.stop()
+
+        con = oracle.connect(root)
+        oracle.build_winners(con, hashed)
+        checks = {k: oracle.compare(con, p) for k, p in states.items()}
+        mor, spj = out["strategies"]["mor"], out["strategies"]["spj"]
+        mor["verified_rows_pre_compact"] = checks["pre"]["rows"]
+        mor["verified_rows_post_compact"] = checks["post"]["rows"]
+        spj["verified_rows"] = checks["spj"]["rows"]
+        out.update(oracle.verdict({
+            "rows": checks["spj"]["rows"],
+            "oracle_rows": checks["spj"]["oracle_rows"],
+            "missing": sum(c["missing"] for c in checks.values()),
+            "extra": sum(c["extra"] for c in checks.values()),
+        }))
         out["cpu_control_sec"] = controls
         out["mor_speedup_ingest"] = round(
             out["strategies"]["spj"]["inc_sec"] / out["strategies"]["mor"]["inc_sec"], 2
         )
         print(json.dumps(out))
+        if out["verified"] != oracle.VERIFIED:
+            sys.exit(1)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -1,6 +1,7 @@
 """Streaming-ingest throughput: drain a changelog through the
 Structured Streaming sink (``streaming/replay_stream.py``) and verify
-the final table against the independent DuckDB LWW replay — the
+the final table against the independent DuckDB LWW oracle of
+``tools/verify_existing.py`` (exit 1 on any mismatch) — the
 stream-shaped companion to ``tools/scale_check.py`` (same fixture,
 same verification gate, same no-transform config, so the batch and
 streaming numbers compare directly).
@@ -37,6 +38,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.cpu_control import cpu_control  # noqa: E402
+from tools import verify_existing as oracle  # noqa: E402
 
 
 def main() -> None:
@@ -142,74 +144,28 @@ def main() -> None:
         )
 
         # DATAX_STREAM_VERIFY=join: stop after the measured drain and
-        # KEEP the root for tools/verify_existing_join.py — its own
-        # process gets the whole box (the inline arg_max below shares
-        # RAM with this process's spent 48g JVM, which OOM'd an 8M
-        # verify); the join formulation is also the only spillable one
-        # at >=128M events.
+        # KEEP the root for tools/verify_existing.py — its own process
+        # gets the whole box (an in-process verify shares RAM with this
+        # process's spent 48g JVM, which OOM'd an 8M verify).
         if os.environ.get("DATAX_STREAM_VERIFY") == "join":
             spark.stop()
-            print(json.dumps({"phase": "root_kept", "root": root}), flush=True)
+            print(json.dumps({"phase": "root_kept", "root": root,
+                              "verify": f"python tools/verify_existing.py {root}"}),
+                  flush=True)
             return
 
         # ---- verification: merged read (MoR resolves deltas) vs the
-        # independent DuckDB LWW replay of the raw log ----
+        # independent DuckDB LWW oracle over the raw log ----
         t1 = time.monotonic()
-        got = (
-            sr.table()
-            .read()
-            .selectExpr(
-                "repo", "path", "commit", "lsn", "lang", "lang_variant",
-                "sha2(content, 256) AS content_sha256",
-            )
-            .toPandas()
-            .sort_values(["repo", "path"])
-            .reset_index(drop=True)
-        )
+        hashed = os.path.join(root, "events_hashed")
+        state = os.path.join(root, "engine_state_hashed")
+        oracle.hash_events(spark, os.path.join(root, "events"), hashed)
+        oracle.export_state(spark, os.path.join(root, "table"), state)
         spark.stop()
-
-        import duckdb
-
-        con = duckdb.connect()
-        con.execute("SET memory_limit='24GB'")
-        con.execute("SET threads=8")
-        con.execute("SET preserve_insertion_order=false")
-        # in-memory DuckDB has spilling DISABLED unless a temp dir is
-        # set — without it the scan+sort hits the limit and aborts
-        os.makedirs(os.path.join(root, "duck_spill"), exist_ok=True)
-        con.execute(f"SET temp_directory='{root}/duck_spill'")
-        want = con.execute(
-            f"""
-            WITH ev AS (
-              SELECT repo, path, commit, lsn, lang, lang_variant, op,
-                     sha256(content) AS content_sha256,
-                     commit || lpad(CAST(lsn AS VARCHAR), 20, '0') AS ord
-              FROM read_parquet(
-                  '{root}/events/epoch=*/*.parquet', union_by_name = true)
-            ),
-            last AS (
-              SELECT repo, path,
-                     arg_max(struct_pack(
-                         commit := commit, lsn := lsn, lang := lang,
-                         lang_variant := lang_variant,
-                         content_sha256 := content_sha256,
-                         op := op), ord) AS r
-              FROM ev GROUP BY repo, path
-            )
-            SELECT repo, path, r.commit AS commit, r.lsn AS lsn,
-                   r.lang AS lang, r.lang_variant AS lang_variant,
-                   r.content_sha256 AS content_sha256
-            FROM last WHERE r.op <> 'D'
-            ORDER BY repo, path
-            """
-        ).df().reset_index(drop=True)
+        con = oracle.connect(root)
+        oracle.build_winners(con, hashed)
+        out = oracle.verdict(oracle.compare(con, state))
         verify_sec = time.monotonic() - t1
-
-        import pandas as pd
-
-        got["lsn"] = got["lsn"].astype("int64")
-        want["lsn"] = want["lsn"].astype("int64")
-        pd.testing.assert_frame_equal(got, want, check_dtype=False)
         print(
             json.dumps(
                 {
@@ -222,13 +178,14 @@ def main() -> None:
                     "events_per_sec": round(n_events / drain_sec, 1),
                     "n_batches": n_batches,
                     "max_files_per_trigger": mft,
-                    "final_rows": int(len(got)),
-                    "verified": "sha256_frame_equal_vs_duckdb_lww",
+                    **out,
                     "verify_sec": round(verify_sec, 2),
                     "cpu_control_sec": controls,
                 }
             )
         )
+        if out["verified"] != oracle.VERIFIED:
+            sys.exit(1)
     finally:
         if os.environ.get("DATAX_STREAM_VERIFY") != "join":
             shutil.rmtree(root, ignore_errors=True)

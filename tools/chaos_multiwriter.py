@@ -7,12 +7,13 @@ table while the ingest crashes and resumes).
 
 What is verified at the end, after all the carnage:
 
-* engine final state == a DuckDB per-key max-(commit,lsn) fold of the
-  FULL event log, compared by symmetric EXCEPT ALL over
-  (repo, path, commit, lsn, lang, lang_variant, sha2(content)) —
+* engine final state == the DuckDB LWW oracle of
+  tools/verify_existing.py over the FULL event log (per-key
+  max-(commit,lsn) winners, symmetric EXCEPT ALL over
+  (repo, path, commit, lsn, lang, lang_variant, sha2(content))) —
   0 missing / 0 extra rows;
-* the materialized view == recomputing its GROUP BY from the folded
-  winners — the concurrently-refreshed derived table converged too;
+* the materialized view == recomputing its GROUP BY from the same
+  winners table — the concurrently-refreshed derived table converged;
 * the manifest history is LINEAR (every snapshot's parent is the
   previous version) — the CAS admitted no fork;
 * contention stats are REPORTED, not hidden: per-worker
@@ -41,6 +42,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from tools import verify_existing as oracle  # noqa: E402
 
 
 _REPLAY_WORKER = """
@@ -135,14 +138,11 @@ def main() -> None:
     root = sys.argv[5] if len(sys.argv) > 5 else "/tmp/datax_chaos"
     n_kills = int(sys.argv[6]) if len(sys.argv) > 6 else 3
 
-    import duckdb
-
     from datax_spark.engine import ReplayConfig, ReplayEngine
     from datax_spark.fixtures.changelog import ChangelogSpec, write_events
     from datax_spark.lake.matview import AggView, AggViewSpec
     from datax_spark.lake.table import LakeTable
     from datax_spark.session import get_spark
-    from pyspark.sql import functions as F
 
     objectstore = os.environ.get("DATAX_OBJECTSTORE_CHAOS") == "1"
     srv = None
@@ -184,17 +184,7 @@ def main() -> None:
     if not os.path.exists(os.path.join(events_root, "_SUCCESS")):
         write_events(spark, spec, events_root)
     if not os.path.exists(os.path.join(hashed, "_SUCCESS")):
-        # mergeSchema: the log evolves mid-stream (early epoch files
-        # lack lang_variant) — a single-footer schema pick would
-        # silently null the column for every row
-        ev = spark.read.option("mergeSchema", "true").parquet(events_root)
-        if "lang_variant" not in ev.columns:
-            ev = ev.withColumn("lang_variant", F.lit(None).cast("string"))
-        (ev.selectExpr(
-            "repo", "path", "commit", "lsn", "op", "lang", "lang_variant",
-            "sha2(content, 256) AS content_sha256",
-            "concat(commit, lpad(cast(lsn as string), 20, '0')) AS ord",
-        ).write.mode("overwrite").parquet(hashed))
+        oracle.hash_events(spark, events_root, hashed)
     gen_s = time.monotonic() - t0
 
     # epoch 0 in-process so the table + view exist before the race
@@ -275,14 +265,8 @@ def main() -> None:
     # ---- phase 3: verify (fresh Spark for the export, then DuckDB)
     spark = get_spark("chaos-verify", cores=cpus,
                       shuffle_partitions=cpus * 2)
-    eng = ReplayEngine(spark, events_root, table_root, metrics_root,
-                       ReplayConfig(num_buckets=buckets))
     state = os.path.join(root, "engine_state_hashed")
-    (eng.table().read()
-     .selectExpr("repo", "path", "commit", "lsn", "lang", "lang_variant",
-                 "sha2(content, 256) AS content_sha256")
-     .write.mode("overwrite").parquet(state))
-    final_rows = eng.table().read().count()
+    oracle.export_state(spark, table_root, state)
     view_rows = [r.asDict() for r in
                  AggView(spark, view_root).read().collect()]
     t = LakeTable(spark, table_root)
@@ -291,36 +275,9 @@ def main() -> None:
         t.manifest(v).parent == v - 1 for v in vs[1:])
     spark.stop()
 
-    con = duckdb.connect()
-    con.execute(f"SET threads TO {cpus}")
-    con.execute("SET memory_limit='24GB'")
-    spill = os.path.join(root, "dk_spill")
-    os.makedirs(spill, exist_ok=True)
-    con.execute(f"SET temp_directory='{spill}'")
-    con.execute(f"""
-        CREATE TEMP TABLE winners AS
-        WITH mx AS (
-          SELECT repo, path, max(ord) AS mord
-          FROM read_parquet('{hashed}/*.parquet')
-          GROUP BY repo, path
-        )
-        SELECT a.* FROM read_parquet('{hashed}/*.parquet') a
-        JOIN mx ON a.repo = mx.repo AND a.path = mx.path
-               AND a.ord = mx.mord
-    """)
-    cols = 'repo, path, "commit", lsn, lang, lang_variant, content_sha256'
-    missing = con.execute(f"""
-        SELECT count(*) FROM (
-          SELECT {cols} FROM winners WHERE op <> 'D'
-          EXCEPT ALL
-          SELECT {cols} FROM read_parquet('{state}/*.parquet'))
-    """).fetchone()[0]
-    extra = con.execute(f"""
-        SELECT count(*) FROM (
-          SELECT {cols} FROM read_parquet('{state}/*.parquet')
-          EXCEPT ALL
-          SELECT {cols} FROM winners WHERE op <> 'D')
-    """).fetchone()[0]
+    con = oracle.connect(root, threads=cpus)
+    oracle.build_winners(con, hashed)
+    out = oracle.verdict(oracle.compare(con, state))
     expected_view = {
         r[0]: (r[1], r[2], r[3]) for r in con.execute(
             "SELECT coalesce(lang, '<null>'), count(*), sum(lsn), "
@@ -340,19 +297,17 @@ def main() -> None:
         "replay": last_json(replay_out),
         "compact": last_json(compact_out),
         "matview": last_json(view_out),
-        "final_rows": final_rows,
+        **out,
         "backend": "objectstore" if objectstore else "localfs",
-        "verify": {"missing": missing, "extra": extra,
-                   "equal": missing == 0 and extra == 0,
-                   "view_equal": view_ok, "linear_history": linear},
+        "verify": {"view_equal": view_ok, "linear_history": linear},
     }
     print(json.dumps(summary), flush=True)
     if srv is not None:
         srv.close()
-    if not (summary["verify"]["equal"] and view_ok and linear):
+    if not (out["verified"] == oracle.VERIFIED and view_ok and linear):
         sys.exit(1)
     # reclaim the big intermediates on success
-    for d in (hashed, os.path.join(root, "dk_spill")):
+    for d in (hashed, os.path.join(root, "duck_spill")):
         shutil.rmtree(d, ignore_errors=True)
 
 

@@ -1,7 +1,8 @@
 """Large-scale replay validation: replay an n-event changelog with the
 full contractual pipeline, then verify the ENTIRE final table state
-against an independent DuckDB LWW replay of the raw log (winner per
-key by (commit, lsn), deletes dropped, per-row sha256(content)).
+against the independent DuckDB LWW oracle of tools/verify_existing.py
+(winner per key by (commit, lsn), deletes dropped, per-row
+sha256(content), symmetric EXCEPT ALL). Exits 1 on any mismatch.
 
 This is the scale-up companion to the pytest e2e (300k events) and the
 pandas sequential oracle: DuckDB recomputes the expected state from
@@ -14,14 +15,14 @@ Usage: python tools/scale_check.py [n_events] [epochs] [cpus] [merge_strategy]
 
 ``hash_fn`` (default murmur3 = the exchange-aligned one-shuffle epoch;
 xxhash64 = the historical two-exchange plan) A/Bs the aligned merge at
-scale under the same sha256 frame-equality gate.
+scale under the same sha256 set-equality gate.
 Prints one JSON line with throughput + verification result.
 
 The optional 5th/6th args exercise ADAPTIVE bucket-count evolution at
 scale: start the table deliberately small (e.g. 8 buckets) with a
 per-bucket row target, let the engine grow the layout mid-replay
 (ReplayConfig.target_bucket_rows), and verify the same full-table
-sha256 frame equality through the rebucket commits. Default (args
+sha256 set equality through the rebucket commits. Default (args
 omitted): fixed 128 buckets, no adaptive growth — prior behavior.
 """
 
@@ -36,6 +37,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import verify_existing as oracle  # noqa: E402
+
 
 def main() -> None:
     n_events = int(sys.argv[1]) if len(sys.argv) > 1 else 16_000_000
@@ -45,8 +48,6 @@ def main() -> None:
     start_buckets = int(sys.argv[5]) if len(sys.argv) > 5 else 128
     target_bucket_rows = (int(sys.argv[6]) or None) if len(sys.argv) > 6 else None
     hash_fn = sys.argv[7] if len(sys.argv) > 7 else "murmur3"
-
-    import duckdb
 
     from datax_spark.engine.replay import ReplayConfig, ReplayEngine
     from datax_spark.fixtures.changelog import ChangelogSpec, write_events
@@ -123,93 +124,31 @@ def main() -> None:
         }), flush=True)
 
         # DATAX_SCALE_VERIFY=skip: stop after the measured replay and
-        # KEEP the root so the strictly memory-bounded verifier
-        # (tools/verify_existing_join.py <root>) can run as its own
-        # process — at >=128M events the in-process arg_max state
-        # below does not spill and has OOM'd a 128 GiB box; the
-        # join-based tool is the proven path at that size.
+        # KEEP the root so the oracle (tools/verify_existing.py <root>)
+        # runs as its own process with the whole box — at >=64M events
+        # the spent JVM's RSS left the in-process verify too little
+        # RAM (oom-killed at 64M, BENCH/SCALE.md).
         if os.environ.get("DATAX_SCALE_VERIFY") == "skip":
             spark.stop()
             print(json.dumps({"phase": "root_kept", "root": root,
+                              "verify": f"python tools/verify_existing.py {root}",
                               "rebuckets": rebuckets}), flush=True)
             return
 
         # ---- independent verification (DuckDB over the raw log) ----
         t1 = time.monotonic()
-        got = (
-            eng.table()
-            .read()
-            .selectExpr(
-                "repo", "path", "commit", "lsn", "lang", "lang_variant",
-                "sha2(content, 256) AS content_sha256",
-            )
-            .toPandas()
-            .sort_values(["repo", "path"])
-            .reset_index(drop=True)
-        )
-        # the replay measurement and the table snapshot are in hand:
-        # release the whole Spark side (JVM heap + 32 reused Arrow
-        # python workers) before the verify — at 128M events the
-        # verify needs the RAM more than a dead session does
+        hashed = os.path.join(root, "events_hashed")
+        state = os.path.join(root, "engine_state_hashed")
+        oracle.hash_events(spark, os.path.join(root, "events"), hashed)
+        oracle.export_state(spark, os.path.join(root, "table"), state)
         final_buckets = int(eng.table().manifest().num_buckets)
+        # exports in hand: release the whole Spark side (JVM heap +
+        # reused Arrow python workers) before DuckDB needs the RAM
         spark.stop()
-
-        con = duckdb.connect()
-        # memory discipline: the old row_number() window materialized
-        # and sorted ALL events incl. full content (~100 GB at 128M
-        # events) — three 128M attempts OOM'd / filled the disk there.
-        # Grouped arg_max instead: content is hashed in the scan and
-        # dropped, the aggregate state is one small row per distinct
-        # (repo, path), so memory ~ final keys, never ~ events.
-        # The scalar ordering key commit || lpad(lsn) is order-exact
-        # because commits are fixed-width 40-hex and lsn is a global
-        # total order (no ties possible).
-        # memory_limit bounds the buffer pool but NOT per-thread scan
-        # buffers: 32 threads over 1000+ parquet files of long strings
-        # still OOM'd a 128 GiB box (oom-kill at 125 GiB anon). Eight
-        # threads + no insertion-order preservation keep the scan's
-        # working set proportional to threads, not files.
-        con.execute("SET memory_limit='24GB'")
-        con.execute("SET threads=8")
-        con.execute("SET preserve_insertion_order=false")
-        os.makedirs(os.path.join(root, "duck_spill"), exist_ok=True)
-        con.execute(f"SET temp_directory='{root}/duck_spill'")
-        want = con.execute(
-            f"""
-            WITH ev AS (
-              SELECT repo, path, commit, lsn, lang, lang_variant, op,
-                     sha256(content) AS content_sha256,
-                     commit || lpad(CAST(lsn AS VARCHAR), 20, '0') AS ord
-              FROM read_parquet(
-                  '{root}/events/epoch=*/*.parquet', union_by_name = true)
-            ),
-            last AS (
-              -- the whole row rides in ONE struct arg: a struct with
-              -- NULL fields is itself non-NULL, so arg_max cannot
-              -- drop pre-evolution rows whose lang_variant is NULL
-              -- (arg_max ignores rows with a NULL arg)
-              SELECT repo, path,
-                     arg_max(struct_pack(
-                         commit := commit, lsn := lsn, lang := lang,
-                         lang_variant := lang_variant,
-                         content_sha256 := content_sha256,
-                         op := op), ord) AS r
-              FROM ev GROUP BY repo, path
-            )
-            SELECT repo, path, r.commit AS commit, r.lsn AS lsn,
-                   r.lang AS lang, r.lang_variant AS lang_variant,
-                   r.content_sha256 AS content_sha256
-            FROM last WHERE r.op <> 'D'
-            ORDER BY repo, path
-            """
-        ).df().reset_index(drop=True)
+        con = oracle.connect(root)
+        oracle.build_winners(con, hashed)
+        out = oracle.verdict(oracle.compare(con, state))
         verify_sec = time.monotonic() - t1
-
-        import pandas as pd
-
-        got["lsn"] = got["lsn"].astype("int64")
-        want["lsn"] = want["lsn"].astype("int64")
-        pd.testing.assert_frame_equal(got, want, check_dtype=False)
         print(
             json.dumps(
                 {
@@ -220,8 +159,7 @@ def main() -> None:
                     "hash_fn": hash_fn,
                     "replay_sec": round(replay_sec, 2),
                     "events_per_sec": round(n_events / replay_sec, 1),
-                    "final_rows": int(len(got)),
-                    "verified": "sha256_frame_equal_vs_duckdb_lww",
+                    **out,
                     "verify_sec": round(verify_sec, 2),
                     "start_buckets": start_buckets,
                     "final_buckets": final_buckets,
@@ -230,6 +168,8 @@ def main() -> None:
                 }
             )
         )
+        if out["verified"] != oracle.VERIFIED:
+            sys.exit(1)
     finally:
         if os.environ.get("DATAX_SCALE_VERIFY") != "skip":
             shutil.rmtree(root, ignore_errors=True)

@@ -1,7 +1,7 @@
 """Disk-bounded 10^9-event verified replay: rolling generate → apply →
 fold-verify → reclaim, one epoch at a time.
 
-The flat ladder (tools/scale_check.py + verify_existing_join.py)
+The flat ladder (tools/scale_check.py + tools/verify_existing.py)
 materializes the WHOLE raw log plus a hashed copy — ~130 + ~100 GB/1B
 events — which exceeds this host's free disk. This tool exploits two
 structural facts to verify 1e9 events in ~50 GB of peak disk:
@@ -13,14 +13,15 @@ structural facts to verify 1e9 events in ~50 GB of peak disk:
 2. LWW is an associative per-key max, so the DuckDB oracle can FOLD:
    ``winners_e = per-key max(ord) over (winners_{e-1} ∪ epoch_e)``,
    carrying one row per live key (O(keys), not O(events)). Each fold
-   uses the same spill-friendly max+join formulation as
-   verify_existing_join.py (arg_max's non-spilling struct state blew
+   uses the same spill-friendly max+join formulation as the oracle in
+   tools/verify_existing.py (arg_max's non-spilling struct state blew
    89 GiB at 128M — BENCH/SCALE.md). Winners keep delete events too;
    the final compare filters op <> 'D'.
 
 The final engine table (content → sha2, exported once from Spark) is
-compared against the last winners frame entirely inside DuckDB via
-symmetric EXCEPT ALL — the same end-state gate as the flat ladder, on
+compared against the last winners frame entirely inside DuckDB with
+that oracle's symmetric EXCEPT ALL (exit 1 on any mismatch) — the
+same end-state gate as the flat ladder, on
 exactly the same total event stream. This mirrors how a real 10^10
 pipeline must verify itself: bounded-state reconciliation, never a
 second copy of the firehose.
@@ -42,6 +43,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import verify_existing as oracle  # noqa: E402
+
 
 def du_gb(path: str) -> float:
     total = 0
@@ -61,12 +64,9 @@ def main() -> None:
     buckets = int(sys.argv[4]) if len(sys.argv) > 4 else 256
     root = sys.argv[5] if len(sys.argv) > 5 else "/root/scale_rolling"
 
-    import duckdb
-
     from datax_spark.engine.replay import ReplayConfig, ReplayEngine
     from datax_spark.fixtures.changelog import ChangelogSpec, events_df
     from datax_spark.session import get_spark
-    from pyspark.sql import functions as F
 
     per_epoch = n_events // n_epochs
     # same fixture family as tools/scale_check.py: key space scales
@@ -96,12 +96,7 @@ def main() -> None:
     def winners_path(e: int) -> str:
         return os.path.join(winners_dir, f"winners_{e}.parquet")
 
-    con = duckdb.connect()
-    con.execute(f"SET threads TO {cpus}")
-    con.execute("SET memory_limit='24GB'")
-    spill = os.environ.get("DATAX_VERIFY_SPILL", os.path.join(root, "dk_spill"))
-    os.makedirs(spill, exist_ok=True)
-    con.execute(f"SET temp_directory='{spill}'")
+    con = oracle.connect(root, threads=cpus)
 
     apply_s_total = 0.0
     t_wall0 = time.monotonic()
@@ -123,17 +118,7 @@ def main() -> None:
         # 2. hashed oracle feed BEFORE apply (content → sha2; schema
         # normalized so folds union cleanly across the evolution point)
         t0 = time.monotonic()
-        ev = spark.read.parquet(ep_dir)
-        if "lang_variant" not in ev.columns:
-            ev = ev.withColumn("lang_variant", F.lit(None).cast("string"))
-        (
-            ev.selectExpr(
-                "repo", "path", "commit", "lsn", "op", "lang", "lang_variant",
-                "sha2(content, 256) AS content_sha256",
-                "concat(commit, lpad(cast(lsn as string), 20, '0')) AS ord",
-            )
-            .write.mode("overwrite").parquet(hashed)
-        )
+        oracle.hash_events(spark, ep_dir, hashed)
         hash_s = time.monotonic() - t0
 
         # 3. engine apply (the measured path)
@@ -195,33 +180,13 @@ def main() -> None:
     state = os.path.join(root, "engine_state_hashed")
     t0 = time.monotonic()
     if not os.path.exists(os.path.join(state, "_SUCCESS")):
-        (
-            eng.table().read()
-            .selectExpr(
-                "repo", "path", "commit", "lsn", "lang", "lang_variant",
-                "sha2(content, 256) AS content_sha256",
-            )
-            .write.mode("overwrite").parquet(state)
-        )
-    final_rows = eng.table().read().count()
+        oracle.export_state(spark, table_root, state)
     spark.stop()  # release the JVM before DuckDB compares
 
-    wp = winners_path(n_epochs - 1)
-    cols = 'repo, path, "commit", lsn, lang, lang_variant, content_sha256'
-    missing = con.execute(f"""
-        SELECT count(*) FROM (
-          SELECT {cols} FROM read_parquet('{wp}') WHERE op <> 'D'
-          EXCEPT ALL
-          SELECT {cols} FROM read_parquet('{state}/*.parquet')
-        )
-    """).fetchone()[0]
-    extra = con.execute(f"""
-        SELECT count(*) FROM (
-          SELECT {cols} FROM read_parquet('{state}/*.parquet')
-          EXCEPT ALL
-          SELECT {cols} FROM read_parquet('{wp}') WHERE op <> 'D'
-        )
-    """).fetchone()[0]
+    # the last fold's winners ARE the oracle: re-deriving them is an
+    # O(keys) pass that also checks one winner per key
+    oracle.build_winners(con, winners_path(n_epochs - 1))
+    out = oracle.verdict(oracle.compare(con, state))
     verify_s = time.monotonic() - t0
     print(json.dumps({
         "n_events": n_events, "epochs": n_epochs, "cpus": cpus,
@@ -229,13 +194,11 @@ def main() -> None:
         "apply_s_total": round(apply_s_total, 1),
         "events_per_sec_apply": int(n_events / apply_s_total),
         "wall_s_total": round(time.monotonic() - t_wall0, 1),
-        "final_rows": final_rows,
-        "verify": {"missing": missing, "extra": extra,
-                   "equal": missing == 0 and extra == 0,
-                   "verify_s": round(verify_s, 1)},
+        **out,
+        "verify_s": round(verify_s, 1),
         "peak_disk_note": "per-epoch disk_gb lines above",
     }), flush=True)
-    if missing or extra:
+    if out["verified"] != oracle.VERIFIED:
         raise SystemExit(1)
 
 
