@@ -912,8 +912,8 @@ def _q_cdc_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, bytes, post-dedup keys, and the post-merge table size —
     directly from the raw event log, so the engine's self-reported
     lineage is value-checked end to end. (The per-bucket breakdown is
-    covered by pytest; buckets hash on Spark's murmur3 — xxhash64 on
-    pre-r3 tables — neither of which ANSI SQL can reproduce.)"""
+    covered by pytest; buckets hash on Spark's murmur3, which ANSI SQL
+    cannot reproduce.)"""
     root = _replay_run_root(spark, sf_dir)
     from datax_spark.engine.metrics import read_metrics
 

@@ -16,10 +16,8 @@ Job kinds:
   ``max_events_per_sec`` / ``max_bytes_per_sec``); optional
   ``"target_bucket_rows"`` / ``"max_buckets"`` turn on adaptive
   bucket-count evolution (the engine rebuckets the table as it grows);
-  optional ``"merge_strategy"`` (spj default | mor),
-  ``"hash_fn"`` (murmur3 default = exchange-aligned one-shuffle
-  epochs; xxhash64 = historical layout) and ``"aligned_exchange"``
-  (null = auto by table hash) pick the epoch's physical plan
+  optional ``"merge_strategy"`` (spj default | mor) picks the epoch's
+  physical plan
 * ``{"tail": {...}}`` — kafka changelog tail + apply in one job (the
   scheduled binlog-tail shape): ``{"tail": {"bootstrap_servers":
   "host:9092", "topic": ..., "value_format": "flat" | "debezium",
@@ -120,11 +118,6 @@ def main(argv: list[str] | None = None) -> int:
             target_bucket_rows=r.get("target_bucket_rows"),
             max_buckets=int(r.get("max_buckets", 1 << 16)),
             merge_strategy=r.get("merge_strategy", "spj"),
-            # bucket hash for a table this run CREATES: murmur3 (default)
-            # = exchange-aligned one-shuffle epochs; xxhash64 = the
-            # historical layout. Existing tables keep their manifest's.
-            hash_fn=r.get("hash_fn", "murmur3"),
-            aligned_exchange=r.get("aligned_exchange"),
             # file-skipping metadata for tables this run creates
             stats_cols=tuple(r.get("stats_cols", ())),
             bloom_cols=tuple(r.get("bloom_cols", ())),

@@ -61,7 +61,7 @@ from datax_spark.operators.dedup import STAT_COLS, lww_dedup_stats
 @contextmanager
 def aligned_shuffle_confs(spark: SparkSession, num_buckets: int):
     """Pin the session confs that make the dedup aggregation's shuffle
-    BE the bucket routing (see ReplayConfig.aligned_exchange): exactly
+    BE the bucket routing (``merge_into(aligned=True)``): exactly
     ``num_buckets`` shuffle partitions, and AQE partition coalescing
     off so the runtime cannot merge them (coalescing would break the
     ``partition_id == bucket`` identity; everything else about AQE is
@@ -309,25 +309,6 @@ class ReplayConfig:
     # stricter one governs. None = unthrottled.
     max_events_per_sec: float | None = None
     max_bytes_per_sec: float | None = None
-    # Bucket hash for tables this engine CREATES (existing tables keep
-    # their manifest's hash_fn). Default murmur3 — Spark's own shuffle
-    # hash — so the fused epoch can run EXCHANGE-ALIGNED (see below);
-    # "xxhash64" reproduces the historical layout.
-    hash_fn: str = "murmur3"
-    # Exchange-aligned fused epochs: with a murmur3-bucketed table, the
-    # dedup aggregation's shuffle is pinned to num_buckets partitions
-    # (AQE coalescing off for the epoch job), which makes the agg's own
-    # exchange land every key in the partition that IS its bucket —
-    # the per-bucket merge then runs as mapInPandas with NO second
-    # exchange. The whole epoch = ONE shuffle, and the map-side
-    # partial reduction is preserved: at 10^10 events this deletes an
-    # entire exchange of the deduped batch per epoch. None (default) =
-    # auto: on exactly when the table's hash_fn is murmur3 and the
-    # strategy is spj/mor unsalted (the fused path). False = always
-    # the two-exchange plan; True = force (raises per-partition,
-    # executor-side, if the table is not murmur3-bucketed or a
-    # transform broke the partitioning).
-    aligned_exchange: bool | None = None
 
     def __post_init__(self) -> None:
         check_strategy(self.merge_strategy)
@@ -347,12 +328,6 @@ class ReplayConfig:
             )
         if self.max_buckets < 1:
             raise ValueError(f"max_buckets must be >= 1, got {self.max_buckets}")
-        from datax_spark.lake.table import BUCKET_HASH_FNS
-
-        if self.hash_fn not in BUCKET_HASH_FNS:
-            raise ValueError(
-                f"hash_fn must be one of {BUCKET_HASH_FNS}, got {self.hash_fn!r}"
-            )
 
     def throttle_wait(
         self, cum_events: int, cum_bytes: int, elapsed_sec: float
@@ -587,7 +562,6 @@ class ReplayEngine:
             stats_cols=list(self.config.stats_cols),
             bloom_cols=list(self.config.bloom_cols),
             shard_buckets=self.config.shard_manifest_buckets,
-            hash_fn=self.config.hash_fn,
         )
 
     def resume_epoch(self) -> int:
@@ -664,7 +638,7 @@ class ReplayEngine:
         tp = time.monotonic()
         pending = self._merge(
             table, deduped, cfg.merge_strategy,
-            aligned=self._aligned(table.manifest()),
+            aligned=not table.manifest().bucket_cols,
         )
         ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
         n_dirty = self._resolve_dirty("bootstrap", gate, ph)["n_dirty"]
@@ -688,6 +662,7 @@ class ReplayEngine:
         if "after_commit" in failpoints:
             raise ReplayCrash("after_commit")
         rebucketed = maybe_rebucket(table, cfg)
+        self._refresh_views(table)
         return BootstrapResult(
             skipped=False,
             bootstrap_lsn=wlsn,
@@ -851,7 +826,8 @@ class ReplayEngine:
         deduped = self._dedup(ev_clean)
         tp = time.monotonic()
         pending = self._merge(
-            table, deduped, "spj", order_cols=list(cfg.order_cols)
+            table, deduped, "spj", order_cols=list(cfg.order_cols),
+            aligned=False,
         )
         ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
         got = self._resolve_dirty(label, gate, ph)
@@ -982,29 +958,25 @@ class ReplayEngine:
             deduped = fn(deduped)
         return deduped
 
-    def _aligned(self, m) -> bool:
-        """``ReplayConfig.aligned_exchange``, with None = on exactly
-        when the table's layout allows (murmur3 buckets)."""
-        if self.config.aligned_exchange is None:
-            return m.hash_fn == "murmur3"
-        return self.config.aligned_exchange
-
     def _merge(
         self,
         table: LakeTable,
         deduped: DataFrame,
         strategy: str,
         order_cols: list[str] | None = None,
-        aligned: bool = False,
+        *,
+        aligned: bool,
     ):
         """The one fused ``merge_into`` call of an epoch, bootstrap or
         chunk: dedup, transforms, merge and per-bucket lineage run as
         ONE Spark job. ``aligned`` makes it a ONE-shuffle job: the
         dedup agg's exchange, pinned to num_buckets partitions, IS the
         bucket routing, so the merge adds no exchange at all
-        (mapInPandas over the agg output, asserted executor-side). The
-        conf pins must be live when merge_into's action runs, hence the
-        context."""
+        (mapInPandas over the agg output, asserted executor-side). It
+        needs full-key routing — callers pass ``not m.bucket_cols`` —
+        and no exchange after the dedup; otherwise ``merge_into``
+        routes the frame itself. The conf pins must be live when
+        merge_into's action runs, hence the context."""
         cfg = self.config
         # pinned on the events' own session: Structured Streaming
         # clones the session per query, and a micro-batch's plans
@@ -1173,7 +1145,7 @@ class ReplayEngine:
                 if unordered and cfg.merge_strategy != "mor"
                 else None
             ),
-            aligned=self._aligned(m0),
+            aligned=not m0.bucket_cols,
         )
         ph["fused_dedup_merge"] = (time.monotonic() - tp) * 1000
         got = self._resolve_dirty(slot, gate, ph)

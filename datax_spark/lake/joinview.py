@@ -222,7 +222,6 @@ class JoinView:
             schema=T.StructType(fields),
             key_cols=list(lm.key_cols),
             num_buckets=num_buckets,
-            hash_fn="murmur3",
         )
         with open(os.path.join(root, _JOIN_SPEC_FILE), "w") as f:
             f.write(norm.to_json())

@@ -218,7 +218,6 @@ class AggView:
             schema=T.StructType(fields),
             key_cols=list(spec.group_cols),
             num_buckets=num_buckets,
-            hash_fn="murmur3",
         )
         with open(os.path.join(root, _VIEW_SPEC_FILE), "w") as f:
             f.write(spec.to_json())

@@ -13,12 +13,16 @@ Reference analog: the RDBMS writer's last-writer-wins upsert
 ``deleteFlag`` pre-delete path (``CommonRdbmsWriter.java:322-362``),
 executed set-wise instead of row-batch-wise.
 
-Physical plans — one per table mode, same verified output:
+Physical plans — one per table mode, same verified output, one shape:
+the epoch batch is routed so that partition b holds exactly bucket b
+(``merge_into`` repartitions on the routing columns, or the caller's
+own shuffle already did), and a per-bucket pandas kernel runs as
+``mapInPandas`` over it (``_aligned_bucket_apply``).
 
 * **spj** (copy-on-write, the default): the storage-partitioned
   merge. The table is already bucket-hashed on its keys, so the
   current side needs no Exchange at all — the epoch batch shuffles
-  once (grouped by bucket) and each bucket's task reads its own
+  once (routed to its buckets) and each bucket's task reads its own
   current state executor-side, filters evicted keys with Arrow
   kernels, and writes one new file. A bucket that carries pending
   merge-on-read deltas is read through the MoR read kernel
@@ -44,12 +48,12 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datax_spark.lake.table import (
     CommitConflictError,
     LakeTable,
+    Manifest,
     bucket_expr_for,
     bucket_state_arrow,
     composite_key_array,
@@ -225,8 +229,8 @@ def merge_into(
     * ``"spj"`` (default): storage-partitioned copy-on-write merge —
       the analog of Spark's storage-partitioned joins (SPARK-37375)
       for this table format. The table is ALREADY bucket-hashed on the
-      keys, so only the (small) update side shuffles, grouped by
-      bucket; each bucket's task then reads its own current state
+      keys, so only the (small) update side shuffles, routed to its
+      buckets; each bucket's task then reads its own current state
       directly (base files, plus pending MoR deltas when the bucket
       has any) and merges in Arrow — the current side never enters an
       Exchange. See ``spj_merge_frame`` for the memory model and
@@ -236,59 +240,16 @@ def merge_into(
       See ``mor_delta_frame``.
 
     ``stat_cols`` fuses the per-bucket lineage aggregation into the
-    merge tasks (``PendingMerge.bucket_stats``); ``aligned`` runs the
-    merge with no exchange of its own over an already bucket-aligned
-    frame (see ``_aligned_bucket_apply``).
+    merge tasks (``PendingMerge.bucket_stats``). ``aligned`` says the
+    caller's frame is already bucket-aligned (see ``merge_frame``).
     """
-    check_strategy(strategy)
     m = table.manifest()
-    if aligned:
-        if m.hash_fn != "murmur3":
-            raise ValueError(
-                f"aligned merges need a murmur3-bucketed table (the "
-                f"shuffle partitioner's own hash); this table buckets on "
-                f"{m.hash_fn!r}. Recreate with hash_fn='murmur3' or pass "
-                f"aligned=False."
-            )
-        if m.bucket_cols and list(m.bucket_cols) != list(m.key_cols):
-            # the upstream dedup shuffle hashes the FULL key; a subset
-            # bucket routing no longer equals the partitioner, so the
-            # partition_id == bucket contract cannot hold
-            raise ValueError(
-                f"aligned merges need full-key bucket routing; this table "
-                f"buckets on subset {list(m.bucket_cols)} of keys "
-                f"{list(m.key_cols)}. Pass aligned=False."
-            )
-    if strategy == "mor" and order_cols:
-        # the cross-batch guard needs the CURRENT row's order tuple,
-        # i.e. a read of the base — which is exactly what MoR's
-        # O(batch) write refuses to pay. Out-of-order delivery needs
-        # the spj guard; the batch engine's epoch watermark already
-        # serializes epochs, so MoR epochs are in-order.
-        raise ValueError(
-            "order_cols (cross-batch LWW guard) is not supported "
-            "with strategy='mor'; use 'spj'"
-        )
-
-    incoming = updates.drop(op_col, *(stat_cols or ())).schema
-    evolved = evolve_schema(
-        m.schema, incoming,
-        frozen_cols=set(m.key_cols) | set(m.bucket_cols or ()),
+    frame, evolved = merge_frame(
+        table, m, updates, op_col, delete_op, order_cols, strategy,
+        stat_cols, aligned,
     )
-    upd = updates.withColumn("__b", bucket_expr_for(m))
-    txn = table.new_txn_dir()
     # affected buckets come back with the write result itself (one
-    # stats row per bucket group) — no pre-pass needed
-    if strategy == "spj":
-        frame = spj_merge_frame(
-            table, upd, op_col, delete_op, evolved, txn,
-            stat_cols=stat_cols, order_cols=order_cols, aligned=aligned,
-        )
-    else:
-        frame = mor_delta_frame(
-            table, upd, op_col, delete_op, evolved, txn,
-            stat_cols=stat_cols, aligned=aligned,
-        )
+    # stats row per bucket task) — no pre-pass needed
     res = frame.collect()  # bounded: one row per affected bucket
     affected = sorted(int(r["bucket"]) for r in res)
     new_files = {int(r["bucket"]): [r["file"]] for r in res if r["rows"]}
@@ -325,6 +286,75 @@ def merge_into(
     )
 
 
+def merge_frame(
+    table: LakeTable,
+    m: Manifest,
+    updates: DataFrame,
+    op_col: str = "op",
+    delete_op: str = "D",
+    order_cols: list[str] | None = None,
+    strategy: str = "spj",
+    stat_cols: tuple[str, ...] | None = None,
+    aligned: bool = False,
+) -> tuple[DataFrame, T.StructType]:
+    """The write-phase plan ``merge_into`` collects, against snapshot
+    ``m`` of ``table``: one stats row (``SPJ_STATS_SCHEMA``) per
+    touched bucket, and the evolved table schema.
+
+    Routing: by default the frame is ``repartitionById(num_buckets,
+    __b)`` — partition id = bucket, by construction. Not
+    ``repartition(num_buckets, *route_cols)``: that computes the same
+    ids, but Spark drops it as redundant when the frame is already
+    hash-partitioned on those columns with that count (a ``groupBy``
+    under ``shuffle.partitions == num_buckets``), and AQE may then
+    coalesce the upstream shuffle — seen in a replica's stream batch.
+    A repartition by number is exempt from AQE coalescing, which
+    matters at scale: a bucket task has a constant file-I/O term (open
+    the bucket's files, write and rename one file) that byte-based
+    coalescing would serialize into a few tasks whenever the batch is
+    small.
+
+    ``aligned=True`` skips that exchange for a frame whose LAST
+    shuffle already was ``hashpartitioning(key_cols, num_buckets)``,
+    uncoalesced (the engine's dedup aggregation under
+    ``aligned_shuffle_confs``; murmur3 makes its partition id the
+    bucket): Spark cannot see through the Arrow transforms in between,
+    so it would shuffle the batch a second time. Either way the bucket
+    kernel asserts ``partition == bucket`` per task before writing
+    anything."""
+    check_strategy(strategy)
+    if strategy == "mor" and order_cols:
+        # the cross-batch guard needs the CURRENT row's order tuple,
+        # i.e. a read of the base — which is exactly what MoR's
+        # O(batch) write refuses to pay. Out-of-order delivery needs
+        # the spj guard; the batch engine's epoch watermark already
+        # serializes epochs, so MoR epochs are in-order.
+        raise ValueError(
+            "order_cols (cross-batch LWW guard) is not supported "
+            "with strategy='mor'; use 'spj'"
+        )
+
+    incoming = updates.drop(op_col, *(stat_cols or ())).schema
+    evolved = evolve_schema(
+        m.schema, incoming,
+        frozen_cols=set(m.key_cols) | set(m.bucket_cols or ()),
+    )
+    upd = updates.withColumn("__b", bucket_expr_for(m))
+    if not aligned:
+        upd = upd.repartitionById(int(m.num_buckets), "__b")
+    txn = table.new_txn_dir()
+    if strategy == "spj":
+        frame = spj_merge_frame(
+            table, m, upd, op_col, delete_op, evolved, txn,
+            stat_cols=stat_cols, order_cols=order_cols,
+        )
+    else:
+        frame = mor_delta_frame(
+            m, upd, op_col, delete_op, evolved, txn, stat_cols=stat_cols,
+        )
+    return frame, evolved
+
+
 _conform_arrow = conform_arrow  # shared with the table's MoR read path
 
 
@@ -356,20 +386,15 @@ def _bucket_stats(pdf, stat_cols: tuple[str, ...] | None) -> dict:
     }
 
 
-def _aligned_bucket_apply(upd: DataFrame, bucket_fn, table: LakeTable) -> DataFrame:
-    """Run a per-bucket pandas kernel over an ALREADY bucket-aligned
-    frame — zero exchange.
+def _aligned_bucket_apply(upd: DataFrame, bucket_fn, nb: int) -> DataFrame:
+    """Run a per-bucket pandas kernel over a bucket-aligned frame as
+    ``mapInPandas`` — no exchange of its own, one task per bucket.
 
-    Precondition (the exchange-aligned contract, see
-    ``Manifest.hash_fn``): ``upd``'s most recent shuffle was keyed on
-    the table's ``key_cols`` with EXACTLY ``num_buckets`` partitions
-    and AQE partition coalescing disabled, and the table buckets on
-    murmur3 — then ``partition_id == pmod(murmur3(keys), nb) == __b``
-    and partition p holds exactly bucket p's rows. Under that contract
-    this is ``mapInPandas`` straight over the aggregation output:
-    where ``spj_merge_frame``'s default shape pays
-    ``repartition(nb, __b)`` — a SECOND full exchange of the deduped
-    epoch batch — the aligned shape pays none at all.
+    Precondition: partition p holds exactly the rows of bucket p —
+    ``merge_frame``'s own ``repartitionById(nb, __b)``, or the engine's
+    dedup shuffle ``hashpartitioning(key_cols, nb)`` under
+    ``aligned_shuffle_confs`` (murmur3 buckets make its partition id
+    ``pmod(murmur3(key_cols), nb)`` the bucket).
 
     The contract is ASSERTED executor-side per partition (one vector
     compare of ``__b`` against TaskContext.partitionId), so a broken
@@ -377,8 +402,6 @@ def _aligned_bucket_apply(upd: DataFrame, bucket_fn, table: LakeTable) -> DataFr
     loud crash before any file is written, never silent misplacement.
     """
     import pandas as pd
-
-    nb = int(table.manifest().num_buckets)
 
     def apply_partition(batches):
         from pyspark import TaskContext
@@ -397,7 +420,8 @@ def _aligned_bucket_apply(upd: DataFrame, bucket_fn, table: LakeTable) -> DataFr
                 f"hashpartitioning(key_cols, num_buckets). A transform "
                 f"that repartitions/joins, or shuffle confs not pinned "
                 f"(spark.sql.shuffle.partitions={nb}, AQE coalescing "
-                f"off), breaks alignment; rerun with aligned=False."
+                f"off), breaks alignment; merge_into(aligned=False) "
+                f"routes the frame itself."
             )
         yield bucket_fn(pdf)
 
@@ -406,6 +430,7 @@ def _aligned_bucket_apply(upd: DataFrame, bucket_fn, table: LakeTable) -> DataFr
 
 def spj_merge_frame(
     table: LakeTable,
+    m: Manifest,
     upd: DataFrame,
     op_col: str,
     delete_op: str,
@@ -413,28 +438,22 @@ def spj_merge_frame(
     txn: str,
     stat_cols: tuple[str, ...] | None = None,
     order_cols: list[str] | None = None,
-    aligned: bool = False,
 ) -> DataFrame:
     """Storage-partitioned merge write phase (no Exchange on the
-    current side).
-
-    ``aligned=True`` (murmur3-bucketed tables only, see
-    ``_aligned_bucket_apply``) removes the update side's exchange too:
-    the epoch batch arrives already partitioned bucket-wise by the
-    upstream dedup aggregation's own shuffle, so the WHOLE epoch runs
-    on ONE exchange — scan -> partial agg (map-side combined) -> one
-    shuffle that is simultaneously the dedup reduction AND the bucket
-    routing -> per-bucket merge tasks. At 10^10 events that deletes an
-    entire exchange of the deduped batch per epoch.
+    current side) of snapshot ``m``, over a bucket-aligned ``upd``
+    carrying ``__b`` (see ``merge_frame``).
 
     Physical shape — the ``zipPartitions`` the bucket layout earns:
-    the updates frame (already carrying ``__b``) is grouped by bucket
-    via ``applyInPandas`` — ONE exchange, of the small epoch batch
-    only. Each bucket's task then opens its own current data files
-    straight from the snapshot manifest (an executor-side Arrow scan;
-    the files of bucket b hold exactly the keys that hash to b, which
-    is the same co-location guarantee Spark's storage-partitioned
-    joins (SPARK-37375) exploit on Iceberg bucket tables), filters out
+    the updates frame arrives routed to its buckets — ONE exchange, of
+    the small epoch batch only, and none at all in the engine's epoch,
+    where the dedup aggregation's own shuffle is the routing (scan ->
+    partial agg -> one shuffle that is both the dedup reduction AND
+    the bucket routing -> per-bucket merge tasks). Each bucket's task
+    then opens its own current data files straight from the snapshot
+    manifest (an executor-side Arrow scan; the files of bucket b hold
+    exactly the keys that hash to b, which is the same co-location
+    guarantee Spark's storage-partitioned joins (SPARK-37375) exploit
+    on Iceberg bucket tables), filters out
     keys the batch replaces, and streams survivors + sorted upserts
     into one new parquet file per bucket. Neither the rewritten table
     rows nor the current side ever pass through an exchange — the two
@@ -475,7 +494,6 @@ def spj_merge_frame(
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    m = table.manifest()
     keys = list(m.key_cols)
     root = table.root
     bucket_files = {
@@ -602,39 +620,17 @@ def spj_merge_frame(
             _os.remove(tmp)
         return pd.DataFrame([{"bucket": b, "rows": 0, "file": None, **st}])
 
-    # Pin the merge exchange to num_buckets partitions (a user
-    # repartition on the grouping key satisfies
-    # ClusteredDistribution(__b), so Catalyst adds no second exchange;
-    # REPARTITION_BY_NUM is exempt from AQE coalescing). Rationale is
-    # the scale shape, not local wall time: a bucket task's cost has a
-    # constant file-I/O term (open the bucket's current files, write +
-    # rename one parquet file) that does not shrink with batch bytes,
-    # so AQE's byte-based coalescing — built for pure-compute stages —
-    # packs many bucket rewrites serially into few tasks whenever the
-    # batch is small relative to the advisory partition size. At
-    # production bucket counts (O(10^4) for a 10^10-row table) that
-    # would cap merge parallelism by batch size instead of by layout.
-    # Measured at local[32]/64 buckets: identical plan at bench scale
-    # (AQE already kept 64), ~10% on 2k-event epochs (32 parallel
-    # bucket rewrites vs 1 serial task; driver fixed costs dominate).
-    if aligned:
-        return _aligned_bucket_apply(upd, merge_bucket, table)
-    return (
-        upd.repartition(int(table.manifest().num_buckets), F.col("__b"))
-        .groupBy("__b")
-        .applyInPandas(merge_bucket, schema=SPJ_STATS_SCHEMA)
-    )
+    return _aligned_bucket_apply(upd, merge_bucket, int(m.num_buckets))
 
 
 def mor_delta_frame(
-    table: LakeTable,
+    m: Manifest,
     upd: DataFrame,
     op_col: str,
     delete_op: str,
     evolved: T.StructType,
     txn: str,
     stat_cols: tuple[str, ...] | None = None,
-    aligned: bool = False,
 ) -> DataFrame:
     """Merge-on-read write phase: the epoch batch becomes one DELTA
     file per touched bucket — upserts carry the new image, deletes
@@ -646,8 +642,8 @@ def mor_delta_frame(
     LWW (``LakeTable._read_merged_buckets``) until ``compact()`` folds
     the deltas into a fresh base.
 
-    Physical shape: ONE exchange of the epoch batch grouped by bucket
-    (``applyInPandas``); each task sorts its bucket's rows by key and
+    Physical shape: the same bucket-aligned ``mapInPandas`` as spj
+    (see ``merge_frame``); each task sorts its bucket's rows by key and
     streams them into one parquet file under the txn dir (tmp +
     atomic rename; deterministic name makes task retries idempotent).
     ``stat_cols`` fuses the per-bucket lineage aggregation exactly as
@@ -664,7 +660,7 @@ def mor_delta_frame(
 
     evolved_pa = to_arrow_schema(evolved)
     out_cols = [f.name for f in evolved.fields]
-    keys_b = list(table.manifest().key_cols)
+    keys_b = list(m.key_cols)
 
     def write_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         import os as _os
@@ -698,13 +694,4 @@ def mor_delta_frame(
             [{"bucket": b, "rows": t.num_rows, "file": final, **st}]
         )
 
-    # Same partition pinning as spj_merge_frame: per-bucket delta-file
-    # writes carry a constant I/O term AQE's byte-based coalescing
-    # would serialize.
-    if aligned:
-        return _aligned_bucket_apply(upd, write_bucket, table)
-    return (
-        upd.repartition(int(table.manifest().num_buckets), F.col("__b"))
-        .groupBy("__b")
-        .applyInPandas(write_bucket, schema=SPJ_STATS_SCHEMA)
-    )
+    return _aligned_bucket_apply(upd, write_bucket, int(m.num_buckets))

@@ -259,13 +259,18 @@ class FakeObjectStore:
     data plane writes through to the local filesystem via tmp+rename
     so the lake's ``open()`` read paths work unchanged.
 
+    ``root`` is the directory it serves: a request whose key (a
+    filesystem path) normalizes to anything outside it is answered 403
+    without touching a file.
+
     ``drop_preconditions=True`` turns it into the adversarial store
     the suite must defend against: every conditional request silently
     succeeds."""
 
-    def __init__(self, drop_preconditions: bool = False):
+    def __init__(self, root: str, drop_preconditions: bool = False):
         from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+        self.root = os.path.realpath(root)
         self.drop_preconditions = drop_preconditions
         # adversarial hook: immediately clobber every successful
         # If-None-Match create with this foreign body (models a write
@@ -281,11 +286,20 @@ class FakeObjectStore:
             def log_message(self, *a):
                 pass
 
-            def _key(self) -> str:
-                return urllib.parse.unquote(self.path)
+            def _key(self) -> str | None:
+                """The request's key, or None (after answering 403)
+                when it resolves outside the served root."""
+                key = urllib.parse.unquote(self.path)
+                real = os.path.realpath(key)
+                if os.path.commonpath([store.root, real]) != store.root:
+                    self._reply(403, b"")
+                    return None
+                return key
 
             def do_GET(self):
                 key = self._key()
+                if key is None:
+                    return
                 with store.mutex:
                     etag = store.etags.get(key)
                     if etag is None or not os.path.exists(key):
@@ -299,6 +313,8 @@ class FakeObjectStore:
                 n = int(self.headers.get("Content-Length", 0))
                 data = self.rfile.read(n)
                 key = self._key()
+                if key is None:
+                    return
                 is_create = self.headers.get("If-None-Match") == "*"
                 with store.mutex:
                     cur = store.etags.get(key)
@@ -330,6 +346,8 @@ class FakeObjectStore:
 
             def do_DELETE(self):
                 key = self._key()
+                if key is None:
+                    return
                 with store.mutex:
                     cur = store.etags.get(key)
                     if cur is None:

@@ -99,7 +99,6 @@ def sync(
             resolve_order=list(sm.resolve_order),
             stats_cols=list(sm.stats_cols),
             bloom_cols=list(sm.bloom_cols),
-            hash_fn=sm.hash_fn,
             bucket_cols=list(sm.bucket_cols) or None,
         )
         seed = source.read(version=sm.version).withColumn("__op", F.lit("U"))

@@ -99,7 +99,6 @@ class Scd2Config:
     op_col: str = "op"
     delete_op: str = "D"
     num_buckets: int = 32
-    hash_fn: str = "murmur3"
     shard_manifest_buckets: int | None = None
     # "tiered" (default): open and closed rows live in SEPARATE
     # per-bucket files. Closed history is physically immutable — an
@@ -463,7 +462,6 @@ class Scd2Engine:
             # open-row reads filter is_current; range reads filter the
             # validity interval — both columns prune at file level
             stats_cols=["is_current", cfg.seq_col],
-            hash_fn=cfg.hash_fn,
             shard_buckets=cfg.shard_manifest_buckets,
         )
 

@@ -6,10 +6,9 @@ manifests, atomic pointer swap, snapshot summary, schema evolution,
 partition/bucket pruning):
 
 * Data layout: ``data/txn-<uuid>/b=<bucket>/*.parquet`` — rows are
-  hash-bucketed by key (``pmod(<hash_fn>(keys), num_buckets)``; the
-  per-table ``Manifest.hash_fn`` is murmur3 — Spark's own shuffle
-  hash, enabling exchange-aligned writes — or the historical
-  xxhash64), the analog of an Iceberg bucket-partitioned table.
+  hash-bucketed by key (``pmod(murmur3(keys), num_buckets)`` — Spark's
+  own shuffle hash, so a shuffle on the keys IS the bucket routing),
+  the analog of an Iceberg bucket-partitioned table.
   Buckets bound the blast radius of copy-on-write merges: an epoch
   touching 12 of 256 buckets rewrites only those 12.
 * Metadata: ``_manifests/v<NNNNNNNN>.json`` lists, per bucket, the
@@ -144,19 +143,6 @@ class Manifest:
     # skipping for that file — never correctness.
     bloom_cols: list[str] = field(default_factory=list)
     file_blooms: dict[str, dict[str, dict]] = field(default_factory=dict)
-    # Bucket hash function: "xxhash64" (the historical default) or
-    # "murmur3" — Spark's Murmur3Hash, the SAME function (seed 42)
-    # Spark's shuffle HashPartitioning uses. A murmur3-bucketed table
-    # earns EXCHANGE-ALIGNED writes: any upstream aggregation keyed on
-    # ``key_cols`` whose shuffle runs with exactly ``num_buckets``
-    # partitions lands every key in the partition that IS its bucket
-    # (``partition_id = pmod(murmur3(keys), n) = bucket``), so the
-    # bucket-local merge needs NO second exchange (see
-    # merge.spj_merge_frame(aligned=True)). This is the table-format
-    # side of Spark's storage-partitioned joins (SPARK-37375): pick the
-    # layout hash to match the engine's partitioner and whole shuffles
-    # disappear. Absent in pre-hash_fn manifests -> xxhash64.
-    hash_fn: str = "xxhash64"
     # Optional bucket-routing columns: a PREFIX-style SUBSET of
     # ``key_cols`` (the Iceberg partition-spec-narrower-than-identity
     # analog). Empty (the default, and every pre-bucket_cols manifest)
@@ -169,8 +155,9 @@ class Manifest:
     # instead of a table scan. Correctness invariant preserved: bucket
     # is a deterministic function of the key (subset ⊆ key), so every
     # merge/change-feed/lookup co-location guarantee still holds.
-    # Exchange-aligned merges refuse bucket_cols tables (the dedup
-    # shuffle hashes the FULL key, which no longer equals the bucket).
+    # The engine's exchange-aligned epoch needs full-key routing (its
+    # dedup shuffle hashes the FULL key); a bucket_cols table merges
+    # through merge_into's routed path instead.
     bucket_cols: list[str] = field(default_factory=list)
 
     @property
@@ -194,7 +181,7 @@ class Manifest:
             "bloom_cols": self.bloom_cols,
             "operation": self.operation,
             "shard_buckets": self.shard_buckets,
-            "hash_fn": self.hash_fn,
+            "hash_fn": BUCKET_HASH,
             "bucket_cols": self.bucket_cols,
         }
 
@@ -216,7 +203,7 @@ class Manifest:
 
     @classmethod
     def from_json(cls, s: str) -> "Manifest":
-        return cls(**json.loads(s))
+        return cls(**_checked_routing(json.loads(s), "<manifest json>"))
 
     # ---------- sharded form ----------
     def shard_index(self, bucket: int) -> int:
@@ -269,6 +256,27 @@ class Manifest:
         self.file_blooms.update(payload.get("file_blooms", {}))
 
 
+# The one bucket hash: Spark's Murmur3Hash (seed 42), the function
+# inside the shuffle's HashPartitioning. Every manifest records it, so a
+# table bucketed any other way is refused at load instead of being read
+# (or written) under the wrong routing.
+BUCKET_HASH = "murmur3"
+
+
+def _checked_routing(d: dict, root: str) -> dict:
+    """``d`` (a manifest's JSON fields) without its ``hash_fn`` entry,
+    raising ValueError unless that entry names :data:`BUCKET_HASH`."""
+    h = d.pop("hash_fn", None)
+    if h != BUCKET_HASH:
+        raise ValueError(
+            f"table at {root} buckets keys with hash_fn={h!r}, not "
+            f"{BUCKET_HASH!r} (a manifest without hash_fn predates it); "
+            f"its files are placed under a routing this version does not "
+            f"compute, so it is neither read nor written"
+        )
+    return d
+
+
 def load_manifest(manifest_dir: str, version: int) -> Manifest:
     """Load a snapshot manifest from disk, resolving shard references
     when the snapshot is sharded — the one loader every consumer
@@ -276,7 +284,7 @@ def load_manifest(manifest_dir: str, version: int) -> Manifest:
     returned Manifest is fully materialized either way, so nothing
     downstream cares which on-disk form it came from."""
     with open(os.path.join(manifest_dir, f"v{version:08d}.json")) as fh:
-        d = json.load(fh)
+        d = _checked_routing(json.load(fh), os.path.dirname(manifest_dir))
     shards = d.pop("shards", None)
     if shards is None:
         return Manifest(**d)
@@ -297,29 +305,20 @@ def load_manifest(manifest_dir: str, version: int) -> Manifest:
     return m
 
 
-BUCKET_HASH_FNS = ("xxhash64", "murmur3")
-
-
 def bucket_expr_for(
     m: "Manifest",
     num_buckets: int | None = None,
     key_cols: list[str] | None = None,
 ):
     """The ONE bucket-assignment expression every writer and reader
-    uses: ``pmod(<hash_fn>(key_cols...), num_buckets)``. Centralized so
-    a table's ``hash_fn`` (see :class:`Manifest`) is honored at every
-    site — a single site computing the wrong hash would silently route
-    keys to the wrong bucket files. ``murmur3`` is ``F.hash`` — the
-    exact expression inside Spark's shuffle HashPartitioning — which is
-    what makes exchange-aligned merges possible; ``xxhash64`` is the
-    historical default (better 64-bit dispersion, but opaque to the
-    partitioner)."""
+    uses: ``pmod(murmur3(key_cols...), num_buckets)``. ``F.hash`` is
+    the exact expression inside Spark's shuffle HashPartitioning, so an
+    uncoalesced shuffle keyed on them with ``num_buckets`` partitions
+    puts bucket b in partition b (the engine's aligned epoch rests on
+    this)."""
     nb = num_buckets or m.num_buckets
     keys = key_cols or m.bucket_cols or m.key_cols
-    cols = [F.col(k) for k in keys]
-    if m.hash_fn == "murmur3":
-        return F.pmod(F.hash(*cols), F.lit(nb)).cast("int")
-    return F.pmod(F.xxhash64(*cols), F.lit(nb)).cast("int")
+    return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(nb)).cast("int")
 
 
 def conform_arrow(t, schema):
@@ -1004,7 +1003,6 @@ class LakeTable:
         stats_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
         shard_buckets: int | None = None,
-        hash_fn: str = "xxhash64",
         bucket_cols: list[str] | None = None,
     ) -> "LakeTable":
         """``resolve_order`` (e.g. ``["commit", "lsn"]``) opts the
@@ -1052,10 +1050,6 @@ class LakeTable:
                 raise ValueError(f"bloom_cols column {c!r} not in schema")
         if shard_buckets is not None and shard_buckets < 1:
             raise ValueError(f"shard_buckets must be >= 1, got {shard_buckets}")
-        if hash_fn not in BUCKET_HASH_FNS:
-            raise ValueError(
-                f"hash_fn must be one of {BUCKET_HASH_FNS}, got {hash_fn!r}"
-            )
         if bucket_cols is not None:
             if not bucket_cols:
                 raise ValueError("bucket_cols must be a non-empty subset of key_cols")
@@ -1080,7 +1074,6 @@ class LakeTable:
             stats_cols=list(stats_cols or ()),
             bloom_cols=list(bloom_cols or ()),
             shard_buckets=shard_buckets,
-            hash_fn=hash_fn,
             bucket_cols=list(bucket_cols or ()),
         )
         t._write_manifest(m, expected_parent=None)
@@ -1389,8 +1382,8 @@ class LakeTable:
         MoR-aware (goes through :meth:`read`, so pending deltas are
         merged and tombstoned keys correctly come back absent) and
         time-travel-aware (``version``). The bucket computation is one
-        tiny Spark job over the key list itself, using the same JVM
-        xxhash64 as the writer — never reimplemented driver-side.
+        tiny Spark job over the key list itself, using the writer's own
+        JVM bucket expression — never reimplemented driver-side.
 
         Beyond bucket pruning, the requested key VALUES are pushed as
         per-column ``IN`` literal predicates (a bounded point-lookup
@@ -1478,11 +1471,11 @@ class LakeTable:
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        routing = [(list(x.key_cols), x.hash_fn, list(x.bucket_cols)) for x in (mo, mn)]
+        routing = [(list(x.key_cols), list(x.bucket_cols)) for x in (mo, mn)]
         if routing[0] != routing[1]:
             raise ValueError(
                 "cannot diff snapshots that route keys differently: (key_cols, "
-                f"hash_fn, bucket_cols) {routing[0]} vs {routing[1]}"
+                f"bucket_cols) {routing[0]} vs {routing[1]}"
             )
         g = math.gcd(mo.num_buckets, mn.num_buckets)
         units = list(range(g)) if buckets is None else buckets
@@ -1763,7 +1756,7 @@ class LakeTable:
             if not isinstance(dt, T.NumericType):
                 raise ValueError(
                     f"zorder_cols must be numeric; {c!r} is {dt.simpleString()} "
-                    "(bin strings first, e.g. via xxhash64)"
+                    "(bin strings first, e.g. via F.hash)"
                 )
         if target_file_rows is not None and target_file_rows < 1:
             raise ValueError("target_file_rows must be >= 1")

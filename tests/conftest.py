@@ -12,7 +12,7 @@ def spark():
 
 
 @pytest.fixture(scope="session", autouse=True)
-def _objectstore_backend_mode():
+def _objectstore_backend_mode(tmp_path_factory):
     """DATAX_TEST_OBJECTSTORE=1 runs the WHOLE suite with commits
     routed through the conditional-put object-store backend instead
     of LocalFS: a session-wide enforcing FakeObjectStore is started
@@ -30,7 +30,7 @@ def _objectstore_backend_mode():
         ObjectStoreBackend,
     )
 
-    srv = FakeObjectStore()
+    srv = FakeObjectStore(str(tmp_path_factory.getbasetemp()))
     os.environ["DATAX_OBJECTSTORE_ENDPOINT"] = srv.endpoint
     lake_io.set_backend(ObjectStoreBackend(srv.endpoint, lease=15.0))
     yield

@@ -1,16 +1,21 @@
-"""Exchange-aligned merges: the one-shuffle fused epoch.
+"""Bucket placement: one hash, one merge route.
 
-A murmur3-bucketed table's bucket id equals Spark's own shuffle
-partition id (``pmod(Murmur3Hash(keys), n)`` is hashpartitioning's
-partitionIdExpression), so the dedup aggregation's exchange doubles as
-the bucket routing and the merge adds no exchange at all. These tests
-pin the identity itself, the engine integration, and the fail-loud
-paths.
+Every table buckets on murmur3, so a row's bucket id equals Spark's own
+shuffle partition id (``pmod(Murmur3Hash(route_cols), n)`` is
+hashpartitioning's partitionIdExpression). The engine's dedup
+aggregation's exchange therefore doubles as the bucket routing (the
+aligned epoch: no exchange of the merge's own), and every other
+``merge_into`` caller is routed by one ``repartitionById(n, bucket)``.
+These tests pin the identity itself, that every write route places each
+row in the file of its murmur3 bucket, and the fail-loud paths.
 """
 
+import json
 import os
+import shutil
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -22,6 +27,7 @@ from datax_spark.engine.replay import (
 from datax_spark.fixtures import ChangelogSpec, write_events
 from datax_spark.lake.merge import merge_into
 from datax_spark.lake.table import LakeTable, bucket_expr_for
+from datax_spark.operators.dedup import lww_dedup
 from datax_spark.oracle import sequential_apply
 
 SPEC = ChangelogSpec(
@@ -49,7 +55,11 @@ def expected(events_root):
 
 
 def _state(eng):
-    df = eng.table().read().withColumn("h", F.sha2("content", 256))
+    return _table_state(eng.table())
+
+
+def _table_state(table):
+    df = table.read().withColumn("h", F.sha2("content", 256))
     for c in COLS:
         if c not in df.columns:
             df = df.withColumn(c, F.lit(None).cast("string"))
@@ -104,42 +114,112 @@ def test_aligned_confs_restored(spark):
     )
 
 
-@pytest.mark.parametrize("strategy", ["spj", "mor"])
-def test_aligned_replay_matches_oracle_and_xxhash64(
-    spark, events_root, expected, tmp_path, strategy
-):
-    """The aligned one-shuffle epoch (murmur3 table, engine default)
-    produces byte-identical final state — per-row sha256 — to the
-    sequential-apply oracle AND to the historical xxhash64 two-exchange
-    plan, through schema evolution and (for mor) compaction."""
-    kw = {"compact_every": 2} if strategy == "mor" else {}
-    al = ReplayEngine(
-        spark,
-        events_root,
-        str(tmp_path / f"t_al_{strategy}"),
-        str(tmp_path / f"m_al_{strategy}"),
-        ReplayConfig(num_buckets=16, merge_strategy=strategy, **kw),
-    )
-    results = al.run()
-    assert al.table().manifest().hash_fn == "murmur3"
-    pd.testing.assert_frame_equal(
-        _state(al).fillna("∅"), expected.fillna("∅"), check_dtype=False
-    )
-    assert sum(r.n_events for r in results) == SPEC.n_events
+def _assert_murmur3_placement(spark, table):
+    """Every row of every data and delta file sits in the bucket
+    ``pmod(murmur3(route cols), num_buckets)`` — computed here with
+    ``F.hash`` itself, not the table's own bucket expression."""
+    m = table.manifest()
+    route = list(m.bucket_cols or m.key_cols)
+    parts = []
+    for files in (m.files, m.delta_files):
+        for b, rel in files.items():
+            for p in rel:
+                part = pq.read_table(os.path.join(table.root, p), columns=route)
+                parts.append(part.to_pandas().assign(file_bucket=int(b)))
+    placed = pd.concat(parts, ignore_index=True)
+    assert len(placed)
+    df = spark.createDataFrame(placed)
+    expect = F.pmod(F.hash(*route), F.lit(m.num_buckets))
+    assert df.filter(expect != F.col("file_bucket")).count() == 0
 
-    xx = ReplayEngine(
-        spark,
-        events_root,
-        str(tmp_path / f"t_xx_{strategy}"),
-        str(tmp_path / f"m_xx_{strategy}"),
-        ReplayConfig(
-            num_buckets=16, merge_strategy=strategy, hash_fn="xxhash64", **kw
-        ),
+
+def _engine(spark, events_root, tmp_path, name, **kw):
+    return ReplayEngine(
+        spark, events_root, str(tmp_path / f"t_{name}"),
+        str(tmp_path / f"m_{name}"), ReplayConfig(num_buckets=16, **kw),
     )
-    xx.run()
-    assert xx.table().manifest().hash_fn == "xxhash64"
+
+
+ROUTES = ["epoch_spj", "epoch_mor", "merge_into", "merge_into_grouped",
+          "bucket_cols", "bootstrap_chunk", "rebucket"]
+
+
+@pytest.mark.parametrize("route", ROUTES)
+def test_bucket_placement_every_route(
+    spark, events_root, expected, tmp_path, route
+):
+    """Each write route places every row in the file of its murmur3
+    bucket, and the final state equals the sequential-apply oracle:
+    the engine's aligned epoch (spj, and mor through compaction),
+    merge_into from an unrouted frame and from a groupBy output already
+    hash-partitioned on the keys into num_buckets partitions (Spark
+    would drop a hash repartition on the keys as redundant, and AQE
+    coalesces that groupBy's shuffle), a table routed on a key subset
+    (bucket_cols), an incremental-bootstrap chunk, and epochs after a
+    rebucket to a non-power-of-two count."""
+    if route in ("epoch_spj", "epoch_mor"):
+        strategy = route.split("_")[1]
+        kw = {"compact_every": 2} if strategy == "mor" else {}
+        eng = _engine(spark, events_root, tmp_path, route, merge_strategy=strategy, **kw)
+        results = eng.run(through_epoch=0)
+        _assert_murmur3_placement(spark, eng.table())
+        results += eng.run()
+        assert sum(r.n_events for r in results) == SPEC.n_events
+        table = eng.table()
+    elif route.startswith("merge_into"):
+        grouped = route == "merge_into_grouped"
+        nb = int(spark.conf.get("spark.sql.shuffle.partitions")) if grouped else 16
+        e0 = spark.read.parquet(f"{events_root}/epoch=0")
+        table = LakeTable.create(
+            spark, str(tmp_path / f"t_{route}"), schema=e0.drop("op").schema,
+            key_cols=["repo", "path"], num_buckets=nb,
+        )
+        for e in range(3):
+            ev = spark.read.parquet(f"{events_root}/epoch={e}")
+            latest = lww_dedup(ev, ["repo", "path"], ["commit", "lsn"])
+            merge_into(table, latest if grouped else latest.repartition(7)).commit()
+            _assert_murmur3_placement(spark, table)
+    elif route == "bucket_cols":
+        e0 = spark.read.parquet(f"{events_root}/epoch=0")
+        LakeTable.create(
+            spark, str(tmp_path / "t_bucket_cols"), schema=e0.drop("op").schema,
+            key_cols=["repo", "path"], bucket_cols=["repo"], num_buckets=16,
+        )
+        eng = _engine(spark, events_root, tmp_path, route)
+        eng.run()
+        table = eng.table()
+        assert table.manifest().bucket_cols == ["repo"]
+    elif route == "bootstrap_chunk":
+        # the tail starts after epoch 0, which the chunk supplies
+        tail = str(tmp_path / "tail_events")
+        shutil.copytree(events_root, tail)
+        shutil.rmtree(f"{tail}/epoch=0")
+        w = SPEC.events_per_epoch - 1
+        eng = _engine(spark, tail, tmp_path, route)
+        eng.begin_incremental_bootstrap(
+            spark.read.parquet(tail).drop("op", "epoch"), w
+        )
+        chunk = sequential_apply(events_root, max_lsn=w).drop(
+            columns=["content_sha256"]
+        )
+        chunk_df = spark.createDataFrame(
+            chunk[["repo", "path", "commit", "lsn", "lang", "content"]]
+        )
+        assert eng.bootstrap_chunk(chunk_df, "c0", w).n_applied == len(chunk)
+        _assert_murmur3_placement(spark, eng.table())
+        eng.run()
+        table = eng.table()
+    else:
+        eng = _engine(spark, events_root, tmp_path, route)
+        eng.run(through_epoch=0)
+        eng.table().rebucket(7)
+        _assert_murmur3_placement(spark, eng.table())
+        eng.run()
+        table = eng.table()
+        assert table.manifest().num_buckets == 7
+    _assert_murmur3_placement(spark, table)
     pd.testing.assert_frame_equal(
-        _state(xx).fillna("∅"), _state(al).fillna("∅"), check_dtype=False
+        _table_state(table).fillna("∅"), expected.fillna("∅"), check_dtype=False
     )
 
 
@@ -159,32 +239,16 @@ def test_aligned_crash_replay_exactly_once(spark, events_root, expected, tmp_pat
     )
 
 
-def test_aligned_requires_murmur3(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("r", "p", "c", 1, "U")], "repo string, path string, commit string, lsn long, op string"
-    )
-    t = LakeTable.create(
-        spark,
-        str(tmp_path / "t_xxt"),
-        schema=df.drop("op").schema,
-        key_cols=["repo", "path"],
-        num_buckets=4,
-        hash_fn="xxhash64",
-    )
-    with pytest.raises(ValueError, match="murmur3"):
-        merge_into(t, df, strategy="spj", aligned=True)
-
-
 def test_aligned_detects_broken_partitioning(spark, events_root, tmp_path):
     """A transform that repartitions destroys the partition==bucket
-    identity; the executor-side assert must fail the epoch loudly
-    (before commit), never write keys to wrong buckets."""
+    identity of the engine's default (aligned) epoch; the executor-side
+    assert must fail the epoch loudly (before commit), never write keys
+    to wrong buckets."""
     from py4j.protocol import Py4JJavaError
 
     cfg = ReplayConfig(
         num_buckets=16,
         transforms=(lambda df: df.repartition(7),),
-        aligned_exchange=True,
     )
     eng = ReplayEngine(
         spark, events_root, str(tmp_path / "t_bad"), str(tmp_path / "m_bad"), cfg
@@ -208,12 +272,11 @@ def test_hash_fn_manifest_roundtrip_and_rebucket(spark, tmp_path):
         schema=df.schema,
         key_cols=["repo", "path"],
         num_buckets=4,
-        hash_fn="murmur3",
     )
     pend = merge_into(t, df.withColumn("op", F.lit("U")))
     pend.commit()
     t2 = LakeTable.load(spark, str(tmp_path / "t_rt"))
-    assert t2.manifest().hash_fn == "murmur3"
+    assert _manifest_json(t2)["hash_fn"] == "murmur3"
     # physical placement actually follows murmur3: every row's file
     # bucket equals pmod(murmur3(keys), nb)
     m = t2.manifest()
@@ -231,18 +294,40 @@ def test_hash_fn_manifest_roundtrip_and_rebucket(spark, tmp_path):
             tb = pq.read_table(os.path.join(t2.root, p), columns=["repo", "path"])
             for r, pth in zip(tb["repo"].to_pylist(), tb["path"].to_pylist()):
                 assert int(got.loc[(r, pth)]) == int(b)
-    # rebucket preserves the hash function
+    # rebucket records the same hash function
     t2.rebucket(8)
-    assert t2.manifest().hash_fn == "murmur3"
+    assert _manifest_json(t2)["hash_fn"] == "murmur3"
     assert t2.manifest().num_buckets == 8
     assert t2.read().count() == 500
 
 
-def test_pre_hash_fn_manifest_defaults_to_xxhash64():
+def _manifest_json(t):
+    path = os.path.join(t.root, "_manifests", f"v{t.current_version():08d}.json")
+    with open(path) as fh:
+        return json.load(fh)
+
+
+@pytest.mark.parametrize("hash_fn", [None, "xxhash64"])
+def test_other_hash_manifest_refused(spark, tmp_path, hash_fn):
+    """A manifest naming another bucket hash, or none (the form written
+    before hash_fn existed), is refused with a ValueError naming the
+    table root and the hash — never read under the wrong routing."""
     from datax_spark.lake.table import Manifest
 
-    m = Manifest.from_json(
-        '{"version": 0, "parent": null, "schema_json": "{\\"type\\":\\"struct\\",\\"fields\\":[]}",'
-        ' "num_buckets": 4, "key_cols": ["k"], "files": {}, "row_counts": {}}'
+    root = str(tmp_path / "t_old")
+    t = LakeTable.create(
+        spark, root, schema=spark.createDataFrame([], "k string").schema,
+        key_cols=["k"], num_buckets=4,
     )
-    assert m.hash_fn == "xxhash64"
+    d = _manifest_json(t)
+    d.pop("hash_fn")
+    if hash_fn is not None:
+        d["hash_fn"] = hash_fn
+    with open(os.path.join(root, "_manifests", "v00000000.json"), "w") as fh:
+        json.dump(d, fh)
+    old = LakeTable.load(spark, root)
+    for call in (old.manifest, old.read):
+        with pytest.raises(ValueError, match=f"table at {root} .*{hash_fn!r}"):
+            call()
+    with pytest.raises(ValueError, match=repr(hash_fn)):
+        Manifest.from_json(json.dumps(d))

@@ -247,3 +247,24 @@ def test_cli_bootstrap_block(spark, events_root, snapshot_df, expected, tmp_path
     # rerunning the same job spec is a no-op load + all-skip replay
     assert main(["--job", str(spec_path)]) in (0, None)
     assert _state(eng).equals(expected)
+
+
+def test_bootstrap_refreshes_attached_views(spark, events_root, snapshot_df, tmp_path):
+    """A view attached through materialized_views is advanced by the
+    bootstrap commit itself, as by every epoch and chunk commit — not
+    left at its pre-bootstrap version until a later run()."""
+    from datax_spark.lake.matview import AggView, AggViewSpec
+    from datax_spark.lake.table import LakeTable
+
+    table = LakeTable.create(
+        spark, str(tmp_path / "table_view"), schema=snapshot_df.schema,
+        key_cols=["repo", "path"], num_buckets=16,
+    )
+    view_root = str(tmp_path / "view")
+    view = AggView.create(spark, view_root, table, AggViewSpec(group_cols=("repo",)))
+    cfg = ReplayConfig(num_buckets=16, materialized_views=(view_root,))
+    eng = _engine(spark, events_root, tmp_path, "view", cfg)
+    assert not eng.bootstrap(snapshot_df, WATERMARK).skipped
+    assert view.synced_version() == table.current_version()
+    n_rows = view.read().agg(F.sum("n_rows")).first()[0]
+    assert n_rows == table.read().count() == snapshot_df.count()

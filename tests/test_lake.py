@@ -116,7 +116,7 @@ def test_compact_preserves_state(spark, tmp_path):
     )
     t = LakeTable.create(spark, str(tmp_path / "t"), schema=df.schema,
                          key_cols=["repo", "path"], num_buckets=2)
-    bucket = F.pmod(F.xxhash64("repo", "path"), F.lit(2)).cast("int")
+    bucket = t.bucket_expr()
     new_files, new_counts = {}, {}
     for b in (0, 1):
         part = df.withColumn("__b", bucket).filter(F.col("__b") == b).drop("__b")

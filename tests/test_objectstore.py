@@ -35,8 +35,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
-def store():
-    srv = FakeObjectStore()
+def store(tmp_path):
+    srv = FakeObjectStore(str(tmp_path))
     yield srv
     srv.close()
 
@@ -77,6 +77,45 @@ def test_conditional_request_semantics(store, tmp_path):
     assert c.delete(key, if_match=e2) is True
     assert c.get(key) is None and not os.path.exists(key)
     assert c.delete(key) is False
+
+
+def test_keys_outside_served_root_are_refused(tmp_path):
+    """The fake writes through to the filesystem at the request path,
+    so a key that escapes its root (``root/../x``, an absolute path
+    elsewhere) must be answered 403 for every verb, touching no file."""
+    import http.client
+    import urllib.parse
+
+    root = tmp_path / "served"
+    root.mkdir()
+    outside = tmp_path / "outside"
+    outside.mkdir()
+    victim = outside / "victim"
+    victim.write_bytes(b"keep")
+    srv = FakeObjectStore(str(root))
+    try:
+        for key in (
+            f"{root}/../outside/victim",
+            f"{root}/../outside/new",
+            str(victim),
+            str(outside / "new"),
+        ):
+            for method in ("PUT", "GET", "DELETE"):
+                conn = http.client.HTTPConnection("127.0.0.1", srv.port, timeout=10)
+                conn.request(method, urllib.parse.quote(key), body=b"evil")
+                resp = conn.getresponse()
+                resp.read()
+                conn.close()
+                assert resp.status == 403, (method, key)
+        assert victim.read_bytes() == b"keep"
+        assert sorted(p.name for p in outside.iterdir()) == ["victim"]
+        assert not srv.etags
+        # keys inside the root are still served
+        c = ObjectStoreClient(srv.endpoint)
+        c.put(f"{root}/sub/../obj", b"ok", if_none_match=True)
+        assert (root / "obj").read_bytes() == b"ok"
+    finally:
+        srv.close()
 
 
 def test_atomic_write_via_backend(store, tmp_path):
@@ -198,7 +237,7 @@ def test_dropped_preconditions_break_mutual_exclusion(tmp_path):
     tests) refuses the same sequence. This is why the backend must
     run against a bucket with conditional-write support, not a bare
     eventually-consistent cache."""
-    srv = FakeObjectStore(drop_preconditions=True)
+    srv = FakeObjectStore(str(tmp_path), drop_preconditions=True)
     try:
         b = ObjectStoreBackend(srv.endpoint, lease=30.0, timeout=2.0)
         root = str(tmp_path / "t")
@@ -220,7 +259,7 @@ def test_clobbered_create_is_detected(tmp_path):
     eventually-consistent cache replaying a stale write) is caught by
     the read-back owner check: the backend raises instead of entering
     the critical section on a lock it does not hold."""
-    srv = FakeObjectStore()
+    srv = FakeObjectStore(str(tmp_path))
     try:
         srv.clobber_creates = json.dumps({
             "owner": "someone-else", "host": "x", "pid": 1,

@@ -66,7 +66,7 @@ def test_lake_merge_widens_midstream(spark, tmp_path, strategy):
                 _f("size", T.IntegerType()), _f("score", T.FloatType())])
     t = LakeTable.create(
         spark, str(tmp_path / "t"), schema, ["repo", "path"],
-        num_buckets=4, hash_fn="murmur3",
+        num_buckets=4,
     )
 
     def batch(rows, types="int"):

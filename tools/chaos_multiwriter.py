@@ -154,7 +154,7 @@ def main() -> None:
             ObjectStoreBackend,
         )
 
-        srv = FakeObjectStore()
+        srv = FakeObjectStore(root)
         worker_env["DATAX_OBJECTSTORE_ENDPOINT"] = srv.endpoint
         os.environ["DATAX_OBJECTSTORE_ENDPOINT"] = srv.endpoint
         lake_io.set_backend(ObjectStoreBackend(srv.endpoint, lease=20.0))

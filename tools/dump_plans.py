@@ -209,11 +209,11 @@ def main() -> None:
         ["MapInArrow", "!Join", "!CartesianProduct", "!Scan parquet"],
     ))
 
-    # 7. Storage-partitioned merge: exactly ONE Exchange (the epoch
-    # batch, grouped by bucket); the current table side never appears
-    # as a Spark scan at all — each bucket task reads its own files
-    from datax_spark.lake.merge import spj_merge_frame
-    from datax_spark.operators.schema_evolution import evolve_schema
+    # 7. Storage-partitioned merge, as merge_into plans it for an
+    # unrouted frame: exactly ONE Exchange (the epoch batch routed to
+    # its buckets); the current table side never appears as a Spark
+    # scan at all — each bucket task reads its own files
+    from datax_spark.lake.merge import merge_frame
 
     sroot = tempfile.mkdtemp(prefix="dump_plans_spj_")
     st = LakeTable.create(
@@ -223,11 +223,7 @@ def main() -> None:
     )
     merge_into(st, spark.createDataFrame([("a", 1, "U")], "k string, v long, op string")).commit()
     upd2 = spark.createDataFrame([("a", 2, "U"), ("b", 3, "U")], "k string, v long, op string")
-    upd2 = upd2.withColumn("__b", st.bucket_expr())
-    spj = spj_merge_frame(
-        st, upd2, "op", "D", evolve_schema(st.manifest().schema, upd2.drop("op", "__b").schema),
-        st.new_txn_dir(),
-    )
+    spj, _ = merge_frame(st, st.manifest(), upd2)
     import re
 
     spj_plan = plan_of(spj)
@@ -235,11 +231,13 @@ def main() -> None:
     # the detail headers, one per physical Exchange
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", spj_plan))
     sections.append((
-        "Storage-partitioned merge (lake.merge.spj_merge_frame)",
+        "Storage-partitioned merge (lake.merge.merge_into)",
         "The CoW merge without the two table-sized exchanges: the only "
         f"Exchange in the plan (counted: {n_exchanges}, asserted == 1) is "
-        "the epoch batch hashing to its buckets for FlatMapGroupsInPandas; "
-        "the current snapshot is read executor-side by each bucket's task "
+        "merge_into's repartitionById(num_buckets, __b) of the epoch "
+        "batch — partition b holds exactly bucket b — feeding one "
+        "MapInPandas task per bucket; the "
+        "current snapshot is read executor-side by each bucket's task "
         "(Arrow scan of exactly its co-located files — the same guarantee "
         "Spark's storage-partitioned joins exploit on bucket tables), so "
         "no plan node scales with TABLE size, only with batch size. "
@@ -247,7 +245,7 @@ def main() -> None:
         "buckets / local[32]: 323k ev/s vs 278k ev/s (1.16x), "
         "byte-identical final state (tools/scale_check.py ... spj).",
         spj_plan,
-        ["FlatMapGroupsInPandas", "__b"],
+        ["MapInPandas", "!FlatMapGroupsInPandas", "shufflepartitionidpassthrough("],
     ))
     if n_exchanges != 1:
         sections.append((
@@ -258,17 +256,17 @@ def main() -> None:
 
     # 7b. EXCHANGE-ALIGNED fused epoch: dedup agg + merge in a plan
     # with exactly ONE Exchange total — the agg's shuffle, pinned to
-    # num_buckets partitions on a murmur3-bucketed table, IS the
-    # bucket routing; the merge is MapInPandas with no exchange of its
-    # own (partition_id == pmod(murmur3(keys), nb) == bucket).
+    # num_buckets partitions, IS the bucket routing; the merge is
+    # MapInPandas with no exchange of its own
+    # (partition_id == pmod(murmur3(keys), nb) == bucket).
     from datax_spark.engine.replay import aligned_shuffle_confs
-    from datax_spark.operators.dedup import lww_dedup_stats
+    from datax_spark.operators.dedup import STAT_COLS, lww_dedup_stats
 
     aroot = tempfile.mkdtemp(prefix="dump_plans_aligned_")
     at = LakeTable.create(
         spark, aroot,
         schema=spark.createDataFrame([], "k string, v long, c long").schema,
-        key_cols=["k"], num_buckets=4, hash_fn="murmur3",
+        key_cols=["k"], num_buckets=4,
     )
     raw = spark.createDataFrame(
         [("a", 1, 1, "U"), ("a", 2, 2, "U"), ("b", 3, 1, "U")],
@@ -278,18 +276,13 @@ def main() -> None:
         add = lww_dedup_stats(
             raw, keys=["k"], order_cols=["c"], lsn_col="c", content_col=None
         )
-        add = add.withColumn("__b", at.bucket_expr())
-        from datax_spark.operators.dedup import STAT_COLS as _SC
-
-        al = spj_merge_frame(
-            at, add, "op", "D",
-            evolve_schema(at.manifest().schema, add.drop("op", "__b", *_SC).schema),
-            at.new_txn_dir(), stat_cols=_SC, aligned=True,
+        al, _ = merge_frame(
+            at, at.manifest(), add, stat_cols=STAT_COLS, aligned=True
         )
         al_plan = plan_of(al)
     n_al_exchanges = len(re.findall(r"\(\d+\) Exchange", al_plan))
     sections.append((
-        "Exchange-aligned fused epoch (hash_fn=murmur3, aligned=True)",
+        "Exchange-aligned fused epoch (merge_into aligned=True)",
         "The WHOLE epoch — LWW dedup with fused lineage stats AND the "
         f"per-bucket merge — in ONE exchange (counted: {n_al_exchanges}, "
         "asserted == 1): the dedup aggregation's own shuffle, pinned to "
@@ -297,12 +290,11 @@ def main() -> None:
         "in the partition that IS its murmur3 bucket, so the merge runs "
         "as MapInPandas straight over the agg output. The map-side "
         "partial (partial_max_by) is preserved below the exchange. Vs "
-        "the two-exchange fused plan this deletes a full exchange of "
-        "the deduped epoch batch; interleaved best-of A/B at 8M events "
-        "/ 128 buckets / local[32] with pure-CPU controls: aligned "
+        "routing the deduped batch again (the plan above) this deletes a "
+        "full exchange of the epoch batch; interleaved best-of A/B at 8M "
+        "events / 128 buckets / local[32] with pure-CPU controls: aligned "
         "376-716k ev/s vs two-exchange 300-528k ev/s across two noise "
-        "windows (tools/scale_check.py ... murmur3|xxhash64), "
-        "sha256-frame-equal either way.",
+        "windows (BENCH/SCALE.md), sha256-frame-equal either way.",
         al_plan,
         ["MapInPandas", "partial_max_by", "!FlatMapGroupsInPandas"],
     ))

@@ -11,11 +11,8 @@ bucketed CoW merge, schema evolution and exactly-once commits can be
 value-checked at sizes the pandas oracle cannot reach.
 
 Usage: python tools/scale_check.py [n_events] [epochs] [cpus] [merge_strategy]
-                                   [start_buckets] [target_bucket_rows] [hash_fn]
+                                   [start_buckets] [target_bucket_rows]
 
-``hash_fn`` (default murmur3 = the exchange-aligned one-shuffle epoch;
-xxhash64 = the historical two-exchange plan) A/Bs the aligned merge at
-scale under the same sha256 set-equality gate.
 Prints one JSON line with throughput + verification result.
 
 The optional 5th/6th args exercise ADAPTIVE bucket-count evolution at
@@ -41,13 +38,17 @@ from tools import verify_existing as oracle  # noqa: E402
 
 
 def main() -> None:
+    if len(sys.argv) > 7:
+        sys.exit(
+            "usage: scale_check.py [n_events] [epochs] [cpus] "
+            "[merge_strategy] [start_buckets] [target_bucket_rows]"
+        )
     n_events = int(sys.argv[1]) if len(sys.argv) > 1 else 16_000_000
     n_epochs = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 32
     merge_strategy = sys.argv[4] if len(sys.argv) > 4 else "spj"
     start_buckets = int(sys.argv[5]) if len(sys.argv) > 5 else 128
     target_bucket_rows = (int(sys.argv[6]) or None) if len(sys.argv) > 6 else None
-    hash_fn = sys.argv[7] if len(sys.argv) > 7 else "murmur3"
 
     from datax_spark.engine.replay import ReplayConfig, ReplayEngine
     from datax_spark.fixtures.changelog import ChangelogSpec, write_events
@@ -90,7 +91,6 @@ def main() -> None:
                 num_buckets=start_buckets,
                 merge_strategy=merge_strategy,
                 target_bucket_rows=target_bucket_rows,
-                hash_fn=hash_fn,
                 # DATAX_SCALE_BLOOM=repo,path A/Bs the commit-time
                 # per-file bloom harvest cost at scale
                 bloom_cols=tuple(
@@ -156,7 +156,6 @@ def main() -> None:
                     "n_epochs": n_epochs,
                     "cpus": cpus,
                     "merge_strategy": merge_strategy,
-                    "hash_fn": hash_fn,
                     "replay_sec": round(replay_sec, 2),
                     "events_per_sec": round(n_events / replay_sec, 1),
                     **out,
