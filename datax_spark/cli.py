@@ -88,6 +88,37 @@ import json
 import sys
 
 
+# the keys the replay/tail block reads; any other key is refused, so a
+# typo or a removed setting cannot silently run with the defaults
+_ENGINE_KEYS = frozenset({
+    "events_root", "table_root", "metrics_root", "speed", "keys",
+    "order_cols", "num_buckets", "salt_buckets", "max_events_per_sec",
+    "max_bytes_per_sec", "target_bucket_rows", "max_buckets",
+    "merge_strategy", "stats_cols", "bloom_cols", "materialized_views",
+    "join_views", "view_refresh_every",
+})
+_BLOCK_KEYS = {
+    "replay": _ENGINE_KEYS | {
+        "streaming", "checkpoint_root", "max_files_per_trigger",
+        "bootstrap", "through_epoch",
+    },
+    "tail": _ENGINE_KEYS | {
+        "bootstrap_servers", "topic", "long_cols", "value_format",
+        "message_format", "max_rounds",
+    },
+}
+
+
+def _check_block_keys(spec: dict) -> None:
+    for block, known in _BLOCK_KEYS.items():
+        unknown = sorted(set(spec.get(block) or ()) - known)
+        if unknown:
+            raise ValueError(
+                f"unknown key(s) in the {block!r} block: {', '.join(unknown)} "
+                f"(known: {', '.join(sorted(known))})"
+            )
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="datax_spark")
     ap.add_argument("--job", required=True, help="path to a JSON job spec")
@@ -97,6 +128,7 @@ def main(argv: list[str] | None = None) -> int:
 
     with open(args.job) as fh:
         spec = json.load(fh)
+    _check_block_keys(spec)
 
     from datax_spark.session import get_spark
 

@@ -341,7 +341,6 @@ def compact_closed(
     open file is untouched). Returns the number of buckets rewritten.
     Layout-only: the readable state is provably unchanged.
     """
-    import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -364,11 +363,10 @@ def compact_closed(
         return 0
     txn = table.new_txn_dir()
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(b: int) -> pa.Table:
         import os as _os
         import uuid as _uuid
 
-        b = int(pdf["b"].iloc[0])
         parts = [
             conform_arrow(pq.read_table(f), schema_pa) for f in todo[b]
         ]
@@ -377,16 +375,18 @@ def compact_closed(
         tmp = f"{final}.{_uuid.uuid4().hex}.tmp"
         pq.write_table(t, tmp)
         _os.rename(tmp, final)
-        return pd.DataFrame([{"b": b, "file": final, "rows": t.num_rows}])
+        return pa.table({
+            "b": pa.array([b], pa.int32()),
+            "file": [final],
+            "rows": pa.array([t.num_rows], pa.int64()),
+        })
 
-    spark = table.spark
-    res = (
-        spark.createDataFrame([(b,) for b in todo], "b int")
-        .repartition(len(todo), "b")
-        .groupBy("b")
-        .applyInPandas(fold, "b int, file string, rows long")
-        .collect()
-    )
+    out = T.StructType([
+        T.StructField("b", T.IntegerType()),
+        T.StructField("file", T.StringType()),
+        T.StructField("rows", T.LongType()),
+    ])
+    res = table._map_units(sorted(todo), fold, out).collect()
     new_files = {}
     new_counts = {}
     for r in res:

@@ -337,6 +337,29 @@ def conform_arrow(t, schema):
     return pa.Table.from_arrays(arrays, schema=schema)
 
 
+def rows_to_arrow(rows: list[tuple], schema: T.StructType):
+    """Positional Python rows -> a pyarrow table typed by
+    ``to_arrow_schema(schema)``. Each value first goes through its
+    Spark type's ``toInternal`` — the conversion
+    ``createDataFrame(list)`` applies — so a naive timestamp keeps its
+    local-time meaning and a date or decimal keeps its exact value.
+    ``spark.createDataFrame`` plans such a table as a ``LocalRelation``:
+    no RDD and no job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    n = len(schema.fields)
+    for r in rows:
+        if len(r) != n:
+            raise ValueError(f"row {r!r} has {len(r)} values, expected {n} ({schema.names})")
+    pa_schema = to_arrow_schema(schema)
+    arrays = [
+        pa.array([f.dataType.toInternal(r[i]) for r in rows], type=pa_schema.field(i).type)
+        for i, f in enumerate(schema.fields)
+    ]
+    return pa.Table.from_arrays(arrays, schema=pa_schema)
+
+
 def composite_key_array(tbl, keys: list[str]):
     """Injective composite-key encoding over Arrow key columns, one
     kernel for every consumer (pandas elementwise concat is
@@ -345,17 +368,29 @@ def composite_key_array(tbl, keys: list[str]):
     collide — a plain separator would make ("r\\x00", "a") and
     ("r", "\\x00a") encode identically. Keys must be non-null (they
     are the table's primary key; the replay dirty gate enforces it).
+    The encoding is binary: a binary key part is taken as its bytes
+    (it need not be UTF-8), a timestamp part as its microseconds since
+    the epoch (a parquet read gives ``timestamp[us, UTC]``, a pandas
+    batch ``timestamp[ns]``: their string casts differ), every other
+    part as its string cast.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    def as_bytes(a):
+        t = a.type
+        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+            return pc.cast(a, pa.binary())
+        if pa.types.is_timestamp(t):
+            a = pc.cast(pc.cast(a, pa.timestamp("us", t.tz)), pa.int64())
+        return pc.cast(pc.cast(a, pa.string()), pa.binary())
+
+    colon, semi = pa.scalar(b":", pa.binary()), pa.scalar(b";", pa.binary())
     kc = None
     for k in keys:
-        s = pc.cast(tbl.column(k), pa.string())
-        part = pc.binary_join_element_wise(
-            pc.cast(pc.binary_length(s), pa.string()), s, ":"
-        )
-        kc = part if kc is None else pc.binary_join_element_wise(kc, part, ";")
+        s = as_bytes(tbl.column(k))
+        part = pc.binary_join_element_wise(as_bytes(pc.binary_length(s)), s, colon)
+        kc = part if kc is None else pc.binary_join_element_wise(kc, part, semi)
     return kc
 
 
@@ -853,6 +888,27 @@ def _file_may_match(
     return True
 
 
+def _arrow_filter(f: tuple, dtype: T.DataType) -> tuple:
+    """A ``(col, op, value)`` conjunct as pyarrow's parquet filters take
+    it: parquet holds a Spark timestamp as ``timestamp[us, UTC]``,
+    which pyarrow will not compare with a naive datetime, so timestamp
+    values become the aware UTC instant Spark gives them (a naive one
+    is local time, as in ``createDataFrame``)."""
+    import datetime as _dt
+
+    if not isinstance(dtype, T.TimestampType):
+        return f
+    epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+    def conv(v):
+        if not isinstance(v, _dt.datetime):
+            return v
+        return epoch + _dt.timedelta(microseconds=dtype.toInternal(v))
+
+    col, op, val = f
+    return (col, op, [conv(v) for v in val] if op == "in" else conv(val))
+
+
 def _filters_to_column(filters: list[tuple]):
     """The same conjuncts as a Spark Column, applied to the scan so
     ``read(filters=...)`` is exactly ``read().filter(...)`` no matter
@@ -1267,7 +1323,7 @@ class LakeTable:
             # key columns exist in every file (they predate any schema
             # evolution) and these ops map 1:1 onto pyarrow's filters
             key_safe = [
-                f
+                _arrow_filter(f, m.schema[f[0]].dataType)
                 for f in filters
                 if f[0] in m.key_cols
                 and f[1] in ("=", "==", "<", "<=", ">", ">=", "in")
@@ -1353,22 +1409,24 @@ class LakeTable:
 
     def _map_units(self, unit_ids: list[int], step, schema: T.StructType) -> DataFrame:
         """Run ``step(unit_id) -> pa.Table`` once per unit id inside
-        executor tasks: the ONLY thing that enters a Spark exchange is
-        the tiny id list (repartitioned one id per task), then each
-        task reads its units' files itself (``mapInArrow``, zero
+        executor tasks, exactly one unit per task: ``spark.range(0, n,
+        1, n)`` gives task i the single row i, and the task runs
+        ``step(unit_ids[i])`` from its closure. No exchange, no RDD —
+        each task reads its unit's files itself (``mapInArrow``, zero
         pandas, so column types survive bit-exactly)."""
         if not unit_ids:
             return self.spark.createDataFrame([], schema)
+        units = list(unit_ids)
 
         def run(batches):
             for batch in batches:
-                for u in batch.column(0).to_pylist():
-                    res = step(u)
+                for i in batch.column(0).to_pylist():
+                    res = step(units[i])
                     if res.num_rows:
                         yield from res.to_batches()
 
-        ul = self.spark.createDataFrame([(u,) for u in unit_ids], "unit int")
-        return ul.repartition(len(unit_ids), "unit").mapInArrow(run, schema=schema)
+        n = len(units)
+        return self.spark.range(0, n, 1, n).mapInArrow(run, schema=schema)
 
     def lookup(self, key_values: list[tuple], version: int | None = None) -> DataFrame:
         """Keyed point read: the current rows for an explicit set of
@@ -1381,9 +1439,12 @@ class LakeTable:
 
         MoR-aware (goes through :meth:`read`, so pending deltas are
         merged and tombstoned keys correctly come back absent) and
-        time-travel-aware (``version``). The bucket computation is one
-        tiny Spark job over the key list itself, using the writer's own
-        JVM bucket expression — never reimplemented driver-side.
+        time-travel-aware (``version``). The key list becomes a typed
+        Arrow table (:func:`rows_to_arrow`), which Spark plans as a
+        ``LocalRelation``: the writer's own JVM bucket expression
+        computes the bucket ids over it on the driver (never
+        reimplemented in Python) and the semi-join broadcasts it, both
+        without a Spark job. Building the lookup frame launches none.
 
         Beyond bucket pruning, the requested key VALUES are pushed as
         per-column ``IN`` literal predicates (a bounded point-lookup
@@ -1401,11 +1462,10 @@ class LakeTable:
         kschema = T.StructType([by_name[k] for k in m.key_cols])
         if not key_values:
             return self.spark.createDataFrame([], m.schema)
-        kdf = self.spark.createDataFrame(key_values, kschema)
-        bexpr = bucket_expr_for(m)
-        bs = sorted(
-            r[0] for r in kdf.select(bexpr.alias("__b")).distinct().collect()
-        )  # bounded by |key_values| — a point-lookup list, not data
+        kdf = self.spark.createDataFrame(rows_to_arrow(key_values, kschema), kschema)
+        # a projection of a LocalRelation folds into it: collected on
+        # the driver, no job; bounded by |key_values|
+        bs = sorted({r[0] for r in kdf.select(bucket_expr_for(m)).collect()})
         kflt = [
             (k, "in", sorted({kv[i] for kv in key_values}))
             for i, k in enumerate(m.key_cols)
@@ -1438,8 +1498,8 @@ class LakeTable:
         Physical shape: no join and no exchange of table data. Both
         snapshots share one key hash, so each task diffs one bucket
         with :func:`unit_changes_arrow` (the kernel the replica repair
-        and the ``lake_changes`` stream run too) and Spark shuffles
-        only the bucket-id list.
+        and the ``lake_changes`` stream run too), one bucket per task
+        (:meth:`_map_units`).
 
         Bucket-pruned from the manifests alone: data files are
         immutable, so a bucket whose base and delta file lists are
@@ -1788,8 +1848,11 @@ class LakeTable:
         # already satisfy it is superseded by the write's own Sort —
         # silently discarding the data ordering. With __b leading, the
         # requirement is a satisfied prefix and the sort survives.
+        # task i writes bucket todo[i] and only it (a hash repartition
+        # of the ids would put several buckets in one task)
+        pos = _F.array_position(_F.array(*[_F.lit(b) for b in todo]), _F.col("__b")) - 1
         writer = (
-            df.repartition(len(todo), _F.col("__b"))
+            df.repartitionById(len(todo), pos.cast("int"))
             .sortWithinPartitions("__b", *sort_names)
             .write.mode("overwrite")
         )
@@ -1880,7 +1943,6 @@ class LakeTable:
         import re as _re
 
         import pyarrow.parquet as _pq
-        from pyspark.sql import functions as _F
 
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
@@ -1892,7 +1954,7 @@ class LakeTable:
         (
             self.read()
             .withColumn("__b", bucket)
-            .repartition(new_num_buckets, _F.col("__b"))
+            .repartitionById(new_num_buckets, "__b")
             # __b leads so the partitioned write's required ordering is
             # a satisfied prefix — otherwise the key sort is superseded
             .sortWithinPartitions("__b", *m.key_cols)

@@ -45,6 +45,8 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datax_spark.sources.readers import task_frame
+
 # ---- protocol constants (native protocol v4 spec)
 VERSION_REQ = 0x04
 VERSION_RESP = 0x84
@@ -378,9 +380,7 @@ def cassandra_read(spark: SparkSession, p: dict) -> DataFrame:
         (i, "" if lo is None else str(lo), "" if hi is None else str(hi))
         for i, (lo, hi) in enumerate(tasks)
     ]
-    tasks_df = spark.createDataFrame(
-        task_rows, "task_id int, lo string, hi string"
-    ).repartition(len(task_rows), "task_id")
+    tasks_df = task_frame(spark, task_rows, "task_id int, lo string, hi string")
 
     def scan(batches):
         import pandas as pd

@@ -40,6 +40,8 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datax_spark.sources.readers import task_frame
+
 
 class ClickHouseError(IOError):
     pass
@@ -309,9 +311,9 @@ def clickhouse_read(spark: SparkSession, p: dict) -> DataFrame:
     if where:
         conds = [f"({c}) AND ({where})" for c in conds]
 
-    tasks_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(conds)], "task_id int, cond string"
-    ).repartition(len(conds), "task_id")
+    tasks_df = task_frame(
+        spark, [(i, c) for i, c in enumerate(conds)], "task_id int, cond string"
+    )
 
     def scan(batches):
         import datetime as _dt

@@ -61,6 +61,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datax_spark.sources.readers import task_frame
+
 _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 MIME = "application/json"
 
@@ -394,9 +396,9 @@ def gdb_read(spark: SparkSession, p: dict) -> DataFrame:
         f"`{c['name']}` {_SPARK_TYPES[c.get('type', 'string').lower()]}"
         for c in columns
     )
-    labels_df = spark.createDataFrame(
-        [(i, l) for i, l in enumerate(labels)], "task_id int, label string"
-    ).repartition(len(labels), "task_id")
+    labels_df = task_frame(
+        spark, [(i, l) for i, l in enumerate(labels)], "task_id int, label string"
+    )
     mapper = _mk_mapper(columns)
     names = [c["name"] for c in columns]
     rd_user, rd_pwd = p.get("username"), p.get("password")

@@ -56,6 +56,8 @@ import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datax_spark.sources.readers import task_frame
+
 ROWKEY_FLAG = "rowkey"  # Constant.ROWKEY_FLAG
 COLUMN_TYPES = (
     "boolean", "short", "int", "long", "float", "double",
@@ -318,9 +320,7 @@ def hbase_read(spark: SparkSession, p: dict) -> DataFrame:
         raise ValueError(f"unsupported hbasereader mode {mode!r} (ModeType)")
 
     split_rows = [(i, _b64(s), _b64(e)) for i, (s, e) in enumerate(splits)]
-    splits_df = spark.createDataFrame(
-        split_rows, "split_id int, start string, stop string"
-    ).repartition(len(split_rows), "split_id")
+    splits_df = task_frame(spark, split_rows, "split_id int, start string, stop string")
 
     def scan_partition(batches):
         import pandas as pd

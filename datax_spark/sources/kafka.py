@@ -61,6 +61,8 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datax_spark.sources.readers import task_frame
+
 API_PRODUCE = 0
 API_FETCH = 1
 API_LIST_OFFSETS = 2
@@ -823,9 +825,9 @@ def kafka_read(spark: SparkSession, p: dict) -> DataFrame:
     finally:
         conn.close()
 
-    tasks_df = spark.createDataFrame(
-        tasks, "partition int, host string, port int, start long, end long"
-    ).repartition(len(tasks), "partition")
+    tasks_df = task_frame(
+        spark, tasks, "partition int, host string, port int, start long, end long"
+    )
     schema = ", ".join(f"`{c}` string" for c in columns)
 
     def scan(batches):

@@ -56,6 +56,8 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datax_spark.sources.readers import task_frame
+
 # ------------------------------------------------------------------ BSON
 
 _UTC = _dt.timezone.utc
@@ -490,9 +492,7 @@ def mongo_read(spark: SparkSession, p: dict) -> DataFrame:
          json.dumps(hi if isinstance(hi, (str, int, float)) else str(hi)))
         for i, (lo, hi) in enumerate(ranges)
     ]
-    ranges_df = spark.createDataFrame(
-        range_rows, "range_id int, lo string, hi string"
-    ).repartition(len(range_rows), "range_id")
+    ranges_df = task_frame(spark, range_rows, "range_id int, lo string, hi string")
 
     def scan(batches):
         import pandas as pd

@@ -20,8 +20,10 @@ Transport: the documented wire format — 3-byte-length/1-byte-seq
 packets, v10 handshake with ``mysql_native_password``
 (SHA1(pwd) XOR SHA1(scramble + SHA1(SHA1(pwd)))) AND
 ``caching_sha2_password`` (MySQL 8+'s default): SHA256 fast-path
-scramble, and on cache miss the full-auth exchange — RSA public key
-request + RSA-OAEP(password ⊕ nonce) — plus AuthSwitchRequest
+scramble, and on cache miss the full-auth exchange — RSA-OAEP(password
+⊕ nonce) to a pinned ``serverRsaPublicKey`` PEM, or to the key a public
+key request returns when ``allowPublicKeyRetrieval: true``, refused
+otherwise — plus AuthSwitchRequest
 handling between the two. COM_QUERY text protocol: OK/ERR/resultset
 with lenenc integers/strings and 0xFB NULLs. Drivable by an
 in-process fake speaking the same frames in tests.
@@ -37,6 +39,8 @@ import socket
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
+
+from datax_spark.sources.readers import task_frame
 
 CLIENT_LONG_PASSWORD = 0x00000001
 CLIENT_PROTOCOL_41 = 0x00000200
@@ -122,11 +126,23 @@ class MySqlConnection:
 
     def __init__(self, host: str, port: int, user: str,
                  password: str = "", database: str | None = None,
-                 timeout: float = 30.0):
+                 timeout: float = 30.0,
+                 allow_public_key_retrieval: bool = False,
+                 server_rsa_public_key: str | None = None):
+        # caching_sha2 full authentication encrypts the password to the
+        # server's RSA key; fetched over this unauthenticated channel, a
+        # man in the middle can substitute its own, so fetching needs an
+        # explicit opt-in and a pinned key (a PEM path) needs none
+        self.allow_public_key_retrieval = allow_public_key_retrieval
+        self.server_rsa_public_key = server_rsa_public_key
         self.sock = socket.create_connection((host, port), timeout=timeout)
         self.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._seq = 0
-        self._handshake(user, password, database)
+        try:
+            self._handshake(user, password, database)
+        except BaseException:
+            self.sock.close()
+            raise
 
     def close(self):
         try:
@@ -263,8 +279,11 @@ class MySqlConnection:
 
     def _caching_sha2_full_auth(self, password: str,
                                 nonce: bytes) -> None:
-        """Cache-miss path without TLS: request the server's RSA
-        public key (0x02), then send RSA-OAEP(password ⊕ nonce)."""
+        """Cache-miss path without TLS: send RSA-OAEP(password ⊕ nonce)
+        to the pinned ``server_rsa_public_key``, or — only with
+        ``allow_public_key_retrieval`` — to the key the server returns
+        for a public key request (0x02). With neither, refuse before
+        asking for the key."""
         from datax_spark.sources.hostkeys import (
             parse_spki_pem,
             rsa_oaep_encrypt,
@@ -273,14 +292,26 @@ class MySqlConnection:
         if password == "":
             self._send_packet(b"\x00")  # empty password: single NUL
             return
-        self._send_packet(b"\x02")  # public key request
-        b = self._read_packet()
-        if b[0] == 0xFF:
-            raise self._err(b)
-        if b[0] != 0x01:
-            raise IOError(
-                f"expected AuthMoreData with RSA key, got 0x{b[0]:02x}")
-        e_pub, n_pub = parse_spki_pem(b[1:])
+        if self.server_rsa_public_key:
+            with open(self.server_rsa_public_key, "rb") as fh:
+                e_pub, n_pub = parse_spki_pem(fh.read())
+        elif self.allow_public_key_retrieval:
+            self._send_packet(b"\x02")  # public key request
+            b = self._read_packet()
+            if b[0] == 0xFF:
+                raise self._err(b)
+            if b[0] != 0x01:
+                raise IOError(
+                    f"expected AuthMoreData with RSA key, got 0x{b[0]:02x}")
+            e_pub, n_pub = parse_spki_pem(b[1:])
+        else:
+            raise MySqlError(
+                2061,
+                "caching_sha2_password full authentication needs the "
+                "server's RSA public key: pin it with serverRsaPublicKey "
+                "(a PEM file path) or allow fetching it over this "
+                "unauthenticated connection with allowPublicKeyRetrieval: "
+                "true")
         pwd = password.encode() + b"\x00"
         obfuscated = bytes(
             c ^ nonce[i % len(nonce)] for i, c in enumerate(pwd))
@@ -414,6 +445,8 @@ def _conn_of(p: dict) -> dict:
         "user": str(p.get("username", p.get("user", "root"))),
         "password": str(p.get("password") or ""),
         "database": p.get("database", p.get("dbName")),
+        "allow_public_key_retrieval": str(p.get("allowPublicKeyRetrieval")).lower() == "true",
+        "server_rsa_public_key": p.get("serverRsaPublicKey"),
     }
 
 
@@ -555,9 +588,9 @@ def mysql_read(spark: SparkSession, p: dict) -> DataFrame:
             raise ValueError(f"column {n!r}: unsupported MySQL type 0x{tc:02x}")
         spark_types.append(st)
     schema = ", ".join(f"`{n}` {t}" for n, t in zip(names, spark_types))
-    tasks_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(conds)], "task_id int, cond string"
-    ).repartition(len(conds), "task_id")
+    tasks_df = task_frame(
+        spark, [(i, c) for i, c in enumerate(conds)], "task_id int, cond string"
+    )
 
     def scan(batches):
         import datetime as _dt

@@ -83,6 +83,8 @@ from email.utils import formatdate
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datax_spark.sources.readers import task_frame
+
 # ODPS type name -> Spark DDL type (the slice of the matrix the
 # Tunnel Arrow mode carries natively; ReaderProxy's full matrix
 # collapses onto these storage classes).
@@ -318,10 +320,7 @@ def odps_read(spark: SparkSession, p: dict) -> DataFrame:
     if not slices:  # successOnNoPartition: empty frame, right schema
         return spark.createDataFrame([], out_schema)
 
-    sl = spark.createDataFrame(
-        slices, "part string, session string, start long, cnt long"
-    )
-    sl = sl.repartition(len(slices))
+    sl = task_frame(spark, slices, "part string, session string, start long, cnt long")
     conf = dict(p)
 
     def fetch(batches):

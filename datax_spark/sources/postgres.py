@@ -38,6 +38,8 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datax_spark.sources.readers import task_frame
+
 
 class PgError(IOError):
     def __init__(self, fields: dict[str, str]):
@@ -528,9 +530,9 @@ def pg_read(spark: SparkSession, p: dict) -> DataFrame:
     names = [n for n, _ in cols]
     spark_types = [oid_to_spark_type(t) for _, t in cols]
     schema = ", ".join(f"`{n}` {t}" for n, t in zip(names, spark_types))
-    tasks_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(conds)], "task_id int, cond string"
-    ).repartition(len(conds), "task_id")
+    tasks_df = task_frame(
+        spark, [(i, c) for i, c in enumerate(conds)], "task_id int, cond string"
+    )
 
     def scan(batches):
         import datetime as _dt

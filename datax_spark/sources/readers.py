@@ -30,6 +30,27 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def task_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A reader's split list as a DataFrame whose partition i holds
+    exactly ``rows[i]``, so every split runs in a task of its own.
+    ``repartition(n, col)`` hashes the column and puts several splits
+    in one task (run one after another); here the rows travel as a
+    typed Arrow ``LocalRelation`` and ``repartitionById`` on each row's
+    position places them. ``schema`` is a DDL string."""
+    from datax_spark.lake.table import rows_to_arrow
+
+    struct = T.StructType.fromDDL(schema)
+    if not rows:
+        return spark.createDataFrame([], struct)
+    pos = T.StructType([T.StructField("__task", T.IntegerType(), False), *struct.fields])
+    tbl = rows_to_arrow([(i, *r) for i, r in enumerate(rows)], pos)
+    return (
+        spark.createDataFrame(tbl, pos)
+        .repartitionById(len(rows), "__task")
+        .drop("__task")
+    )
+
+
 def jdbc_split_predicates(
     split_pk: str,
     lower: int,

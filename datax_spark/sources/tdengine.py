@@ -73,6 +73,8 @@ from datetime import datetime
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from datax_spark.sources.readers import task_frame
+
 DATETIME_FORMAT = "%Y-%m-%d %H:%M:%S"  # TDengineReader.DATETIME_FORMAT
 LONG_MIN = -(2 ** 63)
 DEFAULT_BATCH_SIZE = 1000  # Constants.DEFAULT_BATCH_SIZE
@@ -202,8 +204,7 @@ def tdengine_read(spark: SparkSession, p: dict) -> DataFrame:
             meta = [by_name[c.lower()] for c in cols]
         schema, ts_cols = _schema_from_meta(meta)
 
-    sl = spark.createDataFrame(pairs, "url string, sql string")
-    sl = sl.repartition(len(pairs))
+    sl = task_frame(spark, pairs, "url string, sql string")
     conf = dict(p)
 
     def fetch(batches):

@@ -43,6 +43,7 @@ import shutil
 from pyspark.sql import SparkSession
 
 from datax_spark.sources.kafka import EARLIEST, LATEST, KafkaConnection
+from datax_spark.sources.readers import task_frame
 
 _OFFSETS_FILE = "_offsets.json"
 
@@ -162,10 +163,11 @@ class KafkaTail:
             f"`{c}` {'long' if c in self.long_cols else 'string'}"
             for c in columns
         )
-        tasks_df = self.spark.createDataFrame(
+        tasks_df = task_frame(
+            self.spark,
             [(p, h, prt, s, e) for p, h, prt, s, e in ranges],
             "partition int, host string, port int, start long, end long",
-        ).repartition(len(ranges), "partition")
+        )
         topic = self.topic
         long_cols = set(self.long_cols)
         max_bytes = self.fetch_max_bytes

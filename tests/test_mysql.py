@@ -127,6 +127,7 @@ class FakeMySql:
         self.auth_plugin = auth_plugin
         self.cached_users = set(cached_users)  # fast-path hash cache
         self.rsa_key = rsa_key                 # (e, d, n) for full auth
+        self.full_auth_replies: list[bytes] = []  # client's first full-auth packet
         self.switch_to_native = False          # AuthSwitchRequest mode
         self.lock = threading.Lock()
         self.queries: list[str] = []
@@ -283,20 +284,23 @@ class FakeMySql:
         # cache miss: full authentication
         seq = self._send(conn, seq + 1, b"\x01\x04")
         rseq, req = self._read(conn)
+        self.full_auth_replies.append(req)
+        e_pub, d, n = self.rsa_key
         if req == b"\x02":  # public key request
-            e_pub, _d, n = self.rsa_key
             rseq = self._send(conn, rseq + 1, b"\x01" + spki_pem(e_pub, n))
             rseq, ct = self._read(conn)
-            _e, d, n = self.rsa_key
-            obf = rsa_oaep_decrypt(d, n, ct)
-            pwd = bytes(c ^ nonce[i % 20] for i, c in enumerate(obf))
-            if pwd != expect_pwd.encode() + b"\x00":
-                self._error(conn, rseq + 1, 1045,
-                            f"Access denied for user '{user}'")
-                return rseq, False
-            return rseq, True
-        self._error(conn, rseq + 1, 1045, "full auth: unexpected reply")
-        return rseq, False
+        elif len(req) == (n.bit_length() + 7) // 8:
+            ct = req  # the client pinned the key: ciphertext at once
+        else:
+            self._error(conn, rseq + 1, 1045, "full auth: unexpected reply")
+            return rseq, False
+        obf = rsa_oaep_decrypt(d, n, ct)
+        pwd = bytes(c ^ nonce[i % 20] for i, c in enumerate(obf))
+        if pwd != expect_pwd.encode() + b"\x00":
+            self._error(conn, rseq + 1, 1045,
+                        f"Access denied for user '{user}'")
+            return rseq, False
+        return rseq, True
 
     # ---- constrained SQL evaluation
 
@@ -571,19 +575,64 @@ def test_caching_sha2_fast_path():
         srv.close()
 
 
-def test_caching_sha2_full_auth_rsa():
-    """Cache miss → perform_full_authentication: the client requests
-    the server's RSA key and sends RSA-OAEP(password ⊕ nonce)."""
+def _full_auth_server():
     srv = FakeMySql(users={"app": "s3cret"},
                     auth_plugin="caching_sha2_password",
                     rsa_key=(_RSA_E, _RSA_D, _RSA_N))
     srv.create_table("t", [("id", "long")], pk=["id"])
+    return srv
+
+
+def test_caching_sha2_full_auth_rsa():
+    """Cache miss → perform_full_authentication with the opt-in: the
+    client requests the server's RSA key and sends
+    RSA-OAEP(password ⊕ nonce)."""
+    srv = _full_auth_server()
     try:
-        c = MySqlConnection("127.0.0.1", srv.port, "app", "s3cret")
+        c = MySqlConnection("127.0.0.1", srv.port, "app", "s3cret",
+                            allow_public_key_retrieval=True)
         c.query("TRUNCATE TABLE t")
         c.close()
+        assert srv.full_auth_replies[0] == b"\x02"
         with pytest.raises(MySqlError, match="Access denied"):
-            MySqlConnection("127.0.0.1", srv.port, "app", "wrong")
+            MySqlConnection("127.0.0.1", srv.port, "app", "wrong",
+                            allow_public_key_retrieval=True)
+    finally:
+        srv.close()
+
+
+def test_caching_sha2_full_auth_refused_by_default():
+    """Without the opt-in or a pinned key the client refuses full
+    authentication and never asks for the key in plaintext."""
+    srv = _full_auth_server()
+    try:
+        with pytest.raises(MySqlError) as ei:
+            MySqlConnection("127.0.0.1", srv.port, "app", "s3cret")
+        assert "allowPublicKeyRetrieval" in str(ei.value)
+        assert "serverRsaPublicKey" in str(ei.value)
+        assert b"\x02" not in srv.full_auth_replies
+    finally:
+        srv.close()
+
+
+def test_caching_sha2_full_auth_pinned_key(tmp_path):
+    """A pinned server key (PEM path) authenticates without the key
+    request; through the reader config too."""
+    from datax_spark.sources.hostkeys import spki_pem
+    from datax_spark.sources.mysql import _conn_of
+
+    pem = tmp_path / "server_rsa.pem"
+    pem.write_bytes(spki_pem(_RSA_E, _RSA_N))
+    srv = _full_auth_server()
+    try:
+        ci = _conn_of({"host": "127.0.0.1", "port": srv.port, "username": "app",
+                       "password": "s3cret", "serverRsaPublicKey": str(pem)})
+        c = MySqlConnection(**ci)
+        c.query("TRUNCATE TABLE t")
+        c.close()
+        assert srv.full_auth_replies and b"\x02" not in srv.full_auth_replies
+        with pytest.raises(MySqlError, match="Access denied"):
+            MySqlConnection(**{**ci, "password": "wrong"})
     finally:
         srv.close()
 
