@@ -12,42 +12,48 @@ table scan per sync; this module's refresh costs O(changed groups):
   the manifests prove touched;
 * count/sum aggregates are exactly decomposable, so they advance by
   the signed delta (+1 for insert/update_postimage, -1 for
-  delete/update_preimage) — one hash aggregate over the feed, one
-  keyed join against only the view buckets those groups live in;
+  delete/update_preimage) — one hash aggregate over the feed, routed
+  to the view buckets its groups live in, where one Arrow task per
+  touched view bucket applies it to that bucket's current rows
+  (``view_bucket_apply``) and writes the bucket's new file. No join
+  plan, no persist, no second pass over the delta;
 * min/max are NOT decomposable under retraction: a group goes "dirty"
   only when a retraction reaches its stored extreme AND no incoming
   value dominates every retracted one (if ``add_max >= del_max``,
   every survivor <= stored max <= del_max <= add_max, so
   ``greatest(stored, add)`` is exact — and symmetrically for min).
-  Dirty groups — and only dirty groups — are recomputed from the
-  source through a semi-join on their keys (AQE broadcasts the key set
-  while small, shuffle semi-join otherwise; rows outside the dirty
-  groups are dropped at the scan — FILE skipping additionally applies
-  only when a group column is in the source's stats_cols, since group
-  columns are generally not the table's bucketing keys). Inserting
-  rows never dirties a group, and a MONOTONE feed (CDC lsn/commit
-  always rising) never dirties its max at all — only its min, only
-  when the min-holder itself changes;
-* the view is itself a LakeTable keyed on the group columns, so the
-  apply is the engine's own bucketed MERGE and the synced-to source
-  version rides the view's atomic snapshot commit — a crashed refresh
-  either fully applied (summary says so; re-run is a no-op) or left
-  the view untouched (re-run replays the same feed window).
-  Exactly-once by the same argument as the replay engine's epochs.
+  The bucket task leaves dirty groups out of its file and lists
+  their keys in a side file; only then — so never for a count/sum
+  view — are those groups recomputed from the source through a
+  semi-join on their keys (AQE broadcasts the key set while small,
+  shuffle semi-join otherwise; rows outside the dirty groups are
+  dropped at the scan — FILE skipping additionally applies only when
+  a group column is in the source's stats_cols, since group columns
+  are generally not the table's bucketing keys) and written as a
+  second file of the same buckets. Inserting rows never dirties a
+  group, and a MONOTONE feed (CDC lsn/commit always rising) never
+  dirties its max at all — only its min, only when the min-holder
+  itself changes;
+* the view is itself a LakeTable keyed on the group columns, and the
+  synced-to source version rides the view's atomic snapshot commit —
+  a crashed refresh either fully applied (summary says so; re-run is
+  a no-op) or left the view untouched (re-run replays the same feed
+  window). Exactly-once by the same argument as the replay engine's
+  epochs.
 
 Null semantics match SQL aggregation exactly: per sum column a
 non-null count is maintained alongside, and the emitted sum is NULL
 when that count is zero (a signed running sum alone cannot tell "all
 NULL" from "sums to 0"). Groups whose row count reaches zero are
 DELETED from the view, matching what re-running the group-by would
-return. NULL values inside group KEY columns are rejected at refresh
-(the lake merge's key joins use SQL equality, under which NULL never
-matches) — coalesce keys to a sentinel upstream if needed.
+return. NULL values inside group KEY columns are rejected at refresh,
+before anything commits (a keyed table cannot address a NULL key) —
+coalesce keys to a sentinel upstream if needed.
 
 Float caveat: double-typed sums drift from a recompute by float
 associativity, exactly as any two differently-ordered Spark
-aggregations of the same data do; integer sums are exact (ANSI mode
-raises on overflow rather than wrapping).
+aggregations of the same data do; integer and decimal sums are exact
+and raise on overflow rather than wrapping.
 """
 
 from __future__ import annotations
@@ -60,11 +66,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datax_spark.lake.merge import merge_into
-from datax_spark.lake.table import LakeTable, bucket_expr_for
+from datax_spark.lake.merge import aligned_bucket_apply, merge_into
+from datax_spark.lake.table import (
+    LakeTable,
+    Manifest,
+    bucket_expr_for,
+    bucket_state_arrow,
+    composite_key_array,
+    conform_arrow,
+    unit_files,
+    write_parquet_atomic,
+)
 
 _VIEW_SPEC_FILE = "_view.json"
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+# one row per touched view bucket, returned by its apply task
+_APPLY_SCHEMA = T.StructType([
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("rows", T.LongType()),
+    T.StructField("file", T.StringType()),
+    T.StructField("n_changed", T.LongType()),
+    T.StructField("n_dirty", T.LongType()),
+    T.StructField("n_deleted", T.LongType()),
+    T.StructField("has_null", T.BooleanType()),
+    T.StructField("dirty_file", T.StringType()),
+])
 
 
 @dataclass(frozen=True)
@@ -125,6 +151,9 @@ class RefreshResult:
     groups_recomputed: int
     groups_deleted: int
     skipped: bool = False
+    # "apply_ms": feed + signed delta + the per-bucket apply (one job
+    # chain); "recompute_ms": the dirty-group recompute, present only
+    # when a min/max group went dirty; "commit_ms": the view commit
     phase_ms: dict = field(default_factory=dict)
 
 
@@ -162,6 +191,108 @@ def _sum_type(src: T.DataType) -> T.DataType:
     if isinstance(src, T.DecimalType):
         return T.DecimalType(min(src.precision + 10, 38), src.scale)
     return T.DoubleType()
+
+
+def _recompute_aggs(spec: AggViewSpec) -> list:
+    """The view's columns as plain aggregates over source rows (a
+    recompute, as opposed to the signed-delta advance)."""
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
+    for c in spec.sum_cols:
+        aggs.append(F.sum(c).alias(f"sum_{c}"))
+        aggs.append(F.count(c).alias(f"cnt_{c}"))
+    for c in spec.min_cols:
+        aggs.append(F.min(c).alias(f"min_{c}"))
+    for c in spec.max_cols:
+        aggs.append(F.max(c).alias(f"max_{c}"))
+    return aggs
+
+
+def _spark_le(a, b):
+    """``a <= b`` elementwise under Spark's ordering, where NaN is
+    larger than every other number (Arrow compares NaN as unordered)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    le = pc.less_equal(a, b)
+    if pa.types.is_floating(a.type):
+        le = pc.or_kleene(le, pc.is_nan(b))
+    return le
+
+
+def view_bucket_apply(d, cur, spec: AggViewSpec, pa_schema):
+    """One view bucket's refresh, in Arrow: ``d`` is the bucket's
+    signed-delta rows (``signed_delta`` output), ``cur`` its current
+    rows (view schema ``pa_schema``). Returns ``(rows, dirty_keys,
+    n_deleted)`` — the bucket's new rows, the group keys of the
+    groups that went dirty (left out of ``rows``, to be recomputed
+    from the source), and how many delta groups reached
+    ``n_rows <= 0`` (dropped) — or None when a group key of ``d`` is
+    NULL.
+
+    The delta left-joins the current rows on the composite group key
+    (view keys are unique, so an ``index_in`` + ``take``). Integer and
+    decimal adds are checked: an overflow raises instead of wrapping.
+    min/max take ``least``/``greatest`` of the stored and added
+    extremes (nulls skipped, as Spark's), and a group goes dirty when
+    a retraction reaches its stored extreme and no added value
+    dominates every retracted one (see the module docstring)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    gcols = list(spec.group_cols)
+    if any(d.column(g).null_count for g in gcols):
+        return None
+    typ = lambda name: pa_schema.field(name).type  # noqa: E731
+    g = pa.table({c: d.column(c).cast(typ(c)) for c in gcols})
+    kd = composite_key_array(g, gcols)
+    kc = composite_key_array(cur, gcols)
+    stored = cur.take(pc.index_in(kd, value_set=kc))
+
+    def plus(a, b, t):
+        zero = pa.array([0], pa.int64()).cast(t)[0]
+        s = pc.add_checked(pc.fill_null(a, zero), pc.fill_null(b.cast(t), zero))
+        return s.cast(t)  # a decimal sum that outgrew its type raises
+
+    out = {c: g.column(c) for c in gcols}
+    n = plus(stored.column("n_rows"), d.column("__d_rows"), pa.int64())
+    out["n_rows"] = n
+    for c in spec.sum_cols:
+        out[f"sum_{c}"] = plus(
+            stored.column(f"sum_{c}"), d.column(f"__d_sum_{c}"), typ(f"sum_{c}")
+        )
+        out[f"cnt_{c}"] = plus(
+            stored.column(f"cnt_{c}"), d.column(f"__d_cnt_{c}"), pa.int64()
+        )
+    dirty = pa.array([False] * d.num_rows)
+    for kind, cols in (("min", spec.min_cols), ("max", spec.max_cols)):
+        # beyond(x, y): x is at y or past it on this extreme's side
+        if kind == "min":
+            beyond = _spark_le
+        else:
+            beyond = lambda x, y: _spark_le(y, x)  # noqa: E731
+        for c in cols:
+            t = typ(f"{kind}_{c}")
+            held = stored.column(f"{kind}_{c}")
+            add = d.column(f"__add_{kind}_{c}").cast(t)
+            gone = d.column(f"__del_{kind}_{c}").cast(t)
+            reached = pc.and_kleene(pc.is_valid(gone), beyond(gone, held))
+            undominated = pc.or_kleene(pc.is_null(add), pc.invert(beyond(add, gone)))
+            dirty = pc.or_(
+                dirty, pc.fill_null(pc.and_kleene(reached, undominated), False)
+            )
+            out[f"{kind}_{c}"] = pc.if_else(
+                pc.is_null(held), add,
+                pc.if_else(pc.is_null(add), held, pc.if_else(beyond(held, add), held, add)),
+            )
+    live = pc.greater(n, 0)
+    dirty = pc.and_(dirty, live)
+    upd = pa.Table.from_arrays([out[f.name] for f in pa_schema], schema=pa_schema)
+    rows = pa.concat_tables([
+        cur.filter(pc.invert(pc.is_in(kc, value_set=kd))),
+        upd.filter(pc.and_(live, pc.invert(dirty))),
+    ])
+    n_live = pc.sum(live.cast(pa.int64())).as_py() or 0
+    return rows, g.filter(dirty), d.num_rows - n_live
 
 
 class AggView:
@@ -283,7 +414,15 @@ class AggView:
         several views over one table read the feed once per sync
         instead of once per view (see ReplayEngine._refresh_views).
         The caller owns the window match; this method still validates
-        v0/v1 bookkeeping."""
+        v0/v1 bookkeeping.
+
+        Physical shape: the feed's signed delta (``signed_delta``) is
+        routed to its view bucket and one Arrow task per touched bucket
+        applies it (:meth:`apply_frame`); the driver raises on a NULL
+        group key before anything commits, recomputes dirty min/max
+        groups if there are any (:meth:`_recompute_dirty`) and commits
+        the new files with ``synced_version``. A count/sum view
+        refreshes in one job chain with no join and no persist."""
         import time
 
         t0 = time.monotonic()
@@ -311,181 +450,150 @@ class AggView:
                 "from the current snapshot"
             ) from e
 
-        gcols = list(spec.group_cols)
         vm = self.table.manifest()
-        delta = (
-            signed_delta(cdf, spec)
-            .withColumn("__b", bucket_expr_for(vm))
-            .persist()
+        delta = signed_delta(cdf, spec).withColumn("__b", bucket_expr_for(vm))
+        gcols = list(spec.group_cols)
+        phase: dict = {}
+        txn = self.table.new_txn_dir()
+        # bounded: one row per touched view bucket
+        res = self.apply_frame(delta, vm, txn).collect()
+        phase["apply_ms"] = round((time.monotonic() - t0) * 1000, 1)
+        if any(r["has_null"] for r in res):
+            raise ValueError(
+                "change feed contains NULL in a group key column "
+                f"({gcols}); a keyed view cannot maintain such a group "
+                "— coalesce the key to a sentinel in the source "
+                "(AggViewSpec.group_fill), or exclude NULL-keyed rows "
+                "from the view"
+            )
+        new_files = {r["bucket"]: [r["file"]] for r in res if r["rows"]}
+        new_counts = {r["bucket"]: r["rows"] for r in res if r["rows"]}
+        dirty_files = [r["dirty_file"] for r in res if r["dirty_file"]]
+        if dirty_files:
+            t1 = time.monotonic()
+            for r in self._recompute_dirty(source, v1, vm, dirty_files, txn):
+                new_files.setdefault(r["bucket"], []).append(r["file"])
+                new_counts[r["bucket"]] = new_counts.get(r["bucket"], 0) + r["rows"]
+            phase["recompute_ms"] = round((time.monotonic() - t1) * 1000, 1)
+        t2 = time.monotonic()
+        self.table.commit(
+            replaced_buckets=[r["bucket"] for r in res],
+            new_files=new_files,
+            new_row_counts=new_counts,
+            summary={"synced_version": v1},
+            base_version=vm.version,
         )
-        try:
-            return self._apply_delta(source, delta, v0, v1, t0)
-        finally:
-            delta.unpersist()
+        phase["commit_ms"] = round((time.monotonic() - t2) * 1000, 1)
+        return RefreshResult(
+            v0, v1,
+            sum(r["n_changed"] for r in res),
+            sum(r["n_dirty"] for r in res),
+            sum(r["n_deleted"] for r in res),
+            phase_ms=phase,
+        )
 
-    def _apply_delta(
-        self, source: LakeTable, delta: DataFrame, v0: int, v1: int, t0: float
-    ) -> RefreshResult:
-        import time
+    def apply_frame(self, delta: DataFrame, vm: Manifest, txn: str) -> DataFrame:
+        """The plan :meth:`refresh` collects: the signed delta
+        routed by ``repartitionById(num_buckets, __b)``, then one Arrow
+        task per touched bucket of view snapshot ``vm`` that reads the
+        bucket's current rows, runs :func:`view_bucket_apply`, writes
+        the new file (and the dirty-key side file) under ``txn`` and
+        returns one ``_APPLY_SCHEMA`` row."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        spec = self.spec
+        keys = list(vm.key_cols)
+        pa_schema = to_arrow_schema(vm.schema)
+        files = {
+            int(b): unit_files(self.root, vm, vm.num_buckets, int(b))
+            for b in set(vm.files) | set(vm.delta_files)
+        }
+        apply_schema = to_arrow_schema(_APPLY_SCHEMA)
+
+        def apply_bucket(d):
+            import pyarrow as pa
+
+            b = int(d.column("__b")[0].as_py())
+            row = {
+                "bucket": b, "rows": 0, "file": None, "n_changed": d.num_rows,
+                "n_dirty": 0, "n_deleted": 0, "has_null": False, "dirty_file": None,
+            }
+            base, deltas = files.get(b, ([], []))
+            cur = bucket_state_arrow(base, deltas, keys, [], pa_schema)
+            out = view_bucket_apply(d, cur, spec, pa_schema)
+            if out is None:
+                row["has_null"] = True  # the driver raises; nothing written
+            else:
+                rows, dirty, row["n_deleted"] = out
+                if rows.num_rows:
+                    row["rows"] = rows.num_rows
+                    row["file"] = write_parquet_atomic(
+                        rows, os.path.join(txn, f"b{b:05d}.parquet")
+                    )
+                if dirty.num_rows:
+                    row["n_dirty"] = dirty.num_rows
+                    row["dirty_file"] = write_parquet_atomic(
+                        dirty, os.path.join(txn, f"b{b:05d}-dirty-keys.parquet")
+                    )
+            return pa.Table.from_pylist([row], schema=apply_schema)
+
+        nb = int(vm.num_buckets)
+        return aligned_bucket_apply(
+            delta.repartitionById(nb, "__b"), apply_bucket, nb,
+            schema=_APPLY_SCHEMA, arrow=True,
+        )
+
+    def _recompute_dirty(
+        self, source: LakeTable, v1: int, vm: Manifest, dirty_files: list[str],
+        txn: str,
+    ) -> list:
+        """Recompute ONLY the dirty groups (keys listed in
+        ``dirty_files``) from source snapshot ``v1`` and write them as a
+        second file of their view buckets under ``txn``. No broadcast
+        hint: AQE broadcasts the key set while it is small and falls
+        back to a shuffle semi-join when a churn-heavy window dirties
+        millions of groups (a forced broadcast would cap dirty-set size
+        at the driver). The bucket kernel left these groups out of its
+        own file, so the two files of a bucket hold disjoint keys.
+        Returns one ``(bucket, rows, file)`` row per bucket."""
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         spec = self.spec
         gcols = list(spec.group_cols)
-        phase: dict = {}
-
-        # the lake merge joins on SQL equality, under which NULL never
-        # matches — a null-keyed group would silently never update
-        null_key = F.lit(False)
-        for g in gcols:
-            null_key = null_key | F.col(g).isNull()
-        # one small collect, bounded by the view's bucket count, doing
-        # double duty: affected-bucket list + null-key validation
-        probe = (
-            delta.groupBy("__b")
-            .agg(F.max(null_key).alias("has_null"))
-            .collect()
+        by_name = {f.name: f for f in vm.schema.fields}
+        dirty_keys = self.spark.read.schema(
+            T.StructType([by_name[g] for g in gcols])
+        ).parquet(*dirty_files)
+        src = spec.fill(source.read(version=v1)).join(
+            dirty_keys, on=gcols, how="left_semi"
         )
-        phase["delta_ms"] = round((time.monotonic() - t0) * 1000, 1)
-        if any(r["has_null"] for r in probe):
-            raise ValueError(
-                "change feed contains NULL in a group key column "
-                f"({gcols}); SQL-equality key joins cannot maintain "
-                "such a group — coalesce the key to a sentinel in the "
-                "source, or exclude NULL-keyed rows from the view"
-            )
-        affected = sorted(int(r["__b"]) for r in probe)
-        if not affected:  # window had commits but zero net key changes
-            self.table.commit(
-                replaced_buckets=[], new_files={}, new_row_counts={},
-                summary={"synced_version": v1},
-                base_version=self.table.manifest().version,
-            )
-            return RefreshResult(v0, v1, 0, 0, 0, phase_ms=phase)
-
-        # current view state for ONLY the touched buckets, joined to
-        # the delta on the group key (both sides bucket-colocatable)
-        t1 = time.monotonic()
-        cur = self.table.read(buckets=affected)
-        j = delta.join(cur, on=gcols, how="left")
-
-        vtypes = {f.name: f.dataType for f in self.table.manifest().schema.fields}
-        new_n = (F.coalesce(F.col("n_rows"), F.lit(0)) + F.col("__d_rows")).cast(
-            "long"
+        fresh = (
+            src.groupBy(*gcols)
+            .agg(*_recompute_aggs(spec))
+            .select(*vm.schema.names)
+            .withColumn("__b", bucket_expr_for(vm))
         )
-        out_cols = [F.col(g) for g in gcols] + [new_n.alias("n_rows")]
-        dirty = F.lit(False)
-        for c in spec.sum_cols:
-            st = vtypes[f"sum_{c}"]
-            s = (
-                F.coalesce(F.col(f"sum_{c}"), F.lit(0).cast(st))
-                + F.coalesce(F.col(f"__d_sum_{c}").cast(st), F.lit(0).cast(st))
-            ).cast(st)
-            out_cols.append(s.alias(f"sum_{c}"))
-            out_cols.append(
-                (
-                    F.coalesce(F.col(f"cnt_{c}"), F.lit(0))
-                    + F.coalesce(F.col(f"__d_cnt_{c}"), F.lit(0))
-                ).alias(f"cnt_{c}")
-            )
-        # Extreme dirtiness, refined: a group needs recompute only when
-        # a retraction reaches the stored extreme AND no incoming value
-        # dominates every retracted one. If add_max >= del_max, then
-        # even a retracted stored max is safe: every survivor <= stored
-        # max <= del_max <= add_max, so greatest(stored, add) is exact.
-        # Consequence: a monotone feed (CDC lsn/commit always rising)
-        # NEVER dirties its max — only its min, and only when the
-        # min-holder itself changes.
-        for c in spec.min_cols:
-            dirty = dirty | F.coalesce(
-                F.col(f"__del_min_{c}").isNotNull()
-                & (F.col(f"__del_min_{c}") <= F.col(f"min_{c}"))
-                & (
-                    F.col(f"__add_min_{c}").isNull()
-                    | (F.col(f"__add_min_{c}") > F.col(f"__del_min_{c}"))
-                ),
-                F.lit(False),
-            )
-            out_cols.append(
-                F.least(F.col(f"min_{c}"), F.col(f"__add_min_{c}")).alias(f"min_{c}")
-            )
-        for c in spec.max_cols:
-            dirty = dirty | F.coalesce(
-                F.col(f"__del_max_{c}").isNotNull()
-                & (F.col(f"__del_max_{c}") >= F.col(f"max_{c}"))
-                & (
-                    F.col(f"__add_max_{c}").isNull()
-                    | (F.col(f"__add_max_{c}") < F.col(f"__del_max_{c}"))
-                ),
-                F.lit(False),
-            )
-            out_cols.append(
-                F.greatest(F.col(f"max_{c}"), F.col(f"__add_max_{c}")).alias(
-                    f"max_{c}"
-                )
-            )
-        arith = j.select(
-            *out_cols,
-            (new_n > 0).alias("__live"),
-            (dirty & (new_n > 0)).alias("__dirty"),
-        ).persist()
-        try:
-            counts = arith.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("__dirty").cast("int")).alias("d"),
-                F.sum((~F.col("__live")).cast("int")).alias("x"),
-            ).first()
-            n_changed, n_dirty, n_deleted = (
-                int(counts["n"]),
-                int(counts["d"] or 0),
-                int(counts["x"] or 0),
-            )
-            recomputed = None
-            if n_dirty:
-                # recompute ONLY the dirty groups from the source. No
-                # broadcast hint: AQE broadcasts the key set while it
-                # is small and falls back to a shuffle semi-join when a
-                # churn-heavy window dirties millions of groups (a
-                # forced broadcast would cap dirty-set size at the
-                # driver)
-                dirty_keys = arith.filter("__dirty").select(*gcols)
-                src = spec.fill(source.read(version=v1)).join(
-                    dirty_keys, on=gcols, how="left_semi"
-                )
-                r_aggs = [F.count(F.lit(1)).alias("n_rows")]
-                for c in spec.sum_cols:
-                    r_aggs.append(F.sum(c).alias(f"sum_{c}"))
-                    r_aggs.append(F.count(c).alias(f"cnt_{c}"))
-                for c in spec.min_cols:
-                    r_aggs.append(F.min(c).alias(f"min_{c}"))
-                for c in spec.max_cols:
-                    r_aggs.append(F.max(c).alias(f"max_{c}"))
-                recomputed = src.groupBy(*gcols).agg(*r_aggs)
+        pa_schema = to_arrow_schema(vm.schema)
 
-            view_cols = [f.name for f in self.table.manifest().schema.fields]
-            up_clean = arith.filter(~F.col("__dirty")).select(
-                *view_cols,
-                F.when(F.col("__live"), F.lit("U")).otherwise(F.lit("D")).alias(
-                    "__op"
-                ),
-            )
-            # a dirty group is live by definition; null-correct sums
-            # come from count() directly, so cnt/sum are already exact
-            if recomputed is not None:
-                up = up_clean.unionByName(
-                    recomputed.select(*view_cols, F.lit("U").alias("__op"))
-                )
-            else:
-                up = up_clean
-            phase["plan_ms"] = round((time.monotonic() - t1) * 1000, 1)
+        def write_bucket(t):
+            import pyarrow as pa
 
-            t2 = time.monotonic()
-            pm = merge_into(self.table, up, op_col="__op", delete_op="D")
-            pm.commit(summary={"synced_version": v1})
-            phase["merge_ms"] = round((time.monotonic() - t2) * 1000, 1)
-            return RefreshResult(
-                v0, v1, n_changed, n_dirty, n_deleted, phase_ms=phase
+            b = int(t.column("__b")[0].as_py())
+            final = write_parquet_atomic(
+                conform_arrow(t, pa_schema),
+                os.path.join(txn, f"b{b:05d}-recomputed.parquet"),
             )
-        finally:
-            arith.unpersist()
+            return pa.table({
+                "bucket": pa.array([b], pa.int32()),
+                "rows": pa.array([t.num_rows], pa.int64()),
+                "file": pa.array([final], pa.string()),
+            })
+
+        nb = int(vm.num_buckets)
+        return aligned_bucket_apply(
+            fresh.repartitionById(nb, "__b"), write_bucket, nb,
+            schema="bucket int, rows long, file string", arrow=True,
+        ).collect()
 
     # ------------------------------------------------------------------
     def rebuild(self, source: LakeTable) -> RefreshResult:
@@ -496,15 +604,9 @@ class AggView:
         gcols = list(spec.group_cols)
         v0 = self.synced_version()
         v1 = source.current_version()
-        aggs = [F.count(F.lit(1)).alias("n_rows")]
-        for c in spec.sum_cols:
-            aggs.append(F.sum(c).alias(f"sum_{c}"))
-            aggs.append(F.count(c).alias(f"cnt_{c}"))
-        for c in spec.min_cols:
-            aggs.append(F.min(c).alias(f"min_{c}"))
-        for c in spec.max_cols:
-            aggs.append(F.max(c).alias(f"max_{c}"))
-        fresh = spec.fill(source.read(version=v1)).groupBy(*gcols).agg(*aggs)
+        fresh = spec.fill(source.read(version=v1)).groupBy(*gcols).agg(
+            *_recompute_aggs(spec)
+        )
         stale = self.table.read().select(*gcols).join(
             fresh.select(*gcols), on=gcols, how="left_anti"
         )

@@ -17,7 +17,7 @@ Physical plans — one per table mode, same verified output, one shape:
 the epoch batch is routed so that partition b holds exactly bucket b
 (``merge_into`` repartitions on the routing columns, or the caller's
 own shuffle already did), and a per-bucket pandas kernel runs as
-``mapInPandas`` over it (``_aligned_bucket_apply``).
+``mapInPandas`` over it (``aligned_bucket_apply``).
 
 * **spj** (copy-on-write, the default): the storage-partitioned
   merge. The table is already bucket-hashed on its keys, so the
@@ -58,6 +58,7 @@ from datax_spark.lake.table import (
     bucket_state_arrow,
     composite_key_array,
     conform_arrow,
+    write_parquet_atomic,
 )
 from datax_spark.operators.schema_evolution import (
     SchemaEvolutionError,
@@ -386,22 +387,28 @@ def _bucket_stats(pdf, stat_cols: tuple[str, ...] | None) -> dict:
     }
 
 
-def _aligned_bucket_apply(upd: DataFrame, bucket_fn, nb: int) -> DataFrame:
-    """Run a per-bucket pandas kernel over a bucket-aligned frame as
-    ``mapInPandas`` — no exchange of its own, one task per bucket.
+def aligned_bucket_apply(
+    upd: DataFrame, bucket_fn, nb: int, schema=SPJ_STATS_SCHEMA, arrow: bool = False
+) -> DataFrame:
+    """Run a per-bucket kernel over a bucket-aligned frame — no
+    exchange of its own, one task per bucket. ``bucket_fn`` takes the
+    bucket's rows as one pandas frame and returns a pandas frame
+    (``mapInPandas``), or with ``arrow=True`` takes and returns
+    ``pa.Table`` s (``mapInArrow``, column types bit-exact); its
+    output rows follow ``schema``.
 
     Precondition: partition p holds exactly the rows of bucket p —
-    ``merge_frame``'s own ``repartitionById(nb, __b)``, or the engine's
-    dedup shuffle ``hashpartitioning(key_cols, nb)`` under
-    ``aligned_shuffle_confs`` (murmur3 buckets make its partition id
-    ``pmod(murmur3(key_cols), nb)`` the bucket).
+    a ``repartitionById(nb, __b)`` (``merge_frame``, the view refresh,
+    the scd2 tiered apply), or the engine's dedup shuffle
+    ``hashpartitioning(key_cols, nb)`` under ``aligned_shuffle_confs``
+    (murmur3 buckets make its partition id ``pmod(murmur3(key_cols),
+    nb)`` the bucket).
 
     The contract is ASSERTED executor-side per partition (one vector
     compare of ``__b`` against TaskContext.partitionId), so a broken
     precondition — a transform that repartitioned, a stray conf — is a
     loud crash before any file is written, never silent misplacement.
     """
-    import pandas as pd
 
     def apply_partition(batches):
         from pyspark import TaskContext
@@ -409,9 +416,18 @@ def _aligned_bucket_apply(upd: DataFrame, bucket_fn, nb: int) -> DataFrame:
         chunks = [b for b in batches if len(b)]
         if not chunks:
             return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+        if arrow:
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            part = pa.Table.from_batches(chunks)
+            bs = pc.unique(part.column("__b")).to_pylist()
+        else:
+            import pandas as pd
+
+            part = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+            bs = part["__b"].unique()
         pid = int(TaskContext.get().partitionId())
-        bs = pdf["__b"].unique()
         if len(bs) != 1 or int(bs[0]) != pid:
             raise RuntimeError(
                 f"aligned merge precondition broken: partition {pid} of "
@@ -423,9 +439,15 @@ def _aligned_bucket_apply(upd: DataFrame, bucket_fn, nb: int) -> DataFrame:
                 f"off), breaks alignment; merge_into(aligned=False) "
                 f"routes the frame itself."
             )
-        yield bucket_fn(pdf)
+        out = bucket_fn(part)
+        if arrow:
+            yield from out.to_batches()
+        else:
+            yield out
 
-    return upd.mapInPandas(apply_partition, schema=SPJ_STATS_SCHEMA)
+    if arrow:
+        return upd.mapInArrow(apply_partition, schema=schema)
+    return upd.mapInPandas(apply_partition, schema=schema)
 
 
 def spj_merge_frame(
@@ -620,7 +642,7 @@ def spj_merge_frame(
             _os.remove(tmp)
         return pd.DataFrame([{"bucket": b, "rows": 0, "file": None, **st}])
 
-    return _aligned_bucket_apply(upd, merge_bucket, int(m.num_buckets))
+    return aligned_bucket_apply(upd, merge_bucket, int(m.num_buckets))
 
 
 def mor_delta_frame(
@@ -664,10 +686,8 @@ def mor_delta_frame(
 
     def write_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         import os as _os
-        import uuid as _uuid
 
         import pyarrow as _pa
-        import pyarrow.parquet as _pq
 
         b = int(pdf["__b"].iloc[0])
         st = _bucket_stats(pdf, stat_cols)
@@ -686,12 +706,9 @@ def mor_delta_frame(
             type=_pa.string(),
         )
         t = t.append_column("__op", op_norm)
-        final = _os.path.join(txn, f"b{b:05d}.parquet")
-        tmp = f"{final}.{_uuid.uuid4().hex}.tmp"
-        _pq.write_table(t, tmp)
-        _os.rename(tmp, final)
+        final = write_parquet_atomic(t, _os.path.join(txn, f"b{b:05d}.parquet"))
         return pd.DataFrame(
             [{"bucket": b, "rows": t.num_rows, "file": final, **st}]
         )
 
-    return _aligned_bucket_apply(upd, write_bucket, int(m.num_buckets))
+    return aligned_bucket_apply(upd, write_bucket, int(m.num_buckets))

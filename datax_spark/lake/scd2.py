@@ -81,8 +81,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datax_spark.lake.merge import merge_into
-from datax_spark.lake.table import LakeTable, bucket_expr_for
+from datax_spark.lake.merge import aligned_bucket_apply, merge_into
+from datax_spark.lake.table import LakeTable, bucket_expr_for, write_parquet_atomic
 
 VALID_TO_SUFFIX = "valid_to_"
 
@@ -234,7 +234,6 @@ def _tiered_merge(
 
     def apply_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         import os as _os
-        import uuid as _uuid
 
         b = int(pdf["__b"].iloc[0])
 
@@ -246,11 +245,6 @@ def _tiered_merge(
             return pa.Table.from_pandas(
                 dfp[out_cols], schema=evolved_pa, preserve_index=False
             )
-
-        def write_atomic(t: pa.Table, final: str) -> None:
-            tmp = f"{final}.{_uuid.uuid4().hex}.tmp"
-            pq.write_table(t, tmp)
-            _os.rename(tmp, final)  # idempotent across task retries
 
         evicted = pc.unique(
             composite_key_array(
@@ -278,12 +272,12 @@ def _tiered_merge(
         out = []
         if new_open.num_rows:
             fo = _os.path.join(txn, f"b{b:05d}-open.parquet")
-            write_atomic(new_open, fo)
+            write_parquet_atomic(new_open, fo)
             out.append({"bucket": b, "file": fo, "kind": "open",
                         "rows": new_open.num_rows})
         if closed.num_rows:
             fc = _os.path.join(txn, f"b{b:05d}-closed-e{epoch}.parquet")
-            write_atomic(closed, fc)
+            write_parquet_atomic(closed, fc)
             out.append({"bucket": b, "file": fc, "kind": "closed",
                         "rows": closed.num_rows})
         if not out:  # all-delete epoch on an empty bucket
@@ -294,17 +288,20 @@ def _tiered_merge(
             ["bucket", "file", "kind", "rows", "open_rows_before"]
         ]
 
-    res = (
+    # routed like every merge: partition b holds bucket b, one task per
+    # bucket (a groupBy's exchange would follow shuffle.partitions and
+    # AQE could coalesce several buckets into one serial task)
+    nb = int(m.num_buckets)
+    routed = (
         rows.drop(op_col)
-        .withColumn("__b", table.bucket_expr())
-        .groupBy("__b")
-        .applyInPandas(
-            apply_bucket,
-            "bucket int, file string, kind string, rows long, "
-            "open_rows_before long",
-        )
-        .collect()
-    )  # bounded: ≤ 2 rows per affected bucket
+        .withColumn("__b", bucket_expr_for(m))
+        .repartitionById(nb, "__b")
+    )
+    res = aligned_bucket_apply(
+        routed, apply_bucket, nb,
+        schema="bucket int, file string, kind string, rows long, "
+        "open_rows_before long",
+    ).collect()  # bounded: ≤ 2 rows per affected bucket
 
     new_files: dict[int, list[str]] = {}
     new_counts: dict[int, int] = {}
@@ -365,16 +362,14 @@ def compact_closed(
 
     def fold(b: int) -> pa.Table:
         import os as _os
-        import uuid as _uuid
 
         parts = [
             conform_arrow(pq.read_table(f), schema_pa) for f in todo[b]
         ]
         t = pa.concat_tables(parts)
-        final = _os.path.join(txn, f"b{b:05d}-closed-fold.parquet")
-        tmp = f"{final}.{_uuid.uuid4().hex}.tmp"
-        pq.write_table(t, tmp)
-        _os.rename(tmp, final)
+        final = write_parquet_atomic(
+            t, _os.path.join(txn, f"b{b:05d}-closed-fold.parquet")
+        )
         return pa.table({
             "b": pa.array([b], pa.int32()),
             "file": [final],

@@ -939,41 +939,104 @@ def _filters_to_column(filters: list[tuple]):
     return cond
 
 
-def zorder_expr(cols: list[str], bounds: dict[str, tuple], bits: int = 16):
-    """Z-value (Morton) Column for multi-dimensional clustering — the
-    Delta OPTIMIZE ZORDER BY / Iceberg z-order rewrite analog, as a
-    pure JVM expression tree (whole-stage codegen, no UDF): each
-    column is linearly binned into ``bits`` bits over its [min, max]
-    ``bounds``, then the columns' bits are interleaved so sorting by
-    the z-value clusters rows that are close in EVERY dimension.
-    Nulls bin to 0 (cluster together at the origin). Numeric columns
-    only — a caller with strings should bin them first (e.g. xxhash).
-    """
+def zorder_values(tbl, cols: list[str], bounds: dict[str, tuple], bits: int = 16):
+    """Z-value (Morton) of each row of an Arrow table, for
+    multi-dimensional clustering — the Delta OPTIMIZE ZORDER BY /
+    Iceberg z-order rewrite analog: each column is linearly binned into
+    ``bits`` bits over its [min, max] ``bounds``, then the columns'
+    bits are interleaved so sorting by the z-value clusters rows that
+    are close in EVERY dimension. Nulls bin to 0 (cluster together at
+    the origin), NaN to the top bin. Numeric columns only — a caller
+    with strings should bin them first (e.g. xxhash). Returns an int64
+    numpy array."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     k = len(cols)
-    bins = []
-    for c in cols:
+    if bits * k > 63:
+        raise ValueError(f"z-value needs bits*cols <= 63, got {bits}*{k}")
+    top = float((1 << bits) - 1)
+    z = np.zeros(tbl.num_rows, dtype=np.int64)
+    for j, c in enumerate(cols):
         mn, mx = bounds[c]
         span = float(mx) - float(mn)
         if span <= 0:
-            bins.append(F.lit(0).cast("long"))
             continue
-        scaled = (
-            (F.col(c).cast("double") - F.lit(float(mn)))
-            / F.lit(span)
-            * F.lit(float((1 << bits) - 1))
-        )
-        clamped = F.least(
-            F.greatest(scaled, F.lit(0.0)), F.lit(float((1 << bits) - 1))
-        )
-        bins.append(F.coalesce(F.floor(clamped), F.lit(0)).cast("long"))
-    if bits * k > 63:
-        raise ValueError(f"z-value needs bits*cols <= 63, got {bits}*{k}")
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, b in enumerate(bins):
-            bit = F.shiftright(b, i).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, i * k + j))
+        col = tbl.column(c)
+        x = pc.cast(col, pa.float64()).to_numpy(zero_copy_only=False)
+        scaled = np.nan_to_num((x - float(mn)) / span * top, nan=top)
+        b = np.floor(np.clip(scaled, 0.0, top)).astype(np.int64)
+        b[~pc.is_valid(col).to_numpy(zero_copy_only=False)] = 0
+        for i in range(bits):
+            z |= ((b >> i) & 1) << (i * k + j)
     return z
+
+
+def spark_sort_indices(tbl, cols: list[str]):
+    """Row order of Spark's ascending sort on ``cols``: nulls first,
+    and NaN above every other number (Arrow on its own would place NaN
+    with the nulls)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys = []
+    for c in cols:
+        if pa.types.is_floating(tbl.column(c).type):
+            nan = f"__nan_{c}"
+            tbl = tbl.append_column(nan, pc.is_nan(tbl.column(c)))
+            keys.append((nan, "ascending"))
+        keys.append((c, "ascending"))
+    return pc.sort_indices(tbl, sort_keys=keys, null_placement="at_start")
+
+
+def compact_bucket_arrow(
+    base_files: list[str],
+    delta_files: list[str],
+    keys: list[str],
+    resolve: list[str],
+    pa_schema,
+    sort_cols: list[str],
+    zorder_bounds: dict[str, tuple] | None,
+    target_file_rows: int | None,
+    out_prefix: str,
+) -> list[tuple[str, int]]:
+    """Rewrite ONE bucket, inside its executor task: resolve its state
+    with :func:`bucket_state_arrow` (base ⊕ deltas, or the base files
+    of a multi-file copy-on-write bucket), sort it — by the z-value of
+    ``sort_cols`` when ``zorder_bounds`` is given, else by ``sort_cols``
+    in Spark's order — and write it as ``<out_prefix>-NNNNN.parquet``,
+    a new file every ``target_file_rows`` rows (all rows in one file
+    when None), each by :func:`write_parquet_atomic`. Returns
+    ``[(file, rows)]``; empty when every key of the bucket is
+    deleted."""
+    tbl = bucket_state_arrow(base_files, delta_files, keys, resolve, pa_schema)
+    if not tbl.num_rows:
+        return []
+    if zorder_bounds is not None:
+        idx = zorder_values(tbl, sort_cols, zorder_bounds).argsort(kind="stable")
+    else:
+        idx = spark_sort_indices(tbl, sort_cols)
+    tbl = tbl.take(idx)
+    step = target_file_rows or tbl.num_rows
+    out = []
+    for i, start in enumerate(range(0, tbl.num_rows, step)):
+        part = tbl.slice(start, step)
+        out.append((write_parquet_atomic(part, f"{out_prefix}-{i:05d}.parquet"), part.num_rows))
+    return out
+
+
+def write_parquet_atomic(tbl, final: str) -> str:
+    """Write an Arrow table to ``final`` by tmp + rename, from inside
+    an executor task: the deterministic final name makes a retried
+    task overwrite its own output (last rename wins). Returns
+    ``final``."""
+    import pyarrow.parquet as pq
+
+    tmp = f"{final}.{uuid.uuid4().hex}.tmp"
+    pq.write_table(tbl, tmp)
+    os.rename(tmp, final)
+    return final
 
 
 # Per-table commit locks: _write_manifest's parent check + pointer
@@ -1772,13 +1835,21 @@ class LakeTable:
     ) -> int:
         """Maintenance: rewrite each (selected) bucket's files into a
         clean sorted layout, commit as a new snapshot. The visible data
-        is unchanged — only the physical layout. Two jobs in one pass,
-        both Iceberg's rewrite_data_files: multi-file CoW buckets get
-        a fresh layout, and merge-on-read buckets have their pending
-        deltas FOLDED into a fresh base (the rewrite reads the merged
-        view, and the commit clears the applied delta files), which
-        resets MoR read amplification to zero. Returns the new
-        snapshot version.
+        is unchanged — only the physical layout. Iceberg's
+        rewrite_data_files, for two kinds of bucket: multi-file CoW
+        buckets get a fresh layout, and merge-on-read buckets have
+        their pending deltas FOLDED into a fresh base (the rewrite
+        reads the merged state, and the commit clears the applied
+        delta files), which resets MoR read amplification to zero.
+        Returns the new snapshot version.
+
+        Physical shape: one Spark job of one stage, one task per
+        rewritten bucket (:meth:`_map_units`). Each task resolves and
+        sorts its bucket in Arrow and writes its files itself
+        (:func:`compact_bucket_arrow`); no table row passes through an
+        exchange or Spark's writer. Memory per task is one bucket —
+        the bound of a MoR read or an spj merge of a bucket with
+        deltas.
 
         ``sort_cols`` + ``target_file_rows`` together are the Iceberg
         sort-order compaction: rows sort by ``sort_cols`` within each
@@ -1797,11 +1868,9 @@ class LakeTable:
         one of them skip files (a lexicographic sort only serves its
         leading column). Column bounds for the binning come free from
         the manifest when ``stats_cols`` covers the z-order columns,
-        else one min/max aggregation of the data being rewritten.
+        else one min/max aggregation of the data being rewritten. The
+        z-value only orders the rows; it is not written.
         """
-        import pyarrow.parquet as _pq
-        from pyspark.sql import functions as _F
-
         m = self.manifest()
         names = {f.name for f in m.schema.fields}
         if sort_cols and zorder_cols:
@@ -1834,45 +1903,16 @@ class LakeTable:
         ]
         if not todo:
             return m.version
-        txn = self.new_txn_dir()
-        df = self.read(buckets=todo).withColumn("__b", bucket_expr_for(m))
-        if zorder_cols:
-            # materialize the z-value as a real column (readers ignore
-            # it via the explicit manifest schema)
-            df = df.withColumn("__z", self._zorder_column(m, df, zorder_cols, todo))
-            sort_names = ["__z"]
-        else:
-            sort_names = list(sort_cols or m.key_cols)
-        # the sort MUST lead with __b: the partitioned write requires
-        # ordering by its partition column, and a sort that does not
-        # already satisfy it is superseded by the write's own Sort —
-        # silently discarding the data ordering. With __b leading, the
-        # requirement is a satisfied prefix and the sort survives.
-        # task i writes bucket todo[i] and only it (a hash repartition
-        # of the ids would put several buckets in one task)
-        pos = _F.array_position(_F.array(*[_F.lit(b) for b in todo]), _F.col("__b")) - 1
-        writer = (
-            df.repartitionById(len(todo), pos.cast("int"))
-            .sortWithinPartitions("__b", *sort_names)
-            .write.mode("overwrite")
+        bounds = self._zorder_bounds(m, zorder_cols, todo) if zorder_cols else None
+        frame = self.compact_frame(
+            m, todo, self.new_txn_dir(), list(zorder_cols or sort_cols or m.key_cols),
+            bounds, target_file_rows,
         )
-        if target_file_rows is not None:
-            # the task streams its sorted partition and rolls a new
-            # file every N rows => files inherit disjoint sort ranges
-            writer = writer.option("maxRecordsPerFile", target_file_rows)
-        writer.partitionBy("__b").parquet(txn)
         new_files: dict[int, list[str]] = {}
         new_counts: dict[int, int] = {}
-        import glob as _glob
-        import re as _re
-
-        for d in _glob.glob(os.path.join(txn, "__b=*")):
-            b = int(_re.search(r"__b=(\d+)$", d).group(1))
-            files = sorted(_glob.glob(os.path.join(d, "*.parquet")))
-            rows = sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
-            if rows:
-                new_files[b] = files
-                new_counts[b] = rows
+        for r in frame.collect():  # bounded: one row per written file
+            new_files.setdefault(r["bucket"], []).append(r["file"])
+            new_counts[r["bucket"]] = new_counts.get(r["bucket"], 0) + r["rows"]
         summary: dict = {"compacted": len(todo)}
         folded = self._folded_delete_ord(m, todo)
         if folded is not None:
@@ -1888,11 +1928,48 @@ class LakeTable:
             operation="compact",
         )
 
-    def _zorder_column(self, m: Manifest, df: DataFrame, cols: list[str], todo: list[int]):
-        """Z-value sort Column for :meth:`compact`'s z-order mode.
-        Bounds per column come from the manifest's file stats when they
-        cover every file being rewritten (zero extra work), else from
-        one min/max aggregation of ``df``."""
+    def compact_frame(
+        self,
+        m: Manifest,
+        todo: list[int],
+        txn: str,
+        sort_cols: list[str],
+        zorder_bounds: dict[str, tuple] | None = None,
+        target_file_rows: int | None = None,
+    ) -> DataFrame:
+        """The plan :meth:`compact` collects: :meth:`_map_units` over
+        ``todo``, task i rewriting bucket ``todo[i]`` of snapshot ``m``
+        into ``txn`` with :func:`compact_bucket_arrow`, one
+        ``(bucket, rows, file)`` row per written file."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        plan = {b: unit_files(self.root, m, m.num_buckets, b) for b in todo}
+        args = (
+            list(m.key_cols), list(m.resolve_order), to_arrow_schema(m.schema),
+            sort_cols, zorder_bounds, target_file_rows,
+        )
+
+        def step(b):
+            import pyarrow as pa
+
+            out = compact_bucket_arrow(*plan[b], *args, os.path.join(txn, f"b{b:05d}"))
+            return pa.table({
+                "bucket": pa.array([b] * len(out), pa.int32()),
+                "rows": pa.array([r for _, r in out], pa.int64()),
+                "file": pa.array([f for f, _ in out], pa.string()),
+            })
+
+        return self._map_units(todo, step, T.StructType([
+            T.StructField("bucket", T.IntegerType()),
+            T.StructField("rows", T.LongType()),
+            T.StructField("file", T.StringType()),
+        ]))
+
+    def _zorder_bounds(self, m: Manifest, cols: list[str], todo: list[int]) -> dict[str, tuple]:
+        """Per-column [min, max] binning bounds for :meth:`compact`'s
+        z-order mode: from the manifest's file stats when they cover
+        every file being rewritten (zero extra work), else from one
+        min/max aggregation of the buckets being rewritten."""
         bounds: dict[str, tuple] = {}
         todo_files = [p for b in todo for p in m.files.get(str(b), [])]
         mor = any(m.delta_files.get(str(b)) for b in todo)
@@ -1914,7 +1991,7 @@ class LakeTable:
                     max(m.file_stats[p][c][1] for p in todo_files),
                 )
         else:
-            row = df.agg(
+            row = self.read(buckets=todo).agg(
                 *[F.min(c).alias(f"mn_{i}") for i, c in enumerate(cols)],
                 *[F.max(c).alias(f"mx_{i}") for i, c in enumerate(cols)],
             ).collect()[0]
@@ -1923,7 +2000,7 @@ class LakeTable:
                 if mn is None or mx is None:
                     mn = mx = 0
                 bounds[c] = (mn, mx)
-        return zorder_expr(cols, bounds)
+        return bounds
 
     def rebucket(self, new_num_buckets: int) -> int:
         """Bucket-count evolution (the Iceberg partition-spec-evolution

@@ -296,3 +296,36 @@ def test_bucket_cols_validation(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t3"), schema, ["k"],
                          bucket_cols=["k"])
     assert t.manifest().bucket_cols == []
+
+
+def test_tiered_apply_routes_one_bucket_per_task(spark, changelog, tmp_path, monkeypatch):
+    """The tiered apply runs the merge's bucket kernel: routed by
+    ``repartitionById(num_buckets, __b)`` (a shufflepartitionidpassthrough
+    exchange, which AQE never coalesces) with the partition == bucket
+    assert, never a groupBy's FlatMapGroupsInPandas."""
+    import io
+    from contextlib import redirect_stdout
+
+    from datax_spark.lake import scd2
+
+    plans = []
+    real = scd2.aligned_bucket_apply
+
+    def spy(upd, bucket_fn, nb, **kw):
+        frame = real(upd, bucket_fn, nb, **kw)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            frame.explain()
+        plans.append(buf.getvalue())
+        return frame
+
+    monkeypatch.setattr(scd2, "aligned_bucket_apply", spy)
+    eng = Scd2Engine(
+        spark, changelog, str(tmp_path / "hist"),
+        Scd2Config(num_buckets=8, strategy="tiered", compact_every=None),
+    )
+    eng.apply_epoch(0)
+    assert len(plans) == 1
+    assert "FlatMapGroupsInPandas" not in plans[0]
+    assert "MapInPandas" in plans[0]
+    assert "shufflepartitionidpassthrough" in plans[0]

@@ -4,8 +4,6 @@ readers' split lists (``sources.readers.task_frame``) each give every
 unit a task of its own. A hash repartition of n small ids leaves tasks
 empty and runs several units one after another in one task."""
 
-import re
-
 import pyarrow as pa
 import pytest
 from pyspark.sql import types as T
@@ -72,7 +70,7 @@ def test_task_frame_empty(spark):
 
 
 @pytest.mark.parametrize("nb", [8, 16])
-def test_compact_writes_each_bucket_in_its_own_task(spark, tmp_path, nb):
+def test_compact_writes_each_bucket_in_its_own_task(spark, tmp_path, nb, monkeypatch):
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["k"], num_buckets=nb)
     # a base file and a delta file per bucket, so every bucket compacts
     for strategy in ("spj", "mor"):
@@ -80,12 +78,26 @@ def test_compact_writes_each_bucket_in_its_own_task(spark, tmp_path, nb):
         merge_into(t, spark.createDataFrame(ups, EVENTS), strategy=strategy).commit()
     m = t.manifest()
     assert all(m.delta_files.get(str(b)) for b in range(nb))
+    # each bucket's step leaves a "<bucket>-<partition id>" mark
+    marks = tmp_path / "marks"
+    marks.mkdir()
+    real = LakeTable._map_units
+
+    def spy(self, unit_ids, step, schema):
+        def marked(u):
+            from pyspark import TaskContext
+
+            (marks / f"{u}-{TaskContext.get().partitionId()}").touch()
+            return step(u)
+
+        return real(self, unit_ids, marked, schema)
+
+    monkeypatch.setattr(LakeTable, "_map_units", spy)
     t.compact()
     files = t.manifest().files
     assert sorted(int(b) for b in files) == list(range(nb))
-    task_of = {}
-    for b, fs in files.items():
-        (f,) = fs
-        task_of[b] = re.search(r"part-(\d{5})", f).group(1)
+    assert all(len(fs) == 1 for fs in files.values())
+    task_of = dict(tuple(map(int, p.name.split("-"))) for p in marks.iterdir())
+    assert sorted(task_of) == list(range(nb))
     assert len(set(task_of.values())) == nb, task_of
     assert t.read().count() == 40 * nb
