@@ -45,8 +45,10 @@ own shuffle already did), and a per-bucket pandas kernel runs as
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
 
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -64,6 +66,27 @@ from datax_spark.operators.schema_evolution import (
     SchemaEvolutionError,
     evolve_schema,
 )
+
+
+class DuplicateKeyError(ValueError):
+    """An update batch held one key more than once. ``merge_into``
+    needs one row per key (run ``operators.lww_dedup`` first); the
+    bucket task raises this before it writes any file."""
+
+
+_DUPLICATE_KEY_RE = re.compile(r"DuplicateKeyError: (.*)")
+
+
+def _require_unique_keys(b: int, pdf, keys: list[str], n_unique: int) -> None:
+    """Raise ``DuplicateKeyError`` naming bucket ``b`` and one repeated
+    key unless ``pdf`` holds ``n_unique`` (distinct composite keys) rows."""
+    if n_unique == len(pdf):
+        return
+    dup = pdf.loc[pdf.duplicated(keys), keys].iloc[0].to_dict()
+    raise DuplicateKeyError(
+        f"bucket {b}: key {dup!r} occurs more than once in the update "
+        f"batch; merge_into needs one row per key"
+    )
 
 
 @dataclass
@@ -213,8 +236,9 @@ def merge_into(
     aligned: bool = False,
 ) -> PendingMerge:
     """Write phase of MERGE. ``updates`` must be deduplicated (one row
-    per key — run ``operators.lww_dedup`` first) and contain the key
-    columns, ``op_col``, and the payload columns.
+    per key — run ``operators.lww_dedup`` first; a repeated key raises
+    ``DuplicateKeyError`` before any file is written) and contain the
+    key columns, ``op_col``, and the payload columns.
 
     ``order_cols`` (e.g. ``["commit", "lsn"]``) enables the cross-batch
     LWW guard: an update only applies when its order tuple is strictly
@@ -251,7 +275,13 @@ def merge_into(
     )
     # affected buckets come back with the write result itself (one
     # stats row per bucket task) — no pre-pass needed
-    res = frame.collect()  # bounded: one row per affected bucket
+    try:
+        res = frame.collect()  # bounded: one row per affected bucket
+    except PythonException as e:
+        dup = _DUPLICATE_KEY_RE.search(str(e))
+        if dup is None:
+            raise
+        raise DuplicateKeyError(dup.group(1)) from e
     affected = sorted(int(r["bucket"]) for r in res)
     new_files = {int(r["bucket"]): [r["file"]] for r in res if r["rows"]}
     new_counts = {int(r["bucket"]): int(r["rows"]) for r in res if r["rows"]}
@@ -549,6 +579,7 @@ def spj_merge_frame(
         evicted = _pc.unique(
             composite(_pa.Table.from_pandas(pdf[keys], preserve_index=False))
         )
+        _require_unique_keys(b, pdf, keys, len(evicted))
 
         guard = list(order_cols or ())
 
@@ -672,9 +703,11 @@ def mor_delta_frame(
     the spj plan does, so a whole MoR epoch is ONE Spark job.
 
     Within a delta file keys are unique (the epoch batch is LWW-
-    deduplicated upstream); across files the manifest's delta order is
-    the apply order, and the engine's epoch watermark guarantees that
-    order matches event time for the batch engine.
+    deduplicated upstream, and a repeated key raises
+    ``DuplicateKeyError`` before the file is written); across files the
+    manifest's delta order is the apply order, and the engine's epoch
+    watermark guarantees that order matches event time for the batch
+    engine.
     """
     import pandas as pd
 
@@ -688,8 +721,11 @@ def mor_delta_frame(
         import os as _os
 
         import pyarrow as _pa
+        import pyarrow.compute as _pc
 
         b = int(pdf["__b"].iloc[0])
+        kt = _pa.Table.from_pandas(pdf[keys_b], preserve_index=False)
+        _require_unique_keys(b, pdf, keys_b, len(_pc.unique(composite_key_array(kt, keys_b))))
         st = _bucket_stats(pdf, stat_cols)
         pdf = pdf.sort_values(keys_b)
         dfp = pdf.copy()

@@ -7,11 +7,97 @@ shuffle partitions sized to cores, Arrow enabled for pandas UDFs).
 
 from __future__ import annotations
 
+import atexit
 import os
+import re
+import shutil
+import stat
+import tempfile
 
 from pyspark.sql import SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Python workers talk to the JVM over Unix domain sockets bound at
+# ``<dir>/.<uuid4>.sock``. sun_path holds 107 bytes plus the NUL, and
+# perfbench and CI point $TMPDIR (and java.io.tmpdir) at deep paths, so
+# the directory is a short one directly under /tmp.
+_SOCK_ROOT = "/tmp"
+_SOCK_PREFIX = "dxs-"
+_SOCK_NAME_RE = re.compile(re.escape(_SOCK_PREFIX) + r"(\d+)-[A-Za-z0-9_]+")
+_SOCK_PATH_MAX = 107
+_SOCK_NAME_LEN = len("/.") + 36 + len(".sock")
+# one directory per process, shared by every session it builds
+_sock_dir: tuple[int, str] | None = None  # (owner pid, path)
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True
+    return True
+
+
+def _sweep_dead_socket_dirs() -> None:
+    """Remove this uid's ``/tmp/dxs-<pid>-*`` directories whose process
+    is gone (a SIGKILLed process never runs its exit hook)."""
+    uid = os.getuid()
+    try:
+        names = os.listdir(_SOCK_ROOT)
+    except OSError:
+        return
+    for name in names:
+        m = _SOCK_NAME_RE.fullmatch(name)
+        if m is None or _pid_alive(int(m.group(1))):
+            continue
+        path = os.path.join(_SOCK_ROOT, name)
+        try:
+            st = os.lstat(path)
+        except OSError:
+            continue
+        if stat.S_ISDIR(st.st_mode) and st.st_uid == uid:
+            shutil.rmtree(path, ignore_errors=True)
+
+
+def _remove_socket_dir(owner: int, path: str) -> None:
+    # a forked child inherits this hook; only the owner removes the dir
+    if os.getpid() == owner:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def python_socket_dir() -> str:
+    """This process's directory for the Python worker sockets.
+
+    Made once per process as ``/tmp/dxs-<pid>-<random>`` with mode 0700
+    and removed at exit; each call first removes the directories of dead
+    processes. In Unix-socket mode Spark sends no per-connection
+    auth secret, so the directory's permissions are the only access
+    control: a directory that is not ours or not 0700 is never reused."""
+    global _sock_dir
+    _sweep_dead_socket_dirs()
+    pid = os.getpid()
+    if _sock_dir is not None and _sock_dir[0] == pid:
+        try:
+            st = os.lstat(_sock_dir[1])
+        except OSError:
+            st = None
+        if (
+            st is not None
+            and stat.S_ISDIR(st.st_mode)
+            and st.st_uid == os.getuid()
+            and stat.S_IMODE(st.st_mode) == 0o700
+        ):
+            return _sock_dir[1]
+    path = tempfile.mkdtemp(prefix=f"{_SOCK_PREFIX}{pid}-", dir=_SOCK_ROOT)  # mode 0700
+    if len(path.encode()) + _SOCK_NAME_LEN > _SOCK_PATH_MAX:
+        os.rmdir(path)
+        raise RuntimeError(f"socket directory {path!r} leaves no room for a socket name")
+    atexit.register(_remove_socket_dir, pid, path)
+    _sock_dir = (pid, path)
+    return path
 
 
 def get_spark(
@@ -76,7 +162,13 @@ def get_spark(
             # re-read of pyspark.zip), so the package must be importable
             # on the worker path whatever the caller's cwd and PYTHONPATH
             .config("spark.python.daemon.module", "datax_spark.pyworker")
+            # Python workers, the accumulator server and result serving
+            # use Unix sockets in a 0700 per-process directory instead
+            # of authenticated loopback TCP
+            .config("spark.python.unix.domain.socket.enabled", "true")
         )
+        if "spark.python.unix.domain.socket.dir" not in extra_conf:
+            builder = builder.config("spark.python.unix.domain.socket.dir", python_socket_dir())
         key = "spark.executorEnv.PYTHONPATH"
         parts = [p for p in extra_conf.get(key, "").split(os.pathsep) if p]
         if _PACKAGE_PARENT not in parts:

@@ -289,9 +289,17 @@ def snappy_decompress(data: bytes) -> bytes:
     one raw block; magic-1 message sets historically used snappy-java's
     xerial framing (magic ``\\x82SNAPPY\\x00`` + chunked blocks), which
     :func:`xerial_decompress` unwraps."""
-    n, i = _read_uvarint(data, 0)
-    out = bytearray()
     ln = len(data)
+
+    def need(k):
+        if i + k > ln:
+            raise ValueError("snappy: truncated block")
+
+    try:
+        n, i = _read_uvarint(data, 0)
+    except IndexError:
+        raise ValueError("snappy: truncated length header") from None
+    out = bytearray()
     while i < ln:
         tag = data[i]
         i += 1
@@ -300,12 +308,15 @@ def snappy_decompress(data: bytes) -> bytes:
             size = tag >> 2
             if size >= 60:
                 nb = size - 59
+                need(nb)
                 size = int.from_bytes(data[i : i + nb], "little")
                 i += nb
             size += 1
+            need(size)
             out += data[i : i + size]
             i += size
             continue
+        need(t if t < 3 else 4)  # offset bytes of the copy
         if t == 1:  # copy with 1-byte offset
             size = ((tag >> 2) & 0x7) + 4
             off = ((tag >> 5) << 8) | data[i]

@@ -125,59 +125,103 @@ def bson_encode(doc: dict) -> bytes:
     return struct.pack("<i", len(body) + 5) + body + b"\x00"
 
 
-def _dec_cstring(data: bytes, i: int) -> tuple[str, int]:
-    end = data.index(b"\x00", i)
-    return data[i:end].decode("utf-8"), end + 1
+class BsonError(ValueError):
+    """Malformed or truncated BSON input."""
 
 
-def bson_decode(data: bytes, i: int = 0) -> tuple[dict, int]:
-    total = struct.unpack_from("<i", data, i)[0]
+# stored documents nest at most 100 levels and a reply wraps them in a
+# few more; the bound keeps hostile input off Python's recursion limit
+_MAX_DEPTH = 200
+
+
+def _utf8(raw: bytes) -> str:
+    try:
+        return raw.decode("utf-8")
+    except UnicodeDecodeError as e:
+        raise BsonError(f"invalid UTF-8 in BSON: {e}") from e
+
+
+def _dec_cstring(data: bytes, i: int, end: int) -> tuple[str, int]:
+    stop = data.find(b"\x00", i, end)
+    if stop < 0:
+        raise BsonError("unterminated BSON cstring")
+    return _utf8(data[i:stop]), stop + 1
+
+
+def _take(i: int, n: int, end: int) -> int:
+    """Offset past ``n`` bytes at ``i``; they must lie before ``end``."""
+    if n < 0 or i + n > end:
+        raise BsonError("BSON element runs past its document")
+    return i + n
+
+
+def _unpack(fmt: str, data: bytes, i: int, end: int):
+    j = _take(i, struct.calcsize(fmt), end)
+    return struct.unpack_from(fmt, data, i)[0], j
+
+
+def _decode_doc(data: bytes, i: int, limit: int, depth: int = 0) -> tuple[dict, int]:
+    if depth > _MAX_DEPTH:
+        raise BsonError(f"BSON nested deeper than {_MAX_DEPTH} documents")
+    total, _ = _unpack("<i", data, i, limit)
     end = i + total
+    if total < 5 or end > limit:
+        raise BsonError(f"BSON document length {total} does not fit its buffer")
     i += 4
     out: dict = {}
     while data[i] != 0:
         t = data[i]
-        i += 1
-        name, i = _dec_cstring(data, i)
+        name, i = _dec_cstring(data, i + 1, end)
         if t == 0x01:
-            out[name] = struct.unpack_from("<d", data, i)[0]
-            i += 8
+            out[name], i = _unpack("<d", data, i, end)
         elif t == 0x02:
-            n = struct.unpack_from("<i", data, i)[0]
-            out[name] = data[i + 4 : i + 4 + n - 1].decode("utf-8")
-            i += 4 + n
-        elif t == 0x03:
-            out[name], i = bson_decode(data, i)
-        elif t == 0x04:
-            arr_doc, i = bson_decode(data, i)
-            out[name] = list(arr_doc.values())
+            n, i = _unpack("<i", data, i, end)
+            stop = _take(i, n, end)
+            if n < 1 or data[stop - 1] != 0:
+                raise BsonError(f"malformed BSON string for field {name!r}")
+            out[name] = _utf8(data[i : stop - 1])
+            i = stop
+        elif t in (0x03, 0x04):
+            sub, i = _decode_doc(data, i, end, depth + 1)
+            out[name] = sub if t == 0x03 else list(sub.values())
         elif t == 0x05:
-            n = struct.unpack_from("<i", data, i)[0]
-            out[name] = bytes(data[i + 5 : i + 5 + n])
-            i += 5 + n
+            n, i = _unpack("<i", data, i, end)
+            stop = _take(i + 1, n, end)  # subtype byte, then the payload
+            out[name] = bytes(data[i + 1 : stop])
+            i = stop
         elif t == 0x07:
-            out[name] = ObjectId(bytes(data[i : i + 12]))
-            i += 12
+            stop = _take(i, 12, end)
+            out[name] = ObjectId(bytes(data[i:stop]))
+            i = stop
         elif t == 0x08:
-            out[name] = data[i] == 1
-            i += 1
+            flag, i = _unpack("<B", data, i, end)
+            out[name] = flag == 1
         elif t == 0x09:
-            ms = struct.unpack_from("<q", data, i)[0]
-            out[name] = _dt.datetime.fromtimestamp(ms / 1000.0, tz=_UTC)
-            i += 8
+            ms, i = _unpack("<q", data, i, end)
+            try:
+                out[name] = _dt.datetime.fromtimestamp(ms / 1000.0, tz=_UTC)
+            except (OverflowError, OSError, ValueError) as e:
+                raise BsonError(f"BSON datetime {ms} ms out of range") from e
         elif t == 0x0A:
             out[name] = None
         elif t == 0x10:
-            out[name] = struct.unpack_from("<i", data, i)[0]
-            i += 4
+            out[name], i = _unpack("<i", data, i, end)
         elif t == 0x12:
-            out[name] = struct.unpack_from("<q", data, i)[0]
-            i += 8
+            out[name], i = _unpack("<q", data, i, end)
         else:
-            raise ValueError(f"unsupported BSON type 0x{t:02x} for field {name!r}")
+            raise BsonError(f"unsupported BSON type 0x{t:02x} for field {name!r}")
+        if i >= end:
+            raise BsonError("BSON document has no terminator")
     if i + 1 != end:
-        raise ValueError("BSON document length mismatch")
+        raise BsonError("BSON document length mismatch")
     return out, end
+
+
+def bson_decode(data: bytes, i: int = 0) -> tuple[dict, int]:
+    """Decode the BSON document at ``data[i:]``; return it and the
+    offset just past it. Malformed or truncated input raises
+    ``BsonError``."""
+    return _decode_doc(data, i, len(data))
 
 
 # ------------------------------------------------------------------ wire

@@ -3,11 +3,13 @@ evolution on read, commit conflicts, vacuum."""
 
 import contextlib
 import os
+import re
 
 import pyspark.sql.functions as F
 import pytest
 
 from datax_spark.lake import LakeTable, merge_into
+from datax_spark.lake.merge import DuplicateKeyError
 from datax_spark.lake.table import CommitConflictError
 from datax_spark.operators.schema_evolution import SchemaEvolutionError, evolve_schema
 from pyspark.sql import types as T
@@ -48,6 +50,33 @@ def test_create_merge_read(spark, tmp_path):
     # time travel: previous snapshot still readable
     old = {(r.repo, r.path) for r in t.read(version=1).collect()}
     assert old == {("r1", "a"), ("r2", "b")}
+
+
+def _parquet_files(root):
+    return sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs if f.endswith(".parquet")
+    )
+
+
+@pytest.mark.parametrize("strategy", ["spj", "mor"])
+def test_duplicate_key_batch_raises_and_writes_nothing(spark, tmp_path, strategy):
+    root = str(tmp_path / strategy)
+    t = LakeTable.create(spark, root, SCHEMA, ["repo", "path"], num_buckets=4)
+    merge_into(t, _upserts(spark, [("r1", "a", 1, "x"), ("r2", "b", 2, "y")]),
+               strategy=strategy).commit()
+    version, files = t.manifest().version, _parquet_files(root)
+    before = sorted(t.read().collect())
+    dup = _upserts(spark, [("r1", "a", 3, "x2"), ("r3", "c", 4, "z"), ("r1", "a", 5, "x3")])
+    with pytest.raises(DuplicateKeyError, match=r"bucket \d+: key .*'r1'.*'a'") as err:
+        merge_into(t, dup, strategy=strategy)
+    assert t.manifest().version == version
+    assert sorted(t.read().collect()) == before
+    # the failing bucket's task wrote nothing; other buckets' tasks of
+    # the aborted job may leave uncommitted files in the new txn dir
+    b = int(re.search(r"bucket (\d+)", str(err.value)).group(1))
+    new = set(_parquet_files(root)) - set(files)
+    assert set(files) <= set(_parquet_files(root))
+    assert not [f for f in new if f.endswith(f"b{b:05d}.parquet")]
 
 
 def test_bucket_pruning(spark, tmp_path):

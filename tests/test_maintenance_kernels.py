@@ -190,7 +190,7 @@ def test_shared_feed_refresh(spark, tmp_path):
     for step in range(2):
         v0 = views[0].synced_version()
         _write(spark, src, [_row(j, GROUPS[(j + step) % len(GROUPS)], 2 + step)
-                            for j in range(0, 120, 3)], deletes=[7 + step, 8 + step])
+                            for j in range(0, 120, 3)], deletes=[7 + 3 * step, 8 + 3 * step])
         cdf = src.changes(v0, src.current_version(), include_preimage=True).persist()
         try:
             for v in views:

@@ -24,8 +24,12 @@ Usage:
   python tools/chaos_multiwriter.py [n_events] [epochs] [cpus]
       [buckets] [root] [kills]
 Prints one JSON summary line; exits non-zero on any verification
-failure.  DATAX_OBJECTSTORE_CHAOS=1 additionally routes every commit
-of every process through an in-process conditional-put object store
+failure, and when ``kills`` > 0 but no kill fired (the replay finished
+first, so the run checked contention but no SIGKILL recovery). The
+first kill fires 20 s after the replay worker starts (each next one 15 s
+later), so the ``epochs`` of ``n_events`` must outlast that delay.
+DATAX_OBJECTSTORE_CHAOS=1 additionally routes every commit of every
+process through an in-process conditional-put object store
 (lake/objectstore.py) instead of the flock backend.
 """
 
@@ -286,6 +290,7 @@ def main() -> None:
     got_view = {r["lang"]: (r["n_rows"], r["sum_lsn"], r["max_lsn"])
                 for r in view_rows}
     view_ok = expected_view == got_view
+    kills_ok = n_kills == 0 or kills > 0
 
     summary = {
         "n_events": n_events,
@@ -299,12 +304,13 @@ def main() -> None:
         "matview": last_json(view_out),
         **out,
         "backend": "objectstore" if objectstore else "localfs",
-        "verify": {"view_equal": view_ok, "linear_history": linear},
+        "verify": {"view_equal": view_ok, "linear_history": linear,
+                   "kills_fired": kills_ok},
     }
     print(json.dumps(summary), flush=True)
     if srv is not None:
         srv.close()
-    if not (out["verified"] == oracle.VERIFIED and view_ok and linear):
+    if not (out["verified"] == oracle.VERIFIED and view_ok and linear and kills_ok):
         sys.exit(1)
     # reclaim the big intermediates on success
     for d in (hashed, os.path.join(root, "duck_spill")):
