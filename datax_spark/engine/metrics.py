@@ -8,6 +8,11 @@ a bucketed lake: (epoch, bucket). One row per bucket per epoch:
     epoch, bucket, n_events, n_deletes, min_lsn, max_lsn (the event
     offsets), bytes_in, n_keys_after_dedup, rows_after_merge, apply_ms
 
+``apply_ms`` is the bucket's own time in its merge task (read current
++ merge + write, timed inside the bucket kernel), so a hot bucket
+shows as the row with the largest value; the epoch's wall time is
+``EpochResult.apply_ms``.
+
 Written driver-side with pyarrow (the rows are a per-epoch aggregate —
 at most num_buckets of them), under ``metrics_root/epoch=N/``,
 overwritten on replay so metrics are idempotent too.

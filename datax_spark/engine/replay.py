@@ -14,7 +14,7 @@ as a micro-batch loop):
        salted two-stage variant for single-hot-key streams composes
        the same exact stats across its stages (sum/min/max of
        partials), so it rides the fused one-job epoch too
-    4. vectorized transforms — Arrow pandas-UDF content transforms on
+    4. vectorized transforms — Arrow UDF content transforms on
        the winning images only (never per-row Python; north_star
        requirement), computed lazily exactly once inside the merge
     5. MERGE              — per-bucket storage-partitioned merge into
@@ -375,10 +375,11 @@ def maybe_rebucket(table: "LakeTable", cfg: "ReplayConfig") -> int | None:
     return nb
 
 
-def _lineage_rows(slot: int, pending, apply_ms: float) -> list[dict]:
+def _lineage_rows(slot: int, pending) -> list[dict]:
     """Per-(slot, bucket) lineage metrics rows from the merge's fused
-    per-bucket stats. Callers write them BEFORE the commit point, so a
-    crash after commit leaves no metrics hole (write_epoch_metrics
+    per-bucket stats; ``apply_ms`` is the bucket task's own read +
+    merge + write time. Callers write them BEFORE the commit point, so
+    a crash after commit leaves no metrics hole (write_epoch_metrics
     overwrites, so a pre-commit crash replays them cleanly)."""
     after = pending.stats.bucket_rows_after
     return [
@@ -392,7 +393,7 @@ def _lineage_rows(slot: int, pending, apply_ms: float) -> list[dict]:
             "bytes_in": li["bytes_in"],
             "n_keys_after_dedup": li["n_keys"],
             "rows_after_merge": after.get(b, 0),
-            "apply_ms": apply_ms,
+            "apply_ms": li["kernel_ms"],
         }
         for b, li in sorted(pending.bucket_stats.items())
     ]
@@ -646,7 +647,7 @@ class ReplayEngine:
             raise ReplayCrash("after_write")
 
         # lineage slot -1 is the initial load
-        rows = _lineage_rows(-1, pending, (time.monotonic() - t0) * 1000.0)
+        rows = _lineage_rows(-1, pending)
         write_epoch_metrics(self.metrics_root, -1, rows)
         tp = time.monotonic()
         version = audit_gated_commit(
@@ -837,7 +838,7 @@ class ReplayEngine:
         if "after_write" in failpoints:
             raise ReplayCrash("after_write")
 
-        rows = _lineage_rows(slot, pending, (time.monotonic() - t0) * 1000.0)
+        rows = _lineage_rows(slot, pending)
         write_epoch_metrics(self.metrics_root, slot, rows)
         tp = time.monotonic()
         version = audit_gated_commit(
@@ -972,7 +973,7 @@ class ReplayEngine:
         ONE Spark job. ``aligned`` makes it a ONE-shuffle job: the
         dedup agg's exchange, pinned to num_buckets partitions, IS the
         bucket routing, so the merge adds no exchange at all
-        (mapInPandas over the agg output, asserted executor-side). It
+        (mapInArrow over the agg output, asserted executor-side). It
         needs full-key routing — callers pass ``not m.bucket_cols`` —
         and no exchange after the dedup; otherwise ``merge_into``
         routes the frame itself. The conf pins must be live when
@@ -1158,7 +1159,7 @@ class ReplayEngine:
             raise ReplayCrash("after_write")
 
         apply_ms = (time.monotonic() - t0) * 1000.0
-        rows = _lineage_rows(slot, pending, apply_ms)
+        rows = _lineage_rows(slot, pending)
         tp = time.monotonic()
         write_epoch_metrics(self.metrics_root, slot, rows)
         ph["metrics"] = (time.monotonic() - tp) * 1000

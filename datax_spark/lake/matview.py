@@ -508,11 +508,8 @@ class AggView:
             int(b): unit_files(self.root, vm, vm.num_buckets, int(b))
             for b in set(vm.files) | set(vm.delta_files)
         }
-        apply_schema = to_arrow_schema(_APPLY_SCHEMA)
 
         def apply_bucket(d):
-            import pyarrow as pa
-
             b = int(d.column("__b")[0].as_py())
             row = {
                 "bucket": b, "rows": 0, "file": None, "n_changed": d.num_rows,
@@ -535,12 +532,12 @@ class AggView:
                     row["dirty_file"] = write_parquet_atomic(
                         dirty, os.path.join(txn, f"b{b:05d}-dirty-keys.parquet")
                     )
-            return pa.Table.from_pylist([row], schema=apply_schema)
+            return [row]
 
         nb = int(vm.num_buckets)
         return aligned_bucket_apply(
             delta.repartitionById(nb, "__b"), apply_bucket, nb,
-            schema=_APPLY_SCHEMA, arrow=True,
+            schema=_APPLY_SCHEMA,
         )
 
     def _recompute_dirty(
@@ -576,23 +573,17 @@ class AggView:
         pa_schema = to_arrow_schema(vm.schema)
 
         def write_bucket(t):
-            import pyarrow as pa
-
             b = int(t.column("__b")[0].as_py())
             final = write_parquet_atomic(
                 conform_arrow(t, pa_schema),
                 os.path.join(txn, f"b{b:05d}-recomputed.parquet"),
             )
-            return pa.table({
-                "bucket": pa.array([b], pa.int32()),
-                "rows": pa.array([t.num_rows], pa.int64()),
-                "file": pa.array([final], pa.string()),
-            })
+            return [{"bucket": b, "rows": t.num_rows, "file": final}]
 
         nb = int(vm.num_buckets)
         return aligned_bucket_apply(
             fresh.repartitionById(nb, "__b"), write_bucket, nb,
-            schema="bucket int, rows long, file string", arrow=True,
+            schema="bucket int, rows long, file string",
         ).collect()
 
     # ------------------------------------------------------------------

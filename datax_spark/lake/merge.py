@@ -16,8 +16,8 @@ executed set-wise instead of row-batch-wise.
 Physical plans — one per table mode, same verified output, one shape:
 the epoch batch is routed so that partition b holds exactly bucket b
 (``merge_into`` repartitions on the routing columns, or the caller's
-own shuffle already did), and a per-bucket pandas kernel runs as
-``mapInPandas`` over it (``aligned_bucket_apply``).
+own shuffle already did), and a per-bucket Arrow kernel runs as
+``mapInArrow`` over it (``aligned_bucket_apply``).
 
 * **spj** (copy-on-write, the default): the storage-partitioned
   merge. The table is already bucket-hashed on its keys, so the
@@ -46,8 +46,13 @@ from __future__ import annotations
 
 import os
 import re
+import time
+import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.errors import PythonException
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -60,6 +65,7 @@ from datax_spark.lake.table import (
     bucket_state_arrow,
     composite_key_array,
     conform_arrow,
+    spark_sort_indices,
     write_parquet_atomic,
 )
 from datax_spark.operators.schema_evolution import (
@@ -77,12 +83,16 @@ class DuplicateKeyError(ValueError):
 _DUPLICATE_KEY_RE = re.compile(r"DuplicateKeyError: (.*)")
 
 
-def _require_unique_keys(b: int, pdf, keys: list[str], n_unique: int) -> None:
+def _require_unique_keys(b: int, part, keys: list[str], kc, n_unique: int) -> None:
     """Raise ``DuplicateKeyError`` naming bucket ``b`` and one repeated
-    key unless ``pdf`` holds ``n_unique`` (distinct composite keys) rows."""
-    if n_unique == len(pdf):
+    key unless ``part`` holds ``n_unique`` (distinct composite keys
+    ``kc``) rows."""
+    if n_unique == part.num_rows:
         return
-    dup = pdf.loc[pdf.duplicated(keys), keys].iloc[0].to_dict()
+    counts = pc.value_counts(kc)
+    first = counts.field("values").filter(pc.greater(counts.field("counts"), 1))[0]
+    i = pc.index(kc, first).as_py()
+    dup = {k: part.column(k)[i].as_py() for k in keys}
     raise DuplicateKeyError(
         f"bucket {b}: key {dup!r} occurs more than once in the update "
         f"batch; merge_into needs one row per key"
@@ -310,6 +320,7 @@ def merge_into(
                 "min_lsn": r["min_lsn"],
                 "max_lsn": r["max_lsn"],
                 "bytes_in": int(r["bytes_in"]),
+                "kernel_ms": float(r["kernel_ms"]),
             }
             for r in res
         },
@@ -386,59 +397,92 @@ def merge_frame(
     return frame, evolved
 
 
-_conform_arrow = conform_arrow  # shared with the table's MoR read path
-
-
 SPJ_STATS_SCHEMA = (
     "bucket int, rows long, file string, n_keys long, n_events long, "
-    "n_deletes long, min_lsn long, max_lsn long, bytes_in long"
+    "n_deletes long, min_lsn long, max_lsn long, bytes_in long, "
+    "kernel_ms double"
 )
 
 
-def _bucket_stats(pdf, stat_cols: tuple[str, ...] | None) -> dict:
-    """One bucket's lineage row (the non-key columns of
-    ``SPJ_STATS_SCHEMA``), computed inside the bucket task from the
-    per-key counters ``stat_cols`` (``operators.dedup.STAT_COLS``
+def _bucket_stats(part, stat_cols: tuple[str, ...] | None) -> dict:
+    """One bucket's lineage row (the ``SPJ_STATS_SCHEMA`` columns from
+    ``n_keys`` to ``bytes_in``), computed inside the bucket task from
+    the per-key counters ``stat_cols`` (``operators.dedup.STAT_COLS``
     order: n_events, n_deletes, min_lsn, max_lsn, bytes_in); without
     them only the key count is known."""
-    if not stat_cols:
-        return {
-            "n_keys": len(pdf), "n_events": 0, "n_deletes": 0,
-            "min_lsn": None, "max_lsn": None, "bytes_in": 0,
-        }
-    n_events, n_deletes, min_lsn, max_lsn, bytes_in = stat_cols
-    return {
-        "n_keys": len(pdf),
-        "n_events": int(pdf[n_events].sum()),
-        "n_deletes": int(pdf[n_deletes].sum()),
-        "min_lsn": int(pdf[min_lsn].min()),
-        "max_lsn": int(pdf[max_lsn].max()),
-        "bytes_in": int(pdf[bytes_in].sum()),
+    st = {
+        "n_keys": part.num_rows, "n_events": 0, "n_deletes": 0,
+        "min_lsn": None, "max_lsn": None, "bytes_in": 0,
     }
+    if stat_cols:
+        n_events, n_deletes, min_lsn, max_lsn, bytes_in = stat_cols
+        st.update(
+            n_events=pc.sum(part.column(n_events)).as_py(),
+            n_deletes=pc.sum(part.column(n_deletes)).as_py(),
+            min_lsn=pc.min(part.column(min_lsn)).as_py(),
+            max_lsn=pc.max(part.column(max_lsn)).as_py(),
+            bytes_in=pc.sum(part.column(bytes_in)).as_py(),
+        )
+    return st
+
+
+def _bucket_keys(part, keys: list[str], stat_cols: tuple[str, ...] | None):
+    """The opening step of both merge kernels: the bucket id, the
+    composite key of every update row and the set of them (raising
+    ``DuplicateKeyError`` before anything is written when a key
+    repeats), and the bucket's lineage stats."""
+    b = int(part.column("__b")[0].as_py())
+    kc = composite_key_array(part, keys)
+    uniq = pc.unique(kc)
+    _require_unique_keys(b, part, keys, kc, len(uniq))
+    return b, kc, uniq, _bucket_stats(part, stat_cols)
+
+
+def _is_delete(part, op_col: str, delete_op: str):
+    """True where the row's op is ``delete_op``; a NULL op is an
+    upsert."""
+    return pc.fill_null(pc.equal(part.column(op_col), delete_op), False)
+
+
+def _newer(upd, cur, cols: list[str]):
+    """True where the order tuple ``upd[cols]`` is strictly greater
+    than ``cur[cols]`` (row-aligned tables). A NULL on either side
+    compares as neither greater nor equal."""
+    gt = eq = None
+    for c in cols:
+        g = pc.fill_null(pc.greater(upd.column(c), cur.column(c)), False)
+        e = pc.fill_null(pc.equal(upd.column(c), cur.column(c)), False)
+        gt = g if gt is None else pc.or_(gt, pc.and_(eq, g))
+        eq = e if eq is None else pc.and_(eq, e)
+    return gt
 
 
 def aligned_bucket_apply(
-    upd: DataFrame, bucket_fn, nb: int, schema=SPJ_STATS_SCHEMA, arrow: bool = False
+    upd: DataFrame, bucket_fn, nb: int, schema=SPJ_STATS_SCHEMA
 ) -> DataFrame:
     """Run a per-bucket kernel over a bucket-aligned frame — no
-    exchange of its own, one task per bucket. ``bucket_fn`` takes the
-    bucket's rows as one pandas frame and returns a pandas frame
-    (``mapInPandas``), or with ``arrow=True`` takes and returns
-    ``pa.Table`` s (``mapInArrow``, column types bit-exact); its
-    output rows follow ``schema``.
+    exchange of its own, one ``mapInArrow`` task per bucket.
+    ``bucket_fn`` takes the bucket's rows as one ``pa.Table`` (column
+    types bit-exact, no host-language conversion) and returns its
+    output rows as a list of dicts that follow ``schema``.
 
     Precondition: partition p holds exactly the rows of bucket p —
     a ``repartitionById(nb, __b)`` (``merge_frame``, the view refresh,
-    the scd2 tiered apply), or the engine's dedup shuffle
-    ``hashpartitioning(key_cols, nb)`` under ``aligned_shuffle_confs``
-    (murmur3 buckets make its partition id ``pmod(murmur3(key_cols),
-    nb)`` the bucket).
+    the scd2 tiered apply, ``LakeTable.rebucket``), or the engine's
+    dedup shuffle ``hashpartitioning(key_cols, nb)`` under
+    ``aligned_shuffle_confs`` (murmur3 buckets make its partition id
+    ``pmod(murmur3(key_cols), nb)`` the bucket).
 
     The contract is ASSERTED executor-side per partition (one vector
     compare of ``__b`` against TaskContext.partitionId), so a broken
     precondition — a transform that repartitioned, a stray conf — is a
     loud crash before any file is written, never silent misplacement.
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    out_schema = to_arrow_schema(schema)
 
     def apply_partition(batches):
         from pyspark import TaskContext
@@ -446,17 +490,8 @@ def aligned_bucket_apply(
         chunks = [b for b in batches if len(b)]
         if not chunks:
             return
-        if arrow:
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            part = pa.Table.from_batches(chunks)
-            bs = pc.unique(part.column("__b")).to_pylist()
-        else:
-            import pandas as pd
-
-            part = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            bs = part["__b"].unique()
+        part = pa.Table.from_batches(chunks)
+        bs = pc.unique(part.column("__b")).to_pylist()
         pid = int(TaskContext.get().partitionId())
         if len(bs) != 1 or int(bs[0]) != pid:
             raise RuntimeError(
@@ -469,15 +504,9 @@ def aligned_bucket_apply(
                 f"off), breaks alignment; merge_into(aligned=False) "
                 f"routes the frame itself."
             )
-        out = bucket_fn(part)
-        if arrow:
-            yield from out.to_batches()
-        else:
-            yield out
+        yield from pa.Table.from_pylist(bucket_fn(part), schema=out_schema).to_batches()
 
-    if arrow:
-        return upd.mapInArrow(apply_partition, schema=schema)
-    return upd.mapInPandas(apply_partition, schema=schema)
+    return upd.mapInArrow(apply_partition, schema=schema)
 
 
 def spj_merge_frame(
@@ -517,12 +546,12 @@ def spj_merge_frame(
     merge, and the commit clears the bucket's deltas since the new
     file has them baked in.
 
-    Memory model: one task holds one bucket's update batch (pandas)
-    plus ONE current data file at a time (Arrow streaming write), or
-    for a delta-bearing bucket its whole resolved state (the MoR
-    read's bound) — bounded by ``num_buckets``, the same dial as the
-    CoW blast radius. Crash-safety: files land under a fresh txn dir
-    via write-to-tmp + atomic rename (task retries are idempotent:
+    Memory model: one task holds one bucket's update batch plus ONE
+    current data file at a time (Arrow streaming write), or for a
+    delta-bearing bucket its whole resolved state (the MoR read's
+    bound) — bounded by ``num_buckets``, the same dial as the CoW
+    blast radius. Crash-safety: files land under a fresh txn dir via
+    write-to-tmp + atomic rename (task retries are idempotent:
     deterministic final name, last rename wins); nothing is visible
     until the manifest swap.
 
@@ -532,18 +561,19 @@ def spj_merge_frame(
     task itself: the whole epoch — dedup, transforms, merge, lineage —
     becomes ONE Spark job with no intermediate persist/collect barrier
     (previously a separate bucket-stats job cost ~1s of fixed overhead
-    per epoch on small epochs).
+    per epoch on small epochs). Each stats row also carries the task's
+    own read + merge + write time (``kernel_ms``).
 
     ``order_cols`` enables the cross-batch LWW guard (``WHEN MATCHED
     AND s.order > t.order``) inside the bucket task: matched current
     rows are only evicted when the update's order tuple is strictly
-    greater, and stale upserts are dropped — all via vectorized pandas
-    merges on the (bounded) matched subset, never per-row Python. Used
-    by the streaming sink, where re-delivered or out-of-order
+    greater, and stale upserts are dropped. Update and current order
+    tuples are aligned by ``pc.index_in`` on the composite key and
+    compared column by column in Arrow, never per-row Python; the keys
+    whose update lost are then left out of the upserts. Used by
+    the streaming sink, where re-delivered or out-of-order
     micro-batches must not regress a key.
     """
-    import pandas as pd
-
     from pyspark.sql.pandas.types import to_arrow_schema
 
     keys = list(m.key_cols)
@@ -557,59 +587,17 @@ def spj_merge_frame(
     }
     resolve = list(m.resolve_order)
     evolved_pa = to_arrow_schema(evolved)
-    out_cols = [f.name for f in evolved.fields]
+    guard = list(order_cols or ())
+    guard_pa = pa.schema([evolved_pa.field(c) for c in guard])
 
-    def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        import os as _os
-        import uuid as _uuid
+    def merge_bucket(part: pa.Table) -> list[dict]:
+        t0 = time.perf_counter()
+        b, ukeys, evicted, st = _bucket_keys(part, keys, stat_cols)
+        upd_order = conform_arrow(part, guard_pa) if guard else None
+        stale = []  # composite keys whose current row beat the update
 
-        import pyarrow as _pa
-        import pyarrow.compute as _pc
-        import pyarrow.parquet as _pq
-
-        b = int(pdf["__b"].iloc[0])
-        st = _bucket_stats(pdf, stat_cols)
-
-        def composite(tbl):
-            # One kernel for BOTH sides — the shared length-prefixed
-            # injective encoding (see table.composite_key_array for why
-            # pandas elementwise concat must never build these keys).
-            return composite_key_array(tbl, keys)
-
-        evicted = _pc.unique(
-            composite(_pa.Table.from_pandas(pdf[keys], preserve_index=False))
-        )
-        _require_unique_keys(b, pdf, keys, len(evicted))
-
-        guard = list(order_cols or ())
-
-        def lex_gt(dfm, pairs):
-            """Vectorized lexicographic compare over column pairs:
-            True where tuple(left cols) > tuple(right cols)."""
-            import numpy as np
-
-            gt = np.zeros(len(dfm), dtype=bool)
-            eq = np.ones(len(dfm), dtype=bool)
-            for lcol, rcol in pairs:
-                lv, rv = dfm[lcol], dfm[rcol]
-                gt |= eq & (lv > rv).fillna(False).to_numpy(dtype=bool)
-                eq &= (lv == rv).fillna(False).to_numpy(dtype=bool)
-            return gt
-
-        def pd_to_arrow(dfp):
-            dfp = dfp.copy()
-            for c in out_cols:
-                if c not in dfp.columns:
-                    dfp[c] = None
-            return _pa.Table.from_pandas(
-                dfp[out_cols], schema=evolved_pa, preserve_index=False
-            )
-
-        upd_ko = pdf[keys + guard] if guard else None
-        cur_seen = []  # matched current (keys + order), for stale-upsert drop
-
-        final = _os.path.join(txn, f"b{b:05d}.parquet")
-        tmp = f"{final}.{_uuid.uuid4().hex}.tmp"
+        final = os.path.join(txn, f"b{b:05d}.parquet")
+        tmp = f"{final}.{uuid.uuid4().hex}.tmp"
         if b in bucket_deltas:
             current = [
                 bucket_state_arrow(
@@ -618,60 +606,49 @@ def spj_merge_frame(
                 )
             ]
         else:
-            current = (_pq.read_table(f) for f in bucket_files.get(b, ()))
+            current = (pq.read_table(f) for f in bucket_files.get(b, ()))
         writer = None
         rows = 0
+
+        def write(t):
+            nonlocal writer, rows
+            if t.num_rows:
+                writer = writer or pq.ParquetWriter(tmp, evolved_pa)
+                writer.write_table(conform_arrow(t, evolved_pa))
+                rows += t.num_rows
+
         try:
             for t in current:
                 if not t.num_rows:
                     continue
-                in_upd = _pc.is_in(composite(t), value_set=evicted)
-                surv = t.filter(_pc.invert(in_upd))
-                if surv.num_rows:
-                    surv = _conform_arrow(surv, evolved_pa)
-                    writer = writer or _pq.ParquetWriter(tmp, evolved_pa)
-                    writer.write_table(surv)
-                    rows += surv.num_rows
+                ck = composite_key_array(t, keys)
+                in_upd = pc.is_in(ck, value_set=evicted)
+                write(t.filter(pc.invert(in_upd)))
                 if guard:
-                    matched = t.filter(in_upd)
-                    if matched.num_rows:
-                        mp = matched.to_pandas()
-                        cur_seen.append(mp[keys + guard])
-                        mm = mp.merge(
-                            upd_ko, on=keys, how="left", suffixes=("", "__u")
-                        )
-                        newer = lex_gt(mm, [(c + "__u", c) for c in guard])
-                        keep = mp[~newer]  # update is stale: current row stays
-                        if len(keep):
-                            writer = writer or _pq.ParquetWriter(tmp, evolved_pa)
-                            kt = pd_to_arrow(keep)
-                            writer.write_table(kt)
-                            rows += kt.num_rows
-            ups = pdf[pdf[op_col] != delete_op]
-            if guard and len(ups) and cur_seen:
-                cur_ord = pd.concat(cur_seen, ignore_index=True)
-                mm = ups.merge(
-                    cur_ord, on=keys, how="left",
-                    suffixes=("", "__c"), indicator=True,
-                )
-                newer = lex_gt(mm, [(c, c + "__c") for c in guard])
-                keep_mask = (mm["_merge"] == "left_only").to_numpy() | newer
-                ups = ups[keep_mask]
-            ups = ups.sort_values(keys)
-            if len(ups):
-                ut = pd_to_arrow(ups)
-                writer = writer or _pq.ParquetWriter(tmp, evolved_pa)
-                writer.write_table(ut)
-                rows += ut.num_rows
+                    hit, mk = t.filter(in_upd), ck.filter(in_upd)
+                    upd_m = upd_order.take(pc.index_in(mk, value_set=ukeys))
+                    old = pc.invert(_newer(upd_m, conform_arrow(hit, guard_pa), guard))
+                    # the update is stale: the current row stays and
+                    # the update's upsert is dropped
+                    write(hit.filter(old))
+                    stale.extend(mk.filter(old).chunks)
+            keep = pc.invert(_is_delete(part, op_col, delete_op))
+            if stale:
+                lost = pc.is_in(ukeys, value_set=pa.chunked_array(stale, pa.binary()))
+                keep = pc.and_(keep, pc.invert(lost))
+            ups = part.filter(keep)
+            write(ups.take(spark_sort_indices(ups, keys)))
         finally:
             if writer is not None:
                 writer.close()
         if rows:
-            _os.rename(tmp, final)
-            return pd.DataFrame([{"bucket": b, "rows": rows, "file": final, **st}])
-        if _os.path.exists(tmp):
-            _os.remove(tmp)
-        return pd.DataFrame([{"bucket": b, "rows": 0, "file": None, **st}])
+            os.rename(tmp, final)
+        elif os.path.exists(tmp):
+            os.remove(tmp)
+        return [{
+            "bucket": b, "rows": rows, "file": final if rows else None, **st,
+            "kernel_ms": (time.perf_counter() - t0) * 1000,
+        }]
 
     return aligned_bucket_apply(upd, merge_bucket, int(m.num_buckets))
 
@@ -695,12 +672,13 @@ def mor_delta_frame(
     LWW (``LakeTable._read_merged_buckets``) until ``compact()`` folds
     the deltas into a fresh base.
 
-    Physical shape: the same bucket-aligned ``mapInPandas`` as spj
-    (see ``merge_frame``); each task sorts its bucket's rows by key and
-    streams them into one parquet file under the txn dir (tmp +
-    atomic rename; deterministic name makes task retries idempotent).
-    ``stat_cols`` fuses the per-bucket lineage aggregation exactly as
-    the spj plan does, so a whole MoR epoch is ONE Spark job.
+    Physical shape: the same bucket-aligned ``mapInArrow`` kernel as
+    spj (see ``merge_frame``); each task sorts its bucket's rows by key
+    in Arrow and writes them as one parquet file under the txn dir
+    (tmp + atomic rename; deterministic name makes task retries
+    idempotent). ``stat_cols`` fuses the per-bucket lineage
+    aggregation exactly as the spj plan does, so a whole MoR epoch is
+    ONE Spark job.
 
     Within a delta file keys are unique (the epoch batch is LWW-
     deduplicated upstream, and a repeated key raises
@@ -709,42 +687,23 @@ def mor_delta_frame(
     watermark guarantees that order matches event time for the batch
     engine.
     """
-    import pandas as pd
-
     from pyspark.sql.pandas.types import to_arrow_schema
 
     evolved_pa = to_arrow_schema(evolved)
-    out_cols = [f.name for f in evolved.fields]
-    keys_b = list(m.key_cols)
+    keys = list(m.key_cols)
 
-    def write_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        import os as _os
-
-        import pyarrow as _pa
-        import pyarrow.compute as _pc
-
-        b = int(pdf["__b"].iloc[0])
-        kt = _pa.Table.from_pandas(pdf[keys_b], preserve_index=False)
-        _require_unique_keys(b, pdf, keys_b, len(_pc.unique(composite_key_array(kt, keys_b))))
-        st = _bucket_stats(pdf, stat_cols)
-        pdf = pdf.sort_values(keys_b)
-        dfp = pdf.copy()
-        for c in out_cols:
-            if c not in dfp.columns:
-                dfp[c] = None
-        t = _pa.Table.from_pandas(
-            dfp[out_cols], schema=evolved_pa, preserve_index=False
-        )
+    def write_bucket(part: pa.Table) -> list[dict]:
+        t0 = time.perf_counter()
+        b, _, _, st = _bucket_keys(part, keys, stat_cols)
+        part = part.take(spark_sort_indices(part, keys))
         # normalized tombstone marker, independent of the caller's
         # delete_op token — the read path only ever checks 'D'
-        op_norm = _pa.array(
-            [("D" if v == delete_op else "U") for v in pdf[op_col]],
-            type=_pa.string(),
-        )
-        t = t.append_column("__op", op_norm)
-        final = write_parquet_atomic(t, _os.path.join(txn, f"b{b:05d}.parquet"))
-        return pd.DataFrame(
-            [{"bucket": b, "rows": t.num_rows, "file": final, **st}]
-        )
+        op = pc.if_else(_is_delete(part, op_col, delete_op), "D", "U")
+        t = conform_arrow(part, evolved_pa).append_column("__op", op)
+        final = write_parquet_atomic(t, os.path.join(txn, f"b{b:05d}.parquet"))
+        return [{
+            "bucket": b, "rows": t.num_rows, "file": final, **st,
+            "kernel_ms": (time.perf_counter() - t0) * 1000,
+        }]
 
     return aligned_bucket_apply(upd, write_bucket, int(m.num_buckets))

@@ -178,7 +178,6 @@ def _tiered_merge(
     are written — the property that keeps epoch cost flat while the
     history grows without bound.
     """
-    import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -186,7 +185,11 @@ def _tiered_merge(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from datax_spark.lake.merge import evolve_schema
-    from datax_spark.lake.table import composite_key_array, conform_arrow
+    from datax_spark.lake.table import (
+        composite_key_array,
+        conform_arrow,
+        spark_sort_indices,
+    )
 
     m = table.manifest()
     root = table.root
@@ -197,7 +200,6 @@ def _tiered_merge(
         frozen_cols=set(m.key_cols) | set(m.bucket_cols or ()),
     )
     evolved_pa = to_arrow_schema(evolved)
-    out_cols = [f.name for f in evolved.fields]
 
     open_file: dict[int, str] = {}
     closed_files: dict[int, list[str]] = {}
@@ -230,27 +232,10 @@ def _tiered_merge(
         )
 
     txn = table.new_txn_dir()
-    op_col, delete_op = cfg.op_col, cfg.delete_op
 
-    def apply_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        import os as _os
-
-        b = int(pdf["__b"].iloc[0])
-
-        def pd_to_arrow(dfp):
-            dfp = dfp.copy()
-            for c in out_cols:
-                if c not in dfp.columns:
-                    dfp[c] = None
-            return pa.Table.from_pandas(
-                dfp[out_cols], schema=evolved_pa, preserve_index=False
-            )
-
-        evicted = pc.unique(
-            composite_key_array(
-                pa.Table.from_pandas(pdf[keys], preserve_index=False), keys
-            )
-        )
+    def apply_bucket(part: pa.Table) -> list[dict]:
+        b = int(part.column("__b")[0].as_py())
+        evicted = pc.unique(composite_key_array(part, keys))
         survivors = None
         open_rows_before = 0
         f = open_file.get(b)
@@ -263,20 +248,21 @@ def _tiered_merge(
                 )
                 survivors = conform_arrow(t.filter(keep), evolved_pa)
 
-        pdf = pdf.sort_values([*keys, cfg.seq_col])
-        new_open = pd_to_arrow(pdf[pdf["is_current"]])
+        part = part.take(spark_sort_indices(part, [*keys, cfg.seq_col]))
+        is_open = part.column("is_current")
+        new_open = conform_arrow(part.filter(is_open), evolved_pa)
         if survivors is not None and survivors.num_rows:
             new_open = pa.concat_tables([survivors, new_open])
-        closed = pd_to_arrow(pdf[~pdf["is_current"]])
+        closed = conform_arrow(part.filter(pc.invert(is_open)), evolved_pa)
 
         out = []
         if new_open.num_rows:
-            fo = _os.path.join(txn, f"b{b:05d}-open.parquet")
+            fo = os.path.join(txn, f"b{b:05d}-open.parquet")
             write_parquet_atomic(new_open, fo)
             out.append({"bucket": b, "file": fo, "kind": "open",
                         "rows": new_open.num_rows})
         if closed.num_rows:
-            fc = _os.path.join(txn, f"b{b:05d}-closed-e{epoch}.parquet")
+            fc = os.path.join(txn, f"b{b:05d}-closed-e{epoch}.parquet")
             write_parquet_atomic(closed, fc)
             out.append({"bucket": b, "file": fc, "kind": "closed",
                         "rows": closed.num_rows})
@@ -284,16 +270,14 @@ def _tiered_merge(
             out.append({"bucket": b, "file": None, "kind": "none", "rows": 0})
         for o in out:
             o["open_rows_before"] = open_rows_before
-        return pd.DataFrame(out)[
-            ["bucket", "file", "kind", "rows", "open_rows_before"]
-        ]
+        return out
 
     # routed like every merge: partition b holds bucket b, one task per
     # bucket (a groupBy's exchange would follow shuffle.partitions and
     # AQE could coalesce several buckets into one serial task)
     nb = int(m.num_buckets)
     routed = (
-        rows.drop(op_col)
+        rows.drop(cfg.op_col)
         .withColumn("__b", bucket_expr_for(m))
         .repartitionById(nb, "__b")
     )

@@ -370,9 +370,9 @@ def composite_key_array(tbl, keys: list[str]):
     are the table's primary key; the replay dirty gate enforces it).
     The encoding is binary: a binary key part is taken as its bytes
     (it need not be UTF-8), a timestamp part as its microseconds since
-    the epoch (a parquet read gives ``timestamp[us, UTC]``, a pandas
-    batch ``timestamp[ns]``: their string casts differ), every other
-    part as its string cast.
+    the epoch (a parquet read gives ``timestamp[us, UTC]``, another
+    writer may give a different unit or zone: their string casts
+    differ), every other part as its string cast.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -2012,42 +2012,20 @@ class LakeTable:
         the old snapshot until the atomic pointer swap, and the epoch
         watermark carries over so replay/resume is unaffected.
 
-        One full-table rewrite (scan -> exchange on the new bucket
-        hash -> sorted write), the same cost as a full compaction.
-        Returns the new snapshot version.
+        One full-table rewrite, the same cost as a full compaction
+        (:meth:`rebucket_frame`). Returns the new snapshot version.
         """
-        import glob as _glob
-        import re as _re
-
-        import pyarrow.parquet as _pq
-
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
         m = self.manifest()
         if new_num_buckets == m.num_buckets:
             return m.version
-        txn = self.new_txn_dir()
-        bucket = bucket_expr_for(m, num_buckets=new_num_buckets)
-        (
-            self.read()
-            .withColumn("__b", bucket)
-            .repartitionById(new_num_buckets, "__b")
-            # __b leads so the partitioned write's required ordering is
-            # a satisfied prefix — otherwise the key sort is superseded
-            .sortWithinPartitions("__b", *m.key_cols)
-            .write.mode("overwrite")
-            .partitionBy("__b")
-            .parquet(txn)
-        )
         files: dict[str, list[str]] = {}
         counts: dict[str, int] = {}
-        for d in _glob.glob(os.path.join(txn, "__b=*")):
-            b = _re.search(r"__b=(\d+)$", d).group(1)
-            fs = sorted(_glob.glob(os.path.join(d, "*.parquet")))
-            rows = sum(_pq.ParquetFile(f).metadata.num_rows for f in fs)
-            if rows:
-                files[b] = [os.path.relpath(f, self.root) for f in fs]
-                counts[b] = rows
+        frame = self.rebucket_frame(m, new_num_buckets, self.new_txn_dir())
+        for r in frame.collect():  # bounded: one row per non-empty new bucket
+            files[str(r["bucket"])] = [os.path.relpath(r["file"], self.root)]
+            counts[str(r["bucket"])] = int(r["rows"])
         stats: dict[str, dict[str, list]] = {}
         blooms: dict[str, dict[str, dict]] = {}
         if m.stats_cols:
@@ -2090,6 +2068,38 @@ class LakeTable:
             file_blooms=blooms,
         )
         return self._write_manifest(nm, expected_parent=m.version)
+
+    def rebucket_frame(self, m: Manifest, new_num_buckets: int, txn: str) -> DataFrame:
+        """The plan :meth:`rebucket` collects, as one job of the lake's
+        per-bucket write kernel (``merge.aligned_bucket_apply``): the
+        merged read of snapshot ``m`` -> one exchange
+        ``repartitionById(new_num_buckets, __b)`` -> one task per
+        non-empty new bucket, which sorts its rows by key in Arrow and
+        writes them as ``txn/b<bucket>.parquet``
+        (:func:`write_parquet_atomic`). One ``(bucket, rows, file)``
+        row per written file."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from datax_spark.lake.merge import aligned_bucket_apply
+
+        keys = list(m.key_cols)
+        pa_schema = to_arrow_schema(m.schema)
+
+        def write_bucket(part):
+            b = int(part.column("__b")[0].as_py())
+            part = conform_arrow(part.take(spark_sort_indices(part, keys)), pa_schema)
+            final = write_parquet_atomic(part, os.path.join(txn, f"b{b:05d}.parquet"))
+            return [{"bucket": b, "rows": part.num_rows, "file": final}]
+
+        routed = (
+            self.read(version=m.version)
+            .withColumn("__b", bucket_expr_for(m, num_buckets=new_num_buckets))
+            .repartitionById(new_num_buckets, "__b")
+        )
+        return aligned_bucket_apply(
+            routed, write_bucket, new_num_buckets,
+            schema="bucket int, rows long, file string",
+        )
 
     def versions(self) -> list[int]:
         """All snapshot versions that still have a manifest, ascending."""

@@ -345,41 +345,51 @@ def snappy_decompress(data: bytes) -> bytes:
 def lz4_block_decompress(data: bytes, out: bytearray | None = None) -> bytearray:
     """Raw LZ4 block decode (public format: token byte = literal-len
     nibble + match-len nibble, LSIC length extension, LE16 match
-    offset, overlap copies byte-wise)."""
+    offset, overlap copies byte-wise). A literal run, length extension
+    or match offset that runs past the input, a zero or too-far offset,
+    and a block that ends after a match (the last sequence carries
+    literals only) raise ``ValueError``."""
     out = bytearray() if out is None else out
     i = 0
     n = len(data)
+
+    def lsic(i: int, length: int) -> tuple[int, int]:
+        while True:
+            if i >= n:
+                raise ValueError("lz4: length extension runs past the block")
+            b = data[i]
+            i += 1
+            length += b
+            if b != 255:
+                return i, length
+
     while i < n:
         token = data[i]
         i += 1
         lit = token >> 4
         if lit == 15:
-            while True:
-                b = data[i]
-                i += 1
-                lit += b
-                if b != 255:
-                    break
+            i, lit = lsic(i, lit)
+        if i + lit > n:
+            raise ValueError("lz4: literal run runs past the block")
         out += data[i : i + lit]
         i += lit
-        if i >= n:
+        if i == n:
             break  # last sequence has no match part
+        if i + 2 > n:
+            raise ValueError("lz4: match offset runs past the block")
         off = int.from_bytes(data[i : i + 2], "little")
         i += 2
         if off == 0 or off > len(out):
             raise ValueError("lz4: invalid match offset")
         mlen = token & 0x0F
         if mlen == 15:
-            while True:
-                b = data[i]
-                i += 1
-                mlen += b
-                if b != 255:
-                    break
+            i, mlen = lsic(i, mlen)
         mlen += 4
         start = len(out) - off
         for j in range(mlen):
             out.append(out[start + j])
+        if i == n:
+            raise ValueError("lz4: block ends after a match")
     return out
 
 
@@ -392,36 +402,42 @@ def lz4_frame_decompress(data: bytes) -> bytes:
     [LE32 block size | high bit = stored uncompressed] blocks until
     the 0 end mark. Checksums are skipped, not verified (xxhash32 is
     out of scope; the SSH/Kafka MACs already cover transport
-    integrity)."""
+    integrity). A short header, a block or checksum shorter than
+    declared and a missing end mark raise ``ValueError``."""
     if not data.startswith(LZ4_FRAME_MAGIC):
         raise ValueError("lz4: missing frame magic")
+    if len(data) < 7:
+        raise ValueError("lz4: short frame header")
     flg = data[4]
     if (flg >> 6) != 0b01:
         raise ValueError(f"lz4: unsupported frame version {flg >> 6}")
     content_checksum = bool(flg & 0x04)
     content_size = bool(flg & 0x08)
     block_checksum = bool(flg & 0x10)
-    i = 6  # magic(4) + FLG + BD
-    if content_size:
-        i += 8
-    i += 1  # header checksum byte
+    # magic(4) + FLG + BD (+ content size) + header checksum byte
+    i = 7 + (8 if content_size else 0)
+    if i > len(data):
+        raise ValueError("lz4: short frame header")
     out = bytearray()
     while True:
+        if i + 4 > len(data):
+            raise ValueError("lz4: frame ends before its end mark")
         (word,) = struct.unpack_from("<I", data, i)
         i += 4
         if word == 0:  # EndMark
             break
         size = word & 0x7FFFFFFF
+        end = i + size + (4 if block_checksum else 0)
+        if end > len(data):
+            raise ValueError("lz4: block shorter than its declared size")
         block = data[i : i + size]
-        i += size
-        if block_checksum:
-            i += 4
+        i = end
         if word & 0x80000000:
             out += block  # stored uncompressed
         else:
             lz4_block_decompress(block, out)
-    if content_checksum:
-        i += 4
+    if content_checksum and i + 4 > len(data):
+        raise ValueError("lz4: frame ends inside its content checksum")
     return bytes(out)
 
 

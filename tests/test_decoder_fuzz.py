@@ -1,16 +1,22 @@
 """Fuzz the in-repo wire decoders (hypothesis): a truncated or
-bit-flipped BSON document raises only ``BsonError`` and a damaged raw
-snappy block only ``ValueError``; intact input round-trips. Pure
-Python, no Spark session."""
+bit-flipped BSON document raises only ``BsonError``, and a damaged raw
+snappy or LZ4 block only ``ValueError``; every strict prefix of an LZ4
+frame raises ``ValueError``; intact input round-trips. Pure Python, no
+Spark session."""
 
 from __future__ import annotations
 
 import datetime as dt
+import struct
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from datax_spark.sources.kafka import snappy_decompress
+from datax_spark.sources.kafka import (
+    lz4_block_decompress,
+    lz4_frame_decompress,
+    snappy_decompress,
+)
 from datax_spark.sources.mongo import BsonError, ObjectId, bson_decode, bson_encode
 
 SETTINGS = dict(max_examples=200, deadline=2000)
@@ -113,3 +119,94 @@ def test_snappy_decompress_raises_only_value_error(pieces, cut, flips):
         snappy_decompress(_damage(block, cut, flips))
     except ValueError:
         pass
+
+
+def _lsic(n: int) -> bytes:
+    """LZ4's length extension bytes for a length nibble of 15."""
+    out = bytearray()
+    while n >= 255:
+        out.append(255)
+        n -= 255
+    return bytes(out + bytes([n]))
+
+
+def _lz4_block(pieces: list[tuple[bytes, int, int]], tail: bytes) -> tuple[bytes, bytes]:
+    """A raw LZ4 block from (literal, match offset, match length)
+    sequences plus a literal-only last sequence, with both nibble and
+    extended lengths; returns the block and its decoded bytes."""
+    out, body = bytearray(), bytearray()
+    for lit, off, mlen in [*pieces, (tail, None, None)]:
+        ln = len(lit)
+        ml = 0 if mlen is None else mlen - 4
+        body.append((min(ln, 15) << 4) | min(ml, 15))
+        if ln >= 15:
+            body += _lsic(ln - 15)
+        body += lit
+        out += lit
+        if mlen is None:
+            break
+        off = 1 + off % min(len(out), 65535)
+        body += off.to_bytes(2, "little")
+        if ml >= 15:
+            body += _lsic(ml - 15)
+        for _ in range(mlen):
+            out.append(out[-off])
+    return bytes(body), bytes(out)
+
+
+def _lz4_frame(blocks: list[tuple[bool, bytes]], flags: int) -> bytes:
+    """An LZ4 frame of (compressed, payload) blocks; ``flags`` sets the
+    content-size, block-checksum and content-checksum FLG bits (the
+    decoder skips checksums, so their bytes are arbitrary)."""
+    flg = 0x40 | (flags & 0x1C)
+    out = bytearray(b"\x04\x22\x4d\x18") + bytes([flg, 0x40])
+    if flg & 0x08:
+        out += struct.pack("<Q", sum(len(d) for _, d in blocks))
+    out.append(0)  # header checksum byte
+    for compressed, data in blocks:
+        out += struct.pack("<I", len(data) | (0 if compressed else 0x80000000)) + data
+        if flg & 0x10:
+            out += b"bcks"
+    out += struct.pack("<I", 0)  # end mark
+    if flg & 0x04:
+        out += b"ccks"
+    return bytes(out)
+
+
+_lz4_pieces = st.lists(
+    st.tuples(st.binary(max_size=40), st.integers(0, 10**4), st.integers(4, 300)),
+    max_size=4,
+).filter(lambda ps: not ps or ps[0][0])  # the first match needs history
+_tails = st.binary(max_size=30)
+
+
+@given(pieces=_lz4_pieces, tail=_tails, cut=_cut, flips=_flips)
+@settings(**SETTINGS)
+def test_lz4_block_raises_only_value_error(pieces, tail, cut, flips):
+    block, plain = _lz4_block(pieces, tail)
+    assert bytes(lz4_block_decompress(block)) == plain
+    try:
+        lz4_block_decompress(_damage(block, cut, flips))
+    except ValueError:
+        pass
+
+
+@given(
+    blocks=st.lists(st.tuples(st.booleans(), _lz4_pieces, _tails), max_size=3),
+    flags=st.integers(0, 0xFF),
+)
+@settings(**SETTINGS)
+def test_lz4_frame_prefixes_raise_value_error(blocks, flags):
+    parts, plain = [], b""
+    for compressed, pieces, tail in blocks:
+        block, out = _lz4_block(pieces, tail)
+        parts.append((compressed, block if compressed else out))
+        plain += out
+    frame = _lz4_frame(parts, flags)
+    assert lz4_frame_decompress(frame) == plain
+    for n in range(len(frame)):
+        try:
+            lz4_frame_decompress(frame[:n])
+        except ValueError:
+            continue
+        raise AssertionError(f"prefix of {n}/{len(frame)} bytes decoded")

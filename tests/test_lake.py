@@ -291,8 +291,21 @@ def test_rebucket_evolution(spark, tmp_path):
     assert got[("r1", "p1")] == "NEW" and got[("r2", "p2")] == "NEW2"
     assert len(got) == 200
 
+    # to a coprime count: same state, one file per non-empty bucket,
+    # each holding exactly the keys that hash to it
+    t.rebucket(7)
+    m = t.manifest()
+    assert m.num_buckets == 7
+    assert {(r.repo, r.path): r.content for r in t.read().collect()} == got
+    assert all(len(fs) == 1 for fs in m.files.values())
+    for b, (rel,) in m.files.items():
+        placed = spark.read.parquet(os.path.join(root, rel)).select(
+            F.pmod(F.hash("repo", "path"), F.lit(7)).alias("b")
+        ).distinct().collect()
+        assert [r.b for r in placed] == [int(b)]
+
     # no-op and validation
-    assert t.rebucket(16) == t.current_version()
+    assert t.rebucket(7) == t.current_version()
     with pytest.raises(ValueError):
         t.rebucket(0)
 

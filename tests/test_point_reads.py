@@ -79,6 +79,24 @@ def test_lookup_typed_keys_match_read(spark, tmp_path, case, strategy):
     assert {g[-1] for g in got} == {100, 11, N_KEYS - 1}
 
 
+@pytest.mark.parametrize("strategy", ["spj", "mor"])
+@pytest.mark.parametrize("case", sorted(KEY_CASES))
+def test_rebucket_typed_keys_keeps_state_and_lookups(spark, tmp_path, case, strategy):
+    """Rebucketing to a coprime count keeps every typed key: the state
+    is unchanged, each new bucket is one file, and lookups route to
+    the new buckets."""
+    t, key_of, kcols = _table(spark, tmp_path, case, strategy)
+    before = sorted((tuple(r) for r in t.read().collect()), key=repr)
+    t.rebucket(7)
+    m = t.manifest()
+    assert m.num_buckets == 7 and not m.delta_files
+    assert all(len(fs) == 1 for fs in m.files.values())
+    assert sorted((tuple(r) for r in t.read().collect()), key=repr) == before
+    want = [key_of(0), key_of(5), key_of(11), key_of(N_KEYS - 1)]
+    got = {tuple(r)[: len(kcols)] for r in t.lookup(want).collect()}
+    assert got == {key_of(0), key_of(11), key_of(N_KEYS - 1)}
+
+
 def test_rows_to_arrow_matches_list_conversion(spark):
     """The Arrow key frame holds the same values ``createDataFrame``
     of the Python rows does: no timestamp shift, no lost decimal

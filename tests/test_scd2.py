@@ -327,5 +327,5 @@ def test_tiered_apply_routes_one_bucket_per_task(spark, changelog, tmp_path, mon
     eng.apply_epoch(0)
     assert len(plans) == 1
     assert "FlatMapGroupsInPandas" not in plans[0]
-    assert "MapInPandas" in plans[0]
+    assert "MapInArrow" in plans[0]
     assert "shufflepartitionidpassthrough" in plans[0]

@@ -114,169 +114,6 @@ def test_stream_restart_resume(spark, tmp_path):
     _assert_matches(sr2.table().read(), str(tmp_path / "events"))
 
 
-def test_stateful_lww_stream(spark, tmp_path):
-    """applyInPandasWithState running-LWW: across micro-batches the
-    emitted winner per key must converge to the global LWW winner, and
-    state must persist between batches (a later batch with only older
-    events emits nothing)."""
-    from pyspark.sql import functions as F
-
-    from datax_spark.fixtures.changelog import ChangelogSpec, events_df
-    from datax_spark.streaming.stateful import lww_state_stream
-
-    spec = ChangelogSpec(n_events=4_000, n_repos=8, paths_per_repo=30,
-                         events_per_epoch=1_000, seed=17)
-    ev = events_df(spark, spec)
-    ev.write.partitionBy("epoch").parquet(str(tmp_path / "events"))
-
-    schema = spark.read.parquet(str(tmp_path / "events")).drop("epoch").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 5)
-        .parquet(str(tmp_path / "events"))
-    )
-    out = lww_state_stream(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("lww_changes")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    changes = spark.sql("SELECT * FROM lww_changes")
-    # last emitted change per key == global LWW winner
-    from datax_spark.operators.dedup import lww_dedup
-
-    final = lww_dedup(
-        changes, keys=["repo", "path"], order_cols=["commit", "lsn"]
-    ).select("repo", "path", "commit", "lsn", "deleted")
-    expected = lww_dedup(
-        ev, keys=["repo", "path"], order_cols=["commit", "lsn"]
-    ).select(
-        "repo", "path", "commit", "lsn", (F.col("op") == "D").alias("deleted")
-    )
-    got = {tuple(r) for r in final.collect()}
-    want = {tuple(r) for r in expected.collect()}
-    assert got == want
-
-
-def test_windowed_counts_watermark(spark, tmp_path):
-    """Event-time tumbling windows with a watermark: over an ordered
-    backfill every closed window's counts must equal the batch
-    group-by; a late event behind the watermark must be dropped."""
-    from pyspark.sql import functions as F
-
-    from datax_spark.streaming.windowed import windowed_counts
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    # batch 1: everything except a deliberately late slice; batch 2 adds
-    # events 3 days older than the stream's max ts (behind watermark).
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    late = (
-        ev.orderBy("event_id").limit(5)
-        .withColumn("ts", (F.col("ts").cast("timestamp") - F.expr("INTERVAL 300 DAYS")).cast(ev.schema["ts"].dataType))
-    )
-    ev.write.parquet(str(tmp_path / "in" / "b1"))
-
-    schema = ev.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(tmp_path / "in"))
-    )
-    agg = windowed_counts(stream, lateness="30 minutes")
-
-    def drain():
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", str(tmp_path / "out"))
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain()
-    first = spark.read.parquet(str(tmp_path / "out")).count()
-
-    late.write.parquet(str(tmp_path / "in" / "b2"))
-    drain()
-    out = spark.read.parquet(str(tmp_path / "out"))
-
-    # late rows (300 days behind the watermark) must not create or
-    # reopen windows
-    assert out.count() == first
-    # every emitted window matches the batch aggregation of on-time data
-    batch = (
-        ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events_batch"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events_batch")
-    )
-    assert out.count() > 0
-    j = out.join(batch, ["window_start", "event_type"], "left")
-    bad = j.filter(
-        F.col("n_events_batch").isNull()
-        | (F.col("n_events") != F.col("n_events_batch"))
-    )
-    assert bad.count() == 0
-
-
-def test_session_windows_match_batch_sessionization(spark, tmp_path):
-    """Native session_window streaming sessions (gap 30 min) must equal
-    the batch lag+cumsum sessionization over the same drained input."""
-    from datax_spark.streaming.windowed import session_windowed_stats
-
-    src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src.write.mode("overwrite").parquet(str(tmp_path / "in"))
-
-    stream = spark.readStream.schema(src.schema).parquet(str(tmp_path / "in"))
-    q = (
-        session_windowed_stats(stream, gap="30 minutes", lateness="0 seconds")
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    # append mode holds back sessions not yet closed by the watermark;
-    # a second empty drain advances nothing, so compare against batch
-    # sessions whose end precedes the final watermark
-    out = spark.read.parquet(str(tmp_path / "out"))
-
-    from pyspark.sql.window import Window
-
-    ev = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_s = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    starts = F.when(gap_s.isNull() | (gap_s > 1800), 1).otherwise(0)
-    sess = ev.withColumn("sid", F.sum(starts).over(w))
-    batch = (
-        sess.groupBy("user_id", "sid")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.count(F.lit(1)).alias("n_events_b"),
-            F.round(F.sum("value"), 4).alias("session_value_b"),
-        )
-    )
-    # every emitted streaming session must exactly match a batch session
-    j = out.join(batch, ["user_id", "session_start"], "left")
-    bad = j.filter(
-        F.col("n_events_b").isNull()
-        | (F.col("n_events") != F.col("n_events_b"))
-        | (F.col("session_value") != F.col("session_value_b"))
-    )
-    assert out.count() > 0
-    assert bad.count() == 0
-
-
 def test_stream_restart_with_schema_evolution(spark, tmp_path):
     """Additive schema evolution over a RESTARTED stream — the
     operational pattern for Structured Streaming (a running query's

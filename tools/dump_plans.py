@@ -330,7 +330,7 @@ def dump(tmp: str) -> None:
         f"Exchange in the plan (counted: {n_exchanges}, asserted == 1) is "
         "merge_into's repartitionById(num_buckets, __b) of the epoch "
         "batch — partition b holds exactly bucket b — feeding one "
-        "MapInPandas task per bucket; the "
+        "MapInArrow task per bucket; the "
         "current snapshot is read executor-side by each bucket's task "
         "(Arrow scan of exactly its co-located files — the same guarantee "
         "Spark's storage-partitioned joins exploit on bucket tables), so "
@@ -339,7 +339,8 @@ def dump(tmp: str) -> None:
         "buckets / local[32]: 323k ev/s vs 278k ev/s (1.16x), "
         "byte-identical final state (tools/scale_check.py ... spj).",
         spj_plan,
-        ["MapInPandas", "!FlatMapGroupsInPandas", "shufflepartitionidpassthrough("],
+        ["MapInArrow", "!MapInPandas", "!FlatMapGroupsInPandas",
+         "shufflepartitionidpassthrough("],
     ))
     if n_exchanges != 1:
         sections.append((
@@ -348,10 +349,34 @@ def dump(tmp: str) -> None:
             spj_plan, ["__NEVER__"],
         ))
 
+    # 7a. Rebucket: the merged read routed to the new bucket count by
+    # ONE repartitionById exchange, then the same per-bucket Arrow
+    # kernel writes each new bucket's file; no Spark sort or writer
+    rb_plan = plan_of(st.rebucket_frame(st.manifest(), 7, os.path.join(tmp, "rebucket_txn")))
+    n_rb_pass = rb_plan.count("shufflepartitionidpassthrough(")
+    sections.append((
+        "Rebucket (lake.table.LakeTable.rebucket)",
+        "The table's read feeds ONE repartitionById(new_num_buckets, __b) "
+        f"exchange (shufflepartitionidpassthrough, counted: {n_rb_pass}, "
+        "asserted == 1) into the merge's bucket kernel "
+        "(aligned_bucket_apply, MapInArrow): one task per non-empty new "
+        "bucket sorts its rows by key in Arrow and writes b<bucket>.parquet "
+        "by tmp + rename, returning its row count. No Spark Sort, no "
+        "partitioned Spark write and no re-read of the written files.",
+        rb_plan,
+        ["MapInArrow", "shufflepartitionidpassthrough(", "!Sort", "!MapInPandas"],
+    ))
+    if n_rb_pass != 1:
+        sections.append((
+            "REBUCKET routing-exchange REGRESSION",
+            f"expected exactly 1 shufflepartitionidpassthrough Exchange, found {n_rb_pass}",
+            rb_plan, ["__NEVER__"],
+        ))
+
     # 7b. EXCHANGE-ALIGNED fused epoch: dedup agg + merge in a plan
     # with exactly ONE Exchange total — the agg's shuffle, pinned to
     # num_buckets partitions, IS the bucket routing; the merge is
-    # MapInPandas with no exchange of its own
+    # MapInArrow with no exchange of its own
     # (partition_id == pmod(murmur3(keys), nb) == bucket).
     from datax_spark.engine.replay import aligned_shuffle_confs
     from datax_spark.operators.dedup import STAT_COLS, lww_dedup_stats
@@ -382,7 +407,7 @@ def dump(tmp: str) -> None:
         "asserted == 1): the dedup aggregation's own shuffle, pinned to "
         "num_buckets partitions with AQE coalescing off, lands every key "
         "in the partition that IS its murmur3 bucket, so the merge runs "
-        "as MapInPandas straight over the agg output. The map-side "
+        "as MapInArrow straight over the agg output. The map-side "
         "partial (partial_max_by) is preserved below the exchange. Vs "
         "routing the deduped batch again (the plan above) this deletes a "
         "full exchange of the epoch batch; interleaved best-of A/B at 8M "
@@ -390,7 +415,7 @@ def dump(tmp: str) -> None:
         "376-716k ev/s vs two-exchange 300-528k ev/s across two noise "
         "windows (BENCH/SCALE.md), sha256-frame-equal either way.",
         al_plan,
-        ["MapInPandas", "partial_max_by", "!FlatMapGroupsInPandas"],
+        ["MapInArrow", "!MapInPandas", "partial_max_by", "!FlatMapGroupsInPandas"],
     ))
     if n_al_exchanges != 1:
         sections.append((
