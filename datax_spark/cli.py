@@ -55,10 +55,11 @@ Job kinds:
 * ``{"scd2": {...}}`` — SCD Type-2 history target (lake/scd2.py):
   ``{"scd2": {"events_root": ..., "table_root": ..., "keys":
   ["repo", "path"], "order_cols": ["commit", "lsn"], "num_buckets":
-  32, "strategy": "mor" | "spj", "compact_every": 8}}`` — replays
-  the changelog into a table keeping EVERY version as a validity
-  interval (exactly-once per epoch; re-run resumes at the committed
-  watermark, the scheduled-sync shape).
+  32, "compact_every": 8}}`` — replays the changelog into a table
+  keeping EVERY version as a validity interval, in the tiered layout
+  (per bucket one open file and immutable closed files; exactly-once
+  per epoch; re-run resumes at the committed watermark, the
+  scheduled-sync shape).
 * ``{"replicate": {...}}`` — lake-to-lake incremental replication:
   ``{"replicate": {"source_root": ..., "replica_root": ...,
   "to_version": null}}`` (idempotent; re-run = no-op at the same
@@ -88,8 +89,8 @@ import json
 import sys
 
 
-# the keys the replay/tail block reads; any other key is refused, so a
-# typo or a removed setting cannot silently run with the defaults
+# the keys each block below reads; any other key is refused, so a typo
+# or a removed setting cannot silently run with the defaults
 _ENGINE_KEYS = frozenset({
     "events_root", "table_root", "metrics_root", "speed", "keys",
     "order_cols", "num_buckets", "salt_buckets", "max_events_per_sec",
@@ -106,6 +107,10 @@ _BLOCK_KEYS = {
         "bootstrap_servers", "topic", "long_cols", "value_format",
         "message_format", "max_rounds",
     },
+    "scd2": frozenset({
+        "events_root", "table_root", "keys", "order_cols", "num_buckets",
+        "compact_every",
+    }),
 }
 
 
@@ -388,7 +393,6 @@ def main(argv: list[str] | None = None) -> int:
                 keys=tuple(s.get("keys", ("repo", "path"))),
                 order_cols=tuple(s.get("order_cols", ("commit", "lsn"))),
                 num_buckets=int(s.get("num_buckets", 32)),
-                strategy=s.get("strategy", "mor"),
                 compact_every=s.get("compact_every", 8),
             ),
         )

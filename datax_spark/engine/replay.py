@@ -448,6 +448,18 @@ class ChunkResult:
     watermark_mode: bool = False  # lsn was assigned from low_lsn
 
 
+def discover_epochs(events_root: str) -> list[int]:
+    """The epochs of a changelog, ascending: the N of every
+    ``epoch=N`` directory under ``events_root`` (an unpublished
+    ``epoch=N__tmp`` spool is not one)."""
+    out = []
+    for d in glob.glob(os.path.join(events_root, "epoch=*")):
+        m = re.search(r"epoch=(\d+)$", d)
+        if m:
+            out.append(int(m.group(1)))
+    return sorted(out)
+
+
 @dataclass
 class ReplayEngine:
     spark: SparkSession
@@ -459,12 +471,7 @@ class ReplayEngine:
 
     # ---------- discovery / resume ----------
     def discover_epochs(self) -> list[int]:
-        out = []
-        for d in glob.glob(os.path.join(self.events_root, "epoch=*")):
-            m = re.search(r"epoch=(\d+)$", d)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
+        return discover_epochs(self.events_root)
 
     def table(self) -> LakeTable:
         return LakeTable.load(self.spark, self.table_root)

@@ -28,61 +28,80 @@ Table shape — one row per (key, version interval):
   (max(is_current)=false — the steady state after compaction sorts)
   are skipped by file stats on top of the bucket pruning.
 
-Epoch apply — the same exactly-once discipline as the LWW engine:
+Epoch apply — the same exactly-once discipline as the LWW engine,
+as ONE Spark job whose only exchange routes the epoch's events to
+their buckets (``repartitionById(num_buckets, __b)``):
 
 1. scan the epoch's events (op I/U/D, totally ordered by
-   ``order_cols`` = (commit, lsn));
-2. read the CURRENT open rows of exactly the affected keys
-   (bucket-pruned + stats-pruned + broadcast-semi-joined);
-3. union the open rows (each stamped at its own (commit, lsn) =
-   valid_from) with the new events, and window per key ordered by
-   (commit, lsn): ``valid_to = LEAD(commit, lsn)``; a delete event
-   closes its predecessor and emits no row; the last non-delete
-   version stays open (``is_current``);
-4. write the rewritten + new interval rows. The default strategy is
-   TIERED (``Scd2Config.strategy="tiered"``): each bucket keeps its
-   OPEN rows and its CLOSED rows in separate files. A history table
-   grows monotonically, so any plan that re-reads or rewrites closed
-   history pays more every epoch; the tiered epoch instead reads
-   ONLY the affected buckets' open files (bounded by live keys),
-   rewrites them, and APPENDS one immutable closed file — epoch cost
-   O(batch + live keys of affected buckets) forever, and
+   ``order_cols`` = (commit, lsn)) and route them;
+2. per affected bucket, one task of the bucket kernel drops
+   re-delivered events (a repeated (key, order) pair) and takes, from
+   the bucket's OPEN file, the open rows of the keys the epoch
+   touches;
+3. the task sorts those open rows (each at its own (commit, lsn) =
+   valid_from) together with the events by key + order and stitches
+   the intervals: ``valid_to`` = the next row of the same key; a
+   delete event closes its predecessor and emits no row; the last
+   non-delete version stays open (``is_current``);
+4. the task writes the bucket's new open file (the untouched open
+   rows + the epoch's open rows) and APPENDS one closed file. Open
+   and closed rows live in SEPARATE per-bucket files (the tiered
+   layout): a history table grows monotonically, so any plan that
+   re-reads or rewrites closed history pays more every epoch; closed
+   files are immutable instead, so epoch cost is O(batch + live keys
+   of the affected buckets) however long the history grows, and
    current-state reads skip every closed file via is_current file
-   stats. ``"mor"`` (generic delta appends + periodic fold) and
-   ``"spj"`` (bucket CoW) remain as alternatives;
+   stats;
 5. two-phase commit with the ``last_epoch`` manifest watermark —
    crash replay / duplicate epochs are no-ops, same gate as replay.
 
 Order guard: every new event must sort STRICTLY AFTER the affected
 key's open row (the engine's epoch-contiguity gate guarantees this on
-an in-order log). A violation would silently rewrite closed history,
-so it is detected IN the apply pass (an Observation on the same job —
-no extra scan) and aborts before the commit; the written txn files
-are orphans, exactly like any pre-commit crash.
+an in-order log); an event that ties the open row's order tuple sorts
+before it. A violation would silently rewrite closed history, so each
+bucket task counts the open rows that are not first in their key and
+the driver aborts before the commit when any is; the written txn
+files are orphans, exactly like any pre-commit crash.
 
-Scale: step 3's window shuffles O(epoch events + affected open rows)
-— batch-sized, never table-sized; step 4's default MoR write is
-O(batch) regardless of table size, and the periodic compaction is
-the only table-sized job (amortized over ``compact_every`` epochs,
-the same trade merge-on-read ingest makes everywhere). At 10^10
-events the table grows with TOTAL VERSIONS (that is what SCD2
-stores), but an epoch never pays for history it didn't touch.
+Scale: the one exchange moves the epoch's events only — batch-sized,
+never table-sized — and a task reads one open file, bounded by its
+bucket's live keys. Every ``compact_every`` epochs ``compact_closed``
+concatenates each bucket's small closed files. At 10^10 events the
+table grows with TOTAL VERSIONS (that is what SCD2 stores), but an
+epoch never pays for history it didn't touch.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import re
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from datax_spark.lake.merge import aligned_bucket_apply, merge_into
-from datax_spark.lake.table import LakeTable, bucket_expr_for, write_parquet_atomic
+from datax_spark.engine.replay import discover_epochs
+from datax_spark.lake.merge import (
+    MergeStats,
+    PendingMerge,
+    _is_delete,
+    aligned_bucket_apply,
+)
+from datax_spark.lake.table import (
+    LakeTable,
+    bucket_expr_for,
+    composite_key_array,
+    conform_arrow,
+    spark_sort_indices,
+    write_parquet_atomic,
+)
+from datax_spark.operators.schema_evolution import evolve_schema
 
 VALID_TO_SUFFIX = "valid_to_"
 
@@ -100,22 +119,9 @@ class Scd2Config:
     delete_op: str = "D"
     num_buckets: int = 32
     shard_manifest_buckets: int | None = None
-    # "tiered" (default): open and closed rows live in SEPARATE
-    # per-bucket files. Closed history is physically immutable — an
-    # epoch reads ONLY the affected buckets' open files (bounded by
-    # live keys), rewrites them, and APPENDS one closed file; cost is
-    # O(batch + live keys of affected buckets) no matter how long the
-    # history grows, and current-state reads skip every closed file
-    # via is_current file stats. "mor": generic delta appends +
-    # periodic fold (reads pay a merged view until compaction).
-    # "spj": bucket-local CoW, one file per bucket — simplest layout
-    # for small/cold tables, but rewrites the whole bucket's history
-    # every epoch.
-    strategy: str = "tiered"
-    # mor: fold the delta stack every N epochs. tiered: concatenate a
-    # bucket's small per-epoch closed files once it has accumulated N
-    # of them (pure concatenation — no key resolution, open file
-    # untouched). Ignored by spj.
+    # after every N-th epoch, run compact_closed(min_files=2): each
+    # bucket holding two or more closed files gets them concatenated
+    # into one (no key resolution, open file untouched). None: never.
     compact_every: int | None = 8
 
     def __post_init__(self) -> None:
@@ -124,10 +130,6 @@ class Scd2Config:
         overlap = set(self.keys) & set(self.order_cols)
         if overlap:
             raise ValueError(f"keys and order_cols overlap: {sorted(overlap)}")
-        if self.strategy not in ("tiered", "mor", "spj"):
-            raise ValueError(
-                f"strategy must be 'tiered', 'mor' or 'spj', got {self.strategy!r}"
-            )
         if self.compact_every is not None and self.compact_every < 1:
             raise ValueError(f"compact_every must be >= 1, got {self.compact_every}")
 
@@ -142,193 +144,220 @@ def _is_open_file(path: str) -> bool:
     return os.path.basename(path).split(".")[0].endswith("-open")
 
 
-@dataclass
-class _PendingTiered:
-    """Write phase done (txn files on disk); ``commit`` swaps the
-    pointer. Mirrors merge.PendingMerge's two-phase contract: a crash
-    before commit leaves orphans only."""
+def _history_schema(events: T.StructType, cfg: Scd2Config) -> T.StructType:
+    """The history table's columns for an events schema: the payload,
+    one ``valid_to_`` column per order column, and ``is_current``."""
+    base = [f for f in events.fields if f.name != cfg.op_col]
+    return T.StructType([
+        *base,
+        *[
+            T.StructField(VALID_TO_SUFFIX + c, events[c].dataType, True)
+            for c in cfg.order_cols
+        ],
+        T.StructField("is_current", T.BooleanType(), True),
+    ])
 
-    table: "LakeTable"
-    base_version: int
-    replaced_buckets: list[int]
-    new_files: dict[int, list[str]]  # ABS paths: kept closed + new
-    new_row_counts: dict[int, int]
-    schema: T.StructType
-    versions_written: int
 
-    def commit(self, summary: dict | None = None) -> int:
-        return self.table.commit(
-            self.replaced_buckets,
-            self.new_files,
-            self.new_row_counts,
-            schema=self.schema,
-            summary=summary,
-            base_version=self.base_version,
+def _same_as_next(t: pa.Table, cols: list[str]) -> np.ndarray:
+    """``num_rows - 1`` flags: row i equals row i+1 on every column of
+    ``cols`` (NULL equals NULL, as in a Spark grouping)."""
+    same = np.ones(t.num_rows - 1, dtype=bool)
+    for c in cols:
+        col = t.column(c)
+        a, b = col.slice(0, t.num_rows - 1), col.slice(1)
+        eq = pc.or_(
+            pc.fill_null(pc.equal(a, b), False),
+            pc.and_(pc.is_null(a), pc.is_null(b)),
         )
+        same &= eq.to_numpy()
+    return same
+
+
+_TIERED_STATS_SCHEMA = (
+    "bucket int, open_file string, open_rows long, closed_file string, "
+    "closed_rows long, open_rows_before long, versions long, keys long, "
+    "violations long"
+)
 
 
 def _tiered_merge(
-    table: "LakeTable", rows, epoch: int, cfg: Scd2Config
-) -> _PendingTiered:
-    """The tiered write phase: per affected bucket, ONE task reads the
-    bucket's open file (never its closed files), evicts the keys this
-    epoch re-emits, writes survivors + the epoch's open rows as the
-    new open file and the epoch's closed rows as one appended closed
-    file. Closed files are physically immutable from the moment they
-    are written — the property that keeps epoch cost flat while the
-    history grows without bound.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from datax_spark.lake.merge import evolve_schema
-    from datax_spark.lake.table import (
-        composite_key_array,
-        conform_arrow,
-        spark_sort_indices,
-    )
-
+    table: LakeTable, events: DataFrame, epoch: int, cfg: Scd2Config
+) -> PendingMerge:
+    """The write phase of one epoch: route ``events`` to their buckets
+    and run the bucket kernel, one task per affected bucket. A task
+    stitches the bucket's events onto the open rows of their keys (see
+    the module docstring), writes the new open file and one new closed
+    file, and returns one stats row: the interval rows the epoch added
+    (``versions``, its non-delete events after de-duplication), the
+    distinct keys with an event (``keys``) and the open rows that are
+    not first in their key (``violations``) —
+    ``PendingMerge.bucket_stats``. Closed files are never read."""
     m = table.manifest()
     root = table.root
     keys = list(cfg.keys)
-    incoming = rows.drop(cfg.op_col).schema
+    order = list(cfg.order_cols)
     evolved = evolve_schema(
-        m.schema, incoming,
+        m.schema, _history_schema(events.schema, cfg),
         frozen_cols=set(m.key_cols) | set(m.bucket_cols or ()),
     )
-    evolved_pa = to_arrow_schema(evolved)
+    schema_pa = to_arrow_schema(evolved)
+
+    def refuse(why: str):
+        return ValueError(
+            f"{root}: {why}; the SCD2 apply extends only its tiered layout "
+            f"(one '-open' and any '-closed' files per bucket) — replay the "
+            f"changelog into a fresh table root"
+        )
 
     open_file: dict[int, str] = {}
     closed_files: dict[int, list[str]] = {}
-    old_counts: dict[int, int] = {}
     for b, fs in m.files.items():
         bi = int(b)
-        old_counts[bi] = int(m.row_counts.get(b, 0))
         for p in fs:
-            base = os.path.basename(p)
             if _is_open_file(p):
                 if bi in open_file:
-                    raise ValueError(
-                        f"bucket {b} has two open files — corrupt tiered "
-                        f"layout at {root}"
-                    )
+                    raise refuse(f"bucket {b} has two open files")
                 open_file[bi] = os.path.join(root, p)
-            elif "-closed" in base:
+            elif "-closed" in os.path.basename(p):
                 closed_files.setdefault(bi, []).append(os.path.join(root, p))
             else:
-                raise ValueError(
-                    f"file {p!r} was not written by the tiered strategy "
-                    f"(expected '-open'/'-closed' names); this table's "
-                    f"layout mixes open and closed rows — use "
-                    f"strategy='spj'/'mor' on it instead"
-                )
+                raise refuse(f"file {p!r} is neither an open nor a closed file")
     if m.delta_files:
-        raise ValueError(
-            "table has pending merge-on-read deltas; the tiered apply "
-            "reads open files directly — compact() first"
-        )
+        raise refuse("the table has merge-on-read delta files")
 
     txn = table.new_txn_dir()
 
     def apply_bucket(part: pa.Table) -> list[dict]:
         b = int(part.column("__b")[0].as_py())
-        evicted = pc.unique(composite_key_array(part, keys))
-        survivors = None
-        open_rows_before = 0
-        f = open_file.get(b)
-        if f is not None:
-            t = pq.read_table(f)
-            open_rows_before = t.num_rows
-            if t.num_rows:
-                keep = pc.invert(
-                    pc.is_in(composite_key_array(t, keys), value_set=evicted)
-                )
-                survivors = conform_arrow(t.filter(keep), evolved_pa)
+        ev_keys = pc.unique(composite_key_array(part, keys))
+        hits = schema_pa.empty_table()
+        survivors = []
+        open_before = 0
+        if b in open_file:
+            cur = pq.read_table(open_file[b])
+            open_before = cur.num_rows
+            hit = pc.is_in(composite_key_array(cur, keys), value_set=ev_keys)
+            survivors = [conform_arrow(cur.filter(pc.invert(hit)), schema_pa)]
+            hits = conform_arrow(cur.filter(hit), schema_pa)
 
-        part = part.take(spark_sort_indices(part, [*keys, cfg.seq_col]))
-        is_open = part.column("is_current")
-        new_open = conform_arrow(part.filter(is_open), evolved_pa)
-        if survivors is not None and survivors.num_rows:
-            new_open = pa.concat_tables([survivors, new_open])
-        closed = conform_arrow(part.filter(pc.invert(is_open)), evolved_pa)
+        # one timeline per key; on an order tie the event sorts before
+        # the open row, so the tie counts as a violation below
+        is_del = np.append(
+            _is_delete(part, cfg.op_col, cfg.delete_op).to_numpy(),
+            np.zeros(hits.num_rows, dtype=bool),
+        )
+        tl = (
+            pa.concat_tables([conform_arrow(part, schema_pa), hits])
+            .append_column("__del", pa.array(is_del))
+            .append_column("__open", pa.array(np.arange(len(is_del)) >= part.num_rows))
+        )
+        tl = tl.take(spark_sort_indices(tl, [*keys, *order, "__open"]))
 
-        out = []
+        # a re-delivered event repeats the (key, order) of the row
+        # before it; open rows sort last on a tie, so it is an event
+        is_open = tl.column("__open").to_numpy(zero_copy_only=False)
+        dup = np.zeros(tl.num_rows, dtype=bool)
+        dup[1:] = _same_as_next(tl, [*keys, *order]) & ~is_open[1:]
+        tl, is_open = tl.filter(pa.array(~dup)), is_open[~dup]
+
+        # valid_to = the next row of the same key, delete events
+        # included (a delete closes its predecessor)
+        n = tl.num_rows
+        same_key = _same_as_next(tl, keys)
+        has_next = np.append(same_key, False)
+        nxt = pa.array(np.append(np.arange(1, n), 0), mask=~has_next)
+        for c in order:
+            vt = VALID_TO_SUFFIX + c
+            tl = tl.set_column(
+                tl.schema.get_field_index(vt), vt,
+                tl.column(c).take(nxt).cast(schema_pa.field(vt).type),
+            )
+        tl = tl.set_column(
+            tl.schema.get_field_index("is_current"), "is_current",
+            pa.array(~has_next),
+        )
+        is_del = tl.column("__del").to_numpy(zero_copy_only=False)
+        rows = tl.filter(pa.array(~is_del)).drop_columns(["__del", "__open"])
+
+        cur_mask = rows.column("is_current")
+        new_open = pa.concat_tables([*survivors, rows.filter(cur_mask)])
+        closed = rows.filter(pc.invert(cur_mask))
+        out = {
+            "bucket": b,
+            "open_file": None,
+            "open_rows": new_open.num_rows,
+            "closed_file": None,
+            "closed_rows": closed.num_rows,
+            "open_rows_before": open_before,
+            "versions": int((~is_del & ~is_open).sum()),
+            "keys": len(ev_keys),
+            "violations": int((is_open[1:] & same_key).sum()),
+        }
         if new_open.num_rows:
-            fo = os.path.join(txn, f"b{b:05d}-open.parquet")
-            write_parquet_atomic(new_open, fo)
-            out.append({"bucket": b, "file": fo, "kind": "open",
-                        "rows": new_open.num_rows})
+            out["open_file"] = write_parquet_atomic(
+                new_open, os.path.join(txn, f"b{b:05d}-open.parquet")
+            )
         if closed.num_rows:
-            fc = os.path.join(txn, f"b{b:05d}-closed-e{epoch}.parquet")
-            write_parquet_atomic(closed, fc)
-            out.append({"bucket": b, "file": fc, "kind": "closed",
-                        "rows": closed.num_rows})
-        if not out:  # all-delete epoch on an empty bucket
-            out.append({"bucket": b, "file": None, "kind": "none", "rows": 0})
-        for o in out:
-            o["open_rows_before"] = open_rows_before
-        return out
+            out["closed_file"] = write_parquet_atomic(
+                closed, os.path.join(txn, f"b{b:05d}-closed-e{epoch}.parquet")
+            )
+        return [out]
 
     # routed like every merge: partition b holds bucket b, one task per
-    # bucket (a groupBy's exchange would follow shuffle.partitions and
-    # AQE could coalesce several buckets into one serial task)
-    nb = int(m.num_buckets)
-    routed = (
-        rows.drop(cfg.op_col)
-        .withColumn("__b", bucket_expr_for(m))
-        .repartitionById(nb, "__b")
+    # bucket (a repartition by number is never coalesced by AQE)
+    routed = events.withColumn("__b", bucket_expr_for(m)).repartitionById(
+        int(m.num_buckets), "__b"
     )
     res = aligned_bucket_apply(
-        routed, apply_bucket, nb,
-        schema="bucket int, file string, kind string, rows long, "
-        "open_rows_before long",
-    ).collect()  # bounded: ≤ 2 rows per affected bucket
+        routed, apply_bucket, int(m.num_buckets), schema=_TIERED_STATS_SCHEMA
+    ).collect()  # bounded: one row per affected bucket
 
     new_files: dict[int, list[str]] = {}
     new_counts: dict[int, int] = {}
-    replaced: list[int] = []
-    written = 0
-    for b in {int(r["bucket"]) for r in res}:
-        rows_b = [r for r in res if int(r["bucket"]) == b]
-        fresh = [r["file"] for r in rows_b if r["file"]]
-        open_before = int(rows_b[0]["open_rows_before"])
-        fresh_rows = sum(int(r["rows"]) for r in rows_b)
-        written += fresh_rows
-        replaced.append(b)
+    for r in res:
+        b = int(r["bucket"])
+        fresh = [f for f in (r["open_file"], r["closed_file"]) if f]
         # carried closed files keep their place; only the open file is
         # replaced (its rows re-enter via the fresh open/closed files)
         new_files[b] = [*closed_files.get(b, []), *fresh]
-        new_counts[b] = old_counts.get(b, 0) - open_before + fresh_rows
-    return _PendingTiered(
+        new_counts[b] = (
+            int(m.row_counts.get(str(b), 0)) - r["open_rows_before"]
+            + r["open_rows"] + r["closed_rows"]
+        )
+    affected = sorted(new_files)
+    return PendingMerge(
         table=table,
         base_version=m.version,
-        replaced_buckets=sorted(replaced),
+        replaced_buckets=affected,
         new_files=new_files,
         new_row_counts=new_counts,
         schema=evolved,
-        versions_written=written,
+        stats=MergeStats(
+            affected_buckets=affected,
+            rows_before=sum(int(m.row_counts.get(str(b), 0)) for b in affected),
+            rows_after=sum(new_counts.values()),
+            files_written=sum(
+                (r["open_file"] is not None) + (r["closed_file"] is not None)
+                for r in res
+            ),
+            bucket_rows_after=dict(new_counts),
+        ),
+        bucket_stats={
+            int(r["bucket"]): {
+                k: int(r[k]) for k in ("versions", "keys", "violations")
+            }
+            for r in res
+        },
     )
 
 
-def compact_closed(
-    table: "LakeTable", cfg: Scd2Config | None = None, min_files: int = 2
-) -> int:
+def compact_closed(table: LakeTable, min_files: int = 2) -> int:
     """Tiered-layout maintenance: concatenate each bucket's small
     per-epoch closed files into one (pure file concatenation — closed
     intervals never conflict, so no key resolution happens and the
     open file is untouched). Returns the number of buckets rewritten.
     Layout-only: the readable state is provably unchanged.
     """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from datax_spark.lake.table import conform_arrow
-
     m = table.manifest()
     root = table.root
     schema_pa = to_arrow_schema(m.schema)
@@ -345,14 +374,12 @@ def compact_closed(
     txn = table.new_txn_dir()
 
     def fold(b: int) -> pa.Table:
-        import os as _os
-
         parts = [
             conform_arrow(pq.read_table(f), schema_pa) for f in todo[b]
         ]
         t = pa.concat_tables(parts)
         final = write_parquet_atomic(
-            t, _os.path.join(txn, f"b{b:05d}-closed-fold.parquet")
+            t, os.path.join(txn, f"b{b:05d}-closed-fold.parquet")
         )
         return pa.table({
             "b": pa.array([b], pa.int32()),
@@ -383,8 +410,8 @@ def compact_closed(
 class Scd2EpochResult:
     epoch: int
     skipped: bool = False
-    versions_written: int = 0
-    keys_touched: int = 0
+    versions_written: int = 0  # interval rows the epoch added
+    keys_touched: int = 0  # distinct keys with an event
     phase_ms: dict = field(default_factory=dict)
 
 
@@ -400,12 +427,7 @@ class Scd2Engine:
 
     # ---------- discovery / resume ----------
     def discover_epochs(self) -> list[int]:
-        out = []
-        for d in glob.glob(os.path.join(self.events_root, "epoch=*")):
-            m = re.search(r"epoch=(\d+)$", d)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
+        return discover_epochs(self.events_root)
 
     def table(self) -> LakeTable:
         return LakeTable.load(self.spark, self.table_root)
@@ -419,22 +441,10 @@ class Scd2Engine:
         if LakeTable.exists(self.table_root):
             return self.table()
         cfg = self.config
-        base = ev.drop(cfg.op_col).schema
-        fields = list(base.fields)
-        for c in cfg.order_cols[:-1]:
-            fields.append(
-                T.StructField(VALID_TO_SUFFIX + c, base[c].dataType, True)
-            )
-        fields.append(
-            T.StructField(
-                VALID_TO_SUFFIX + cfg.seq_col, base[cfg.seq_col].dataType, True
-            )
-        )
-        fields.append(T.StructField("is_current", T.BooleanType(), True))
         return LakeTable.create(
             self.spark,
             self.table_root,
-            schema=T.StructType(fields),
+            schema=_history_schema(ev.schema, cfg),
             key_cols=[*cfg.keys, cfg.seq_col],
             bucket_cols=list(cfg.keys),
             num_buckets=cfg.num_buckets,
@@ -452,8 +462,7 @@ class Scd2Engine:
             os.path.join(self.events_root, f"epoch={epoch}")
         )
         table = self._ensure_table(ev)
-        m = table.manifest()
-        last = m.last_epoch
+        last = table.manifest().last_epoch
         if epoch <= last:
             return Scd2EpochResult(epoch=epoch, skipped=True)
         if epoch != last + 1:
@@ -461,83 +470,15 @@ class Scd2Engine:
                 f"out-of-order epoch {epoch}; committed watermark is {last}"
             )
 
-        keys = list(cfg.keys)
-        order = list(cfg.order_cols)
         ph: dict[str, float] = {}
-
-        # defensive re-delivery dedup: identical (key, order) tuples are
-        # the same event delivered twice — keep one
-        ev = ev.dropDuplicates([*keys, *order])
-
-        # --- open rows of the affected keys (bucket- + stats-pruned) ---
         tp = time.monotonic()
-        kdf = ev.select(*keys).distinct()
-        affected = sorted(
-            r["__b"]
-            for r in kdf.select(
-                bucket_expr_for(m).alias("__b")
-            ).distinct().collect()
-        )  # ≤ num_buckets ints — the same tiny collect the CoW merge does
-        cur_open = (
-            table.read(buckets=affected, filters=[("is_current", "=", True)])
-            .join(F.broadcast(kdf), on=keys, how="left_semi")
-        )
-        ph["open_read"] = (time.monotonic() - tp) * 1000
+        pending = _tiered_merge(table, ev, epoch, cfg)
+        ph["apply"] = (time.monotonic() - tp) * 1000
 
-        # --- stitch intervals: open rows re-enter at their own
-        # valid_from; new events extend the timeline ---
-        tp = time.monotonic()
-        open_as_events = (
-            cur_open.drop(
-                "is_current", *[VALID_TO_SUFFIX + c for c in order]
-            )
-            .withColumn(cfg.op_col, F.lit("U"))
-            .withColumn("__from_table", F.lit(True))
-        )
-        combined = open_as_events.unionByName(
-            ev.withColumn("__from_table", F.lit(False)),
-            allowMissingColumns=True,  # additive schema evolution
-        )
+        def total(k: str) -> int:
+            return sum(s[k] for s in pending.bucket_stats.values())
 
-        w = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order])
-        stitched = combined.withColumn("__rn", F.row_number().over(w))
-        for c in order:
-            stitched = stitched.withColumn(
-                VALID_TO_SUFFIX + c, F.lead(c).over(w)
-            )
-        # an open row sorting anywhere but FIRST in its key's window
-        # means the epoch carried an event at or before it — closed
-        # history would be rewritten. Counted on the merge job itself.
-        viol = (F.col("__from_table") & (F.col("__rn") > 1)).cast("long")
-        obs = Observation(f"scd2-epoch-{epoch}")
-        rows = (
-            stitched.observe(
-                obs,
-                F.sum(viol).alias("n_viol"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-            .filter(F.col(cfg.op_col) != cfg.delete_op)
-            .withColumn(
-                "is_current",
-                F.col(VALID_TO_SUFFIX + cfg.seq_col).isNull(),
-            )
-            .drop("__from_table", "__rn")
-            .withColumn(cfg.op_col, F.lit("U"))
-        )
-
-        if cfg.strategy == "tiered":
-            pending = _tiered_merge(table, rows, epoch, cfg)
-        else:
-            pending = merge_into(
-                table,
-                rows,
-                op_col=cfg.op_col,
-                delete_op=cfg.delete_op,  # never present — pure upsert
-                strategy=cfg.strategy,
-            )
-        ph["stitch_merge"] = (time.monotonic() - tp) * 1000
-
-        n_viol = int(obs.get.get("n_viol") or 0)
+        n_viol = total("violations")
         if n_viol:
             # abort BEFORE the pointer swap: the txn files are orphans,
             # the table is untouched — same contract as a pre-commit crash
@@ -553,29 +494,14 @@ class Scd2Engine:
 
         if cfg.compact_every and (epoch + 1) % cfg.compact_every == 0:
             tp = time.monotonic()
-            if cfg.strategy == "mor" and self.table().manifest().delta_files:
-                # fold the delta stack: the one table-sized job,
-                # amortized over compact_every O(batch) epochs
-                self.table().compact()
+            if compact_closed(self.table(), min_files=2):
                 ph["compact"] = (time.monotonic() - tp) * 1000
-            elif cfg.strategy == "tiered":
-                # concatenate small closed files; open files untouched
-                if compact_closed(self.table(), cfg, min_files=2):
-                    ph["compact"] = (time.monotonic() - tp) * 1000
 
         ph["total"] = (time.monotonic() - t0) * 1000
-        if isinstance(pending, _PendingTiered):
-            written = pending.versions_written
-        elif pending.mode == "mor":
-            # mor appends exactly the epoch's interval rows as deltas
-            written = pending.stats.rows_after
-        else:
-            # spj rewrites buckets (delta = net new interval rows)
-            written = pending.stats.rows_after - pending.stats.rows_before
         return Scd2EpochResult(
             epoch=epoch,
-            versions_written=written,
-            keys_touched=int(obs.get.get("n_rows") or 0),
+            versions_written=total("versions"),
+            keys_touched=total("keys"),
             phase_ms=ph,
         )
 

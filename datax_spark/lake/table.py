@@ -1673,6 +1673,28 @@ class LakeTable:
         os.makedirs(d, exist_ok=True)
         return d
 
+    def _file_index(
+        self, m: Manifest, files: dict[str, list[str]]
+    ) -> tuple[dict[str, dict], dict[str, dict]]:
+        """File stats and blooms of every data file of a new snapshot
+        (``files``: bucket -> paths relative to the table root). A file
+        that the parent snapshot ``m`` already lists keeps its entries
+        unread (data files are immutable); the rest are harvested, the
+        blooms in ONE executor-parallel pass (per-bucket calls would be
+        one tiny job each)."""
+        live = [p for fl in files.values() for p in fl]
+        known = {p for fl in m.files.values() for p in fl}
+        stats = {p: m.file_stats[p] for p in live if p in m.file_stats}
+        blooms = {p: m.file_blooms[p] for p in live if p in m.file_blooms}
+        todo = [os.path.join(self.root, p) for p in live if p not in known]
+        if m.stats_cols:
+            for f, st in harvest_file_stats(todo, m.stats_cols).items():
+                stats[os.path.relpath(f, self.root)] = st
+        if m.bloom_cols:
+            for f, bl in harvest_file_blooms(todo, m.bloom_cols, self.spark).items():
+                blooms[os.path.relpath(f, self.root)] = bl
+        return stats, blooms
+
     def commit(
         self,
         replaced_buckets: list[int],
@@ -1710,28 +1732,12 @@ class LakeTable:
             counts.pop(str(b), None)
             dfiles.pop(str(b), None)
             dcounts.pop(str(b), None)
-        stats = dict(parent.file_stats)
-        blooms = dict(parent.file_blooms)
         for b, fs in new_files.items():
             rel = [os.path.relpath(f, self.root) for f in fs]
             if rel:
                 files[str(b)] = rel
                 counts[str(b)] = int(new_row_counts.get(b, 0))
-            if parent.stats_cols:
-                harvested = harvest_file_stats(fs, parent.stats_cols)
-                for f, r in zip(fs, rel):
-                    if f in harvested:
-                        stats[r] = harvested[f]
-        if parent.bloom_cols:
-            # one executor-parallel harvest over ALL the commit's new
-            # files (per-bucket calls would be one tiny job each)
-            all_abs = [f for fs in new_files.values() for f in fs]
-            built = harvest_file_blooms(all_abs, parent.bloom_cols, self.spark)
-            for f, b in built.items():
-                blooms[os.path.relpath(f, self.root)] = b
-        live = {p for fl in files.values() for p in fl}
-        stats = {p: s for p, s in stats.items() if p in live}
-        blooms = {p: s for p, s in blooms.items() if p in live}
+        stats, blooms = self._file_index(parent, files)
         m = _dc_replace(
             parent,
             version=parent.version + 1,
@@ -2026,22 +2032,7 @@ class LakeTable:
         for r in frame.collect():  # bounded: one row per non-empty new bucket
             files[str(r["bucket"])] = [os.path.relpath(r["file"], self.root)]
             counts[str(r["bucket"])] = int(r["rows"])
-        stats: dict[str, dict[str, list]] = {}
-        blooms: dict[str, dict[str, dict]] = {}
-        if m.stats_cols:
-            for b, rel in files.items():
-                absf = [os.path.join(self.root, p) for p in rel]
-                harvested = harvest_file_stats(absf, m.stats_cols)
-                for f, r in zip(absf, rel):
-                    if f in harvested:
-                        stats[r] = harvested[f]
-        if m.bloom_cols:
-            all_abs = [
-                os.path.join(self.root, p) for rel in files.values() for p in rel
-            ]
-            built = harvest_file_blooms(all_abs, m.bloom_cols, self.spark)
-            for f, b in built.items():
-                blooms[os.path.relpath(f, self.root)] = b
+        stats, blooms = self._file_index(m, files)
         nm = _dc_replace(
             m,
             version=m.version + 1,

@@ -514,9 +514,17 @@ def encode_record_batch_v2(
     return struct.pack(">qi", base_offset, len(batch)) + batch
 
 
+_V2_HEADER = 61  # base_offset..crc (21 bytes) + attributes..count (40)
+
+
 def _decode_record_batch_v2(seg: bytes):
     """One v2 batch -> [(offset, timestamp_ms, key|None, value)]."""
     base_offset, _blen, _ple = struct.unpack_from(">qii", seg, 0)
+    if len(seg) < _V2_HEADER:
+        raise KafkaError(
+            2, f"record batch at offset {base_offset} ({len(seg)} bytes, "
+            f"shorter than its {_V2_HEADER}-byte header)"
+        )
     (crc,) = struct.unpack_from(">I", seg, 17)
     payload = seg[21:]
     if crc32c(payload) != crc:

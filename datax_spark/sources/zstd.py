@@ -698,7 +698,11 @@ def decompress(data: bytes) -> bytes:
                 i += 1
             elif btype == 2:
                 _need(data, i, bsize)
-                dec._block(data[i : i + bsize], frame_out)
+                try:
+                    dec._block(data[i : i + bsize], frame_out)
+                except IndexError as e:
+                    # a section header or size that runs past the block
+                    raise ZstdError("truncated compressed block") from e
                 i += bsize
             else:
                 raise ZstdError("reserved block type")

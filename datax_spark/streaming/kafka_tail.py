@@ -42,6 +42,7 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from datax_spark.engine.replay import discover_epochs
 from datax_spark.sources.kafka import EARLIEST, LATEST, KafkaConnection
 from datax_spark.sources.readers import task_frame
 
@@ -72,18 +73,6 @@ def _flatten_value(obj: dict, value_format: str) -> dict | None:
     row = dict(img)
     row["op"] = _DBZ_OPS[o]
     return row
-
-
-def _epoch_dirs(events_root: str) -> list[int]:
-    import glob
-    import re
-
-    out = []
-    for d in glob.glob(os.path.join(events_root, "epoch=*")):
-        m = re.search(r"epoch=(\d+)$", d)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
 
 
 class KafkaTail:
@@ -123,7 +112,7 @@ class KafkaTail:
     def checkpoint(self) -> tuple[int, dict[int, int]]:
         """-> (next_epoch, {partition: next_offset}); empty dict means
         'start from earliest'."""
-        epochs = _epoch_dirs(self.events_root)
+        epochs = discover_epochs(self.events_root)
         if not epochs:
             return 0, {}
         last = epochs[-1]

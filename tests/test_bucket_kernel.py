@@ -173,7 +173,7 @@ def test_scd2_tiered_payload_round_trips_exactly(spark, tmp_path):
     for e, part in enumerate((rows[:3], rows[3:])):
         spark.createDataFrame(part, schema).write.parquet(os.path.join(events, f"epoch={e}"))
     eng = Scd2Engine(spark, events, str(tmp_path / "hist"),
-                     Scd2Config(num_buckets=2, strategy="tiered", compact_every=None))
+                     Scd2Config(num_buckets=2, compact_every=None))
     eng.run()
     got = sorted(
         (r["lsn"], r["dec"], r["ts"], sorted((r["m"] or {}).items()), r["is_current"])

@@ -1,5 +1,5 @@
-"""The CLI's replay/tail block refuses keys it does not read: a removed
-setting or a typo must not run the job with defaults."""
+"""The CLI's replay/tail/scd2 blocks refuse keys they do not read: a
+removed setting or a typo must not run the job with defaults."""
 
 import json
 
@@ -42,3 +42,15 @@ def test_replay_block_known_keys_run(spark, tmp_path, capsys):
     assert main(["--job", spec, "--dry-run"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["mode"] == "replay"
+
+
+@pytest.mark.parametrize("key", ["strategy", "num_bukets"])
+def test_scd2_block_unknown_key_refused(spark, tmp_path, key):
+    spec = tmp_path / "scd2.json"
+    spec.write_text(json.dumps({"scd2": {
+        "events_root": str(tmp_path / "events"),
+        "table_root": str(tmp_path / "table"),
+        key: "mor",
+    }}))
+    with pytest.raises(ValueError, match=key):
+        main(["--job", str(spec), "--dry-run"])

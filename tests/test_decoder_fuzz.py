@@ -1,23 +1,37 @@
 """Fuzz the in-repo wire decoders (hypothesis): a truncated or
-bit-flipped BSON document raises only ``BsonError``, and a damaged raw
-snappy or LZ4 block only ``ValueError``; every strict prefix of an LZ4
-frame raises ``ValueError``; intact input round-trips. Pure Python, no
-Spark session."""
+bit-flipped BSON document raises only ``BsonError``, a damaged raw
+snappy or LZ4 block only ``ValueError``, a damaged Kafka record batch
+(v2, plain or gzip) or magic-1 message set only ``KafkaError``, a
+bit-flipped zstd frame only ``ZstdError``; every strict prefix of an
+LZ4 frame raises ``ValueError``; intact input round-trips. Pure
+Python, no Spark session; the larger zstd frames come from the `zstd`
+CLI and are skipped without it."""
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import random
+import shutil
 import struct
+import subprocess
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from datax_spark.sources.kafka import (
+    KafkaError,
+    decode_records,
+    encode_message_set,
+    encode_record_batch_v2,
     lz4_block_decompress,
     lz4_frame_decompress,
     snappy_decompress,
 )
 from datax_spark.sources.mongo import BsonError, ObjectId, bson_decode, bson_encode
+from datax_spark.sources.zstd import ZstdError
+from datax_spark.sources.zstd import decompress as zstd_decompress
 
 SETTINGS = dict(max_examples=200, deadline=2000)
 
@@ -210,3 +224,98 @@ def test_lz4_frame_prefixes_raise_value_error(blocks, flags):
         except ValueError:
             continue
         raise AssertionError(f"prefix of {n}/{len(frame)} bytes decoded")
+
+
+_messages = st.lists(
+    st.tuples(
+        st.integers(0, 2**41),
+        st.one_of(st.none(), st.binary(max_size=16)),
+        st.binary(max_size=48),
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+@given(
+    msgs=_messages,
+    fmt=st.sampled_from(["v2", "v2-gzip", "magic1"]),
+    cut=_cut,
+    flips=_flips,
+)
+@settings(**SETTINGS)
+def test_kafka_records_raise_only_kafka_error(msgs, fmt, cut, flips):
+    if fmt == "magic1":
+        data = encode_message_set(msgs, base_offset=5)
+    else:
+        data = encode_record_batch_v2(
+            msgs, base_offset=5, compression="gzip" if fmt == "v2-gzip" else None
+        )
+    assert decode_records(data) == [
+        (5 + i, ts, key, value) for i, (ts, key, value) in enumerate(msgs)
+    ]
+    try:
+        got = decode_records(_damage(data, cut, flips))
+    except KafkaError:
+        return
+    assert isinstance(got, list)
+
+
+@pytest.mark.parametrize("size", [5, 6, 7, 8])
+def test_v2_entry_shorter_than_header_raises_kafka_error(size):
+    data = bytearray(encode_record_batch_v2([(1000, b"k", b"v")], base_offset=7))
+    struct.pack_into(">i", data, 8, size)  # the entry's size field
+    with pytest.raises(KafkaError, match="shorter than its"):
+        decode_records(bytes(data))
+
+
+# zstd 1.5.7 frames (as in tests/test_zstd.py): a compressed block with
+# sequences and a content checksum, and one without a checksum
+_ZSTD_PINNED = [
+    (b"the quick brown fox jumps over the lazy dog. " * 40,
+     "28b52ffd0468b50100d40274686520717569636b2062726f776e20"
+     "666f78206a756d7073206f76657220746865206c617a7920646f67"
+     "2e200100c516feaa0c34877d7f"),
+    (b"abcabcabcabc" * 50, "28b52ffd005855000018616263010052acdc10"),
+]
+
+
+@pytest.mark.parametrize("plain,hexframe", _ZSTD_PINNED)
+def test_zstd_single_bit_flips_raise_only_zstd_error(plain, hexframe):
+    frame = bytes.fromhex(hexframe)
+    assert zstd_decompress(frame) == plain
+    for bit in range(len(frame) * 8):
+        try:
+            zstd_decompress(_damage(frame, None, [bit]))
+        except ZstdError:
+            pass
+
+
+@functools.cache
+def _zstd_cli_frames() -> list[tuple[bytes, bytes]]:
+    """~20 kB of word soup, compressed by the `zstd` CLI at three
+    levels, with and without a content checksum."""
+    rnd = random.Random(3)
+    words = [b"alpha", b"beta", b"gamma", b"delta", b"x", b"yz", b"0123"]
+    plain = b" ".join(
+        rnd.choice(words) + str(rnd.randrange(500)).encode() for _ in range(3000)
+    )[:20_000]
+    out = []
+    for args in (["-19", "--no-check"], ["-3"], ["-1", "--no-check"]):
+        p = subprocess.run(
+            ["zstd", *args, "-c"], input=plain, capture_output=True, check=True
+        )
+        out.append((plain, p.stdout))
+    return out
+
+
+@pytest.mark.skipif(shutil.which("zstd") is None, reason="no zstd CLI on host")
+@given(which=st.integers(0, 2), flips=st.lists(st.integers(0, 10**6), min_size=1, max_size=3))
+@settings(**SETTINGS)
+def test_zstd_bit_flips_raise_only_zstd_error(which, flips):
+    plain, frame = _zstd_cli_frames()[which]
+    assert zstd_decompress(frame) == plain
+    try:
+        zstd_decompress(_damage(frame, None, flips))
+    except ZstdError:
+        pass

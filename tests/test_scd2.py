@@ -33,12 +33,11 @@ def changelog(spark, tmp_path_factory):
     return root
 
 
-@pytest.fixture(scope="module", params=["tiered", "mor", "spj"])
-def engine(spark, changelog, tmp_path_factory, request):
+@pytest.fixture(scope="module")
+def engine(spark, changelog, tmp_path_factory):
     troot = str(tmp_path_factory.mktemp("scd2_table") / "hist")
     eng = Scd2Engine(
-        spark, changelog, troot,
-        Scd2Config(num_buckets=8, strategy=request.param, compact_every=2),
+        spark, changelog, troot, Scd2Config(num_buckets=8, compact_every=2)
     )
     results = eng.run()
     assert [r.epoch for r in results] == [0, 1, 2]
@@ -187,31 +186,6 @@ def test_restart_resume(spark, changelog, tmp_path):
     pd.testing.assert_frame_equal(got, sequential_scd2(changelog))
 
 
-def test_mor_epochs_append_only(spark, changelog, tmp_path):
-    """MoR strategy: an epoch appends O(batch) delta files and never
-    rewrites base files (the property that keeps epoch cost flat as
-    the history grows); the fold cadence converges to the same frame."""
-    troot = str(tmp_path / "hist")
-    eng = Scd2Engine(
-        spark, changelog, troot,
-        Scd2Config(num_buckets=8, strategy="mor", compact_every=None),
-    )
-    eng.apply_epoch(0)
-    m0 = eng.table().manifest()
-    base0 = {b: tuple(fs) for b, fs in m0.files.items()}
-    eng.apply_epoch(1)
-    m1 = eng.table().manifest()
-    assert {b: tuple(fs) for b, fs in m1.files.items()} == base0
-    assert sum(len(v) for v in m1.delta_files.values()) > sum(
-        len(v) for v in m0.delta_files.values()
-    )
-    eng.apply_epoch(2)
-    eng.table().compact()
-    got = _engine_frame(eng)
-    pd.testing.assert_frame_equal(got, sequential_scd2(changelog))
-    assert not eng.table().manifest().delta_files
-
-
 def test_cli_scd2_job(spark, changelog, tmp_path, capsys):
     """CLI job kind {"scd2": ...}: applies all epochs, and a re-run is
     an idempotent no-op (the scheduled-sync shape)."""
@@ -227,8 +201,12 @@ def test_cli_scd2_job(spark, changelog, tmp_path, capsys):
     assert main(["--job", str(job)]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["mode"] == "scd2" and out["applied"] == [0, 1, 2]
-    frame = Scd2Engine(spark, changelog, troot).table().read().count()
-    assert frame == len(sequential_scd2(changelog))
+    table = Scd2Engine(spark, changelog, troot).table()
+    assert table.read().count() == len(sequential_scd2(changelog))
+    # the one plan: every data file is a tiered open or closed file
+    names = [p.rsplit("/", 1)[-1] for fs in table.manifest().files.values() for p in fs]
+    assert names and all("-open" in n or "-closed" in n for n in names)
+    assert not table.manifest().delta_files
     assert main(["--job", str(job)]) == 0
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out2["applied"] == [] and out2["skipped"] == [0, 1, 2]
@@ -245,7 +223,7 @@ def test_tiered_closed_files_immutable(spark, changelog, tmp_path):
     troot = str(tmp_path / "hist")
     eng = Scd2Engine(
         spark, changelog, troot,
-        Scd2Config(num_buckets=8, strategy="tiered", compact_every=None),
+        Scd2Config(num_buckets=8, compact_every=None),
     )
 
     def snapshot_closed():
@@ -322,10 +300,105 @@ def test_tiered_apply_routes_one_bucket_per_task(spark, changelog, tmp_path, mon
     monkeypatch.setattr(scd2, "aligned_bucket_apply", spy)
     eng = Scd2Engine(
         spark, changelog, str(tmp_path / "hist"),
-        Scd2Config(num_buckets=8, strategy="tiered", compact_every=None),
+        Scd2Config(num_buckets=8, compact_every=None),
     )
     eng.apply_epoch(0)
-    assert len(plans) == 1
-    assert "FlatMapGroupsInPandas" not in plans[0]
-    assert "MapInArrow" in plans[0]
-    assert "shufflepartitionidpassthrough" in plans[0]
+    eng.apply_epoch(1)  # the stitch onto existing open rows
+    assert len(plans) == 2
+    for plan in plans:
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "MapInArrow" in plan
+        # the epoch's one exchange routes its events; the stitch, the
+        # re-delivery dedup and the open-row read are in the kernel
+        assert plan.count("Exchange") == 1
+        assert plan.count("shufflepartitionidpassthrough") == 1
+        assert "Window" not in plan and "BroadcastExchange" not in plan
+
+
+def _write_epochs(spark, root, epochs):
+    import os
+
+    cols = ["repo", "path", "commit", "lsn", "lang", "content", "op"]
+    for e, rows in enumerate(epochs):
+        spark.createDataFrame(rows, cols).write.parquet(
+            os.path.join(root, f"epoch={e}")
+        )
+
+
+def test_epoch_counters_match_event_log(spark, changelog, tmp_path):
+    """versions_written = the interval rows an epoch adds (its non-delete
+    events after re-delivery de-duplication); keys_touched = the distinct
+    keys with an event — both counted from the event log itself."""
+    eng = Scd2Engine(spark, changelog, str(tmp_path / "hist"), Scd2Config(num_buckets=8))
+    results = eng.run()
+    total = 0
+    for r in results:
+        ev = pd.read_parquet(f"{changelog}/epoch={r.epoch}").drop_duplicates(
+            ["repo", "path", "commit", "lsn"]
+        )
+        assert r.versions_written == int((ev["op"] != "D").sum())
+        assert r.keys_touched == len(ev[["repo", "path"]].drop_duplicates())
+        total += r.versions_written
+    assert total == eng.table().read().count()
+
+
+def test_tie_with_open_row_raises(spark, tmp_path):
+    """An event that ties a key's open row on (commit, lsn) is not
+    strictly after it: the epoch aborts and the table is unchanged."""
+    ev_root = str(tmp_path / "events")
+    _write_epochs(spark, ev_root, [
+        [("r1", "a.py", "c05", 50, "python", "v1", "I")],
+        [("r1", "a.py", "c05", 50, "python", "v2", "U"),
+         ("r1", "b.py", "c06", 60, "python", "w1", "I")],
+    ])
+    eng = Scd2Engine(spark, ev_root, str(tmp_path / "hist"), Scd2Config(num_buckets=4))
+    eng.apply_epoch(0)
+    v0 = eng.table().current_version()
+    before = eng.table().read().toPandas()
+    with pytest.raises(Scd2OrderError, match="1 event"):
+        eng.apply_epoch(1)
+    assert eng.table().current_version() == v0 and eng.table().last_epoch == 0
+    pd.testing.assert_frame_equal(eng.table().read().toPandas(), before)
+
+
+def test_in_epoch_redelivery_kept_once(spark, tmp_path):
+    """An event delivered twice within one epoch becomes one version."""
+    ev_root = str(tmp_path / "events")
+    a1 = ("r1", "a.py", "c01", 10, "python", "v1", "I")
+    a2 = ("r1", "a.py", "c02", 20, "python", "v2", "U")
+    d = ("r1", "b.py", "c03", 30, "python", "w", "D")
+    _write_epochs(spark, ev_root, [[a1, a2, a1, a2, a2], [d, d, a2[:3] + (21,) + a2[4:]]])
+    eng = Scd2Engine(spark, ev_root, str(tmp_path / "hist"), Scd2Config(num_buckets=4))
+    r0, r1 = eng.run()
+    assert (r0.versions_written, r0.keys_touched) == (2, 1)
+    assert (r1.versions_written, r1.keys_touched) == (1, 2)
+    got = sorted(
+        (r.lsn, r.valid_to_commit, r.valid_to_lsn, r.is_current)
+        for r in eng.table().read().collect()
+    )
+    assert got == [(10, "c02", 20, False), (20, "c02", 21, False), (21, None, None, True)]
+
+
+def test_non_tiered_layout_refused(spark, tmp_path):
+    """A bucket file that is neither open nor closed (here a copy-on-write
+    merge's) is refused before anything is written, naming the fix."""
+    import os
+
+    from datax_spark.lake.merge import merge_into
+
+    ev_root = str(tmp_path / "events")
+    _write_epochs(spark, ev_root, [
+        [("r1", "a.py", "c01", 10, "python", "v1", "I")],
+        [("r1", "a.py", "c02", 20, "python", "v2", "U")],
+    ])
+    troot = str(tmp_path / "hist")
+    eng = Scd2Engine(spark, ev_root, troot, Scd2Config(num_buckets=4))
+    eng.apply_epoch(0)
+    t = eng.table()
+    merge_into(t, t.read().withColumn("op", F.lit("U"))).commit()
+    v = eng.table().current_version()
+    txns = set(os.listdir(os.path.join(troot, "data")))
+    with pytest.raises(ValueError, match="fresh table root"):
+        eng.apply_epoch(1)
+    assert eng.table().current_version() == v
+    assert set(os.listdir(os.path.join(troot, "data"))) == txns

@@ -1,19 +1,20 @@
-"""SCD2 ingest at scale: merge-on-read (the default) vs copy-on-write
-epochs over a monotonically-growing history table.
+"""SCD2 ingest at scale: epochs of the tiered plan over a
+monotonically-growing history table.
 
 The property under test is the TREND, not one number: a history table
-only ever grows, so a CoW epoch rewrites ever-larger bucket files and
-its per-epoch time must climb with table size, while the MoR epoch
-appends O(batch) deltas and must stay flat. Both final tables are
-verified against an independent DuckDB window-SQL oracle (the same
-LEAD-per-key interval construction as contract query
-cdc_scd2_history) via an order-insensitive count+hash digest over
-(repo, path, lsn, valid_to_lsn, is_current, sha256(content)) — and
-the MoR table is verified BEFORE compaction (through the merged read)
-so the fast write path cannot hide a wrong answer behind the fold.
+only ever grows, and a tiered epoch reads only its buckets' open
+files and appends one closed file each, so its per-epoch time must
+stay flat while the table grows (``per_epoch_sec``,
+``last_over_first_epoch``). The final table is verified against an
+independent DuckDB window-SQL oracle (the same LEAD-per-key interval
+construction as contract query cdc_scd2_history) via an
+order-insensitive count+hash digest over (repo, path, lsn,
+valid_to_lsn, is_current, sha256(content)), both before and after
+``compact_closed``; the current-state read (``is_current`` stats skip
+every closed file) is timed too.
 
-A pure-CPU control brackets each strategy run (this host shows
-CPU-steal bursts; same protocol as bench.py / bench_mor.py).
+A pure-CPU control brackets the run (this host shows CPU-steal
+bursts; same protocol as bench.py / bench_mor.py).
 
 Usage: python tools/bench_scd2.py [total_events] [events_per_epoch]
                                   [cpus] [num_buckets]
@@ -68,7 +69,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from datax_spark.fixtures.changelog import ChangelogSpec, events_df
-    from datax_spark.lake.scd2 import Scd2Config, Scd2Engine
+    from datax_spark.lake.scd2 import Scd2Config, Scd2Engine, compact_closed
     from datax_spark.lake.table import LakeTable
     from datax_spark.session import get_spark
 
@@ -88,7 +89,7 @@ def main() -> None:
             os.path.join(root, "events")
         )
 
-        # warm each strategy's whole pipeline once (JIT, Arrow workers)
+        # warm the whole pipeline once (JIT, Arrow workers)
         warm = ChangelogSpec(
             n_events=100_000, n_repos=200, paths_per_repo=400,
             events_per_epoch=50_000, evolve_from_epoch=None, seed=7,
@@ -96,15 +97,12 @@ def main() -> None:
         events_df(spark, warm).write.mode("overwrite").partitionBy(
             "epoch"
         ).parquet(os.path.join(root, "warm_events"))
-        for strategy in ("spj", "mor", "tiered"):
-            Scd2Engine(
-                spark,
-                events_root=os.path.join(root, "warm_events"),
-                table_root=os.path.join(root, f"warm_{strategy}"),
-                config=Scd2Config(
-                    num_buckets=16, strategy=strategy, compact_every=None
-                ),
-            ).run()
+        Scd2Engine(
+            spark,
+            events_root=os.path.join(root, "warm_events"),
+            table_root=os.path.join(root, "warm_table"),
+            config=Scd2Config(num_buckets=16, compact_every=None),
+        ).run()
         spark.read.parquet(os.path.join(root, "events")).selectExpr(
             "count(*)"
         ).collect()
@@ -116,7 +114,6 @@ def main() -> None:
             "n_epochs": n_epochs,
             "cpus": cpus,
             "num_buckets": nb,
-            "strategies": {},
         }
 
         con = duckdb.connect()
@@ -141,75 +138,39 @@ def main() -> None:
                 )
             return {"rows": got[0], "digest_ok": True}
 
-        for strategy in ("spj", "mor", "tiered"):
-            eng = Scd2Engine(
-                spark,
-                events_root=os.path.join(root, "events"),
-                table_root=os.path.join(root, f"table_{strategy}"),
-                config=Scd2Config(
-                    num_buckets=nb, strategy=strategy, compact_every=None
-                ),
-            )
-            t0 = time.monotonic()
-            results = eng.run()
-            sec = time.monotonic() - t0
-            r = {
-                "ingest_sec": round(sec, 2),
-                "events_per_sec": round(total / sec, 1),
-                "per_epoch_sec": [
-                    round(x.phase_ms["total"] / 1000, 2)
-                    for x in results if not x.skipped
-                ],
-            }
-            if strategy == "tiered":
-                t = LakeTable.load(spark, os.path.join(root, "table_tiered"))
-                r["verify"] = digest(os.path.join(root, "table_tiered"), "tiered")
-                from datax_spark.lake.scd2 import compact_closed
-                t0 = time.monotonic()
-                r["compacted_buckets"] = compact_closed(t)
-                r["compact_closed_sec"] = round(time.monotonic() - t0, 2)
-                r["verify_post_compact"] = digest(
-                    os.path.join(root, "table_tiered"), "tiered_post"
-                )
-                # current-state read cost: the read that skips all
-                # closed files via is_current stats
-                t0 = time.monotonic()
-                r["current_rows"] = t.read(
-                    filters=[("is_current", "=", True)]
-                ).count()
-                r["current_read_sec"] = round(time.monotonic() - t0, 2)
-            elif strategy == "mor":
-                t = eng.table()
-                r["pending_delta_files"] = sum(
-                    len(v) for v in t.manifest().delta_files.values()
-                )
-                t0 = time.monotonic()
-                r["merged_read_rows"] = t.read().count()
-                r["merged_read_sec"] = round(time.monotonic() - t0, 2)
-                # verify through the merged read BEFORE compaction
-                r["verify_pre_compact"] = digest(
-                    os.path.join(root, "table_mor"), "mor_pre"
-                )
-                t0 = time.monotonic()
-                t.compact()
-                r["compact_sec"] = round(time.monotonic() - t0, 2)
-                r["verify_post_compact"] = digest(
-                    os.path.join(root, "table_mor"), "mor_post"
-                )
-            else:
-                r["verify"] = digest(os.path.join(root, "table_spj"), "spj")
-            out["strategies"][strategy] = r
-            controls.append(cpu_control(spark, 250_000_000 * cpus, cpus * 4))
-
-        spj_ep = out["strategies"]["spj"]["per_epoch_sec"]
-        tr_ep = out["strategies"]["tiered"]["per_epoch_sec"]
-        # the trend claim, stated in the artifact: last-epoch cost
-        # ratio (CoW climbs with the table, tiered stays ~flat)
-        out["last_epoch_spj_over_tiered"] = round(spj_ep[-1] / tr_ep[-1], 2)
-        out["tiered_speedup_ingest"] = round(
-            out["strategies"]["spj"]["ingest_sec"]
-            / out["strategies"]["tiered"]["ingest_sec"], 2,
+        troot = os.path.join(root, "table")
+        eng = Scd2Engine(
+            spark,
+            events_root=os.path.join(root, "events"),
+            table_root=troot,
+            config=Scd2Config(num_buckets=nb, compact_every=None),
         )
+        t0 = time.monotonic()
+        results = eng.run()
+        sec = time.monotonic() - t0
+        per_epoch = [
+            round(x.phase_ms["total"] / 1000, 2) for x in results if not x.skipped
+        ]
+        out["ingest_sec"] = round(sec, 2)
+        out["events_per_sec"] = round(total / sec, 1)
+        out["per_epoch_sec"] = per_epoch
+        # the trend claim, stated in the artifact: flat per-epoch cost
+        out["last_over_first_epoch"] = round(per_epoch[-1] / per_epoch[0], 2)
+        out["versions_written"] = sum(x.versions_written for x in results)
+        out["verify"] = digest(troot, "pre_compact")
+        t0 = time.monotonic()
+        out["compacted_buckets"] = compact_closed(eng.table())
+        out["compact_closed_sec"] = round(time.monotonic() - t0, 2)
+        out["verify_post_compact"] = digest(troot, "post_compact")
+        # current-state read cost: the read that skips all closed
+        # files via is_current stats
+        t0 = time.monotonic()
+        out["current_rows"] = eng.table().read(
+            filters=[("is_current", "=", True)]
+        ).count()
+        out["current_read_sec"] = round(time.monotonic() - t0, 2)
+        controls.append(cpu_control(spark, 250_000_000 * cpus, cpus * 4))
+
         out["cpu_control_sec"] = controls
         out["verified"] = "duckdb_window_oracle_count_plus_hash_digest"
         print(json.dumps(out))
